@@ -3,7 +3,11 @@
 Writes the ten tables the registry queries read (a TPC-H-like star
 schema, an event stream, a document corpus and an embedding table), one
 parquet file each, with the column names and physical types the queries
-expect. Row counts scale with `scale` (1.0 gives the sf0.1 sizes).
+expect. Sizes and value distributions are the ones `profile_tables.py`
+measures on the repo's sf0.01 test data, which the correctness gate
+uses (see perfbench/README.md for the side-by-side profile).
+
+    python3 perfbench/gen_tables.py OUT_DIR SEED
 """
 import os
 
@@ -18,10 +22,24 @@ LANGS = ["en", "fr", "zh", "de", "es"]
 LANG_P = [0.41, 0.15, 0.15, 0.14, 0.15]
 SEGMENTS = ["MACHINERY", "AUTOMOBILE", "HOUSEHOLD", "FURNITURE", "BUILDING"]
 PTYPES = ["LARGE", "ECONOMY", "STANDARD", "SMALL", "MEDIUM", "PROMO"]
-PNAME = ["large", "hot", "blue", "red", "small", "green", "cold", "old"]
-PNOUN = ["ring", "bolt", "nut", "gear", "pipe", "valve", "screw", "plate"]
+PNAME = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
+PNOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget"]
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 EVENT_TYPES = ["view", "click", "purchase", "signup", "error"]
+
+# Row counts of the sf0.01 test data. Embeddings do not scale with the
+# other tables there (500 at sf0.01, 2,000 at sf0.1).
+ROWS = {"customer": 1500, "supplier": 100, "part": 2000, "orders": 15000,
+        "events": 10000, "users": 150, "documents": 500, "embeddings": 500}
+LINES_PER_ORDER = 4
+# documents: words drawn uniformly from WORDS, 10 to 99 per document; one
+# in 20 is a near duplicate (an earlier document plus the word "dup");
+# there are no exact copies
+DOC_WORDS = (10, 100)
+NEAR_DUP_SHARE = 0.05
+SOURCES = 20
+EMBED_DIM = 64
+LABELS = 10
 
 
 def _ts(rng, n, start, days):
@@ -44,18 +62,13 @@ def _text(rng, n_words):
     return " ".join(WORDS[i] for i in rng.integers(0, len(WORDS), n_words))
 
 
-def generate(out, seed, scale):
+def generate(out, seed):
     rng = np.random.default_rng(seed)
     os.makedirs(out, exist_ok=True)
-    n_cust = max(50, int(15000 * scale))
-    n_supp = max(10, int(1000 * scale))
-    n_part = max(50, int(20000 * scale))
-    n_ord = max(200, int(150000 * scale))
-    n_line = 4 * n_ord
-    n_ev = max(1000, int(100000 * scale))
-    n_user = max(50, int(1500 * scale))
-    n_doc = max(100, int(5000 * scale))
-    n_emb = max(200, int(2000 * scale))
+    n_cust, n_supp, n_part, n_ord, n_ev, n_user, n_doc, n_emb = (
+        ROWS[k] for k in ("customer", "supplier", "part", "orders", "events",
+                          "users", "documents", "embeddings"))
+    n_line = LINES_PER_ORDER * n_ord
 
     _write(out, "region", {
         "r_regionkey": pa.array(range(5), pa.int32()),
@@ -111,25 +124,28 @@ def generate(out, seed, scale):
         "event_type": [EVENT_TYPES[i] for i in rng.integers(0, 5, n_ev)],
         "value": np.round(rng.exponential(50.0, n_ev), 2),
         "props": [f'{{"k": {i}}}' for i in rng.integers(0, 100, n_ev)]})
-    # a fixed share of duplicates (one in 20 near, one in 500 exact), so
-    # the dedup queries' work does not swing with the seed
-    texts = []
+    # a fixed number of near duplicates at seeded positions, so the dedup
+    # queries' work does not swing with the seed
+    near = set(rng.choice(np.arange(1, n_doc), int(n_doc * NEAR_DUP_SHARE),
+                          replace=False).tolist())
+    texts, originals = [], []
     for i in range(n_doc):
-        if i % 20 == 19:
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        elif i % 500 == 250:
-            texts.append(texts[int(rng.integers(0, i))])
+        if i in near:
+            texts.append(texts[originals[int(rng.integers(0, len(originals)))]]
+                         + " dup")
         else:
-            texts.append(_text(rng, int(rng.integers(8, 100))))
+            originals.append(i)
+            texts.append(_text(rng, int(rng.integers(*DOC_WORDS))))
     _write(out, "documents", {
         "doc_id": pa.array(np.arange(n_doc), pa.int64()),
         "text": texts,
         "lang": [LANGS[i] for i in rng.choice(5, n_doc, p=LANG_P)],
-        "source": [f"src{i}" for i in rng.integers(0, 20, n_doc)],
+        "source": [f"src{i % SOURCES}" for i in range(n_doc)],
         "n_chars": pa.array([len(t) for t in texts], pa.int64())})
-    labels = rng.integers(0, 10, n_emb)
-    centroids = rng.normal(0.0, 1.0, (10, 64))
-    vecs = centroids[labels] * 0.5 + rng.normal(0.0, 1.0, (n_emb, 64))
+    # unit vectors in random directions; the labels carry no cluster
+    # structure (mean cosine within a label is ~0 in the test data too)
+    labels = rng.integers(0, LABELS, n_emb)
+    vecs = rng.normal(0.0, 1.0, (n_emb, EMBED_DIM))
     vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
     _write(out, "embeddings", {
         "vec_id": pa.array(np.arange(n_emb), pa.int64()),
@@ -137,3 +153,7 @@ def generate(out, seed, scale):
                               pa.list_(pa.float32())),
         "label": pa.array(labels, pa.int32())})
 
+
+if __name__ == "__main__":
+    import sys
+    generate(sys.argv[1], int(sys.argv[2]))

@@ -2,19 +2,23 @@
 """graft benchmark: one workload, one seed, one closed loop.
 
     python3 perfbench/run.py --workload etl_incremental|query_mix \\
-        --seed N --seconds S --trace 0|1
+        --seed N --seconds S --trace 0|1 [--tables DIR]
 
 Run from the root of a checkout. The first run builds the program and
 the harness from source with sbt (`perfbench/build.sbt`); later runs
-reuse the build. Every input is generated from the seed under
-`perfbench/.work`, which is removed again at the end.
+reuse the build while the sources it was built from are unchanged.
+Every input is generated from the seed under `perfbench/.work`, which
+is removed again at the end.
 
 The last line of stdout is one JSON object: `correct`, `attempted`,
 `failed` and `metrics` (the end-to-end metrics, or with `--trace 1` the
-per-layer ones). The line before it is the run's ambient-load witness
-and the number of timed samples behind each timing.
+per-layer ones, as `BENCHMARK.json` names them). The line before it is
+the run's ambient-load witness and the number of timed samples behind
+each timing.
 """
 import argparse
+import glob
+import hashlib
 import json
 import os
 import shutil
@@ -29,36 +33,6 @@ BUILD = os.path.join(HERE, ".build")
 WORK = os.path.join(HERE, ".work")
 DEADLINE_S = 175
 HEAP = "3g"
-QUERY_SCALE = 0.1
-
-E2E_UNITS = {"setup_s": "s", "op_s": "s", "rate_per_s": "1/s",
-             "heap_live_mb": "MB"}
-MODULES = ["etl", "sources", "deid", "operators", "sinks", "queries",
-           "tables", "other"]
-LAYER_UNITS = {
-    "etl.run_s": "s", "etl.driver_s": "s", "etl.jobs": "count",
-    "etl.completion_s": "s", "etl.accounted_frac": "ratio",
-    "sources.detect_s": "s", "sources.read_s": "s", "sources.rows": "count",
-    "sources.bytes": "B",
-    "deid.scrub_plan_s": "s", "deid.census_s": "s", "deid.kept_frac": "ratio",
-    "operators.dedup_s": "s", "operators.dedup_kept_frac": "ratio",
-    "sinks.merge_s": "s", "sinks.delete_s": "s", "sinks.row_count_s": "s",
-    "sinks.buckets_touched": "count", "sinks.files_written": "count",
-    "sinks.bytes_written": "B", "sinks.write_amp": "B/B",
-    "sinks.store_amp": "B/B",
-    "queries.build_s": "s", "queries.plan_s": "s", "queries.exec_s": "s",
-    "queries.driver_s": "s",
-    "spark.jobs": "count", "spark.stages": "count", "spark.tasks": "count",
-    "spark.task_run_s": "s", "spark.task_cpu_s": "s", "spark.gc_s": "s",
-    "spark.shuffle_write_bytes": "B", "spark.shuffle_read_bytes": "B",
-    "spark.spill_bytes": "B", "spark.slot_util": "ratio",
-    "spark.analysis_s": "s", "spark.optimization_s": "s",
-    "spark.planning_s": "s",
-    **{f"spark.jobs.{m}": "count" for m in MODULES},
-    **{f"spark.job_s.{m}": "s" for m in MODULES},
-    "trace_overhead_frac": "ratio", "replay_coverage": "ratio",
-    "load_cal_s": "s", "steal_pct": "%",
-}
 
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -85,17 +59,47 @@ def run_bounded(cmd, deadline, **kw):
         raise
 
 
+def metric_units(kind):
+    """Name → unit of the `end_to_end` or `per_layer` metrics."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        return {m["name"]: m["unit"] for m in json.load(f)[kind]}
+
+
+def source_key():
+    """Hash of every file the build reads from the checkout: the build
+    definitions and the program's and the harness's main sources."""
+    files = []
+    for base in (ROOT, HERE):
+        files += [os.path.join(base, "build.sbt")]
+        files += sorted(glob.glob(os.path.join(base, "project", "*.*")))
+    for d in (os.path.join(ROOT, "src", "main"), os.path.join(HERE, "src")):
+        files += sorted(os.path.join(r, f) for r, _, fs in os.walk(d) for f in fs)
+    h = hashlib.sha256()
+    for p in files:
+        h.update(os.path.relpath(p, ROOT).encode() + b"\0")
+        with open(p, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
 def classpath():
-    """The harness classpath, building program and harness on first use."""
+    """The harness classpath. sbt (re)builds the program and the harness
+    whenever their sources differ from the ones the cached classpath was
+    built from."""
     cp_file = os.path.join(BUILD, "classpath.txt")
-    if os.path.exists(cp_file):
-        with open(cp_file) as f:
-            return f.read().strip()
+    key_file = os.path.join(BUILD, "classpath.key")
+    key = source_key()
+    if os.path.exists(cp_file) and os.path.exists(key_file):
+        with open(key_file) as f:
+            if f.read() == key:
+                with open(cp_file) as g:
+                    return g.read().strip()
     os.makedirs(BUILD, exist_ok=True)
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
     env.setdefault("SBT_OPTS", "-Dsbt.offline=true")
     log_path = os.path.join(BUILD, "build.log")
+    log("building program and harness with sbt")
     with open(log_path, "w") as out:
         rc = run_bounded(["sbt", "-batch", "-Dsbt.log.noformat=true", "compile",
                           "export perfbench/Runtime/fullClasspath"],
@@ -108,6 +112,8 @@ def classpath():
         raise SystemExit("build failed")
     with open(cp_file, "w") as f:
         f.write(lines[-1])
+    with open(key_file, "w") as f:
+        f.write(key)
     return lines[-1]
 
 
@@ -125,9 +131,14 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--tables", help="query_mix: read these tables instead "
+                    "of generating them (for comparing the generated ones "
+                    "with another data set)")
     a = ap.parse_args()
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala", "graft")):
         sys.exit(f"no graft sources under {ROOT}: run from a full checkout")
+    units = metric_units("per_layer" if a.trace else "end_to_end")
+    layer_keys = metric_units("per_layer")
 
     cp = classpath()
     shutil.rmtree(WORK, ignore_errors=True)
@@ -138,12 +149,16 @@ def main():
         # set-up starts here: input generation counts towards setup_s
         args = ["--workload", a.workload, "--seed", str(a.seed),
                 "--seconds", str(a.seconds), "--trace", str(a.trace),
-                "--work", work, "--t0-ms", str(int(start * 1000))]
+                "--work", work, "--t0-ms", str(int(start * 1000)),
+                "--layer-keys", ",".join(layer_keys)]
+        tables = os.path.join(work, "tables")
         if a.workload == "query_mix":
             sys.path.insert(0, HERE)
-            import gen_tables
-            tables = os.path.join(work, "tables")
-            gen_tables.generate(tables, a.seed, QUERY_SCALE)
+            if a.tables:
+                tables = os.path.abspath(a.tables)
+            else:
+                import gen_tables
+                gen_tables.generate(tables, a.seed)
             args += ["--tables", tables]
         env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores()))
         cmd = (["java"] + [f"--add-opens={o}=ALL-UNNAMED" for o in ADD_OPENS]
@@ -160,7 +175,7 @@ def main():
         failed = r["failed"]
         if a.workload == "query_mix":
             import oracle
-            bad = oracle.check(os.path.join(work, "tables"),
+            bad = oracle.check(tables,
                                os.path.join(work, "query-out"),
                                os.path.join(work, "oracle_sql.json"))
             for name, why in sorted(bad.items()):
@@ -169,9 +184,9 @@ def main():
         if a.trace:
             shutil.copy(os.path.join(work, "trace.json"),
                         os.path.join(BUILD, f"trace-{a.workload}.json"))
-            values, units = r["layers"], LAYER_UNITS
+            values = r["layers"]
         else:
-            values, units = r["e2e"], E2E_UNITS
+            values = r["e2e"]
         missing = set(units) - set(values)
         if missing:
             sys.exit(f"harness did not report {sorted(missing)}")

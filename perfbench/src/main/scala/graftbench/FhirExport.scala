@@ -34,9 +34,10 @@ final class FhirExport(seed: Long, val types: Seq[String]) {
   private var batches = 0
 
   /** Write the base export: `total` resources split over the types
-    * (mostly Observation when it is one of them), up to four files per
-    * type. Each in-export duplicate is appended to the file that holds
-    * its first copy, or with `crossFileDups` to the type's last file.
+    * (mostly Observation when it is one of them), in one to three files
+    * per type as the seed draws. Each in-export duplicate is appended to
+    * the file that holds its first copy, or with `crossFileDups` (two
+    * files per type) to the type's last file.
     */
   def writeBase(dir: Path, total: Int, crossFileDups: Boolean = false): Export = {
     Files.createDirectories(dir)
@@ -52,7 +53,7 @@ final class FhirExport(seed: Long, val types: Seq[String]) {
     var resources = 0L
     types.foreach { t =>
       val n = withObs(t)
-      val shards = math.max(1, math.min(4, n / 5000))
+      val shards = if (crossFileDups) 2 else 1 + rnd.nextInt(3)
       val files = Array.fill(shards)(new StringBuilder)
       val rows = (0 until n).map { i =>
         val id = newId(t)
@@ -84,10 +85,12 @@ final class FhirExport(seed: Long, val types: Seq[String]) {
   }
 
   /** Write the next incremental export: about `frac` of each type's live
-    * rows, as updates (one in eight carrying an OLDER lastUpdated),
-    * inserts, in-export duplicates and a deleted-ids bundle. Without
-    * `rejectedRow` the export has no row the scrub policy rejects, so its
-    * nested schema is narrower than the other exports'.
+    * rows (at least 20), as updates (about one in eight carrying an OLDER
+    * lastUpdated), inserts (one or two of them rows the scrub policy
+    * rejects), in-export duplicates of inserts, and a deleted-ids bundle
+    * naming one to a few ids; the seed draws the counts. Without
+    * `rejectedRow` the export has no rejected row, so its nested schema
+    * is narrower than the other exports'.
     */
   def writeIncrement(dir: Path, frac: Double, rejectedRow: Boolean = true): Export = {
     Files.createDirectories(dir.resolve("deleted"))
@@ -104,14 +107,15 @@ final class FhirExport(seed: Long, val types: Seq[String]) {
     val deletes = new StringBuilder
     types.foreach { t =>
       val rows = live(t)
-      val n = math.max(10, (rows.size * frac).toInt)
+      val n = math.max(20, (rows.size * frac).toInt)
       val picked = sample(rows.keysIterator.toIndexedSeq,
-        n * 8 / 10 + math.max(1, n / 50))
+        n * 8 / 10 + 1 + rnd.nextInt(math.max(1, n / 10)))
       val (touched, gone) = picked.splitAt(n * 8 / 10)
+      val rejects = if (rejectedRow) 1 + rnd.nextInt(2) else 0
       val main = new StringBuilder
       val later = new StringBuilder
-      touched.zipWithIndex.foreach { case (id, i) =>
-        if (i % 8 == 7) {
+      touched.foreach { id =>
+        if (rnd.nextInt(8) == 0) {
           // stale re-export: the merge guard must keep the newer row
           staleUpdated(t) += id
           main.append(resource(t, id, old(), reject = false)).append('\n')
@@ -125,13 +129,13 @@ final class FhirExport(seed: Long, val types: Seq[String]) {
       }
       (0 until n - touched.size).foreach { i =>
         val id = newId(t)
-        val reject = rejectedRow && i == 0
+        val reject = i < rejects
         val stamp = fresh()
         if (!reject) rows(id) = stamp
-        main.append(resource(t, id, stamp, reject, dropExt = i == 1))
+        main.append(resource(t, id, stamp, reject, dropExt = i == rejects))
           .append('\n')
         resources += 1
-        if (!reject && i % 10 == 2) {
+        if (!reject && (i == rejects + 1 || rnd.nextInt(10) == 0)) {
           val newer = stamp.replace("Z", "").dropRight(2) + "59Z"
           rows(id) = newer
           later.append(resource(t, id, newer, reject = false)).append('\n')

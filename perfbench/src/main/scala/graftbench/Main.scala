@@ -12,15 +12,25 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark harness JVM: one workload, one seed, one closed loop.
   *
   *   graftbench.Main --workload W --seed N --seconds S --trace 0|1
-  *     --work DIR [--tables DIR] [--t0-ms EPOCH_MS]
+  *     --work DIR [--tables DIR] [--t0-ms EPOCH_MS] [--layer-keys K,...]
   *
+  * `--layer-keys` names the per-layer metrics to report (run.py passes
+  * the `per_layer` names of BENCHMARK.json); the `spark.jobs.<module>`
+  * names among them choose the modules jobs are attributed to.
   * Writes `result.json` (and, when traced, `trace.json`) under the work
   * directory; `run.py` turns it into the benchmark's output line.
   */
 object Main {
 
   final case class Args(workload: String, seed: Long, seconds: Double,
-      trace: Boolean, work: Path, tables: Option[String], t0Ms: Long)
+      trace: Boolean, work: Path, tables: Option[String], t0Ms: Long,
+      layerKeys: Seq[String]) {
+    /** Zero for each layer metric whose layer (the name up to its first
+      * '.') the workload never reaches.
+      */
+    def unreached(reached: Set[String]): Map[String, Double] =
+      layerKeys.filterNot(k => reached(k.takeWhile(_ != '.'))).map(_ -> 0.0).toMap
+  }
 
   /** `samples`: timed samples behind each end-to-end timing. */
   final case class Result(attempted: Int, failed: Int,
@@ -33,7 +43,8 @@ object Main {
       kv.get("trace").contains("1"), Paths.get(kv("work")).toAbsolutePath,
       kv.get("tables"),
       kv.get("t0-ms").map(_.toLong).getOrElse(
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime))
+        java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime),
+      kv.get("layer-keys").toSeq.flatMap(_.split(',')).filter(_.nonEmpty))
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString).toInt
     val (steal0, total0) = Bench.cpuJiffies()
@@ -42,7 +53,9 @@ object Main {
       .config("spark.sql.warehouse.dir", a.work.resolve("warehouse").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val tracer = new Tracer(spark, cores, listen = a.trace)
+    val modules = a.layerKeys.filter(_.startsWith("spark.jobs."))
+      .map(_.stripPrefix("spark.jobs."))
+    val tracer = new Tracer(spark, cores, listen = a.trace, modules)
     val r = try a.workload match {
       case "etl_incremental" => EtlWorkload.run(spark, tracer, a)
       case "query_mix" => QueryWorkload.run(spark, tracer, a)
@@ -103,23 +116,11 @@ object Main {
       else Files.copy(p, q)
     }
 
-  /** Layer metrics every traced run reports, zero where the workload
-    * never reaches the layer.
+  /** Layers every traced run reaches: the engine, and the run-wide
+    * overhead and ambient-load figures.
     */
-  val LayerKeys: Seq[String] = Seq(
-    "etl.run_s", "etl.driver_s", "etl.jobs", "etl.completion_s",
-    "etl.accounted_frac",
-    "sources.detect_s", "sources.read_s", "sources.rows", "sources.bytes",
-    "deid.scrub_plan_s", "deid.census_s", "deid.kept_frac",
-    "operators.dedup_s", "operators.dedup_kept_frac",
-    "sinks.merge_s", "sinks.delete_s", "sinks.row_count_s",
-    "sinks.buckets_touched", "sinks.files_written", "sinks.bytes_written",
-    "sinks.write_amp", "sinks.store_amp",
-    "queries.build_s", "queries.plan_s", "queries.exec_s", "queries.driver_s",
-    "spark.analysis_s", "spark.optimization_s", "spark.planning_s",
-    "trace_overhead_frac", "replay_coverage")
-
-  def zeros: Map[String, Double] = LayerKeys.map(_ -> 0.0).toMap
+  val Everywhere: Set[String] =
+    Set("spark", "trace_overhead_frac", "load_cal_s", "steal_pct")
 }
 
 /** Base load in set-up, then closed-loop incremental exports. */
@@ -133,6 +134,8 @@ object EtlWorkload {
     */
   val Types: Seq[String] = Seq("Encounter")
   val BaseResources = 2000
+  val Reached: Set[String] = Everywhere ++
+    Set("etl", "sources", "deid", "operators", "sinks", "replay_coverage")
   val BatchFrac = 0.01
 
   def run(spark: SparkSession, tr: Tracer, a: Args): Result = {
@@ -161,7 +164,7 @@ object EtlWorkload {
 
     val times = mutable.ArrayBuffer.empty[Double]
     var resources = 0L
-    var layers = zeros
+    var layers = Map.empty[String, Double]
     val untraced = mutable.ArrayBuffer.empty[Double]
     val t0 = System.nanoTime()
     def elapsed = (System.nanoTime() - t0) / 1e9
@@ -221,7 +224,9 @@ object EtlWorkload {
     val js = tr.jobsOf(span)
     val engine = tr.engine(js)
     val driver = tr.driverS(span)
-    val jobS = Tracer.Modules.map(m => engine(s"spark.job_s.$m")).sum
+    // the modules' job times split the union of the jobs' intervals,
+    // which is what driverS subtracts from the span
+    val jobS = engine.collect { case (k, v) if k.startsWith("spark.job_s.") => v }.sum
 
     // replay the same batch on the pre-batch copy
     val rOut = a.work.resolve("replay-out")
@@ -244,7 +249,7 @@ object EtlWorkload {
       .map(_.seconds).sum
     val topLevel = tr.allSpans.filter(_.parent == replay.id).map(_.seconds).sum
     val inBatch = Seq(span)
-    zeros ++ engine ++ Map(
+    a.unreached(Reached) ++ engine ++ Map(
       "etl.run_s" -> span.seconds,
       "etl.driver_s" -> driver,
       "etl.jobs" -> js.size.toDouble,
@@ -281,12 +286,14 @@ object QueryWorkload {
     * q65 and q83 are left out to fit the run's time budget).
     */
   val Small: Seq[String] = Seq("q2", "q9", "q10", "q14", "q40", "q163")
-  /** Compute- and shuffle-heavy queries: the text-dedup, similarity and
-    * suffix kernels. The slowest heavy queries (q87, q100, q101, q121,
-    * q132, q133, q142, q148, q151, q180, q195) are left out to fit the
-    * run's time budget.
+  /** The heavy kernels: text dedup, similarity and suffix ranking. At
+    * the sf0.01 sizes their time sits mostly in building them (eager
+    * jobs) and in driver work, not in task compute. The slowest heavy
+    * queries (q87, q100, q101, q121, q132, q133, q142, q148, q151, q180,
+    * q195) are left out to fit the run's time budget.
     */
   val Heavy: Seq[String] = Seq("q25", "q30", "q38", "q176")
+  val Reached: Set[String] = Everywhere + "queries"
 
   def mix: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
     (Small ++ Heavy).map { id =>
@@ -328,8 +335,10 @@ object QueryWorkload {
     val rnd = new scala.util.Random(a.seed)
     val times = mutable.Map.empty[String, mutable.ArrayBuffer[Double]]
     val passTimes = mutable.ArrayBuffer.empty[(Boolean, Double)]
-    val phaseT = mutable.Map.empty[(String, String), mutable.ArrayBuffer[Double]]
+    // (query, phase, traced) → seconds
+    val phaseT = mutable.Map.empty[(String, String, Boolean), mutable.ArrayBuffer[Double]]
     val execs = mutable.Map.empty[String, Int].withDefaultValue(0)
+    val rows = mutable.Map.empty[String, Long]
     val t0 = System.nanoTime()
     def elapsed = (System.nanoTime() - t0) / 1e9
     var pass = 0
@@ -346,10 +355,11 @@ object QueryWorkload {
         try {
           val (df, b) = tr.timed("queries.build")(fn(spark, dir))
           val (_, p) = tr.timed("queries.plan")(df.queryExecution.executedPlan)
-          val (_, e) = tr.timed("queries.exec")(df.queryExecution.toRdd.count())
+          val (n, e) = tr.timed("queries.exec")(df.queryExecution.toRdd.count())
           tr.recordPhases(df.queryExecution)
-          if (traceThis) Seq("build" -> b, "plan" -> p, "exec" -> e).foreach {
-            case (k, v) => phaseT.getOrElseUpdate((name, k), mutable.ArrayBuffer()) += v
+          rows(name) = n
+          Seq("build" -> b, "plan" -> p, "exec" -> e).foreach { case (k, v) =>
+            phaseT.getOrElseUpdate((name, k, traceThis), mutable.ArrayBuffer()) += v
           }
         } catch { case ex: Exception =>
           failed += 1
@@ -365,8 +375,13 @@ object QueryWorkload {
       pass += 1
     }
     val heap = heapLiveMb()
+    def phaseMedian(n: String, k: String, traced: Boolean) =
+      phaseT.get((n, k, traced)).map(ts => median(ts.toSeq)).getOrElse(0.0)
     times.toSeq.sortBy(_._1).foreach { case (n, ts) =>
-      System.err.println(f"[perfbench] timed $n ${ts.map(v => f"$v%.2f").mkString(" ")}")
+      val split = Seq("build", "plan", "exec")
+        .map(k => f"$k=${phaseMedian(n, k, false)}%.3f").mkString(" ")
+      System.err.println(f"[perfbench] timed $n rows=${rows.getOrElse(n, -1L)} " +
+        f"$split total ${ts.map(v => f"$v%.3f").mkString(" ")}")
     }
     val medians = times.values.map(ts => median(ts.toSeq)).toSeq
     val all = times.values.flatten.toSeq
@@ -376,11 +391,10 @@ object QueryWorkload {
       tr.drain()
       val spans = tr.allSpans.filter(_.module == "queries")
       val js = tr.tracedJobs
-      def mixSum(k: String) = qs.map(_._1).map(n =>
-        phaseT.get((n, k)).map(ts => median(ts.toSeq)).getOrElse(0.0)).sum
+      def mixSum(k: String) = qs.map(_._1).map(phaseMedian(_, k, true)).sum
       val driver = spans.map(tr.driverS).sum
       val (on, off) = passTimes.partition(_._1)
-      zeros ++ tr.engine(js) ++ Map(
+      a.unreached(Reached) ++ tr.engine(js) ++ Map(
         "queries.build_s" -> mixSum("build"),
         "queries.plan_s" -> mixSum("plan"),
         "queries.exec_s" -> mixSum("exec"),

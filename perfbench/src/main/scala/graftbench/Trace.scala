@@ -18,7 +18,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (the bus delivers them late), so analysis keeps only the jobs whose
   * group is a span.
   */
-final class Tracer(spark: SparkSession, cores: Int, listen: Boolean) {
+final class Tracer(spark: SparkSession, cores: Int, listen: Boolean,
+    modules: Seq[String]) {
   import Tracer._
 
   @volatile var on = false
@@ -165,7 +166,15 @@ final class Tracer(spark: SparkSession, cores: Int, listen: Boolean) {
         inSpans.exists(s => t >= s.startMs - 1 && t <= s.endMs + 1))
     }.map(_._3).sum
 
-  /** Engine totals over `js`: counts, task time, data movement, slots. */
+  /** Engine totals over `js`: counts, task time, data movement, slots,
+    * and per module (of `modules`, else "other") the jobs and the job
+    * time. Jobs overlap (adaptive execution runs shuffle stages side by
+    * side), so a module's job time is its share of the union of the job
+    * intervals: an instant that k jobs cover counts 1/k for each. The
+    * modules' shares add up to that union, the time `driverS` subtracts;
+    * `spark.job_overlap_s` is what a plain sum of job durations would
+    * count twice.
+    */
   def engine(js: Seq[Job]): Map[String, Double] = {
     val spanModule = allSpans.map(s => s.id -> s.module).toMap
     // adaptive execution submits shuffle stages from a pool thread, whose
@@ -174,11 +183,18 @@ final class Tracer(spark: SparkSession, cores: Int, listen: Boolean) {
     val execModule = tracedJobs.filter(j => j.module.nonEmpty && j.execution >= 0)
       .map(j => j.execution -> j.module).toMap
     def moduleOf(j: Job): String =
-      if (j.module.nonEmpty) j.module
-      else execModule.get(j.execution)
-        .orElse(spanModule.get(j.group).filter(Modules.contains))
-        .getOrElse("other")
-    val wall = js.map(j => math.max(0.0, j.endMs - j.startMs) / 1e3).sum
+      Some(j.module).filter(_.nonEmpty).orElse(execModule.get(j.execution))
+        .orElse(spanModule.get(j.group))
+        .filter(modules.contains).getOrElse("other")
+    def end(j: Job) = math.max(j.startMs, j.endMs)
+    val wall = js.map(j => end(j) - j.startMs).sum / 1e3
+    val union = unionMs(js.map(j => (j.startMs, end(j)))) / 1e3
+    val share = mutable.Map.empty[String, Double].withDefaultValue(0.0)
+    val cuts = js.flatMap(j => Seq(j.startMs, end(j))).distinct.sorted
+    cuts.zip(cuts.drop(1)).foreach { case (a, b) =>
+      val on = js.filter(j => j.startMs <= a && end(j) >= b)
+      on.foreach(j => share(moduleOf(j)) += (b - a) / 1e3 / on.size)
+    }
     val run = js.map(_.runS).sum
     Map(
       "spark.jobs" -> js.size.toDouble,
@@ -190,12 +206,11 @@ final class Tracer(spark: SparkSession, cores: Int, listen: Boolean) {
       "spark.shuffle_write_bytes" -> js.map(_.shuffleWrite).sum.toDouble,
       "spark.shuffle_read_bytes" -> js.map(_.shuffleRead).sum.toDouble,
       "spark.spill_bytes" -> js.map(_.spill).sum.toDouble,
-      "spark.slot_util" -> (if (wall > 0) run / (wall * cores) else 0.0)
-    ) ++ Modules.flatMap { m =>
-      val mine = js.filter(moduleOf(_) == m)
-      Seq(s"spark.jobs.$m" -> mine.size.toDouble,
-        s"spark.job_s.$m" ->
-          mine.map(j => math.max(0.0, j.endMs - j.startMs) / 1e3).sum)
+      "spark.slot_util" -> (if (wall > 0) run / (wall * cores) else 0.0),
+      "spark.job_overlap_s" -> (wall - union)
+    ) ++ (modules :+ "other").distinct.flatMap { m =>
+      Seq(s"spark.jobs.$m" -> js.count(moduleOf(_) == m).toDouble,
+        s"spark.job_s.$m" -> share(m))
     }
   }
 
@@ -214,13 +229,6 @@ final class Tracer(spark: SparkSession, cores: Int, listen: Boolean) {
 object Tracer {
   private val GroupPrefix = "graftbench-span-"
 
-  /** Layers: the program's modules that the workloads reach; every
-    * other frame (the engine's own or the benchmark's) counts as other.
-    */
-  val Modules: Seq[String] =
-    Seq("etl", "sources", "deid", "operators", "sinks", "queries", "tables",
-      "other")
-
   final case class Span(id: Int, name: String, parent: Int, startMs: Double) {
     var endMs: Double = startMs
     def module: String = name.takeWhile(_ != '.')
@@ -238,16 +246,17 @@ object Tracer {
 
   private val Frame = """^\s*graft\.([a-z]+)\.""".r.unanchored
 
-  /** The module owning the innermost program frame of a call site. The
-    * long call-site form lists frames innermost first. Empty when no
-    * program frame is on the stack: the job then belongs to the module
-    * of its SQL execution, else of the span that issued it.
+  /** The package under `graft.` owning the innermost program frame of a
+    * call site ("other" for a class directly in `graft`). The long
+    * call-site form lists frames innermost first. Empty when no program
+    * frame is on the stack: the job then belongs to the module of its SQL
+    * execution, else of the span that issued it.
     */
   def moduleOf(site: String): String =
     site.linesIterator.collectFirst {
       case l if l.trim.startsWith("graft.") =>
         l.trim match {
-          case Frame(m) if Modules.contains(m) => m
+          case Frame(m) => m
           case _ => "other"
         }
     }.getOrElse("")

@@ -3,10 +3,10 @@ deliberately corrupted output and stay quiet on a correct one.
 
     python3 -m unittest discover -s perfbench/tests
 
-The ETL case builds the harness (first use) and runs a small load, so
-it takes a minute or two; the oracle cases run in-process.
+The ETL cases build the harness (first use) and run small loads, so
+they take a few minutes; the oracle cases run in-process. The
+known-defects case fails until the program defects it names are fixed.
 """
-import json
 import os
 import shutil
 import subprocess
@@ -63,36 +63,35 @@ class OracleCompare(unittest.TestCase):
             "SELECT k, CASE WHEN k = 1 THEN NULL ELSE s END AS s, x FROM t"))
 
 
-class MetricList(unittest.TestCase):
-    def test_reported_metrics_match_the_benchmark_file(self):
-        path = os.path.join(os.path.dirname(BENCH), "BENCHMARK.json")
-        if not os.path.exists(path):
-            self.skipTest("no BENCHMARK.json next to the benchmark")
-        with open(path) as f:
-            spec = json.load(f)
-        self.assertEqual({m["name"]: m["unit"] for m in spec["end_to_end"]},
-                         run.E2E_UNITS)
-        self.assertEqual({m["name"]: m["unit"] for m in spec["per_layer"]},
-                         run.LAYER_UNITS)
+def self_test(mode):
+    """Run `graftbench.SelfTest` in `mode`; return (exit code, output)."""
+    cp = run.classpath()
+    work = tempfile.mkdtemp(dir=BENCH, prefix=".work-selftest-")
+    try:
+        os.makedirs(os.path.join(work, "tmp"))
+        cmd = (["java"]
+               + [f"--add-opens={o}=ALL-UNNAMED" for o in run.ADD_OPENS]
+               + [f"-Xmx{run.HEAP}", f"-Djava.io.tmpdir={work}/tmp",
+                  "-cp", cp, "graftbench.SelfTest", work, mode])
+        env = dict(os.environ, SPARK_GRAFT_CPUS=str(run.cores()))
+        p = subprocess.run(cmd, env=env, cwd=work, capture_output=True,
+                           text=True, timeout=600)
+        print(p.stdout)
+        return p.returncode, p.stdout + p.stderr[-3000:]
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 class EtlChecks(unittest.TestCase):
     def test_each_check_fires_on_a_corrupted_output(self):
-        cp = run.classpath()
-        work = tempfile.mkdtemp(dir=BENCH, prefix=".work-selftest-")
-        try:
-            os.makedirs(os.path.join(work, "tmp"))
-            cmd = (["java"]
-                   + [f"--add-opens={o}=ALL-UNNAMED" for o in run.ADD_OPENS]
-                   + [f"-Xmx{run.HEAP}", f"-Djava.io.tmpdir={work}/tmp",
-                      "-cp", cp, "graftbench.SelfTest", work])
-            env = dict(os.environ, SPARK_GRAFT_CPUS=str(run.cores()))
-            p = subprocess.run(cmd, env=env, cwd=work, capture_output=True,
-                               text=True, timeout=600)
-            print(p.stdout)
-            self.assertEqual(p.returncode, 0, p.stdout + p.stderr[-3000:])
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
+        rc, out = self_test("checks")
+        self.assertEqual(rc, 0, out)
+
+    def test_known_program_defects_are_fixed(self):
+        """Export shapes the timed workload steers around because the
+        program fails on them; fails while any of them still does."""
+        rc, out = self_test("defects")
+        self.assertEqual(rc, 0, out)
 
 
 if __name__ == "__main__":
