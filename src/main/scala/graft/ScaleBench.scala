@@ -443,7 +443,7 @@ object ScaleBench {
         // keep the cached fixture bounded across repeated invocations:
         // drop the version dirs the runs above retired (each timed run
         // appends one) and the update temp dirs — ADVICE r9
-        graft.sinks.GraftTable.bucketed(spark, s"${fx.out}/observation",
+        graft.sinks.GraftTable(spark, s"${fx.out}/observation",
           graft.operators.MergeOps.MergeSpec(Seq("id")),
           buckets = fx.buckets).vacuum()
         Seq(incDir, tinyDir).foreach { d =>

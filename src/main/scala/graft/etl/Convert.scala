@@ -59,7 +59,7 @@ object Convert {
     import spark.implicits._
     // same bucketed layout the ETL writes (an existing layout-less
     // table stays legacy — GraftTable never reinterprets on-disk data)
-    val target = GraftTable.bucketed(spark, s"$targetDir/$table", spec,
+    val target = GraftTable(spark, s"$targetDir/$table", spec,
       EtlPipeline.ResourceTableBuckets)
     listBatches(sourceTableDir, table).foreach { batch =>
       val rows = spark.read.json(batch.dataPath)

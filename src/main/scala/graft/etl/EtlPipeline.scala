@@ -110,16 +110,6 @@ object EtlPipeline {
       "tasks" -> tasks.map(_.tableName).mkString(",")
     ))
 
-    val etlDebug = sys.env.contains("GRAFT_ETL_DEBUG")
-    def phase[T](label: String)(f: => T): T =
-      if (!etlDebug) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[etl]   $label%-24s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-        r
-      }
     val results = tasks.map { task =>
       if (!available.contains(task.resourceType)) {
         // touch-empty-tables (etl/tasks/base.py:222-227): a selected task
@@ -133,12 +123,12 @@ object EtlPipeline {
         // nested resources dominates the cold path, so cache the parsed
         // frame for the task's duration (MEMORY_AND_DISK: spills, never
         // recomputes the parse)
-        val raw = phase(s"${task.tableName} read")(NdjsonSource.readResourceFiles(spark,
+        val raw = NdjsonSource.readResourceFiles(spark,
           filesByType.getOrElse(task.resourceType, Nil),
           task.resourceType,
           graft.fhir.FhirSchemas.forResource(task.resourceType),
           widen = true)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // P2/A4: dropped-extension census side-output (the report the
         // reference prints at run end, persisted as a mergeable table)
         val census = ScrubCompiler.extensionCensus(raw,
@@ -146,7 +136,7 @@ object EtlPipeline {
         // evaluate the census ONCE (it is small by definition: one row
         // per distinct dropped-extension url) — `isEmpty` + `merge`
         // would run the input aggregation twice
-        val censusRows = phase(s"${task.tableName} census")(census.collect())
+        val censusRows = census.collect()
         if (censusRows.nonEmpty)
           GraftTable(spark, s"$outputDir/etl__extension_census",
             MergeSpec(Seq("resource_type", "url"))).merge(
@@ -167,7 +157,7 @@ object EtlPipeline {
         // signal — partition ids alone don't track file order), ties
         // within a file broken by the partition-local id
         val inputFiles = NdjsonSource.listResourceFiles(spark, inputDir)
-        val deduped = phase(s"${task.tableName} scrub+dedup")(MergeOps.dedupLastWins(
+        val deduped = MergeOps.dedupLastWins(
           scrubbed.observe(scrubObs, count(lit(1)).as("n"))
             .withColumn("__file_seq", NdjsonSource.fileSeqCol(inputFiles))
             .withColumn("__seq", monotonically_increasing_id()),
@@ -181,16 +171,13 @@ object EtlPipeline {
           // per action (measured at 200k rows: cold merge 12.2s → 4.4s,
           // tiny incremental 14.5s → 3.6s). Scrub + dedup still execute
           // exactly once — this checkpoint is that execution.
-          .localCheckpoint(true))
+          .localCheckpoint(true)
 
         // bucketed incremental layout: re-runs merge only the key-hash
         // buckets their rows touch instead of rewriting the table
-        // (backend-pluggable: spark.graft.delta.enabled=true binds the
-        // same flow to Delta Lake when its jars are present)
-        val table = graft.sinks.MergeTable.open(spark,
-          s"$outputDir/${task.tableName}", task.mergeSpec,
-          buckets = buckets)
-        phase(s"${task.tableName} merge")(table.merge(deduped))
+        val table = GraftTable(spark, s"$outputDir/${task.tableName}",
+          task.mergeSpec, buckets)
+        table.merge(deduped)
 
         // Patient/Encounter reversibility side-output (SURVEY §7.4.3)
         if (task.resourceType == "Patient" ||
@@ -198,21 +185,18 @@ object EtlPipeline {
           val mapping = codebook.mappingTable(
             raw.filter(col("resourceType") === task.resourceType),
             "id", task.resourceType)
-          phase(s"${task.tableName} mapping")(
-            GraftTable(spark, s"$phiDir/codebook-mappings",
-              MergeSpec(Seq("resource_type", "real_id"))).merge(mapping))
+          GraftTable(spark, s"$phiDir/codebook-mappings",
+            MergeSpec(Seq("resource_type", "real_id"))).merge(mapping)
         }
 
         val n = table.rowCount // footer metadata only — no table scan
-        phase(s"${task.tableName} completion")(
-          Completion.recordTable(spark, outputDir, task.tableName,
-            groupName, exportTime))
+        Completion.recordTable(spark, outputDir, task.tableName,
+          groupName, exportTime)
         // J7: Encounter rows fan out into the per-encounter completion
         // table as well (etl/tasks/basic_tasks.py:36-68)
         if (task.resourceType == "Encounter")
-          phase(s"${task.tableName} enc-completion")(
-            Completion.recordEncounters(spark, outputDir,
-              deduped.select("id"), groupName, exportTime))
+          Completion.recordEncounters(spark, outputDir,
+            deduped.select("id"), groupName, exportTime)
         raw.unpersist()
         TaskResult(task.tableName, attempted = true, rows = n,
           rowsRead = readObs.get("n").asInstanceOf[Long],

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.deid.{Codebook, DefaultScrubPolicy, ScrubCompiler, ScrubPolicy}
 import graft.operators.MergeOps.MergeSpec
-import graft.sinks.{GraftTable, MergeTable}
+import graft.sinks.GraftTable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -59,7 +59,7 @@ object Init {
       task: EtlPipeline.EtlTask,
       policy: ScrubPolicy = DefaultScrubPolicy.policy
   ): Boolean = {
-    val table = MergeTable.open(spark, s"$outputDir/${task.tableName}",
+    val table = GraftTable(spark, s"$outputDir/${task.tableName}",
       task.mergeSpec, buckets = EtlPipeline.ResourceTableBuckets)
     if (table.exists) false
     else {

@@ -117,11 +117,11 @@ object BpeVocab {
     // dictionary-derived loop partitioning (see [[Sizing]]): each round
     // is an explode+aggregate over the (small) word dictionary plus a
     // re-checkpoint; the count is cheap (state is checkpointed)
-    Sizing.withShufflePartitions(spark,
-      Sizing.loopPartitions(state.count())) {
+    val parts = Sizing.loopPartitions(state.count())
     while (step <= merges && !exhausted) {
       val top = state
         .select(explode(pairUdf(col("syms"))).as("p"), col("cnt"))
+        .repartition(parts, col("p"))
         .groupBy("p").agg(sum("cnt").as("c"))
         .orderBy(col("c").desc, col("p").asc)
         .limit(1)
@@ -137,7 +137,6 @@ object BpeVocab {
         prev.unpersist()
         step += 1
       }
-    }
     }
     state.unpersist()
     rules.toSeq.toDF("step", "left", "right", "freq")

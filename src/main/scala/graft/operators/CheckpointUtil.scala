@@ -26,10 +26,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   */
 private[graft] object CheckpointUtil {
 
-  private val disabled = sys.env.get("SPARK_GRAFT_NO_FREE").contains("1")
-
   def free(df: Dataset[_]): Unit =
-    if (!disabled) df.queryExecution.analyzed.foreach {
+    df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()

@@ -33,11 +33,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphOps {
 
-  // data-derived loop sizing — see [[Sizing]]
-  private def loopPartitions(nRows: Long): Int = Sizing.loopPartitions(nRows)
-  private def withLoopPartitions[T](
-      spark: SparkSession, parts: Int)(f: => T): T =
-    Sizing.withShufflePartitions(spark, parts)(f)
+  // data-derived loop sizing — see [[Sizing]] — floored at 2: a
+  // one-partition repartition plans as SinglePartition, which the
+  // planner cannot use to place the other side of a join, so it would
+  // reshuffle BOTH sides at the session count. A persisted frame
+  // hash-partitioned at this count places the other side of every loop
+  // join instead.
+  private def loopPartitions(nRows: Long): Int =
+    math.max(2, Sizing.loopPartitions(nRows))
 
   /** Components of the undirected graph given by `edges` (any
     * direction, duplicates fine). Returns one row per node appearing in
@@ -87,35 +90,26 @@ object GraphOps {
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // The loop's shuffles all carry iterate-sized frames; run them at
-    // the edge-derived partition count. This sets the non-adaptive
-    // floor AND lets the exchange join zip with bi's persisted
-    // hashpartitioning(src).
-    withLoopPartitions(spark, parts) {
-
     // Round 1 needs no label join: every node's label IS its id, so the
     // first neighborhood-min exchange is a single aggregate over the
-    // edge list. In LSH dedup graphs components are band-bucket
+    // edge list. bi holds every edge in both directions plus a self-loop
+    // per node, so a node's min in-neighbour is its min out-neighbour:
+    // the aggregate groups by bi's own partitioning key and shuffles
+    // nothing. In LSH dedup graphs components are band-bucket
     // near-cliques, so for most inputs this one aggregate already
     // produces the final labels and the loop below exits on its first
-    // convergence check — the whole CC then costs two shuffles.
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
-    def phase[T](label: String)(f: => T): T =
-      if (!ccDebug) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[cc]   $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-        r
-      }
+    // convergence check.
+    //
+    // A checkpointed iterate forgets its partitioning; bi, persisted
+    // hash-partitioned at the loop's count, places it in every exchange
+    // join, so each round shuffles iterate-sized frames, never bi.
     val obs0 = org.apache.spark.sql.Observation()
-    var labels = phase("round0 agg")(bi
-      .select(col("dst").as("id"), col("src").as("comp"))
-      .groupBy("id")
-      .agg(min("comp").as("comp"))
+    var labels = bi
+      .groupBy("src")
+      .agg(min("dst").as("comp"))
+      .select(col("src").as("id"), col("comp"))
       .observe(obs0, sum("comp").as("s"))
-      .localCheckpoint(true)) // truncate the per-round doubling (class doc)
+      .localCheckpoint(true) // truncate the per-round doubling (class doc)
     var lastSum = obs0.get("s").asInstanceOf[Long]
     var converged = false
     var iter = 0
@@ -127,15 +121,16 @@ object GraphOps {
       // verified in the formatted plan), so without materialization
       // every round paid the exchange twice.
       val obsEx = org.apache.spark.sql.Observation()
-      val exchanged = phase("exchange")(bi
+      val exchanged = bi
         .join(labels.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("comp"))
+        .repartition(parts, col("id"))
         .groupBy("id")
         .agg(min("comp").as("comp"))
         // convergence sum rides the checkpoint materialization — one
         // job per round, no separate aggregate action
         .observe(obsEx, sum("comp").as("s"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
       val sEx = obsEx.get("s").asInstanceOf[Long]
       // the previous iterate is retired the moment its successor is
       // materialized — same discipline as [[SuffixRank]] (measured
@@ -154,16 +149,18 @@ object GraphOps {
         // (b) pointer jumping: comp := comp(comp) — halves label depth,
         // so convergence is O(log diameter) rounds
         val obs = org.apache.spark.sql.Observation()
-        val jumped = phase("jump")(exchanged.as("l")
+        // (the right side is shuffled explicitly at the loop's count, so
+        // the planner shuffles the left side to match)
+        val jumped = exchanged.as("l")
           .join(
-            exchanged.select(col("id").as("comp"),
-              col("comp").as("comp2")).as("r"),
+            exchanged.repartition(parts, col("id"))
+              .select(col("id").as("comp"), col("comp").as("comp2")).as("r"),
             Seq("comp"), "left")
           .select(col("id"),
             least(col("comp"), coalesce(col("comp2"), col("comp")))
               .as("comp"))
           .observe(obs, sum("comp").as("s"))
-          .localCheckpoint(true)) // truncate the doubling plan (class doc)
+          .localCheckpoint(true) // truncate the doubling plan (class doc)
         // s ≤ sEx < lastSum here, so never converged this round; the
         // next exchange performs the fixpoint check
         val s = obs.get("s").asInstanceOf[Long]
@@ -173,8 +170,6 @@ object GraphOps {
       }
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged=$converged rounds=$iter")
     // singletons (requested nodes that touch no edge) come back as
     // their own component — no iteration needed for them
     val result = nodes match {
@@ -188,12 +183,11 @@ object GraphOps {
     }
     // materialize once (two longs per node) so the caches can be
     // released before returning
-    val out = phase("final ckpt")(result.localCheckpoint(true))
+    val out = result.localCheckpoint(true)
     CheckpointUtil.free(labels) // out is materialized; the iterate is dead
     bi.unpersist()
     e1.unpersist()
     out
-    }
   }
 
   /** Incremental connected components: fold a batch of NEW edges into
@@ -367,19 +361,23 @@ object GraphOps {
   ): DataFrame = {
     require(iters >= 0 && iters <= 100, s"iters out of range: $iters")
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    val e = edges
+    val grouped = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), w.as("w"))
       .groupBy("src", "dst").agg(min(col("w")).as("w")) // parallel edges → min
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // edge-derived loop partitioning (see [[loopPartitions]]); the
-    // count also forces e's cache before the two derived references
-    val parts = loopPartitions(e.count())
-    withLoopPartitions(edges.sparkSession, parts) {
+    // count also forces the cache before the derived references. The
+    // edges persist hash-partitioned by src at that count, so they place
+    // the (checkpointed, so unpartitioned) iterate in every relaxation
+    // join and never shuffle inside the loop; the candidates aggregate
+    // at the same count and place the iterate in the merge join.
+    val parts = loopPartitions(grouped.count())
+    val e = grouped.repartition(parts, col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = grouped.select(col("src").as("node"))
+      .union(grouped.select(col("dst").as("node")))
+      .distinct()
     var dist = nodes.withColumn("dist",
       when(col("node") === source, 0L).otherwise(lit(Unreachable)))
       .localCheckpoint(true)
@@ -388,6 +386,7 @@ object GraphOps {
       val relaxed = e.join(dist, col("src") === col("node"))
         .filter(col("dist") < Unreachable)
         .select(col("dst").as("node"), (col("dist") + col("w")).as("cand"))
+        .repartition(parts, col("node"))
         .groupBy("node").agg(min(col("cand")).as("cand"))
       val prev = dist
       dist = dist.join(relaxed, Seq("node"), "left_outer")
@@ -400,9 +399,8 @@ object GraphOps {
       CheckpointUtil.free(prev)
       it += 1
     }
-    e.unpersist(); nodes.unpersist()
+    e.unpersist(); grouped.unpersist()
     dist
-    }
   }
 
   /** PageRank over a directed edge frame, in INTEGER micro-rank units.
@@ -446,14 +444,24 @@ object GraphOps {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.count() // single scalar aggregate; no row data collected
-    if (n == 0) { e.unpersist(); nodes.unpersist(); return nodes.withColumn("rank", lit(0L)) }
-    val withDeg = e.join(
-      e.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))
+    if (n == 0) { e.unpersist(); return nodes.withColumn("rank", lit(0L)) }
+    // edge-derived loop partitioning (see [[loopPartitions]]): the
+    // whole loop is `iters` shuffles of iterate-sized frames inside one
+    // job — at the session constant a 5k-node graph schedules hundreds
+    // of near-empty tasks. The node universe and the degree-annotated
+    // edges are persisted hash-partitioned at that count, so both joins
+    // in the loop zip without a shuffle and each round shuffles only
+    // the in-rank contributions.
+    val parts = loopPartitions(math.max(n, e.count()))
+    val universe = nodes.repartition(parts, col("node"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val bySrc = e.repartition(parts, col("src"))
+    val withDeg = bySrc
+      .join(bySrc.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val base = (scale * 15L / 100L) / n
-    var ranks = nodes.withColumn("rank", lit(scale / n))
+    var ranks = universe.withColumn("rank", lit(scale / n))
     // track the last surviving checkpoint so each one is retired as soon
     // as its successor materializes ([[SuffixRank]] discipline): the
     // `it < iters` guard means the loop always runs at least one more
@@ -461,18 +469,13 @@ object GraphOps {
     // tracked frame
     var lastCp: Option[DataFrame] = None
     var it = 0
-    // edge-derived loop partitioning (see [[loopPartitions]]): the
-    // whole loop is iters×2 shuffles of iterate-sized frames inside one
-    // job — at the session constant a 5k-node graph schedules hundreds
-    // of near-empty tasks
-    val out = withLoopPartitions(edges.sparkSession,
-      loopPartitions(math.max(n, e.count()))) {
     while (it < iters) {
       val in = withDeg
         .join(ranks, col("src") === col("node"))
         .select(col("dst").as("node"), expr("rank div deg").as("c"))
+        .repartition(parts, col("node"))
         .groupBy("node").agg(sum(col("c")).as("inr"))
-      ranks = nodes.join(in, Seq("node"), "left_outer")
+      ranks = universe.join(in, Seq("node"), "left_outer")
         .select(col("node"),
           (lit(base) + expr("(85 * coalesce(inr, 0L)) div 100")).as("rank"))
       it += 1
@@ -484,10 +487,9 @@ object GraphOps {
     }
     // materialize the final iterate (|nodes| rows) so the three cached
     // inputs can be released instead of leaking for the session's lifetime
-    ranks.localCheckpoint(true)
-    }
+    val out = ranks.localCheckpoint(true)
     lastCp.foreach(CheckpointUtil.free(_))
-    e.unpersist(); nodes.unpersist(); withDeg.unpersist()
+    e.unpersist(); universe.unpersist(); withDeg.unpersist()
     out
   }
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-
 /** Data-derived shuffle sizing for iterative operators.
   *
   * An iterative loop (connected components, prefix doubling, Bellman-
@@ -14,6 +12,12 @@ import org.apache.spark.sql.SparkSession
   * rounds at corpus scale. Deriving the count from the loop's own row
   * count keeps both regimes honest (optimization guide §2.2: fewer,
   * larger partitions; scale-adaptive, never a local-mode constant).
+  *
+  * A loop applies the count through the frames it builds:
+  * `repartition(parts, key)` on the inputs it persists, which then
+  * place the other side of each loop join at that count, and before
+  * each aggregate. The session conf is never touched, so sized loops
+  * may run concurrently on one session.
   */
 private[graft] object Sizing {
 
@@ -23,26 +27,4 @@ private[graft] object Sizing {
     */
   def loopPartitions(nRows: Long): Int =
     math.max(1L, math.min(nRows / 1000000L + 1L, 65536L)).toInt
-
-  /** Run `f` with `spark.sql.shuffle.partitions` = `parts`, restoring
-    * the previous session value after. AQE stays on throughout — this
-    * sets the non-adaptive floor and lets loop joins zip with frames
-    * persisted at the same count.
-    *
-    * CONCURRENCY CONTRACT (ADVICE r10): this mutates the SHARED session
-    * conf — two sized loops interleaving on one SparkSession would
-    * restore stale values, and a lazy frame built inside `f` but
-    * EXECUTED after the restore runs at the session count (the loops
-    * here avoid that by materializing eagerly — every round is a
-    * localCheckpoint/zipWithIndex action inside the block). All current
-    * callers (Bench, Verify, Profile, the query registry, tests) drive
-    * one query at a time per session; a caller that overlaps queries on
-    * one session must run sized loops on `spark.newSession()` instead.
-    */
-  def withShufflePartitions[T](spark: SparkSession, parts: Int)(f: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try f
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 }

@@ -36,19 +36,22 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object SuffixRank {
 
   /** Append `rankCol` = 1-based dense rank of `keyCols` under their
-    * ascending order. Distinct keys are range-sorted and indexed with
-    * zipWithIndex (one extra count job), then joined back — the
-    * scalable dense rank, O(distinct) rows through the sort and no
-    * single-partition stage.
+    * ascending order. Keys are range-partitioned into `parts`
+    * partitions, deduplicated and sorted within each (the range
+    * partitioning already clusters equal keys, so the distinct adds no
+    * shuffle), indexed with zipWithIndex (one extra count job), then
+    * joined back — the scalable dense rank, no single-partition stage.
     */
   private[graft] def denseRank(
       df: DataFrame,
       keyCols: Seq[String],
-      rankCol: String): DataFrame = {
+      rankCol: String,
+      parts: Int): DataFrame = {
     val spark = df.sparkSession
     val keys = keyCols.map(col)
-    val distinct = df.select(keys: _*).distinct()
-      .repartitionByRange(keys: _*)
+    val distinct = df.select(keys: _*)
+      .repartitionByRange(parts, keys: _*)
+      .distinct()
       .sortWithinPartitions(keys: _*)
     val schema = StructType(
       distinct.schema.fields :+ StructField(rankCol, LongType, nullable = false))
@@ -126,16 +129,16 @@ object SuffixRank {
     // checkpoint as soon as its successor is materialized (the
     // returned frame only ever depends on the last one)
     var live = base.localCheckpoint(true)
-    // the ladder is ~4 shuffles of (id, pos, rank) rows per round; size
-    // them from the position count, not the session constant (rank
-    // values are partitioning-independent). Unlike the CC iterate (two
-    // longs, join-bound), every ladder round RANGE-SORTS string-keyed
-    // rows — CPU-heavy per row — so the divisor is 64k rows/partition,
-    // not [[Sizing.loopPartitions]]'s 1M (measured: 1M-sizing
-    // serialized the sf0.1 ladder's sorts on one task, costing ~0.5s).
-    Sizing.withShufflePartitions(docs.sparkSession,
-      math.max(1L, math.min(live.count() / 65536L + 1L, 65536L)).toInt) {
-    var cur = denseRank(live, Seq("__s"), "r").drop("__s")
+    // the ladder's range sorts and per-doc windows run at a count sized
+    // from the position count, not the session constant (rank values
+    // are partitioning-independent). Unlike the CC iterate (two longs,
+    // join-bound), every ladder round RANGE-SORTS string-keyed rows —
+    // CPU-heavy per row — so the divisor is 64k rows/partition, not
+    // [[Sizing.loopPartitions]]'s 1M (measured: 1M-sizing serialized
+    // the sf0.1 ladder's sorts on one task, costing ~0.5s).
+    val parts =
+      math.max(1L, math.min(live.count() / 65536L + 1L, 65536L)).toInt
+    var cur = denseRank(live, Seq("__s"), "r", parts).drop("__s")
     var k = init
     while (k < depth) {
       // rank of the 2k-prefix = dense rank of (rank_k(i), rank_k(i+k));
@@ -145,6 +148,7 @@ object SuffixRank {
       // sort is per-doc — no global-order window anywhere.
       val w = Window.partitionBy("id").orderBy("pos")
       val paired = cur
+        .repartition(parts, col("id"))
         .withColumn("__rn", lead(col("r"), k, 0L).over(w))
         .localCheckpoint(true)
       // the retired round's blocks would otherwise sit in the storage
@@ -152,12 +156,11 @@ object SuffixRank {
       // freeing them cut the 22.6M-position ranking 42.5s → 26.3s)
       CheckpointUtil.free(live)
       live = paired
-      cur = denseRank(paired, Seq("r", "__rn"), "__r2")
+      cur = denseRank(paired, Seq("r", "__rn"), "__r2", parts)
         .drop("r", "__rn")
         .withColumnRenamed("__r2", "r")
       k *= 2
     }
     cur.select(col("id"), col("pos"), col("r").as("rank"))
-    }
   }
 }

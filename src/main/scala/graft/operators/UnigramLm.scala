@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SentencePiece-style unigram-LM vocabulary induction (Kudo 2018) —
@@ -94,17 +94,19 @@ object UnigramLm {
     // aggregate and every EM round shuffle dictionary-sized frames;
     // the count also forces the persist before the multi-reference use
     val sized = Sizing.loopPartitions(words.count())
-    Sizing.withShufflePartitions(spark, sized) {
+    def sumByPiece(pieces: Dataset[(String, Long)]): Array[(String, Long)] =
+      pieces.repartition(sized, col("_1"))
+        .groupBy("_1").agg(sum("_2"))
+        .as[(String, Long)]
+        .collect()
     // substring seed, weighted by word count (kernel + aggregate —
     // |dict| × O(len²) pieces, never corpus-sized)
-    val seed = words.flatMap { case (w, c) =>
+    val seed = sumByPiece(words.flatMap { case (w, c) =>
       for {
         i <- 0 until w.length
         j <- (i + 1) to math.min(i + maxPieceLen, w.length)
       } yield (w.substring(i, j), c)
-    }.groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-      .map { case (p, c) => (p, c) }
-      .collect() // the vocabulary artifact — driver-bounded by design
+    }) // the vocabulary artifact — driver-bounded by design
     var vocab: Map[String, Long] = seed
       .filter { case (p, c) => c >= seedMinCount || p.length == 1 }
       .toMap
@@ -130,11 +132,9 @@ object UnigramLm {
       val mpl = maxPieceLen
       // E-step: Viterbi over the dictionary, counts weighted by word
       // frequency — distributed kernel pass + count aggregate
-      counts = words.flatMap { case (w, c) =>
+      counts = sumByPiece(words.flatMap { case (w, c) =>
         viterbi(w, bc.value, mpl).getOrElse(Nil).map(p => (p, c))
-      }.groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-        .map { case (p, c) => (p, c) }
-        .collect().toMap
+      }).toMap
       // M-step + prune: keep single chars unconditionally (coverage),
       // drop the least-used quartile of the rest until targetSize
       val (chars, multi) = vocab.keys.partition(_.length == 1)
@@ -161,7 +161,6 @@ object UnigramLm {
     spark.createDataFrame(fin.map { case (p, c, r) =>
       (p, c, math.log(math.max(1L, c) / total), r)
     }).toDF("piece", "count", "logp", "rank")
-    }
   }
 
   /** Segment each document's words under a trained vocabulary — the

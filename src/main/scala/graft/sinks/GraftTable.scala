@@ -9,12 +9,10 @@ import graft.operators.MergeOps.MergeSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Versioned parquet merge table — the engine's stand-in for the
-  * reference's Delta Lake sink (formats/deltalake.py:92-168), with the
-  * same merge semantics (K1-K4) but no Delta dependency (none on this
-  * classpath). On a deployment with Delta available, [[MergeOps]] plugs
-  * straight into `DeltaTable.merge`; this class provides the
-  * local/HDFS-compatible equivalent:
+/** Versioned parquet merge table — the engine's sink, with the merge
+  * semantics of the reference's Delta Lake sink
+  * (formats/deltalake.py:92-168, K1-K4): idempotent keyed merge,
+  * delete-by-id, compaction, vacuum, metadata row count.
   *
   *  - each mutation writes a NEW version directory `v{N}` then atomically
   *    publishes it via a `_latest` pointer file (readers never see
@@ -47,7 +45,7 @@ final class GraftTable(
     path: String,
     spec: MergeSpec,
     buckets: Int = 0
-) extends MergeTable {
+) {
 
   private val mapper = new ObjectMapper()
 
@@ -327,7 +325,7 @@ final class GraftTable(
     * (bucketed tables compact every bucket into the new version, which
     * also collapses the manifest's version spread).
     */
-  def optimize(numFiles: Int): Unit =
+  def optimize(numFiles: Int = 1): Unit =
     if (exists) {
       if (!bucketed) publish(read().repartition(numFiles))
       else publishBuckets(read(), carryFrom = Map.empty)
@@ -462,13 +460,10 @@ final class GraftTable(
 }
 
 object GraftTable {
-  def apply(spark: SparkSession, path: String, spec: MergeSpec): GraftTable =
-    new GraftTable(spark, path, spec)
-
-  /** Bucketed incremental table (see class doc): merges/deletes touch
-    * only the key-hash buckets their rows map to.
+  /** `buckets > 0` opens a bucketed incremental table (see class doc):
+    * merges/deletes touch only the key-hash buckets their rows map to.
     */
-  def bucketed(spark: SparkSession, path: String, spec: MergeSpec,
-      buckets: Int): GraftTable =
+  def apply(spark: SparkSession, path: String, spec: MergeSpec,
+      buckets: Int = 0): GraftTable =
     new GraftTable(spark, path, spec, buckets)
 }

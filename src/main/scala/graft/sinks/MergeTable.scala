@@ -1,179 +1,14 @@
 package graft.sinks
 
 import graft.operators.MergeOps.MergeSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Backend-neutral merge-table contract — the sink surface the ETL
-  * needs (SURVEY §2.2 K1-K4): idempotent keyed merge, delete-by-id,
-  * compaction, vacuum, metadata row count.
-  *
-  * Two backends:
-  *  - [[GraftTable]] — versioned/bucketed parquet, no extra classpath
-  *    (the default everywhere in this repo).
-  *  - [[DeltaMergeTable]] — binds to Delta Lake REFLECTIVELY when
-  *    `io.delta.tables.DeltaTable` is on the classpath, reproducing the
-  *    reference's sink verbatim (formats/deltalake.py:92-168). This
-  *    classpath has no Delta jars, so the binding compiles but stays
-  *    dormant; selection logic and the parquet fallback are tested.
+/** Opens a merge table on `path`: a [[GraftTable]], the one sink. Kept
+  * as the entry the benchmark harness (`perfbench/`) opens ETL tables
+  * through; program code calls `GraftTable(...)` directly.
   */
-trait MergeTable {
-  def exists: Boolean
-  def read(): DataFrame
-  def merge(updates: DataFrame): Unit
-  def deleteIds(ids: DataFrame): Unit
-  def optimize(numFiles: Int = 1): Unit
-  def vacuum(): Unit
-  def rowCount: Long
-}
-
 object MergeTable {
-
-  /** Opt-in flag for the Delta backend (session conf). */
-  val DeltaEnabledKey = "spark.graft.delta.enabled"
-
-  /** Open a merge table on `path`: Delta when opted in AND the Delta
-    * classes resolve, the parquet engine otherwise.
-    */
-  def open(
-      spark: SparkSession,
-      path: String,
-      spec: MergeSpec,
-      buckets: Int = 0
-  ): MergeTable = {
-    val wantDelta =
-      spark.conf.getOption(DeltaEnabledKey).contains("true")
-    if (wantDelta && DeltaMergeTable.available)
-      new DeltaMergeTable(spark, path, spec)
-    else new GraftTable(spark, path, spec, buckets)
-  }
-}
-
-/** Delta Lake sink bound via reflection — the same builder chain as the
-  * reference (formats/deltalake.py:92-132): merge on the uniqueness
-  * keys, `whenMatchedUpdateAll` guarded by the lastUpdated condition
-  * (:187-232), `whenNotMatchedInsertAll`, and group-replace via
-  * `whenNotMatchedBySourceDelete` (:124-128). Delete-by-id is a
-  * merge-delete (distributed — no 50k-chunk OOM guard needed,
-  * :143-152). Untestable on a Delta-less classpath; kept deliberately
-  * thin so every semantic lives in the shared condition builders.
-  */
-final class DeltaMergeTable(
-    spark: SparkSession,
-    path: String,
-    spec: MergeSpec
-) extends MergeTable {
-
-  import DeltaMergeTable._
-
-  override def exists: Boolean = {
-    val m = deltaTableClass.getMethod("isDeltaTable",
-      classOf[SparkSession], classOf[String])
-    m.invoke(null, spark, path).asInstanceOf[Boolean]
-  }
-
-  override def read(): DataFrame =
-    spark.read.format("delta").load(path)
-
-  /** `t.k1 = u.k1 AND …` over the uniqueness fields (deltalake.py:110-119). */
-  private def keyCondition: String =
-    spec.keys.map(k => s"t.$k = u.$k").mkString(" AND ")
-
-  /** The reference's update guard (deltalake.py:187-232): apply the
-    * matched update unless both sides carry a timestamp and the update
-    * is strictly older (`<=` keeps equal-timestamp refreshes).
-    */
-  private def guardCondition: Option[String] = spec.guardField.map { g =>
-    s"t.$g IS NULL OR u.$g IS NULL OR " +
-      s"CAST(t.$g AS TIMESTAMP) <= CAST(u.$g AS TIMESTAMP)"
-  }
-
-  override def merge(updates: DataFrame): Unit = {
-    if (!exists) {
-      // first batch creates the table (createIfNotExists + append,
-      // deltalake.py:96-108)
-      updates.write.format("delta").mode("append").save(path)
-      return
-    }
-    val target = forPath()
-    val aliased = invoke(target, "as", classOf[String] -> "t")
-    var builder = invoke(aliased, "merge",
-      classOf[DataFrame] -> updates.alias("u"),
-      classOf[String] -> keyCondition)
-    if (spec.updateExisting) {
-      val matched = guardCondition match {
-        case Some(cond) =>
-          invoke(builder, "whenMatched", classOf[String] -> cond)
-        case None => invoke(builder, "whenMatched")
-      }
-      builder = invoke(matched, "updateAll")
-    }
-    builder = invoke(invoke(builder, "whenNotMatched"), "insertAll")
-    spec.groupField.foreach { g =>
-      // replace-whole-group: delete target rows of touched groups that
-      // the update no longer contains (deltalake.py:124-128)
-      val groups = updates.select(g).distinct().collect()
-        .map(r => sqlLiteral(r.get(0))).mkString(", ")
-      if (groups.nonEmpty) {
-        val bySource = invoke(builder, "whenNotMatchedBySource",
-          classOf[String] -> s"t.$g IN ($groups)")
-        builder = invoke(bySource, "delete")
-      }
-    }
-    invoke(builder, "execute")
-    ()
-  }
-
-  override def deleteIds(ids: DataFrame): Unit = {
-    if (!exists) return
-    val key = spec.keys.head
-    val target = forPath()
-    val aliased = invoke(target, "as", classOf[String] -> "t")
-    val keyed = ids.select(ids.columns.headOption.map(c =>
-      org.apache.spark.sql.functions.col(c).as(key)).toSeq: _*)
-    val builder = invoke(aliased, "merge",
-      classOf[DataFrame] -> keyed.alias("u"),
-      classOf[String] -> s"t.$key = u.$key")
-    invoke(invoke(invoke(builder, "whenMatched"), "delete"), "execute")
-    ()
-  }
-
-  override def optimize(numFiles: Int): Unit =
-    if (exists) {
-      invoke(invoke(forPath(), "optimize"), "executeCompaction")
-      ()
-    }
-
-  override def vacuum(): Unit =
-    if (exists) { invoke(forPath(), "vacuum"); () }
-
-  override def rowCount: Long = read().count()
-
-  private def forPath(): AnyRef = {
-    val m = deltaTableClass.getMethod("forPath",
-      classOf[SparkSession], classOf[String])
-    m.invoke(null, spark, path)
-  }
-
-  private def invoke(target: AnyRef, name: String,
-      args: (Class[_], AnyRef)*): AnyRef = {
-    val m = target.getClass.getMethod(name, args.map(_._1): _*)
-    m.setAccessible(true)
-    m.invoke(target, args.map(_._2): _*)
-  }
-
-  private def sqlLiteral(v: Any): String = v match {
-    case null => "NULL"
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case other => other.toString
-  }
-}
-
-object DeltaMergeTable {
-  /** True when Delta Lake is on the classpath. */
-  lazy val available: Boolean =
-    try { deltaTableClass; true }
-    catch { case _: ClassNotFoundException => false }
-
-  private def deltaTableClass: Class[_] =
-    Class.forName("io.delta.tables.DeltaTable")
+  def open(spark: SparkSession, path: String, spec: MergeSpec,
+      buckets: Int = 0): GraftTable =
+    new GraftTable(spark, path, spec, buckets)
 }

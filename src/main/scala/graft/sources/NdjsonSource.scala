@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** FHIR bulk-export NDJSON scanning (SURVEY §2.1 S1/S2/S5).
   *
@@ -159,12 +159,23 @@ object NdjsonSource {
     }
   }
 
+  private val DeletedBundleSchema = StructType(Seq(
+    StructField("resourceType", StringType),
+    StructField("type", StringType),
+    StructField("entry", ArrayType(StructType(Seq(
+      StructField("request", StructType(Seq(
+        StructField("method", StringType),
+        StructField("url", StringType))))))))))
+
   /** S5: deleted-ids bundles — FHIR transaction Bundles under deleted/
     * whose DELETE entries name "Type/id" URLs; returns (resourceType, id)
-    * rows (loaders/fhir/ndjson_loader.py:92-114).
+    * rows (loaders/fhir/ndjson_loader.py:92-114). Read with the Bundle
+    * schema, not an inferred one: a bundle with no entries would infer
+    * no `entry` struct and fail the run.
     */
   def readDeletedIds(spark: SparkSession, dir: String): DataFrame = {
-    val bundles = spark.read.json(s"$dir/*.ndjson")
+    val bundles = spark.read.schema(DeletedBundleSchema)
+      .json(s"$dir/*.ndjson")
     bundles
       .filter(col("resourceType") === "Bundle" && col("type") === "transaction")
       .select(explode(col("entry")).as("entry"))

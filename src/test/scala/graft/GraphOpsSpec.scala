@@ -144,4 +144,61 @@ class GraphOpsSpec extends SparkSpecBase {
     val inc = incremental(base, Seq.empty, Seq(4L, 5L, 6L, 7L))
     assert(inc === Map(4L -> 4L, 5L -> 4L, 6L -> 4L, 7L -> 7L))
   }
+
+  test("CC shuffles the persisted edge frame once per call, not per round") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // own session: the listener must see only this call's queries, and
+    // broadcast joins are off so the rounds plan as they do on a graph
+    // too large to broadcast (a broadcast join never shuffles bi)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    import s.implicits._
+    // a 64-node chain needs several label-exchange + pointer-jump rounds
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
+    val got = GraphOps.connectedComponents(s, chain, "src", "dst")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    org.apache.spark.ListenerBusAccess.drain(s.sparkContext)
+    s.listenerManager.unregister(listener)
+    assert(got.size === 64 && got.values.toSet === Set(0L))
+
+    // every exchange whose output is the edge frame's (src, dst): in the
+    // queries' own plans, plus once per distinct cached plan (a cached
+    // plan is shared by every query that reads the cache)
+    val cached = scala.collection.mutable.Map.empty[Int, SparkPlan]
+    def edgeShuffles(p: SparkPlan): Int = {
+      val self = p match {
+        case x: ShuffleExchangeLike
+            if x.output.map(_.name) == Seq("src", "dst") => 1
+        case _ => 0
+      }
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case m: InMemoryTableScanExec =>
+          cached(System.identityHashCode(m.relation.cacheBuilder)) =
+            m.relation.cacheBuilder.cachedPlan
+          Nil
+        case other => other.children
+      }
+      self + kids.map(edgeShuffles).sum
+    }
+    import scala.jdk.CollectionConverters._
+    val inQueries = plans.asScala.toSeq.map(edgeShuffles).sum
+    val inCaches = cached.values.toSeq.map(edgeShuffles).sum
+    assert(plans.size >= 4, s"expected several rounds, saw ${plans.size} queries")
+    assert(inQueries + inCaches === 1,
+      s"edge frame shuffled $inQueries times in queries and $inCaches " +
+        "times in cached plans")
+  }
 }

@@ -65,7 +65,7 @@ class MergeOpsSpec extends SparkSpecBase {
   test("bucketed table: incremental merge rewrites only touched buckets") {
     import graft.sinks.GraftTable
     val dir = java.nio.file.Files.createTempDirectory("bucketed").toString
-    val t = GraftTable.bucketed(spark, dir,
+    val t = GraftTable(spark, dir,
       MergeOps.MergeSpec(Seq("id")), buckets = 8)
     val base = (1 to 200).map(i => (s"id-$i", s"v1-$i")).toDF("id", "data")
     t.merge(base)
@@ -113,7 +113,7 @@ class MergeOpsSpec extends SparkSpecBase {
   test("bucketed table: multi-key spec deletes fall back to all buckets") {
     import graft.sinks.GraftTable
     val dir = java.nio.file.Files.createTempDirectory("bucketed2").toString
-    val t = GraftTable.bucketed(spark, dir,
+    val t = GraftTable(spark, dir,
       MergeOps.MergeSpec(Seq("k1", "k2")), buckets = 4)
     t.merge((1 to 50).map(i => (s"a$i", s"b$i", i)).toDF("k1", "k2", "v"))
     // id list names k1 values only — bucket hash is over (k1, k2), so
@@ -126,7 +126,7 @@ class MergeOpsSpec extends SparkSpecBase {
   test("readForKeys scans only the probed keys' buckets") {
     import graft.sinks.GraftTable
     val dir = java.nio.file.Files.createTempDirectory("skip").toString
-    val t = GraftTable.bucketed(spark, dir,
+    val t = GraftTable(spark, dir,
       MergeOps.MergeSpec(Seq("id")), buckets = 8)
     t.merge((1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"))
 
@@ -160,7 +160,7 @@ class MergeOpsSpec extends SparkSpecBase {
   test("readForKeys casts the probe to the table's key type") {
     import graft.sinks.GraftTable
     val dir = java.nio.file.Files.createTempDirectory("skip2").toString
-    val t = GraftTable.bucketed(spark, dir,
+    val t = GraftTable(spark, dir,
       MergeOps.MergeSpec(Seq("id")), buckets = 8)
     t.merge((1L to 50L).map(i => (i, s"v$i")).toDF("id", "v"))
     // Int probe against a Long-keyed table: xxhash64 hashes Int and

@@ -1,36 +1,18 @@
 package graft
 
 import graft.operators.MergeOps.MergeSpec
-import graft.sinks.{DeltaMergeTable, GraftTable, MergeTable}
+import graft.sinks.MergeTable
 import org.apache.spark.sql.functions._
 
-/** Backend selection + trait contract for the pluggable merge-table
-  * sink. This classpath carries no Delta jars, so the reflective Delta
-  * binding must report unavailable and `open` must fall back to the
-  * parquet engine — with and without the opt-in flag.
+/** `MergeTable.open`, the ETL's entry to its sink, drives a bucketed
+  * merge table through a full lifecycle.
   */
 class MergeTableSpec extends SparkSpecBase {
-
-  test("Delta binding is dormant on a Delta-less classpath") {
-    assert(!DeltaMergeTable.available)
-  }
-
-  test("open falls back to GraftTable even when Delta is requested") {
-    // OWN session (parallel suites): the backend flag must not leak
-    // into a concurrently running EtlPipeline/GraftTable suite
-    val s = spark.newSession()
-    s.conf.set(MergeTable.DeltaEnabledKey, "true")
-    val t = MergeTable.open(s,
-      java.nio.file.Files.createTempDirectory("mt").toString,
-      MergeSpec(Seq("id")))
-    assert(t.isInstanceOf[GraftTable])
-  }
 
   test("trait surface drives a full merge lifecycle through the fallback") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("mt2").toString
-    val t: MergeTable = MergeTable.open(spark, dir, MergeSpec(Seq("id")),
-      buckets = 4)
+    val t = MergeTable.open(spark, dir, MergeSpec(Seq("id")), buckets = 4)
     assert(!t.exists)
     t.merge(Seq((1, "a"), (2, "b")).toDF("id", "v"))
     t.merge(Seq((2, "B"), (3, "c")).toDF("id", "v"))

@@ -162,6 +162,16 @@ class ScrubberSpec extends SparkSpecBase {
     assert(deleted === Set(("Patient", "p9"), ("Observation", "o9")))
   }
 
+  test("ndjson source: a deleted bundle with no entries deletes nothing") {
+    val delDir = java.nio.file.Files.createTempDirectory("deleted").toString
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(delDir, "deleted.ndjson"),
+      ("""{"resourceType":"Bundle","type":"transaction","entry":[]}""" +
+        "\n" + """{"resourceType":"Bundle","type":"transaction"}""")
+        .getBytes("UTF-8"))
+    assert(NdjsonSource.readDeletedIds(spark, delDir).count() === 0L)
+  }
+
   test("check-system guard strips Epic custom codes and marks the coding") {
     val rows = Seq(
       // non-numeric code in the Epic extension-point OID → code+display

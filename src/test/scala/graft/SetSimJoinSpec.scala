@@ -33,6 +33,31 @@ class SetSimJoinSpec extends SparkSpecBase {
     }
   }
 
+  test("join regime (no broadcast) equals brute force and the map-side regime") {
+    var seed = 20261017L
+    def next(): Int = { seed = seed * 6364136223846793005L + 1442695040888963407L; ((seed >>> 33) % 1000000).toInt }
+    val sets = (1L to 120L).map { id =>
+      val n = 3 + next() % 10
+      id -> (0 until n).map(_ => "t" + next() % 40).toSeq.distinct
+    }
+    def run(s: org.apache.spark.sql.SparkSession, tau: Double) =
+      SetSimJoin.jaccardSelfJoin(s.createDataFrame(sets).toDF("id", "toks"),
+        "id", "toks", tau)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getDouble(5))).toSet
+    // own session: the broadcast threshold must not leak into
+    // concurrently running suites
+    val joinRegime = spark.newSession()
+    joinRegime.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    for (tau <- Seq(0.3, 0.5, 0.8)) {
+      val viaJoin = run(joinRegime, tau)
+      assert(viaJoin === run(spark, tau), s"tau=$tau")
+      assert(viaJoin.map(r => (r._1, r._2)) ===
+        bruteForce(sets.map { case (id, t) => (id, t.toSet) }, tau),
+        s"tau=$tau")
+    }
+  }
+
   test("exact-boundary pairs are kept, empty sets never pair") {
     // J(a,b) = 2/4 = 0.5 exactly at tau = 0.5 → must be KEPT
     val df = Seq(

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * concurrent suites' 4-partition jobs back-fill each other
   * (optimization guide §2.6: overlap independent jobs) instead of
   * queueing on 4 slots. Per-job parallelism is unchanged. Suites that
-  * must mutate session conf (broadcast threshold, backend flags) use
+  * must mutate session conf (the broadcast threshold) use
   * `spark.newSession()` so nothing races the shared conf.
   */
 trait SparkSpecBase extends AnyFunSuite {

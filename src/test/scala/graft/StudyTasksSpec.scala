@@ -3,17 +3,52 @@ package graft
 import graft.nlp.{ModelRunner, StudyTasks}
 import org.apache.spark.sql.types._
 
-/** Parses the reference's OWN study tasks.toml files (read-only
-  * fixtures) and checks the expansion matches the reference's rules
+/** Checks the tasks.toml expansion against the reference's rules
   * (nlp_task.py:485-560): shared fallbacks, per-model task naming,
   * versioning, prompt placeholder assembly, and response-schema →
-  * StructType conversion with the spans rewrite.
+  * StructType conversion with the spans rewrite. The engine cases run
+  * on the small study under `src/test/resources/studies/sample`; the
+  * parity cases parse the reference's own study files and are skipped
+  * when the reference checkout is absent.
   */
 class StudyTasksSpec extends SparkSpecBase {
 
   private val studies = "/root/reference/cumulus_etl/etl/studies"
+  private def referenceStudies(): Unit =
+    assume(java.nio.file.Files.exists(java.nio.file.Paths.get(studies)),
+      s"reference studies not found at $studies")
+
+  private val sampleToml =
+    getClass.getResource("/studies/sample/tasks.toml").getPath
+  private def sampleTask: StudyTasks.StudyTask =
+    StudyTasks.load("sample", sampleToml).find(t =>
+      t.name.isEmpty && t.model == "gpt4").get
+
+  test("sample study: per-model expansion and shared-prompt fallback") {
+    val tasks = StudyTasks.load("sample", sampleToml)
+    assert(tasks.map(_.tableName) === Seq("sample__nlp_gpt4",
+      "sample__nlp_llama3_70b", "sample__nlp_gpt_oss_120b",
+      "sample__nlp_age_review_gpt4"))
+    val nameless = sampleTask
+    assert(nameless.version === 1)
+    assert(nameless.systemPrompt.startsWith("Find the patient's age."))
+    assert(nameless.systemPrompt.contains("\"AgeMention\""))
+    assert(!nameless.systemPrompt.contains("%JSON-SCHEMA%"))
+    // explicitly-empty user prompt: the bare note, not the shared one
+    assert(nameless.userPrompt("NOTE TEXT") === "NOTE TEXT")
+    val named = tasks.find(_.name.contains("age_review")).get
+    assert(named.version === 0)
+    assert(named.systemPromptTemplate.contains("chart abstractor"))
+    assert(named.userPrompt("the note") === "Clinical note:\nthe note")
+    val result = named.resultSchema
+    assert(result("has_mention").dataType === BooleanType)
+    assert(result("age").dataType === IntegerType)
+    assert(result("spans").dataType === ArrayType(ArrayType(IntegerType)))
+    assert(named.cacheNamespace === "sample__nlp_age_review_gpt4_v0")
+  }
 
   test("example study: nameless task expands per model with age schema") {
+    referenceStudies()
     val tasks = StudyTasks.load("example", s"$studies/example/tasks.toml")
     // example/tasks.toml: one nameless task, six models
     assert(tasks.length === 6)
@@ -42,6 +77,7 @@ class StudyTasksSpec extends SparkSpecBase {
   }
 
   test("ibd study: shared prompts fall back; named tasks expand per model") {
+    referenceStudies()
     val tasks = StudyTasks.load("ibd", s"$studies/ibd/tasks.toml")
     val names = tasks.map(_.tableName)
     assert(names.contains("ibd__nlp_diagnosis_claude_sonnet45"))
@@ -69,6 +105,7 @@ class StudyTasksSpec extends SparkSpecBase {
   }
 
   test("glioma and irae studies parse without errors") {
+    referenceStudies()
     val g = StudyTasks.load("glioma", s"$studies/glioma/tasks.toml")
     val i = StudyTasks.load("irae", s"$studies/irae/tasks.toml")
     assert(g.nonEmpty && i.nonEmpty)
@@ -80,8 +117,7 @@ class StudyTasksSpec extends SparkSpecBase {
   test("annotate runs a study task over notes with typed results") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val tasks = StudyTasks.load("example", s"$studies/example/tasks.toml")
-    val task = tasks.find(_.model == "gpt4").get
+    val task = sampleTask
     val notes = Seq(
       (1L, "Patient is 42 years old."),
       (2L, "No age documented.")
@@ -117,8 +153,7 @@ class StudyTasksSpec extends SparkSpecBase {
     // the task's nlp-errors quarantine, not be silently dropped
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val task = StudyTasks.load("example", s"$studies/example/tasks.toml")
-      .find(_.model == "gpt4").get
+    val task = sampleTask
     val b64 = java.util.Base64.getEncoder.encodeToString(
       "Patient is 42 years old.".getBytes("UTF-8"))
     val docRefs = Seq(
@@ -153,8 +188,7 @@ class StudyTasksSpec extends SparkSpecBase {
   test("annotateBatch spools full prompts but keys the cache on note text") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val task = StudyTasks.load("example", s"$studies/example/tasks.toml")
-      .find(_.model == "gpt4").get
+    val task = sampleTask
     val notes = Seq((1L, "note one"), (2L, "note two"), (3L, "note one"))
       .toDF("note_id", "text")
     val emptyCache = Seq.empty[(String, String)].toDF("checksum", "result")

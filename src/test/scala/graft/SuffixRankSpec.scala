@@ -40,6 +40,33 @@ class SuffixRankSpec extends SparkSpecBase {
     }
   }
 
+  test("the prefix-doubling ladder equals DENSE_RANK over substr") {
+    // initChars = 8 seeds the ladder below the depth, so depth 32 runs
+    // two doubling rounds and depth 64 three; long shared passages make
+    // the deeper truncations differ from the shallower ones
+    val line = "the quick brown fox jumps over the lazy dog while the cat naps"
+    val docs = corpus ++ Seq(
+      (10L, line + " and again " + line),
+      (11L, line.replace("lazy", "busy")),
+      (12L, line.take(40) + "X" + line.drop(41)))
+    val df = docs.toDF("doc_id", "text")
+    df.createOrReplaceTempView("suffix_ladder_docs")
+    for (depth <- Seq(32, 64)) {
+      val got = SuffixRank.rank(df, "doc_id", "text", depth, initChars = 8)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+        .toMap
+      val brute = spark.sql(
+        s"""SELECT doc_id, CAST(pos AS BIGINT) AS pos,
+           |  DENSE_RANK() OVER (ORDER BY substr(text, pos, $depth)) AS rank
+           |FROM (SELECT doc_id, text,
+           |  explode(sequence(1, length(text))) AS pos
+           |  FROM suffix_ladder_docs)""".stripMargin)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2).toLong)
+        .toMap
+      assert(got === brute, s"depth=$depth")
+    }
+  }
+
   test("equal ranks exactly identify equal spans across documents") {
     val got = SuffixRank
       .rank(corpus.toDF("doc_id", "text"), "doc_id", "text", depth = 4)
