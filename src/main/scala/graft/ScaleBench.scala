@@ -226,11 +226,10 @@ object ScaleBench {
     */
   private[graft] def etlMergeFixture(spark: SparkSession,
       factor: Int): EtlFixture = {
-    // v2: base tables rebuilt after the counts-sidecar + write-width
-    // fixes this family surfaced (a v1 base has no counts sidecar, so
-    // its rowCount would stay on the legacy footer walk)
+    // the key names the table format: a base cached by an older format
+    // is rebuilt, never read
     val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-scale-etl-v2-f$factor")
+      s"graft-scale-etl-m1-f$factor")
     val inDir = new java.io.File(base, "in")
     val outDir = new java.io.File(base, "out").getPath
     val phiDir = new java.io.File(base, "phi").getPath

@@ -1,6 +1,7 @@
 package graft.deid
 
 import graft.functions.DeidFunctions
+import graft.sources.NdjsonSource
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -76,7 +77,11 @@ object ScrubCompiler {
       nlpMode: Boolean = false,
       philterEnabled: Boolean = false
   ): DataFrame = {
-    val key = (resourceType, df.schema, policy, nlpMode, philterEnabled,
+    // the engine's file-order column is not input data: it passes the
+    // allow-list untouched, for the dedup after the scrub
+    val carried = df.columns.filter(_ == NdjsonSource.FileSeq).toSeq.map(col)
+    val input = df.drop(NdjsonSource.FileSeq)
+    val key = (resourceType, input.schema, policy, nlpMode, philterEnabled,
       codebook)
     val (projCol, rejCol) = appliedCache.synchronized {
       val hit = appliedCache.get(key)
@@ -84,8 +89,8 @@ object ScrubCompiler {
       else {
         val ctx = Ctx(policy, codebook, nlpMode, philterEnabled,
           resourceType)
-        val node = compileStruct(resourceType, df.schema, ctx)
-        val rowCol = struct(df.columns.map(col): _*)
+        val node = compileStruct(resourceType, input.schema, ctx)
+        val rowCol = struct(input.columns.map(col): _*)
         val built = (node.project(rowCol), node.reject(rowCol))
         appliedCache.put(key, built)
         built
@@ -93,9 +98,9 @@ object ScrubCompiler {
     }
     df.filter(col("resourceType") === lit(resourceType))
       .filter(!rejCol)
-      .select(projCol.as("__row"))
+      .select(projCol.as("__row") +: carried: _*)
       .filter(col("__row").isNotNull)
-      .select(col("__row.*"))
+      .select(col("__row.*") +: carried: _*)
   }
 
   /** P2/A4: census of extension urls the policy drops — the side-output

@@ -57,8 +57,8 @@ object Convert {
       spec: MergeSpec
   ): Long = {
     import spark.implicits._
-    // same bucketed layout the ETL writes (an existing layout-less
-    // table stays legacy — GraftTable never reinterprets on-disk data)
+    // same bucket count the ETL writes (an existing table keeps the
+    // count its manifest records)
     val target = GraftTable(spark, s"$targetDir/$table", spec,
       EtlPipeline.ResourceTableBuckets)
     listBatches(sourceTableDir, table).foreach { batch =>

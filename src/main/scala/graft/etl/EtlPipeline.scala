@@ -123,11 +123,16 @@ object EtlPipeline {
         // nested resources dominates the cold path, so cache the parsed
         // frame for the task's duration (MEMORY_AND_DISK: spills, never
         // recomputes the parse)
-        val raw = NdjsonSource.readResourceFiles(spark,
-          filesByType.getOrElse(task.resourceType, Nil),
+        // A1: last-wins on id follows EXPORT order ("updates appended
+        // later win", etl/tasks/base.py:308-316): each row carries the
+        // position of its file in the type's sorted file list (partition
+        // ids alone don't track file order), taken over the scan itself
+        val files = filesByType.getOrElse(task.resourceType, Nil)
+        val raw = NdjsonSource.readResourceFiles(spark, files,
           task.resourceType,
           graft.fhir.FhirSchemas.forResource(task.resourceType),
           widen = true)
+          .withColumn(NdjsonSource.FileSeq, NdjsonSource.fileSeqCol(files))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // P2/A4: dropped-extension census side-output (the report the
         // reference prints at run end, persisted as a mergeable table)
@@ -151,19 +156,13 @@ object EtlPipeline {
         val scrubbed = ScrubCompiler.scrub(
           raw.observe(readObs, count(lit(1)).as("n")),
           task.resourceType, codebook, policy, nlpMode, philterEnabled)
-        // A1: last-wins on id in EXPORT order ("updates appended later
-        // win", etl/tasks/base.py:308-316): primary order = position of
-        // the row's file in the sorted export listing (real append
-        // signal — partition ids alone don't track file order), ties
-        // within a file broken by the partition-local id
-        val inputFiles = NdjsonSource.listResourceFiles(spark, inputDir)
+        // ties within a file are broken by the partition-local id
         val deduped = MergeOps.dedupLastWins(
           scrubbed.observe(scrubObs, count(lit(1)).as("n"))
-            .withColumn("__file_seq", NdjsonSource.fileSeqCol(inputFiles))
             .withColumn("__seq", monotonically_increasing_id()),
           Seq("id"),
-          Seq(col("__file_seq"), col("__seq"))
-        ).drop("__file_seq", "__seq")
+          Seq(col(NdjsonSource.FileSeq), col("__seq"))
+        ).drop(NdjsonSource.FileSeq, "__seq")
           // materialized ONCE before the merge: the bucketed merge (and
           // the completion fan-out) runs several actions, and each
           // would re-ANALYZE the full scrub-projection lineage — the

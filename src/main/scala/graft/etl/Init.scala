@@ -50,8 +50,8 @@ object Init {
   }
 
   /** Create `tableName` as a valid empty table when absent (no-op when
-    * present). Uses the same bucketed layout as the ETL merge path so a
-    * later real run inherits the incremental bucket manifest.
+    * present). Uses the bucket count of the ETL merge path, which a
+    * later real run then inherits from the manifest.
     */
   def touchTable(
       spark: SparkSession,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 /** Upsert/merge semantics of the reference's Delta Lake sink, re-expressed
   * as pure DataFrame transforms (no Delta on the classpath).
@@ -60,29 +61,18 @@ object MergeOps {
     * deltalake.py:71), missing columns null-filled.
     */
   def merge(target: DataFrame, updates: DataFrame, spec: MergeSpec): DataFrame = {
-    val cols = mergedColumns(target, updates)
-    val t = align(target, cols)
-    val u = align(updates, cols)
-    val names = cols.map(_._1)
-
-    val tPacked =
-      t.select(spec.keys.map(col) :+ struct(names.map(col): _*).as("__t"): _*)
-    val uPacked =
-      u.select(spec.keys.map(col) :+ struct(names.map(col): _*).as("__u"): _*)
-    val joined = tPacked.join(uPacked, spec.keys, "full_outer")
-
-    val guardOk: Column = guardCondition(spec, cols)
+    val p = packedJoin(target, updates, spec)
     val takeUpdate = col("__u").isNotNull &&
-      (col("__t").isNull || (lit(spec.updateExisting) && guardOk))
+      (col("__t").isNull || (lit(spec.updateExisting) && p.guardOk))
     val chosen = when(takeUpdate, col("__u")).otherwise(col("__t"))
 
-    val unpacked = joined
+    val unpacked = p.joined
       .select(col("__u").isNull.as("__targetOnly"), chosen.as("__row"))
       .select(col("__targetOnly"), col("__row.*"))
 
     val result = spec.groupField match {
       case Some(g) =>
-        val touched = u.select(col(g).as("__tg")).distinct()
+        val touched = p.updates.select(col(g).as("__tg")).distinct()
         unpacked
           .join(broadcast(touched), col(g) === col("__tg"), "left_outer")
           .filter(!(col("__targetOnly") && col("__tg").isNotNull))
@@ -109,32 +99,21 @@ object MergeOps {
       updates: DataFrame,
       spec: MergeSpec
   ): DataFrame = {
-    val cols = mergedColumns(target, updates)
-    val t = align(target, cols)
-    val u = align(updates, cols)
-    val names = cols.map(_._1)
-
-    val tPacked =
-      t.select(spec.keys.map(col) :+ struct(names.map(col): _*).as("__t"): _*)
-    val uPacked =
-      u.select(spec.keys.map(col) :+ struct(names.map(col): _*).as("__u"): _*)
-    val joined = tPacked.join(uPacked, spec.keys, "full_outer")
-
-    val guardOk: Column = guardCondition(spec, cols)
+    val p = packedJoin(target, updates, spec)
     val base = spec.groupField match {
       case Some(g) =>
-        val touched = u.select(col(g).as("__tg")).distinct()
-        joined
+        val touched = p.updates.select(col(g).as("__tg")).distinct()
+        p.joined
           .join(broadcast(touched), col(s"__t.$g") === col("__tg"),
             "left_outer")
           .withColumn("__del",
             col("__u").isNull && col("__t").isNotNull &&
               col("__tg").isNotNull)
-      case None => joined.withColumn("__del", lit(false))
+      case None => p.joined.withColumn("__del", lit(false))
     }
     val isInsert = col("__u").isNotNull && col("__t").isNull
     val isUpdate = col("__u").isNotNull && col("__t").isNotNull &&
-      lit(spec.updateExisting) && guardOk
+      lit(spec.updateExisting) && p.guardOk
     def mk(ct: String, r: Column) =
       struct(lit(ct).as("_change_type"), r.as("__r"))
     base
@@ -146,7 +125,7 @@ object MergeOps {
           .otherwise(lit(null))
       ).as("__c"))
       .select(col("__c._change_type").as("_change_type") +:
-        names.map(n => col(s"__c.__r.$n").as(n)): _*)
+        p.names.map(n => col(s"__c.__r.$n").as(n)): _*)
   }
 
   /** K3: delete rows whose id appears in `ids` (single key column in
@@ -171,53 +150,89 @@ object MergeOps {
     * MergeSpec serves FHIR tables (which always have `meta.lastUpdated`)
     * and schema-less custom tables alike.
     */
-  private def guardCondition(
-      spec: MergeSpec,
-      cols: Seq[(String, org.apache.spark.sql.types.DataType)]
-  ): Column = spec.guardField match {
-    case Some(g) if hasPath(cols, g) =>
-      col(s"__t.$g").isNull || col(s"__u.$g").isNull ||
-      col(s"__t.$g").cast("timestamp") <= col(s"__u.$g").cast("timestamp")
-    case _ => lit(true)
-  }
+  private def guardCondition(spec: MergeSpec, schema: StructType): Column =
+    spec.guardField match {
+      case Some(g) if hasPath(schema, g) =>
+        col(s"__t.$g").isNull || col(s"__u.$g").isNull ||
+        col(s"__t.$g").cast("timestamp") <= col(s"__u.$g").cast("timestamp")
+      case _ => lit(true)
+    }
 
-  /** Whether the dotted `path` resolves through the merged column list
-    * (struct fields walked level by level).
+  /** Whether the dotted `path` resolves through `schema` (struct fields
+    * walked level by level).
     */
-  private def hasPath(
-      cols: Seq[(String, org.apache.spark.sql.types.DataType)],
-      path: String
-  ): Boolean = {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val parts = path.split('.')
+  private def hasPath(schema: StructType, path: String): Boolean = {
     def walk(dt: DataType, rest: List[String]): Boolean = (dt, rest) match {
       case (_, Nil) => true
       case (s: StructType, h :: t) =>
         s.fields.find(_.name == h).exists(f => walk(f.dataType, t))
       case _ => false
     }
-    cols.find(_._1 == parts.head)
-      .exists { case (_, dt) => walk(dt, parts.toList.tail) }
+    walk(schema, path.split('.').toList)
   }
 
-  private def mergedColumns(
-      target: DataFrame,
-      updates: DataFrame
-  ): Seq[(String, org.apache.spark.sql.types.DataType)] = {
-    val tCols = target.schema.map(f => f.name -> f.dataType)
-    val have = tCols.map(_._1).toSet
-    tCols ++ updates.schema.collect {
-      case f if !have.contains(f.name) => f.name -> f.dataType
-    }
+  /** Both sides of a merge aligned to one shape, packed into `__t` /
+    * `__u` structs and full-outer joined on the keys — the one shuffle
+    * [[merge]] and [[changeFeed]] share. `updates` is the aligned batch.
+    */
+  private case class Packed(joined: DataFrame, updates: DataFrame,
+      names: Seq[String], guardOk: Column)
+
+  /** Schema evolution: the merged columns are the target's, then the
+    * update-only ones; a column one side lacks is null-filled with the
+    * other's type, and a nested column of another type is [[pad]]ded.
+    * Columns of equal type (up to nullability) pass untouched, so merges
+    * of equal schemas plan as before.
+    */
+  private def packedJoin(target: DataFrame, updates: DataFrame,
+      spec: MergeSpec): Packed = {
+    def types(df: DataFrame) = df.schema.map(f => f.name -> f.dataType).toMap
+    val (tTypes, uTypes) = (types(target), types(updates))
+    val names = target.columns.toSeq ++
+      updates.columns.filterNot(tTypes.contains)
+    def aligned(df: DataFrame, own: Map[String, DataType],
+        other: Map[String, DataType], ownIsTarget: Boolean) =
+      df.select(names.map(n => (own.get(n), other.get(n)) match {
+        case (None, o) => lit(null).cast(o.get).as(n)
+        case (Some(a), Some(b)) if !sameType(a, b) =>
+          pad(col(n), a, b, ownIsTarget).as(n)
+        case _ => col(n)
+      }): _*)
+    def packed(df: DataFrame, as: String) = df.select(
+      spec.keys.map(col) :+ struct(names.map(col): _*).as(as): _*)
+    val t = aligned(target, tTypes, uTypes, ownIsTarget = true)
+    val u = aligned(updates, uTypes, tTypes, ownIsTarget = false)
+    Packed(packed(t, "__t").join(packed(u, "__u"), spec.keys, "full_outer"),
+      u, names, guardCondition(spec, t.schema))
   }
 
-  private def align(
-      df: DataFrame,
-      cols: Seq[(String, org.apache.spark.sql.types.DataType)]
-  ): DataFrame = {
-    val have = df.columns.toSet
-    df.select(cols.map { case (n, t) =>
-      if (have.contains(n)) col(n) else lit(null).cast(t).as(n)
-    }: _*)
+  /** Types equal up to nullability. */
+  private def sameType(a: DataType, b: DataType): Boolean =
+    a.catalogString == b.catalogString
+
+  /** `c` (of type `own`) given the shape it shares with the other side's
+    * type `other`: struct fields in target order then update-only ones,
+    * the fields only `other` has null-filled, array elements alike, a
+    * null struct kept null. Leaves keep their type: where the sides
+    * differ (a long and a double), the merge's CASE WHEN coerces them to
+    * Spark's wider type.
+    */
+  private def pad(c: Column, own: DataType, other: DataType,
+      ownIsTarget: Boolean): Column = (own, other) match {
+    case _ if sameType(own, other) => c
+    case (o: StructType, x: StructType) =>
+      val (t, u) = if (ownIsTarget) (o, x) else (x, o)
+      val fields = (t.fieldNames ++ u.fieldNames.diff(t.fieldNames)).map {
+        n => ((o.fields.find(_.name == n), x.fields.find(_.name == n)) match {
+          case (Some(of), Some(xf)) =>
+            pad(c.getField(n), of.dataType, xf.dataType, ownIsTarget)
+          case (Some(_), None) => c.getField(n)
+          case (None, xf) => lit(null).cast(xf.get.dataType)
+        }).as(n)
+      }
+      when(c.isNull, lit(null)).otherwise(struct(fields.toIndexedSeq: _*))
+    case (ArrayType(oe, _), ArrayType(xe, _)) =>
+      transform(c, pad(_, oe, xe, ownIsTarget))
+    case _ => c
   }
 }

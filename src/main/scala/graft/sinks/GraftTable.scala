@@ -2,72 +2,75 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.operators.MergeOps
 import graft.operators.MergeOps.MergeSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned parquet merge table — the engine's sink, with the merge
   * semantics of the reference's Delta Lake sink
   * (formats/deltalake.py:92-168, K1-K4): idempotent keyed merge,
   * delete-by-id, compaction, vacuum, metadata row count.
   *
-  *  - each mutation writes a NEW version directory `v{N}` then atomically
-  *    publishes it via a `_latest` pointer file (readers never see
-  *    partial writes; concurrent readers keep their version — the same
-  *    snapshot-isolation contract Delta's log gives)
-  *  - merge = read-current ⋈ updates via MergeOps (one shuffle)
-  *  - optimize() rewrites the current version with right-sized files
-  *    (compaction, K4); vacuum() drops versions unreferenced by the
-  *    latest manifest
+  * == On-disk format ==
   *
-  * == Bucketed incremental layout (the 100 TB path) ==
+  * Rows live in key-hash buckets (`__b = pmod(xxhash64(keys), buckets)`).
+  * A version `N` is its data under `v{N}/__b=K/` plus ONE file,
+  * `manifest-v{N}.json`, holding:
+  *  - `buckets`: the bucket count, fixed when the table is created;
+  *  - `keys`: the merge keys the buckets hash;
+  *  - `dirs`: bucket → the version dir that last rewrote it;
+  *  - `counts`: bucket → row count (the role Delta's log stats play, so
+  *    [[rowCount]] never opens a data file);
+  *  - `schema`: the table schema, which also serves an empty table and
+  *    types the key probes.
   *
-  * With `buckets > 0` and no group field, rows are laid out in
-  * key-hash buckets (`__b = pmod(xxhash64(keys), buckets)`) and each
-  * version's manifest maps every bucket to the version directory that
-  * last rewrote it. A merge then reads ONLY the buckets its update rows
-  * hash into and rewrites only those; untouched buckets are carried
-  * forward by reference in the manifest. Rewrite cost is proportional
-  * to touched data — a small incremental batch against a huge table no
-  * longer rewrites the table (the liquid-clustering role of the
-  * reference's `clusterBy(uniqueness_fields)`, deltalake.py:105).
-  * Since bucket id is a pure function of the merge key, matching
-  * target/update rows always share a bucket, so per-bucket merging is
-  * exactly global merging. Group-replace tables (`groupField` set) use
-  * the whole-snapshot path: group membership is orthogonal to key
-  * hashes, so group deletes may touch any bucket.
+  * A commit writes the data, then the manifest, then atomically moves
+  * the `_latest` pointer to the new version; readers follow the pointer,
+  * so they never see a partial write and keep their version while a
+  * writer commits (the snapshot contract Delta's log gives). Files of a
+  * version the pointer never reached are ignored, and the next commit
+  * overwrites them.
+  *
+  * A merge reads and rewrites ONLY the buckets its update rows hash
+  * into; untouched buckets are carried forward by reference in the
+  * manifest, so rewrite cost follows the touched data, not the table
+  * size (the liquid-clustering role of the reference's
+  * `clusterBy(uniqueness_fields)`, deltalake.py:105). Bucket id is a pure
+  * function of the merge key, so matching target/update rows always
+  * share a bucket and per-bucket merging is exactly global merging.
+  * Tables opened without a bucket count get one bucket. Group-replace
+  * merges (`groupField` set) and composite-key deletes rewrite every
+  * bucket: group membership and a single id column are orthogonal to
+  * the key hash, so they may touch any bucket.
   */
 final class GraftTable(
     spark: SparkSession,
     path: String,
     spec: MergeSpec,
-    buckets: Int = 0
+    buckets: Int = 1
 ) {
+  require(buckets >= 1, s"GraftTable $path: buckets must be >= 1, got $buckets")
 
   private val mapper = new ObjectMapper()
 
+  private case class Manifest(
+      buckets: Int,
+      keys: Seq[String],
+      dirs: Map[Int, String],
+      counts: Map[Int, Long],
+      schema: StructType
+  ) {
+    def all: Set[Int] = (0 until buckets).toSet
+  }
+
   private def latestFile = Paths.get(path, "_latest")
   private def manifestFile(v: Int) = Paths.get(path, s"manifest-v$v.json")
-  private def layoutFile = Paths.get(path, "_layout.json")
-  // per-bucket row counts sidecar (the role Delta's log stats play):
-  // written incrementally by publishBuckets — O(touched buckets) footer
-  // reads per mutation — so rowCount never walks the full file set
-  private def countsFile(v: Int) = Paths.get(path, s"counts-v$v.json")
-  // schema sidecar per bucketed version: a zero-row merge (init-created
-  // table, §2.2 init) writes no __b partition dirs, so the schema must
-  // survive outside the (absent) parquet footers
-  private def schemaFile(v: Int) = Paths.get(path, s"schema-v$v.json")
-
-  private def emptyFromSchema(v: Int): DataFrame = {
-    val json = new String(Files.readAllBytes(schemaFile(v)), "UTF-8")
-    val schema = org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
 
   def currentVersion: Option[Int] =
     if (Files.exists(latestFile))
@@ -76,161 +79,174 @@ final class GraftTable(
 
   def exists: Boolean = currentVersion.isDefined
 
-  /** Bucket count for WRITES: a persisted layout wins (any instance
-    * opening the table inherits it); an existing layout-less table stays
-    * whole-snapshot regardless of the constructor (never reinterpret
-    * legacy data); a fresh table takes the constructor's value. READS
-    * never consult this — manifest presence per version decides.
-    */
-  private lazy val effectiveBuckets: Int =
-    if (Files.exists(layoutFile))
-      mapper.readTree(Files.readAllBytes(layoutFile)).get("buckets").asInt()
-    else if (exists) 0
-    else buckets
-
-  private def bucketed: Boolean =
-    effectiveBuckets > 0 && spec.groupField.isEmpty
-
-  private def bucketCol =
-    pmod(xxhash64(spec.keys.map(col): _*), lit(effectiveBuckets))
-
-  /** bucket → version-dir name currently holding that bucket's data. */
-  private def manifest(v: Int): Map[Int, String] = {
+  private def manifest(v: Int): Manifest = {
     val p = manifestFile(v)
-    if (!Files.exists(p)) Map.empty
-    else {
-      val node = mapper.readTree(Files.readAllBytes(p))
-      val out = scala.collection.mutable.Map[Int, String]()
-      node.fields().forEachRemaining { e =>
-        out(e.getKey.toInt) = e.getValue.asText()
-      }
-      out.toMap
-    }
+    if (!Files.exists(p))
+      throw new IllegalArgumentException(
+        s"version $v of GraftTable $path is gone (vacuumed?)")
+    val node = mapper.readTree(Files.readAllBytes(p))
+    def field(name: String): JsonNode = Option(node.get(name)).getOrElse(
+      throw new IllegalStateException(
+        s"GraftTable $path version $v: manifest has no '$name' field"))
+    def byBucket[A](name: String)(f: JsonNode => A): Map[Int, A] =
+      field(name).fields().asScala.map(e => e.getKey.toInt -> f(e.getValue)).toMap
+    Manifest(field("buckets").asInt(),
+      field("keys").elements().asScala.map(_.asText()).toSeq,
+      byBucket("dirs")(_.asText()),
+      byBucket("counts")(_.asLong()),
+      DataType.fromJson(field("schema").toString).asInstanceOf[StructType])
   }
 
-  private def bucketDirs(v: Int): Seq[String] =
-    manifest(v).toSeq.sortBy(_._1).map { case (b, dir) =>
-      s"$path/$dir/__b=$b"
-    }
+  private def latest: Option[Manifest] = currentVersion.map(manifest)
 
-  def read(): DataFrame = currentVersion match {
-    case Some(v) if Files.exists(manifestFile(v)) =>
-      val dirs = bucketDirs(v)
-      if (dirs.isEmpty) emptyFromSchema(v)
-      else spark.read.parquet(dirs: _*)
-    case Some(v) => spark.read.parquet(s"$path/v$v")
-    case None =>
-      throw new IllegalStateException(s"GraftTable $path has no data yet")
+  private def current: Manifest = latest.getOrElse(
+    throw new IllegalStateException(s"GraftTable $path has no data yet"))
+
+  /** The rows of `which` buckets of the version `m` describes. */
+  private def snapshot(m: Manifest, which: Set[Int]): DataFrame = {
+    val dirs = m.dirs.toSeq.filter(e => which(e._1)).sortBy(_._1)
+      .map { case (b, dir) => s"$path/$dir/__b=$b" }
+    if (dirs.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
+    else spark.read.parquet(dirs: _*)
+  }
+
+  def read(): DataFrame = {
+    val m = current
+    snapshot(m, m.all)
   }
 
   /** Time travel: read a specific historical version (available until
     * [[vacuum]] drops it) — the reference's tests read Delta tables
     * with time travel the same way (tests/utils.py:188-210).
     */
-  def readVersion(version: Int): DataFrame =
-    if (Files.exists(manifestFile(version))) {
-      val dirs = bucketDirs(version)
-      if (dirs.isEmpty) emptyFromSchema(version)
-      else spark.read.parquet(dirs: _*)
-    }
-    else if (Files.exists(layoutFile))
-      // bucketed table without this version's manifest: the version dir
-      // (if still present) holds only the buckets THAT version rewrote,
-      // not the full snapshot — never fall back to a partial read
-      throw new IllegalArgumentException(
-        s"version $version of bucketed table $path is gone (vacuumed?)")
-    else {
-      val dir = Paths.get(path, s"v$version")
-      if (!Files.exists(dir))
-        throw new IllegalArgumentException(
-          s"version $version of $path does not exist (vacuumed?)")
-      spark.read.parquet(dir.toString)
-    }
+  def readVersion(version: Int): DataFrame = {
+    val m = manifest(version)
+    snapshot(m, m.all)
+  }
 
   /** Data-skipping point-lookup read: hash the requested key tuples to
     * their buckets, scan ONLY those buckets' files, and semi-join down
     * to the exact keys — the read-side counterpart of the merge path's
     * touched-bucket pruning (the role Delta's file-stats skipping
     * plays for key lookups). On a 1024-bucket table a 10-key probe
-    * reads ≤10/1024ths of the data regardless of table size;
-    * non-bucketed snapshots degrade to a full scan + the same
-    * semi-join. The probe is broadcast — point lookups are small by
-    * contract (large probes should join against [[read]] instead).
+    * reads ≤10/1024ths of the data regardless of table size. The probe
+    * is broadcast — point lookups are small by contract (large probes
+    * should join against [[read]] instead).
     */
-  /** The current schema read from ONE existing data directory — never
-    * lists every bucket, so point lookups stay prunable even when
-    * other buckets' storage is unavailable.
-    */
-  private def schemaFromOneDir: org.apache.spark.sql.types.StructType =
-    currentVersion match {
-      case Some(v) if Files.exists(manifestFile(v)) =>
-        bucketDirs(v).find(d => Files.exists(Paths.get(d))) match {
-          case Some(d) => spark.read.parquet(d).schema
-          case None => read().schema // empty table: surface read()'s error
-        }
-      case _ => read().schema
-    }
-
   def readForKeys(keyValues: DataFrame): DataFrame = {
-    // cast the probe to the TABLE's key types before hashing:
-    // xxhash64 hashes e.g. Int and Long differently, so an uncast
-    // probe would prune to the wrong buckets and silently return
-    // nothing (same discipline as deleteIds)
-    val schema = schemaFromOneDir
-    val keyTypes = spec.keys.map(k => k -> schema(k).dataType).toMap
-    val probe = keyValues
-      .select(spec.keys.map(k => col(k).cast(keyTypes(k)).as(k)): _*)
+    val m = current
+    val probe = keyValues.select(spec.keys.map(k => keyCol(m, k, col(k))): _*)
       .distinct()
-    val base = currentVersion match {
-      case Some(v) if Files.exists(manifestFile(v)) &&
-          effectiveBuckets > 0 =>
-        readBuckets(manifest(v), touchedBuckets(probe))
-      case _ => read()
-    }
-    base.join(broadcast(probe), spec.keys, "left_semi")
+    snapshot(m, bucketsOf(m, probe)).join(broadcast(probe), spec.keys, "left_semi")
   }
 
-  /** Exact current row count from parquet FOOTERS only — no data scan
-    * (the role Delta's transaction-log stats play; a production bucket
-    * count would persist these in the manifest instead of re-reading
-    * footers, but either way counting never touches row data).
+  /** Exact current row count from the manifest — no file is opened. */
+  def rowCount: Long = current.counts.values.sum
+
+  /** K1/J1-J3: merge a batch in. First write creates the table. */
+  def merge(updates: DataFrame): Unit = latest match {
+    case None => commit(None, updates, (0 until buckets).toSet)
+    case Some(m) =>
+      val touched =
+        if (spec.groupField.isDefined) m.all else bucketsOf(m, updates)
+      commit(Some(m), MergeOps.merge(snapshot(m, touched), updates, spec),
+        touched)
+  }
+
+  /** K3: delete by id values (single-column DataFrame). Only the buckets
+    * the ids hash into are read and rewritten; a composite-key table
+    * rewrites every bucket.
     */
-  def rowCount: Long = {
-    val dirs: Seq[String] = currentVersion match {
-      case Some(v) if Files.exists(countsFile(v)) =>
-        // maintained sidecar: O(1) — the 100 TB path (10⁵ buckets would
-        // otherwise mean 10⁵ footer opens per completion record)
-        return readCounts(v).map(_.values.sum).getOrElse(0L)
-      case Some(v) if Files.exists(manifestFile(v)) => bucketDirs(v)
-      case Some(v) => Seq(s"$path/v$v")
-      case None =>
-        throw new IllegalStateException(s"GraftTable $path has no data yet")
-    }
-    val conf = spark.sessionState.newHadoopConf()
-    val files = dirs.flatMap { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-    }
-    // footer opens are driver-side IO — read them concurrently
-    java.util.Arrays.stream(files.toArray).parallel().mapToLong { st =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromStatus(st, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum()
+  def deleteIds(ids: DataFrame): Unit = latest.foreach { m =>
+    val key = spec.keys.head
+    val keyed = ids.select(keyCol(m, key, col(ids.columns.head)))
+    val touched = if (spec.keys.length > 1) m.all else bucketsOf(m, keyed)
+    commit(Some(m), MergeOps.deleteByIds(snapshot(m, touched), key, keyed),
+      touched)
   }
 
-  private def readCounts(v: Int): Option[Map[Int, Long]] =
-    if (!Files.exists(countsFile(v))) None
-    else {
-      val node = mapper.readTree(Files.readAllBytes(countsFile(v)))
-      val out = scala.collection.mutable.Map[Int, Long]()
-      node.fields().forEachRemaining(e =>
-        out(e.getKey.toInt) = e.getValue.asLong())
-      Some(out.toMap)
+  /** K4: compaction — rewrite every bucket, one file each, into one new
+    * version, which collapses the manifest's version spread.
+    */
+  def optimize(): Unit = latest.foreach { m =>
+    val all = snapshot(m, m.all)
+    commit(Some(m), if (m.buckets == 1) all.repartition(1) else all, m.all)
+  }
+
+  /** K4: drop version directories and manifests the latest version does
+    * not reference.
+    */
+  def vacuum(): Unit = currentVersion.foreach { keep =>
+    val live = manifest(keep).dirs.values.toSet
+    Files.list(Paths.get(path)).forEach { p =>
+      val name = p.getFileName.toString
+      if (name.matches("v\\d+") && !live(name)) deleteRecursively(p)
+      if (name.startsWith("manifest-v") && name != s"manifest-v$keep.json")
+        Files.deleteIfExists(p)
     }
+  }
+
+  private def bucketCol(n: Int) =
+    pmod(xxhash64(spec.keys.map(col): _*), lit(n)).cast("int")
+
+  /** `c` cast to the table's type for key `k` and named `k`: xxhash64
+    * hashes e.g. Int and Long differently, so an uncast probe would
+    * land in the wrong buckets.
+    */
+  private def keyCol(m: Manifest, k: String, c: org.apache.spark.sql.Column) =
+    c.cast(m.schema(k).dataType).as(k)
+
+  /** The buckets `df`'s key rows hash into; every bucket when there is
+    * only one, without running a job.
+    */
+  private def bucketsOf(m: Manifest, df: DataFrame): Set[Int] =
+    if (m.buckets == 1) m.all
+    else {
+      require(m.keys == spec.keys,
+        s"GraftTable $path is bucketed by ${m.keys}, not ${spec.keys}")
+      df.select(bucketCol(m.buckets)).distinct().collect()
+        .map(_.getInt(0)).toSet
+    }
+
+  /** Commit the next version: `df` holds the new rows of the `rewritten`
+    * buckets, every other bucket of `prev` is carried forward. On a
+    * multi-bucket table the co-locating repartition writes one file per
+    * bucket, and sizing it by `rewritten` keeps an incremental merge from
+    * launching a write task per bucket of the TABLE. A one-bucket table
+    * skips it: its every commit rewrites the whole table, so each write
+    * task keeps its own file in `__b=0` and the write stays parallel.
+    */
+  private def commit(prev: Option[Manifest], df: DataFrame,
+      rewritten: Set[Int]): Unit = {
+    val n = prev.fold(buckets)(_.buckets)
+    val next = currentVersion.map(_ + 1).getOrElse(0)
+    val dir = s"$path/v$next"
+    val bucketed = df.withColumn("__b", bucketCol(n))
+    (if (n == 1) bucketed
+     else bucketed.repartition(math.max(1, rewritten.size), col("__b")))
+      .write.mode("overwrite").partitionBy("__b").parquet(dir)
+    val carried = prev.toSeq.flatMap(m => (m.dirs.keySet -- rewritten)
+      .toSeq.map(b => (b, m.dirs(b), m.counts(b))))
+    val written = footerRecordCounts(dir).toSeq
+      .map { case (b, c) => (b, s"v$next", c) }
+    val node = mapper.createObjectNode()
+    node.put("buckets", n)
+    val keys = node.putArray("keys")
+    spec.keys.foreach(keys.add)
+    val dirs = node.putObject("dirs")
+    val counts = node.putObject("counts")
+    (carried ++ written).sortBy(_._1).foreach { case (b, d, c) =>
+      dirs.put(b.toString, d)
+      counts.put(b.toString, c)
+    }
+    node.set[JsonNode]("schema", mapper.readTree(df.schema.json))
+    Files.write(manifestFile(next), mapper.writeValueAsBytes(node))
+    val tmp = Paths.get(path, "_latest.tmp")
+    Files.write(tmp, next.toString.getBytes("UTF-8"))
+    Files.move(tmp, latestFile, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
 
   /** Footer record counts per bucket of ONE version dir — IO ∝ the
     * buckets that version wrote, never the whole table.
@@ -243,7 +259,6 @@ final class GraftTable(
     else fs.listStatus(base).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("__b="))
       .map { d =>
-        val b = d.getPath.getName.drop(4).toInt
         val files = fs.listStatus(d.getPath)
           .filter(_.getPath.getName.endsWith(".parquet"))
         val n = java.util.Arrays.stream(files).parallel().mapToLong { st =>
@@ -252,204 +267,8 @@ final class GraftTable(
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try r.getRecordCount finally r.close()
         }.sum()
-        b -> n
+        d.getPath.getName.drop(4).toInt -> n
       }.toMap
-  }
-
-  /** All retained version numbers, oldest first. */
-  def versions: Seq[Int] = {
-    val dir = Paths.get(path)
-    if (!Files.exists(dir)) Nil
-    else {
-      val out = scala.collection.mutable.ArrayBuffer[Int]()
-      Files.list(dir).forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("v") && n.drop(1).forall(_.isDigit))
-          out += n.drop(1).toInt
-      }
-      out.sorted.toSeq
-    }
-  }
-
-  /** K1/J1-J3: merge a batch in. First write creates the table. */
-  def merge(updates: DataFrame): Unit =
-    if (!bucketed) currentVersion match {
-      case None => publish(updates)
-      case Some(_) => publish(MergeOps.merge(read(), updates, spec))
-    }
-    else currentVersion match {
-      case None => publishBuckets(updates, carryFrom = Map.empty)
-      case Some(v) =>
-        val prev = manifest(v)
-        val touched = touchedBuckets(updates)
-        val targetTouched = readBuckets(prev, touched)
-        val merged = MergeOps.merge(targetTouched, updates, spec)
-        // merged rows all hash into `touched` (update keys define it)
-        publishBuckets(merged, carryFrom = prev -- touched,
-          expectedBuckets = touched.size)
-    }
-
-  /** K3: delete by id values (single-column DataFrame). Bucketed: only
-    * the buckets the ids hash into are read and rewritten.
-    */
-  def deleteIds(ids: DataFrame): Unit =
-    if (exists) {
-      if (!bucketed)
-        publish(MergeOps.deleteByIds(read(), spec.keys.head, ids))
-      else if (spec.keys.length > 1) {
-        // a single id column can't locate buckets keyed on a composite
-        // hash — process every bucket (correctness over incrementality)
-        publishBuckets(
-          MergeOps.deleteByIds(read(), spec.keys.head, ids),
-          carryFrom = Map.empty)
-      } else {
-        val v = currentVersion.get
-        val prev = manifest(v)
-        val idCol = ids.columns.head
-        // hash EXACTLY as bucketCol does: same column name and same
-        // type as the table key, else the probe lands in wrong buckets
-        val keyType = read().schema(spec.keys.head).dataType
-        val keyed = ids.select(
-          col(idCol).cast(keyType).as(spec.keys.head))
-        val touched = keyed
-          .select(bucketCol.cast("int").as("__b"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        val remaining = MergeOps.deleteByIds(
-          readBuckets(prev, touched), spec.keys.head, keyed)
-        publishBuckets(remaining, carryFrom = prev -- touched,
-          expectedBuckets = touched.size)
-      }
-    }
-
-  /** K4: compaction — rewrite current data with right-sized files
-    * (bucketed tables compact every bucket into the new version, which
-    * also collapses the manifest's version spread).
-    */
-  def optimize(numFiles: Int = 1): Unit =
-    if (exists) {
-      if (!bucketed) publish(read().repartition(numFiles))
-      else publishBuckets(read(), carryFrom = Map.empty)
-    }
-
-  /** K4: drop version directories unreferenced by the latest state. */
-  def vacuum(): Unit = currentVersion.foreach { keep =>
-    val live: Set[String] =
-      if (Files.exists(manifestFile(keep))) manifest(keep).values.toSet
-      else Set(s"v$keep")
-    val dir = Paths.get(path)
-    if (Files.exists(dir)) {
-      Files.list(dir).forEach { p =>
-        val name = p.getFileName.toString
-        val isVersionDir =
-          name.startsWith("v") && name.drop(1).forall(_.isDigit)
-        if (isVersionDir && !live.contains(name)) deleteRecursively(p)
-        // stale manifests/schemas of vacuumed versions
-        if (name.startsWith("manifest-v") &&
-          name != s"manifest-v$keep.json") Files.deleteIfExists(p)
-        if (name.startsWith("schema-v") &&
-          name != s"schema-v$keep.json") Files.deleteIfExists(p)
-        if (name.startsWith("counts-v") &&
-          name != s"counts-v$keep.json") Files.deleteIfExists(p)
-      }
-    }
-  }
-
-  private def touchedBuckets(updates: DataFrame): Set[Int] =
-    updates.select(bucketCol.cast("int").as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-
-  private def readBuckets(m: Map[Int, String], which: Set[Int]): DataFrame = {
-    val dirs = m.collect {
-      case (b, dir) if which.contains(b) => s"$path/$dir/__b=$b"
-    }.toSeq
-    if (dirs.isEmpty)
-      // no existing data in the touched buckets → empty target with the
-      // current schema (preserves insert path + schema evolution)
-      read().limit(0)
-    else spark.read.parquet(dirs: _*)
-  }
-
-  /** Write `df`'s rows into `v{next}` partitioned by bucket, publish a
-    * manifest = carryFrom ++ (df's buckets → v{next}).
-    */
-  /** @param expectedBuckets upper bound on how many distinct buckets
-    *   `df` writes — sizes the co-locating repartition. All rows of a
-    *   bucket hash to ONE partition at any width, so one-file-per-
-    *   bucket holds at any value; an incremental merge passing
-    *   touched.size avoids launching `effectiveBuckets` write tasks
-    *   (1595 of them empty for a 5-row batch at 1600 buckets — a
-    *   task-count cost that grows with the TABLE, not the batch).
-    */
-  private def publishBuckets(df: DataFrame, carryFrom: Map[Int, String],
-      expectedBuckets: Int = Int.MaxValue): Unit = {
-    val next = currentVersion.map(_ + 1).getOrElse(0)
-    val dir = s"$path/v$next"
-    // co-locate each bucket's rows before the partitioned write: one
-    // file per bucket instead of (write tasks × buckets) small files —
-    // the compaction Delta's OPTIMIZE does, done at write time
-    df.withColumn("__b", bucketCol)
-      .repartition(math.max(1, math.min(effectiveBuckets, expectedBuckets)),
-        col("__b"))
-      .write.mode("overwrite").partitionBy("__b").parquet(dir)
-    // buckets actually written = __b=K subdirs present on disk
-    val written = {
-      val d = Paths.get(dir)
-      val out = scala.collection.mutable.ArrayBuffer[Int]()
-      if (Files.exists(d)) Files.list(d).forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("__b=")) out += n.drop(4).toInt
-      }
-      out.toSet
-    }
-    val newManifest: Map[Int, String] =
-      carryFrom ++ written.map(_ -> s"v$next").toMap
-    // row-count sidecar: new buckets counted from THIS version's
-    // footers (IO ∝ touched), carried buckets inherit their previous
-    // counts. A legacy table (no previous sidecar) under a carry-
-    // forward mutation stays legacy until the next full rewrite
-    // (optimize/cold) seeds the sidecar.
-    val prevCounts: Option[Map[Int, Long]] =
-      if (carryFrom.isEmpty) Some(Map.empty)
-      else currentVersion.flatMap(readCounts)
-    val newCounts: Option[Map[Int, Long]] = prevCounts.flatMap { pc =>
-      if (!carryFrom.keys.forall(pc.contains)) None
-      else Some(carryFrom.keys.map(b => b -> pc(b)).toMap ++
-        footerRecordCounts(dir))
-    }
-    val node = mapper.createObjectNode()
-    newManifest.toSeq.sortBy(_._1).foreach { case (b, d) =>
-      node.put(b.toString, d)
-    }
-    Files.createDirectories(Paths.get(path))
-    newCounts.foreach { m =>
-      val cn = mapper.createObjectNode()
-      m.toSeq.sortBy(_._1).foreach { case (b, n) => cn.put(b.toString, n) }
-      Files.write(countsFile(next), mapper.writeValueAsBytes(cn))
-    }
-    if (!Files.exists(layoutFile)) {
-      val layout = mapper.createObjectNode()
-      layout.put("buckets", effectiveBuckets)
-      val keysArr = layout.putArray("keys")
-      spec.keys.foreach(keysArr.add)
-      Files.write(layoutFile, mapper.writeValueAsBytes(layout))
-    }
-    Files.write(manifestFile(next), mapper.writeValueAsBytes(node))
-    Files.write(schemaFile(next),
-      df.drop("__b").schema.json.getBytes("UTF-8"))
-    publishPointer(next)
-  }
-
-  private def publish(df: DataFrame): Unit = {
-    val next = currentVersion.map(_ + 1).getOrElse(0)
-    df.write.mode("overwrite").parquet(s"$path/v$next")
-    publishPointer(next)
-  }
-
-  private def publishPointer(next: Int): Unit = {
-    val tmp = Paths.get(path, "_latest.tmp")
-    Files.write(tmp, next.toString.getBytes("UTF-8"))
-    Files.move(tmp, latestFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
@@ -460,10 +279,10 @@ final class GraftTable(
 }
 
 object GraftTable {
-  /** `buckets > 0` opens a bucketed incremental table (see class doc):
-    * merges/deletes touch only the key-hash buckets their rows map to.
+  /** `buckets` sets the key-hash bucket count of a NEW table (see the
+    * class doc); an existing table keeps the count its manifest records.
     */
   def apply(spark: SparkSession, path: String, spec: MergeSpec,
-      buckets: Int = 0): GraftTable =
+      buckets: Int = 1): GraftTable =
     new GraftTable(spark, path, spec, buckets)
 }

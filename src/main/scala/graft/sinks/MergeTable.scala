@@ -9,6 +9,6 @@ import org.apache.spark.sql.SparkSession
   */
 object MergeTable {
   def open(spark: SparkSession, path: String, spec: MergeSpec,
-      buckets: Int = 0): GraftTable =
+      buckets: Int = 1): GraftTable =
     new GraftTable(spark, path, spec, buckets)
 }

@@ -138,6 +138,13 @@ object NdjsonSource {
     df.filter(col("resourceType") === lit(resourceType))
   }
 
+  /** Column the ETL adds to each parsed row: the [[fileSeqCol]] position
+    * of the row's file. It is added right over the JSON scan, where
+    * input_file_name() is still known, and replaces any input field of
+    * the same name, so its value always comes from the engine.
+    */
+  val FileSeq = "__file_seq"
+
   /** A real "appended later" ordering signal for last-wins dedup (A1):
     * the position of each row's source file in the sorted export file
     * list. monotonically_increasing_id alone is NOT export order — Spark
@@ -145,7 +152,8 @@ object NdjsonSource {
     * this maps input_file_name() back to the listing index. Ties within
     * one file fall to the caller's secondary column (files below
     * maxPartitionBytes are a single split, where partition-local ids do
-    * follow line order).
+    * follow line order). Evaluate it over the file scan itself: over a
+    * cached or checkpointed frame input_file_name() is empty.
     */
   def fileSeqCol(files: Seq[String]): Column = {
     def base(p: String): String = p.substring(p.lastIndexOf('/') + 1)

@@ -343,4 +343,26 @@ class EtlPipelineSpec extends SparkSpecBase {
       MergeSpec(Seq("id"))).read()
     assert(patients.count() === 1)
   }
+
+  test("ETL pipeline: last-wins follows file order across export files") {
+    val input = tmp("xfile-in")
+    val output = tmp("xfile-out")
+    val phi = tmp("xfile-phi")
+    Files.write(Paths.get(input, "Patient.000.ndjson"),
+      """{"resourceType":"Patient","id":"p1","birthDate":"1980-01-01"}"""
+        .getBytes("UTF-8"))
+    // the later file is the larger one, so Spark packs its split FIRST:
+    // partition order runs against file order here
+    Files.write(Paths.get(input, "Patient.001.ndjson"), (
+      """{"resourceType":"Patient","id":"p1","birthDate":"1995-01-01"}""" +:
+        (2 to 40).map(i =>
+          s"""{"resourceType":"Patient","id":"p$i","birthDate":"2000-01-01"}""")
+    ).mkString("\n").getBytes("UTF-8"))
+    EtlPipeline.run(spark, input, output, phi,
+      tasks = Seq(EtlPipeline.EtlTask("Patient", "patient")))
+    val years = GraftTable(spark, s"$output/patient", MergeSpec(Seq("id")))
+      .read().groupBy("birthDate").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(years === Map("1995" -> 1L, "2000" -> 39L))
+  }
 }

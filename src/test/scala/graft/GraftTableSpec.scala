@@ -1,0 +1,81 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import graft.operators.MergeOps.MergeSpec
+import graft.sinks.GraftTable
+import org.apache.spark.sql.functions._
+
+/** GraftTable's on-disk commit contract: one manifest per version, made
+  * visible only by the `_latest` pointer.
+  */
+class GraftTableSpec extends SparkSpecBase {
+  import spark.implicits._
+
+  private val spec = MergeSpec(Seq("id"))
+
+  private def names(dir: String): Seq[String] =
+    Files.list(Paths.get(dir)).toArray.map(_.asInstanceOf[Path]
+      .getFileName.toString).toSeq
+
+  Seq(16, 1).foreach { buckets =>
+    test(s"$buckets-bucket table: a crashed commit's debris stays invisible") {
+      val dir = Files.createTempDirectory("debris").toString
+      val t = GraftTable(spark, dir, spec, buckets)
+      t.merge((1 to 100).map(i => (s"id-$i", i)).toDF("id", "v"))
+      t.merge(Seq(("id-1", -1), ("id-200", 200)).toDF("id", "v"))
+      val n = t.currentVersion.get
+      // a commit of n+1 that died after writing part of its data and its
+      // manifest, before the pointer moved
+      val partial = Paths.get(dir, s"v${n + 1}", "__b=0", "part-00000.parquet")
+      Files.createDirectories(partial.getParent)
+      Files.write(partial, "PAR1 torn".getBytes("UTF-8"))
+      Files.write(Paths.get(dir, s"manifest-v${n + 1}.json"),
+        s"""{"buckets":$buckets,"keys":["id"],"dirs":{"0":"v${n + 1}"},"counts":{"0":7}}"""
+          .getBytes("UTF-8"))
+
+      val reader = GraftTable(spark, dir, spec)
+      assert(reader.currentVersion === Some(n))
+      assert(reader.read().count() === 101)
+      assert(reader.rowCount === 101L)
+
+      t.merge(Seq(("id-2", -2)).toDF("id", "v"))
+      assert(t.currentVersion === Some(n + 1))
+      assert(!Files.exists(partial))
+      assert(t.rowCount === 101L)
+      val v = t.read().filter(col("id").isin("id-1", "id-2", "id-200"))
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      assert(v === Map("id-1" -> -1, "id-2" -> -2, "id-200" -> 200))
+      // each committed version is one manifest plus its data dir
+      assert(names(dir).toSet === (0 to n + 1).flatMap(i =>
+        Seq(s"v$i", s"manifest-v$i.json")).toSet + "_latest")
+      assert(names(s"$dir/v${n + 1}").filter(_.startsWith("__b="))
+        .forall(b => b.drop(4).toInt < buckets))
+    }
+  }
+
+  test("a table in an older manifest format fails loudly") {
+    val dir = Files.createTempDirectory("oldfmt").toString
+    Files.write(Paths.get(dir, "_latest"), "3".getBytes("UTF-8"))
+    Files.write(Paths.get(dir, "manifest-v3.json"),
+      """{"0":"v3","1":"v2"}""".getBytes("UTF-8"))
+    val t = GraftTable(spark, dir, spec, 2)
+    val e = intercept[IllegalStateException](t.rowCount)
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("version 3"),
+      e.getMessage)
+    intercept[IllegalStateException](t.merge(Seq(("a", 1)).toDF("id", "v")))
+  }
+
+  test("a multi-bucket table refuses a merge keyed on other columns") {
+    val dir = Files.createTempDirectory("keys").toString
+    GraftTable(spark, dir, spec, 4).merge(Seq(("a", 1)).toDF("id", "v"))
+    val e = intercept[IllegalArgumentException](GraftTable(spark, dir,
+      MergeSpec(Seq("v"))).merge(Seq(("b", 2)).toDF("id", "v")))
+    assert(e.getMessage.contains("bucketed by"), e.getMessage)
+  }
+
+  test("a bucket count below one is rejected") {
+    intercept[IllegalArgumentException](
+      GraftTable(spark, Files.createTempDirectory("b0").toString, spec, 0))
+  }
+}

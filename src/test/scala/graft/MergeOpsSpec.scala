@@ -62,6 +62,61 @@ class MergeOpsSpec extends SparkSpecBase {
     assert(out.toSeq === Seq((2L, "updated"), (3L, "untouched-group")))
   }
 
+  test("merge aligns nested schemas: a narrower or wider batch merges") {
+    def json(rows: String*) = spark.read.json(rows.toDS())
+    val target = json(
+      """{"id":"a","ext":[{"url":"u1","valueBoolean":true}],"meta":{"lastUpdated":"2024-01-01","source":"s"}}""",
+      """{"id":"b","ext":[{"url":"ub","valueBoolean":false}],"meta":{"lastUpdated":"2024-01-01","source":"s"}}""")
+    // no valueBoolean, no meta.source, and one row without meta at all
+    val narrower = json(
+      """{"id":"a","ext":[{"url":"u2"}],"meta":{"lastUpdated":"2024-02-01"}}""",
+      """{"id":"c","ext":[{"url":"u3"}]}""")
+    val spec = MergeSpec(Seq("id"), guardField = Some("meta.lastUpdated"))
+    val merged = MergeOps.merge(target, narrower, spec)
+    assert(merged.schema.catalogString === target.schema.catalogString)
+    def exts(df: org.apache.spark.sql.DataFrame) = df.orderBy("id")
+      .select(col("id"), col("ext")(0)("url"), col("ext")(0)("valueBoolean"),
+        col("meta.source")).collect().map(r =>
+        (r.getString(0), r.getString(1), Option(r.get(2)), Option(r.get(3))))
+      .toSeq
+    assert(exts(merged) === Seq(("a", "u2", None, None),
+      ("b", "ub", Some(false), Some("s")), ("c", "u3", None, None)))
+    assert(merged.filter(col("id") === "c").head().isNullAt(
+      merged.schema.fieldIndex("meta")))
+    assert(MergeOps.changeFeed(target, narrower, spec)
+      .filter(col("_change_type") === "insert").count() === 1)
+    // a batch carrying a nested field the table lacks widens the table
+    val wider = json("""{"id":"b","ext":[{"url":"ub2","valueString":"x"}]}""")
+    val widened = MergeOps.merge(merged, wider, spec)
+    assert(widened.filter(col("id") === "b")
+      .select(col("ext")(0)("valueString")).head().getString(0) === "x")
+    assert(widened.count() === 3)
+  }
+
+  test("merge widens a nested leaf: a long in the table, a double in the batch") {
+    def json(rows: String*) = spark.read.json(rows.toDS())
+    val target = json(
+      """{"id":"a","vq":{"value":5,"unit":"mg"},"comp":[{"v":1}]}""",
+      """{"id":"b","vq":{"value":7,"unit":"mg"},"comp":[{"v":2}]}""")
+    // the same nested fields inferred as double, and vq.unit missing
+    val batch = json("""{"id":"a","vq":{"value":5.5},"comp":[{"v":2.5}]}""")
+    val spec = MergeSpec(Seq("id"))
+    val merged = MergeOps.merge(target, batch, spec)
+    assert(merged.schema("vq").dataType.catalogString ===
+      "struct<unit:string,value:double>")
+    assert(merged.schema("comp").dataType.catalogString ===
+      "array<struct<v:double>>")
+    val rows = merged.orderBy("id")
+      .select(col("vq.value"), col("vq.unit"), col("comp")(0)("v"))
+      .collect().map(r => (r.getDouble(0), Option(r.getString(1)),
+        r.getDouble(2))).toSeq
+    assert(rows === Seq((5.5, None, 2.5), (7.0, Some("mg"), 2.0)))
+    val post = MergeOps.changeFeed(target, batch, spec)
+      .filter(col("_change_type") === "update_postimage")
+      .select(col("vq.value")).head().getDouble(0)
+    assert(post === 5.5)
+  }
+
   test("bucketed table: incremental merge rewrites only touched buckets") {
     import graft.sinks.GraftTable
     val dir = java.nio.file.Files.createTempDirectory("bucketed").toString
