@@ -2,8 +2,16 @@ package graft.deid
 
 import graft.functions.DeidFunctions
 import graft.sources.NdjsonSource
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row,
+  SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences,
+  BoundReference, Expression, Predicate, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan,
+  Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Compiles (scrub policy × resource schema) into a nested Column
@@ -11,11 +19,15 @@ import org.apache.spark.sql.types._
   *
   * The reference walks each resource dict row-by-row in Python
   * (deid/scrubber.py:117-306); here the same allow-list semantics become
-  * ONE generated `select` per resource type: unknown fields vanish via
-  * projection (which also lets Catalyst prune the parquet/JSON scan),
-  * per-leaf actions are builtin expressions or the HMAC expression, and
-  * array elements are handled with higher-order functions — all inside
-  * whole-stage codegen, no row UDF.
+  * ONE filter/project chain per (resource type, input schema): unknown
+  * fields vanish via projection, per-leaf actions are builtin
+  * expressions or the HMAC expression, and array elements are handled
+  * with higher-order functions — generated code, no row UDF.
+  *
+  * The chain is analysed and optimised ONCE per schema, over an empty
+  * placeholder relation, and cached as bound Catalyst expressions; every
+  * call then runs it over the input's rows directly (see [[scrub]]), so
+  * a repeat batch pays no Catalyst analysis of the wide FHIR projection.
   *
   * Rejection semantics (P3): rows with unknown modifierExtensions (FHIR:
   * modifiers change meaning — scrubber.py:351-372) or no resourceType are
@@ -39,36 +51,69 @@ object ScrubCompiler {
 
   private val noReject: Column => Column = _ => lit(false)
 
-  /** Session-lifetime cache of the APPLIED (still unresolved) scrub
-    * projection/reject Columns. Building the Column tree in Scala costs
-    * ~1.9s per run for a wide FHIR schema — 45% of the ETL path's
-    * per-run constant — and the tree is a pure function of the key
-    * below: unresolved Columns reference input fields by NAME only, so
-    * the identical immutable tree is valid against every relation with
-    * the same schema (Catalyst copies on resolution, never mutates).
-    * This caches an expression TEMPLATE, never data or results; the
-    * codebook is part of the key by STRUCTURAL equality (salt + legacy
+  /** One step of a planned scrub, its expressions bound to the column
+    * positions of the step's input rows.
+    */
+  private sealed trait Step
+  private final case class Keep(condition: Expression) extends Step
+  private final case class Emit(exprs: Seq[Expression]) extends Step
+
+  /** A scrub planned for one input schema: its steps, bottom-up, and
+    * the schema of the rows the last step yields. The steps are kept
+    * serialized: the bound trees hold Catalyst's per-node lazy state
+    * (about 8 MB of driver heap for a wide Encounter schema, several
+    * times their serialized size), and every task deserializes its own
+    * copy anyway.
+    */
+  private final case class Planned(steps: Array[Byte], schema: StructType)
+
+  /** Everything a planned scrub is a pure function of. The schema is
+    * the input's without `__file_seq`: the expressions are bound by
+    * column position, and [[carry]] passes that column through by
+    * position, so a frame with it and one without share one plan. ANSI
+    * mode and the session time zone are baked into expressions at
+    * analysis. The codebook compares STRUCTURALLY (salt + legacy
     * mappings — two codebooks may share an id string but differ in
     * content, e.g. test fixtures).
     */
-  // Bounded LRU (ADVICE r10: the unbounded ConcurrentHashMap retained
-  // every Column tree + codebook forever under schema/codebook churn).
-  // 64 entries cover a full DefaultTasks run (20 resource types × the
-  // nlp/philter variants actually used) with room; ETL processes one
-  // schema per task, so eviction is a cold-compile (~1.9s), never a
-  // correctness event. access-order LinkedHashMap, synchronized — the
-  // compile is driver-side and rare, contention is irrelevant.
-  private val AppliedCacheMax = 64
-  private val appliedCache = new java.util.LinkedHashMap[
-    (String, org.apache.spark.sql.types.StructType, ScrubPolicy, Boolean,
-      Boolean, Codebook), (Column, Column)](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String,
-          org.apache.spark.sql.types.StructType, ScrubPolicy, Boolean,
-          Boolean, Codebook), (Column, Column)]): Boolean =
-      size() > AppliedCacheMax
-  }
+  private final case class Key(
+      resourceType: String,
+      schema: StructType,
+      policy: ScrubPolicy,
+      nlpMode: Boolean,
+      philterEnabled: Boolean,
+      codebook: Codebook,
+      ansi: String,
+      timeZone: String
+  )
 
+  /** Session-lifetime cache of PLANNED scrubs: analysing, optimising and
+    * binding the wide FHIR projection costs seconds per schema, and the
+    * result depends on nothing but the [[Key]]. It holds expression
+    * templates, never data or results.
+    */
+  // Bounded LRU (ADVICE r10: an unbounded map retained every plan +
+  // codebook forever under schema/codebook churn). 64 entries cover a
+  // full DefaultTasks run (20 resource types × the nlp/philter variants
+  // actually used) with room; eviction is a cold compile, never a
+  // correctness event. access-order LinkedHashMap, synchronized; the
+  // compile itself runs outside the lock, so two threads that miss on
+  // one key may both plan it, and neither waits on the other.
+  private val PlannedCacheMax = 64
+  private val plannedCache =
+    new java.util.LinkedHashMap[Key, Planned](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Key, Planned]): Boolean =
+        size() > PlannedCacheMax
+    }
+
+  /** Scrub `df`'s rows of `resourceType`. The result is a leaf relation
+    * over `df`'s rows: the planned chain runs per partition with
+    * generated predicates and projections, and Catalyst sees no scrub
+    * expression above it. The engine's file-order column is not input
+    * data: it passes the allow-list untouched, as the last column, for
+    * the dedup after the scrub.
+    */
   def scrub(
       df: DataFrame,
       resourceType: String,
@@ -77,36 +122,102 @@ object ScrubCompiler {
       nlpMode: Boolean = false,
       philterEnabled: Boolean = false
   ): DataFrame = {
-    // the engine's file-order column is not input data: it passes the
-    // allow-list untouched, for the dedup after the scrub
-    val carried = df.columns.filter(_ == NdjsonSource.FileSeq).toSeq.map(col)
-    val input = df.drop(NdjsonSource.FileSeq)
-    val key = (resourceType, input.schema, policy, nlpMode, philterEnabled,
-      codebook)
-    val (projCol, rejCol) = appliedCache.synchronized {
-      val hit = appliedCache.get(key)
-      if (hit != null) hit
-      else {
-        val ctx = Ctx(policy, codebook, nlpMode, philterEnabled,
-          resourceType)
-        val node = compileStruct(resourceType, input.schema, ctx)
-        val rowCol = struct(input.columns.map(col): _*)
-        val built = (node.project(rowCol), node.reject(rowCol))
-        appliedCache.put(key, built)
+    val seqAt = Some(df.columns.indexOf(NdjsonSource.FileSeq)).filter(_ >= 0)
+    val input = StructType(df.schema.filter(_.name != NdjsonSource.FileSeq))
+    val conf = df.sparkSession.conf
+    val key = Key(resourceType, input, policy, nlpMode, philterEnabled,
+      codebook, conf.get(SQLConf.ANSI_ENABLED.key),
+      conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    val planned = Option(plannedCache.synchronized(plannedCache.get(key)))
+      .getOrElse {
+        val built = plan(df.sparkSession, key)
+        plannedCache.synchronized(plannedCache.put(key, built))
         built
       }
+    val carried = seqAt.map { k =>
+      require(k == input.length,
+        s"${NdjsonSource.FileSeq} must be the last column of the scrub input")
+      (k, df.schema(k))
     }
-    df.filter(col("resourceType") === lit(resourceType))
-      .filter(!rejCol)
-      .select(projCol.as("__row") +: carried: _*)
+    val bytes = planned.steps
+    val rows = df.queryExecution.toRdd.mapPartitionsWithIndex { (i, it) =>
+      val stored = SparkEnv.get.closureSerializer.newInstance()
+        .deserialize[Seq[Step]](java.nio.ByteBuffer.wrap(bytes))
+      val steps = carried.fold(stored) { case (k, f) => carry(stored, k, f) }
+      steps.foldLeft(it) {
+        case (rows, Keep(c)) =>
+          val p = Predicate.create(c)
+          p.initialize(i)
+          rows.filter(p.eval)
+        case (rows, Emit(es)) =>
+          val p = UnsafeProjection.create(es)
+          p.initialize(i)
+          rows.map(p)
+      }
+    }
+    GraftColumnBridge.internalCreateDataFrame(df.sparkSession, rows,
+      carried.fold(planned.schema)(c => planned.schema.add(c._2)))
+  }
+
+  /** Analyse and optimise the scrub for `key`'s input schema over an
+    * empty placeholder relation, and bind the optimised Filter/Project
+    * chain. The full optimizer also rewrites the `RuntimeReplaceable`
+    * and `With` expressions, which cannot be evaluated as they are.
+    */
+  private def plan(spark: SparkSession, key: Key): Planned = {
+    val placeholder = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], key.schema)
+    val ctx = Ctx(key.policy, key.codebook, key.nlpMode, key.philterEnabled,
+      key.resourceType)
+    val node = compileStruct(key.resourceType, key.schema, ctx)
+    val rowCol = struct(placeholder.columns.map(col): _*)
+    val scrubbed = placeholder
+      .filter(col("resourceType") === lit(key.resourceType))
+      .filter(!node.reject(rowCol))
+      .select(node.project(rowCol).as("__row"))
       .filter(col("__row").isNotNull)
-      .select(col("__row.*") +: carried: _*)
+      .select(col("__row.*"))
+    def chain(p: LogicalPlan): (Seq[Step], Seq[Attribute]) = p match {
+      case Filter(c, child) =>
+        val (steps, in) = chain(child)
+        (steps :+ Keep(BindReferences.bindReference(c, in)), in)
+      case Project(list, child) =>
+        val (steps, in) = chain(child)
+        (steps :+ Emit(BindReferences.bindReferences(list, in)), p.output)
+      case leaf: LogicalRDD => (Nil, leaf.output)
+      case other =>
+        throw new IllegalStateException(s"scrub of ${key.resourceType} " +
+          s"planned to ${other.nodeName}, not a filter/project chain")
+    }
+    val steps = chain(scrubbed.queryExecution.optimizedPlan)._1
+    val bytes = SparkEnv.get.closureSerializer.newInstance().serialize(steps)
+    Planned(java.util.Arrays.copyOfRange(bytes.array(),
+      bytes.arrayOffset() + bytes.position(),
+      bytes.arrayOffset() + bytes.limit()), scrubbed.schema)
+  }
+
+  /** `steps` run over rows that hold `carried` after the columns they
+    * were planned for, at position `at`: the steps up to the first
+    * projection never read it, and each projection passes it on as its
+    * last column.
+    */
+  private def carry(steps: Seq[Step], at: Int, carried: StructField)
+      : Seq[Step] = {
+    var pos = at
+    steps.map {
+      case keep: Keep => keep
+      case Emit(es) =>
+        val carrying = Emit(es :+
+          BoundReference(pos, carried.dataType, carried.nullable))
+        pos = es.length
+        carrying
+    }
   }
 
   /** P2/A4: census of extension urls the policy drops — the side-output
     * report the reference prints at the end of a run
-    * (deid/scrubber.py:94-102,343-349). One distributed count, no
-    * mutation of the main flow.
+    * (deid/scrubber.py:94-102,343-349). One distributed count over ONE
+    * pass of `df`, no mutation of the main flow.
     */
   def extensionCensus(
       df: DataFrame,
@@ -114,23 +225,25 @@ object ScrubCompiler {
       policy: ScrubPolicy = DefaultScrubPolicy.policy
   ): DataFrame = {
     val cols = df.columns.toSet
-    val sources = Seq("extension", "modifierExtension").filter(cols)
+    val noUrls = typedLit(Seq.empty[String])
+    val urls = Seq("extension", "modifierExtension").filter(cols).map { c =>
+      coalesce(transform(col(c), _.getField("url")), noUrls)
+    }
     // ignored urls are dropped but never counted (scrub-rules.toml
     // [extensions] `ignored` — known urls the user needn't be warned of)
     val uncounted = array(
       (policy.allowedExtensions ++ policy.ignoredExtensions)
         .toSeq.sorted.map(lit): _*)
-    val perCol = sources.map { c =>
-      df.select(explode(col(c)).as("__e"))
-        .select(col("__e.url").as("url"))
-        .filter(!array_contains(uncounted, col("url")))
-    }
-    perCol
-      .reduceOption(_ unionByName _)
-      .getOrElse(df.sparkSession.emptyDataFrame
-        .withColumn("url", lit(null).cast("string")))
+    val dropped = filter(if (urls.isEmpty) noUrls else concat(urls: _*),
+      u => !array_contains(uncounted, u))
+    df.select(explode_outer(dropped).as("url"))
       .groupBy(col("url"))
-      .agg(count(lit(1)).as("n_dropped"))
+      .agg(count(col("url")).as("n_dropped"))
+      // a row that drops nothing reaches the aggregation as the null url
+      // (count 0) and leaves only here: the shuffle is then empty only
+      // when `df` is. AQE prunes an empty shuffle's stage, and with it
+      // the metrics of any observation on `df`.
+      .filter(col("n_dropped") > 0)
       .withColumn("resource_type", lit(resourceType))
       .select("resource_type", "url", "n_dropped")
   }

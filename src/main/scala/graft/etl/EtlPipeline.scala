@@ -134,9 +134,16 @@ object EtlPipeline {
           widen = true)
           .withColumn(NdjsonSource.FileSeq, NdjsonSource.fileSeqCol(files))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // A5: funnel metrics ride actions that run anyway via observe():
+        // the read count rides the census below, the scrubbed count the
+        // checkpoint — no extra jobs. (The scrub returns a leaf over
+        // raw's rows, so an observation on its input would never fire.)
+        val readObs = org.apache.spark.sql.Observation()
+        val scrubObs = org.apache.spark.sql.Observation()
         // P2/A4: dropped-extension census side-output (the report the
         // reference prints at run end, persisted as a mergeable table)
-        val census = ScrubCompiler.extensionCensus(raw,
+        val census = ScrubCompiler.extensionCensus(
+          raw.observe(readObs, count(lit(1)).as("n")),
           task.resourceType, policy)
         // evaluate the census ONCE (it is small by definition: one row
         // per distinct dropped-extension url) — `isEmpty` + `merge`
@@ -147,15 +154,10 @@ object EtlPipeline {
             MergeSpec(Seq("resource_type", "url"))).merge(
             spark.createDataFrame(
               java.util.Arrays.asList(censusRows: _*), census.schema))
-        // A5: funnel metrics ride the merge action via observe() —
-        // no extra jobs for the seen/scrubbed counts
-        val readObs = org.apache.spark.sql.Observation()
-        val scrubObs = org.apache.spark.sql.Observation()
         // nlpMode keeps note text (mask-note leaves), mirroring the
         // reference's prepare_pipeline(nlp=True) (etl/pipeline.py:213-215)
-        val scrubbed = ScrubCompiler.scrub(
-          raw.observe(readObs, count(lit(1)).as("n")),
-          task.resourceType, codebook, policy, nlpMode, philterEnabled)
+        val scrubbed = ScrubCompiler.scrub(raw, task.resourceType, codebook,
+          policy, nlpMode, philterEnabled)
         // ties within a file are broken by the partition-local id
         val deduped = MergeOps.dedupLastWins(
           scrubbed.observe(scrubObs, count(lit(1)).as("n"))
@@ -163,13 +165,10 @@ object EtlPipeline {
           Seq("id"),
           Seq(col(NdjsonSource.FileSeq), col("__seq"))
         ).drop(NdjsonSource.FileSeq, "__seq")
-          // materialized ONCE before the merge: the bucketed merge (and
-          // the completion fan-out) runs several actions, and each
-          // would re-ANALYZE the full scrub-projection lineage — the
-          // wide-schema Column tree costs seconds of Catalyst analysis
-          // per action (measured at 200k rows: cold merge 12.2s → 4.4s,
-          // tiny incremental 14.5s → 3.6s). Scrub + dedup still execute
-          // exactly once — this checkpoint is that execution.
+          // materialized ONCE before the merge: the bucketed merge and
+          // the completion fan-out run several actions over `deduped`,
+          // and each would otherwise execute the scrub and the dedup
+          // shuffle again. This checkpoint is their one execution.
           .localCheckpoint(true)
 
         // bucketed incremental layout: re-runs merge only the key-hash
@@ -205,7 +204,7 @@ object EtlPipeline {
 
     // deleted-ids bundles (S5 → K3)
     val deletedDir = s"$inputDir/deleted"
-    if (Files.exists(java.nio.file.Paths.get(deletedDir))) {
+    if (NdjsonSource.listResourceFiles(spark, deletedDir).nonEmpty) {
       val deleted = NdjsonSource.readDeletedIds(spark, deletedDir).cache()
       tasks.foreach { task =>
         val ids = deleted
@@ -221,11 +220,6 @@ object EtlPipeline {
     JobContext.recordSuccess(phiDir, inputDir, outputDir,
       results.map(r => r.table -> r.rows).toMap)
     results
-  }
-
-  private object Files {
-    def exists(p: java.nio.file.Path): Boolean =
-      java.nio.file.Files.exists(p)
   }
 }
 

@@ -102,13 +102,17 @@ final class GraftTable(
   private def current: Manifest = latest.getOrElse(
     throw new IllegalStateException(s"GraftTable $path has no data yet"))
 
-  /** The rows of `which` buckets of the version `m` describes. */
+  /** The rows of `which` buckets of the version `m` describes, read
+    * with the manifest's schema: buckets last rewritten by different
+    * versions may hold different columns, and no file is opened to
+    * infer it.
+    */
   private def snapshot(m: Manifest, which: Set[Int]): DataFrame = {
     val dirs = m.dirs.toSeq.filter(e => which(e._1)).sortBy(_._1)
       .map { case (b, dir) => s"$path/$dir/__b=$b" }
     if (dirs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
-    else spark.read.parquet(dirs: _*)
+    else spark.read.schema(m.schema).parquet(dirs: _*)
   }
 
   def read(): DataFrame = {

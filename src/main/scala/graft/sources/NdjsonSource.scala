@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
@@ -177,13 +177,19 @@ object NdjsonSource {
 
   /** S5: deleted-ids bundles — FHIR transaction Bundles under deleted/
     * whose DELETE entries name "Type/id" URLs; returns (resourceType, id)
-    * rows (loaders/fhir/ndjson_loader.py:92-114). Read with the Bundle
-    * schema, not an inferred one: a bundle with no entries would infer
-    * no `entry` struct and fail the run.
+    * rows (loaders/fhir/ndjson_loader.py:92-114). The bundles are the
+    * dir's NDJSON-named files, as [[listResourceFiles]] finds them; a dir
+    * with none yields no rows. Read with the Bundle schema, not an
+    * inferred one: a bundle with no entries would infer no `entry`
+    * struct and fail the run.
     */
   def readDeletedIds(spark: SparkSession, dir: String): DataFrame = {
-    val bundles = spark.read.schema(DeletedBundleSchema)
-      .json(s"$dir/*.ndjson")
+    val files = listResourceFiles(spark, dir)
+    val bundles =
+      if (files.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          DeletedBundleSchema)
+      else spark.read.schema(DeletedBundleSchema).json(files: _*)
     bundles
       .filter(col("resourceType") === "Bundle" && col("type") === "transaction")
       .select(explode(col("entry")).as("entry"))

@@ -365,4 +365,52 @@ class EtlPipelineSpec extends SparkSpecBase {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(years === Map("1995" -> 1L, "2000" -> 39L))
   }
+
+  private val patientTask = Seq(EtlPipeline.EtlTask("Patient", "patient"))
+
+  test("ETL pipeline: the row funnel counts a rejected row") {
+    val input = tmp("funnel-in")
+    val output = tmp("funnel-out")
+    val phi = tmp("funnel-phi")
+    Files.write(Paths.get(input, "Patient.ndjson"), Seq(
+      """{"resourceType":"Patient","id":"p1","gender":"female"}""",
+      """{"resourceType":"Patient","id":"p2","gender":"male"}""",
+      """{"resourceType":"Patient","id":"p3","gender":"other","modifierExtension":[{"url":"http://example.com/changes-meaning","valueString":"x"}]}"""
+    ).mkString("\n").getBytes("UTF-8"))
+    val r = EtlPipeline.run(spark, input, output, phi, tasks = patientTask)
+      .head
+    assert((r.rowsRead, r.rowsScrubbed, r.rowsRejected) === ((3L, 2L, 1L)))
+    assert(r.rows === 2L)
+    // a batch the scrub rejects whole
+    val allRejected = tmp("funnel-in2")
+    Files.write(Paths.get(allRejected, "Patient.ndjson"), Seq(
+      """{"resourceType":"Patient","id":"p4","modifierExtension":[{"url":"http://example.com/changes-meaning","valueString":"y"}]}"""
+    ).mkString("\n").getBytes("UTF-8"))
+    val r2 = EtlPipeline.run(spark, allRejected, output, phi,
+      tasks = patientTask).head
+    assert((r2.rowsRead, r2.rowsScrubbed, r2.rowsRejected) === ((1L, 0L, 1L)))
+    assert(r2.rows === 2L)
+  }
+
+  Seq(
+    "holds no bundle" -> Seq.empty[String],
+    "holds only .jsonl bundles" -> Seq("deleted.jsonl")
+  ).foreach { case (shape, bundles) =>
+    test(s"ETL pipeline: a deleted/ dir that $shape") {
+      val input = tmp("del-in")
+      val output = tmp("del-out")
+      val phi = tmp("del-phi")
+      Files.write(Paths.get(input, "Patient.ndjson"), Seq(
+        """{"resourceType":"Patient","id":"p1","gender":"female"}""",
+        """{"resourceType":"Patient","id":"p2","gender":"male"}"""
+      ).mkString("\n").getBytes("UTF-8"))
+      Files.createDirectories(Paths.get(input, "deleted"))
+      bundles.foreach(name => Files.write(Paths.get(input, "deleted", name),
+        """{"resourceType":"Bundle","type":"transaction","entry":[{"request":{"method":"DELETE","url":"Patient/p1"}}]}"""
+          .getBytes("UTF-8")))
+      EtlPipeline.run(spark, input, output, phi, tasks = patientTask)
+      assert(GraftTable(spark, s"$output/patient", MergeSpec(Seq("id")))
+        .read().count() === 2L - bundles.size)
+    }
+  }
 }

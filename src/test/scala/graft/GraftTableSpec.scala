@@ -78,4 +78,24 @@ class GraftTableSpec extends SparkSpecBase {
     intercept[IllegalArgumentException](
       GraftTable(spark, Files.createTempDirectory("b0").toString, spec, 0))
   }
+
+  test("a merge that adds a column keeps it in every later read and merge") {
+    val dir = Files.createTempDirectory("evolve").toString
+    val t = GraftTable(spark, dir, spec, 4)
+    t.merge((1 to 40).map(i => (s"id-$i", i)).toDF("id", "a"))
+    // touches one bucket; the other three stay at version 0, without `b`
+    t.merge(Seq(("id-1", 1, "x")).toDF("id", "a", "b"))
+    val v1 = t.read()
+    assert(v1.columns.toSet === Set("id", "a", "b"))
+    assert(v1.filter(col("b") === "x").count() === 1)
+    assert(v1.count() === 40)
+    // a merge touching buckets of both versions keeps `b` and its value
+    t.merge((2 to 40).map(i => (s"id-$i", -i)).toDF("id", "a"))
+    val v2 = t.read()
+    assert(v2.columns.toSet === Set("id", "a", "b"))
+    assert(v2.filter(col("id") === "id-1").select("b").head().getString(0)
+      === "x")
+    assert(v2.filter(col("a") < 0).count() === 39)
+    assert(t.rowCount === 40L)
+  }
 }

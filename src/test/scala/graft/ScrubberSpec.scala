@@ -407,4 +407,93 @@ class ScrubberSpec extends SparkSpecBase {
     assert(NdjsonSource.parseExportLog(spark, log.toString) ===
       Some(("cohort-a", "2024-01-01T00:59:00Z")))
   }
+
+  /** Expression nodes in `df`'s analyzed plan beyond its output columns:
+    * zero for a bare leaf relation.
+    */
+  private def extraExpressionNodes(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collect { case p => p }
+      .flatMap(_.expressions).map(_.collect { case e => e }.size).sum -
+      df.columns.length
+
+  test("scrub: a repeat call over a wide schema plans no scrub expression") {
+    def scrubbedWide() = ScrubCompiler.scrub(
+      spark.read.schema(graft.fhir.FhirSchemas.forResource("Patient").get)
+        .json(patients.toDS()), "Patient", cb)
+    val first = scrubbedWide()
+    val again = scrubbedWide()
+    val plan = again.queryExecution.analyzed
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      plan.treeString)
+    assert(extraExpressionNodes(again) === 0)
+    // a narrow schema's scrub is just as small: the plan holds no
+    // expression that grows with the schema
+    val narrow = ScrubCompiler.scrub(spark.read.json(patients.toDS()),
+      "Patient", cb)
+    assert(extraExpressionNodes(narrow) === 0)
+    assert(again.schema === first.schema)
+    assert(again.collect().map(_.toString).sorted ===
+      first.collect().map(_.toString).sorted)
+    assert(again.count() === 2)
+  }
+
+  test("scrub: the file-order column passes through as the last column") {
+    val df = spark.read.json(patients.toDS())
+    val withSeq = ScrubCompiler.scrub(df.withColumn(NdjsonSource.FileSeq,
+      when(col("id") === "pat1", lit(1L)).otherwise(lit(2L))), "Patient", cb)
+    val without = ScrubCompiler.scrub(df, "Patient", cb)
+    assert(withSeq.columns.toSeq ===
+      without.columns.toSeq :+ NdjsonSource.FileSeq)
+    val seqOf = Map(hashOf("pat1") -> 1L, hashOf("pat2") -> 2L)
+    assert(withSeq.collect().map(_.toString).sorted ===
+      without.collect().map(r => org.apache.spark.sql.Row.fromSeq(
+        r.toSeq :+ seqOf(r.getAs[String]("id"))).toString).sorted)
+  }
+
+  test("scrub: three input partitions give the rows one partition gives") {
+    val many = (1 to 30).map(i =>
+      s"""{"resourceType":"Patient","id":"p$i","gender":"female","birthDate":"19${10 + i}-03-04","address":[{"state":"MA","postalCode":"0${2100 + i}"}]}""") ++
+      patients
+    val df = spark.read.json(many.toDS())
+    def rows(in: org.apache.spark.sql.DataFrame) =
+      ScrubCompiler.scrub(in, "Patient", cb).collect().map(_.toString).sorted
+    val three = df.repartition(3)
+    assert(three.rdd.getNumPartitions === 3)
+    val one = rows(df.coalesce(1))
+    assert(one.length === 32) // pat3 rejected
+    assert(rows(three) === one)
+  }
+
+  test("scrub: one schema under two codebook salts hashes ids apart") {
+    val df = spark.read.json(patients.toDS())
+    val other = Codebook.withSalt("43" * 32)
+    def ids(c: Codebook) = ScrubCompiler.scrub(df, "Patient", c)
+      .select("id").collect().map(_.getString(0)).toSet
+    assert(ids(cb) === Set(hashOf("pat1"), hashOf("pat2")))
+    val otherIds = ids(other)
+    assert(otherIds === Set("pat1", "pat2").map(id =>
+      Seq(id).toDF("x").select(other.fakeId(col("x"))).head().getString(0)))
+    assert((otherIds & ids(cb)).isEmpty)
+  }
+
+  test("scrub: a session's time zone is not served another session's plan") {
+    // a timestamp-typed birthDate is cast to string (in the session time
+    // zone) before the year is kept: 02:00 UTC on 2000-01-01 is still
+    // 1999 in Los Angeles
+    val ts = java.sql.Timestamp.from(
+      java.time.Instant.parse("2000-01-01T02:00:00Z"))
+    def year(s: org.apache.spark.sql.SparkSession): String = {
+      val df = s.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row("Patient", "p1", ts)),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "resourceType STRING, id STRING, birthDate TIMESTAMP"))
+      ScrubCompiler.scrub(df, "Patient", cb)
+        .select("birthDate").head().getString(0)
+    }
+    val la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    assert(year(spark) === "2000")
+    assert(year(la) === "1999")
+    assert(year(spark) === "2000")
+  }
 }
