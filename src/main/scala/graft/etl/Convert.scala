@@ -10,9 +10,9 @@ import org.apache.spark.sql.SparkSession
 
 /** `convert`: replay a batched-NDJSON output tree into merge tables
   * (SURVEY §3.3, etl/convert/cli.py:130-201). Each `{table}.NNN.ndjson`
-  * + `.meta` sidecar is applied in index order — batch rows merged, then
-  * sidecar deleted ids removed — proving the NDJSON output is a
-  * complete, lossless log of the table's mutations.
+  * + `.meta` sidecar is applied in index order — batch rows merged and
+  * sidecar deleted ids removed, one version per batch — proving the
+  * NDJSON output is a complete, lossless log of the table's mutations.
   */
 object Convert {
 
@@ -61,11 +61,10 @@ object Convert {
     // count its manifest records)
     val target = GraftTable(spark, s"$targetDir/$table", spec,
       EtlPipeline.ResourceTableBuckets)
+    // one version per batch: its rows and its sidecar's deleted ids
     listBatches(sourceTableDir, table).foreach { batch =>
-      val rows = spark.read.json(batch.dataPath)
-      target.merge(rows)
-      if (batch.deleted.nonEmpty)
-        target.deleteIds(batch.deleted.toDF("id"))
+      target.merge(spark.read.json(batch.dataPath),
+        Option.when(batch.deleted.nonEmpty)(batch.deleted.toDF("id")))
     }
     if (target.exists) target.read().count() else 0L
   }

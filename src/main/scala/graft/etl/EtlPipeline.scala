@@ -10,8 +10,11 @@ import org.apache.spark.sql.functions._
 
 /** The end-to-end ETL flow (SURVEY §3.1): per resource task,
   * read NDJSON → scrub → dedup (last-wins) → merge into the output
-  * table → completion bookkeeping — each stage one of the already-tested
-  * operators; this driver only sequences them.
+  * table, with the export's deleted ids of that type → completion
+  * bookkeeping — each stage one of the already-tested operators; this
+  * driver only sequences them. A task commits each table at most once,
+  * and runs its side-table commits beside the resource-table merge
+  * (see `run`). Tasks run one after another.
   */
 object EtlPipeline {
 
@@ -110,12 +113,30 @@ object EtlPipeline {
       "tasks" -> tasks.map(_.tableName).mkString(",")
     ))
 
+    // deleted-ids bundles (S5 → K3), read once and hashed to fake ids:
+    // each task folds its type's ids into its own table merge
+    val deletedIds: Map[String, Seq[String]] =
+      if (NdjsonSource.listResourceFiles(spark, s"$inputDir/deleted").isEmpty)
+        Map.empty
+      else NdjsonSource.readDeletedIds(spark, s"$inputDir/deleted")
+        .filter(col("resource_type").isin(tasks.map(_.resourceType): _*))
+        .select(col("resource_type"), codebook.fakeId(col("id")))
+        .collect().toSeq.groupMap(_.getString(0))(_.getString(1))
+
     val results = tasks.map { task =>
+      val deletes = deletedIds.get(task.resourceType).map { ids =>
+        import spark.implicits._
+        ids.toDF("id")
+      }
+      val table = GraftTable(spark, s"$outputDir/${task.tableName}",
+        task.mergeSpec, buckets)
       if (!available.contains(task.resourceType)) {
         // touch-empty-tables (etl/tasks/base.py:222-227): a selected task
         // with no input still leaves a valid empty wide-schema table so
-        // downstream SQL never breaks on a missing table
-        Init.touchTable(spark, outputDir, task, policy)
+        // downstream SQL never breaks on a missing table; its deleted ids
+        // still apply to rows earlier runs wrote
+        if (!Init.touchTable(spark, outputDir, task, policy))
+          deletes.foreach(table.deleteIds)
         TaskResult(task.tableName, attempted = false, rows = 0)
       } else {
         // parsed ONCE, read three times (census, scrub→merge, and the
@@ -149,77 +170,114 @@ object EtlPipeline {
         // per distinct dropped-extension url) — `isEmpty` + `merge`
         // would run the input aggregation twice
         val censusRows = census.collect()
-        if (censusRows.nonEmpty)
-          GraftTable(spark, s"$outputDir/etl__extension_census",
-            MergeSpec(Seq("resource_type", "url"))).merge(
-            spark.createDataFrame(
-              java.util.Arrays.asList(censusRows: _*), census.schema))
-        // nlpMode keeps note text (mask-note leaves), mirroring the
-        // reference's prepare_pipeline(nlp=True) (etl/pipeline.py:213-215)
-        val scrubbed = ScrubCompiler.scrub(raw, task.resourceType, codebook,
-          policy, nlpMode, philterEnabled)
-        // ties within a file are broken by the partition-local id
-        val deduped = MergeOps.dedupLastWins(
-          scrubbed.observe(scrubObs, count(lit(1)).as("n"))
-            .withColumn("__seq", monotonically_increasing_id()),
-          Seq("id"),
-          Seq(col(NdjsonSource.FileSeq), col("__seq"))
-        ).drop(NdjsonSource.FileSeq, "__seq")
-          // materialized ONCE before the merge: the bucketed merge and
-          // the completion fan-out run several actions over `deduped`,
-          // and each would otherwise execute the scrub and the dedup
-          // shuffle again. This checkpoint is their one execution.
-          .localCheckpoint(true)
 
-        // bucketed incremental layout: re-runs merge only the key-hash
-        // buckets their rows touch instead of rewriting the table
-        val table = GraftTable(spark, s"$outputDir/${task.tableName}",
-          task.mergeSpec, buckets)
-        table.merge(deduped)
+        // Commit order. The task's data commits come first: the census
+        // merge and the Patient/Encounter codebook-mappings merge need
+        // only `raw` and the census rows, so they run on their own
+        // threads while this one scrubs, dedups and merges the resource
+        // table (its batch and its deleted ids in one version). The
+        // completion rows commit only once every data commit of the
+        // task has succeeded; the two completion tables overlap each
+        // other. No two threads ever commit the same table: tasks stay
+        // serial.
+        val sideCommits = Seq(
+          Option.when(censusRows.nonEmpty)(Overlap.fork {
+            GraftTable(spark, s"$outputDir/etl__extension_census",
+              MergeSpec(Seq("resource_type", "url"))).merge(
+              spark.createDataFrame(
+                java.util.Arrays.asList(censusRows: _*), census.schema))
+          }),
+          // Patient/Encounter reversibility side-output (SURVEY §7.4.3)
+          Option.when(task.resourceType == "Patient" ||
+            task.resourceType == "Encounter")(Overlap.fork {
+            GraftTable(spark, s"$phiDir/codebook-mappings",
+              MergeSpec(Seq("resource_type", "real_id"))).merge(
+              codebook.mappingTable(
+                raw.filter(col("resourceType") === task.resourceType),
+                "id", task.resourceType))
+          })
+        ).flatten
+        val deduped = try Overlap.joinAfter(sideCommits) {
+          // nlpMode keeps note text (mask-note leaves), mirroring the
+          // reference's prepare_pipeline(nlp=True) (etl/pipeline.py:213-215)
+          val scrubbed = ScrubCompiler.scrub(raw, task.resourceType, codebook,
+            policy, nlpMode, philterEnabled)
+          // ties within a file are broken by the partition-local id
+          val kept = MergeOps.dedupLastWins(
+            scrubbed.observe(scrubObs, count(lit(1)).as("n"))
+              .withColumn("__seq", monotonically_increasing_id()),
+            Seq("id"),
+            Seq(col(NdjsonSource.FileSeq), col("__seq"))
+          ).drop(NdjsonSource.FileSeq, "__seq")
+            // materialized ONCE before the merge: the bucketed merge and
+            // the completion fan-out run several actions over `deduped`,
+            // and each would otherwise execute the scrub and the dedup
+            // shuffle again. This checkpoint is their one execution.
+            .localCheckpoint(true)
+          // bucketed incremental layout: re-runs merge only the key-hash
+          // buckets their rows and deleted ids touch instead of rewriting
+          // the table
+          table.merge(kept, deletes)
+          kept
+        } finally raw.unpersist()
 
-        // Patient/Encounter reversibility side-output (SURVEY §7.4.3)
-        if (task.resourceType == "Patient" ||
-          task.resourceType == "Encounter") {
-          val mapping = codebook.mappingTable(
-            raw.filter(col("resourceType") === task.resourceType),
-            "id", task.resourceType)
-          GraftTable(spark, s"$phiDir/codebook-mappings",
-            MergeSpec(Seq("resource_type", "real_id"))).merge(mapping)
-        }
-
-        val n = table.rowCount // footer metadata only — no table scan
-        Completion.recordTable(spark, outputDir, task.tableName,
-          groupName, exportTime)
         // J7: Encounter rows fan out into the per-encounter completion
         // table as well (etl/tasks/basic_tasks.py:36-68)
-        if (task.resourceType == "Encounter")
-          Completion.recordEncounters(spark, outputDir,
-            deduped.select("id"), groupName, exportTime)
-        raw.unpersist()
-        TaskResult(task.tableName, attempted = true, rows = n,
+        Overlap.joinAfter(Option.when(task.resourceType == "Encounter")(
+          Overlap.fork(Completion.recordEncounters(spark, outputDir,
+            deduped.select("id"), groupName, exportTime))).toSeq) {
+          Completion.recordTable(spark, outputDir, task.tableName,
+            groupName, exportTime)
+        }
+        TaskResult(task.tableName, attempted = true,
+          rows = table.rowCount, // manifest counts only — no table scan
           rowsRead = readObs.get("n").asInstanceOf[Long],
           rowsScrubbed = scrubObs.get("n").asInstanceOf[Long])
       }
     }
 
-    // deleted-ids bundles (S5 → K3)
-    val deletedDir = s"$inputDir/deleted"
-    if (NdjsonSource.listResourceFiles(spark, deletedDir).nonEmpty) {
-      val deleted = NdjsonSource.readDeletedIds(spark, deletedDir).cache()
-      tasks.foreach { task =>
-        val ids = deleted
-          .filter(col("resource_type") === task.resourceType)
-          .select(codebook.fakeId(col("id")).as("id"))
-        val table = GraftTable(spark, s"$outputDir/${task.tableName}",
-          task.mergeSpec)
-        if (table.exists) table.deleteIds(ids)
-      }
-      deleted.unpersist()
-    }
     // K10: last-successful-run record for resume UX (etl/context.py)
     JobContext.recordSuccess(phiDir, inputDir, outputDir,
       results.map(r => r.table -> r.rows).toMap)
     results
+  }
+}
+
+/** Runs an ETL task's independent commits at the same time. */
+private[etl] object Overlap {
+
+  /** `f`, started now on a thread of its own. The caller creates the
+    * thread, so it starts with a copy of the caller's Spark local
+    * properties (job group, job tags, scheduler pool) and active
+    * session: its jobs are cancelled by the caller's `cancelJobGroup`
+    * and attributed like the caller's own.
+    */
+  final class Forked private[Overlap] (f: => Unit) {
+    @volatile private var failure: Option[Throwable] = None
+    private val thread = new Thread(
+      () => try f catch { case e: Throwable => failure = Some(e) },
+      "graft-etl-commit")
+    thread.setDaemon(true)
+    thread.start()
+
+    def join(): Option[Throwable] = { thread.join(); failure }
+  }
+
+  def fork(f: => Unit): Forked = new Forked(f)
+
+  /** `body` on the calling thread, then a wait for every `started`
+    * fork, whatever `body` did: it returns only once all of them have
+    * finished, and throws the first failure (the body's first; the
+    * others ride along as suppressed).
+    */
+  def joinAfter[T](started: Seq[Forked])(body: => T): T = {
+    val result = try Right(body) catch { case e: Throwable => Left(e) }
+    result.swap.toOption.toList ++ started.flatMap(_.join()) match {
+      case first :: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case Nil => result.toOption.get
+    }
   }
 }
 

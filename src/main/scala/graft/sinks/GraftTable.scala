@@ -37,10 +37,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * version the pointer never reached are ignored, and the next commit
   * overwrites them.
   *
-  * A merge reads and rewrites ONLY the buckets its update rows hash
-  * into; untouched buckets are carried forward by reference in the
-  * manifest, so rewrite cost follows the touched data, not the table
-  * size (the liquid-clustering role of the reference's
+  * Every mutation is ONE commit: a merge that also deletes ids (an ETL
+  * task's batch with its export's deleted ids, a replayed batch with
+  * its sidecar's) rewrites each touched bucket once, in one version.
+  *
+  * A merge reads and rewrites ONLY the buckets its update rows and its
+  * deleted ids hash into; untouched buckets are carried forward by
+  * reference in the manifest, so rewrite cost follows the touched data,
+  * not the table size (the liquid-clustering role of the reference's
   * `clusterBy(uniqueness_fields)`, deltalake.py:105). Bucket id is a pure
   * function of the merge key, so matching target/update rows always
   * share a bucket and per-bucket merging is exactly global merging.
@@ -148,27 +152,52 @@ final class GraftTable(
   /** Exact current row count from the manifest — no file is opened. */
   def rowCount: Long = current.counts.values.sum
 
-  /** K1/J1-J3: merge a batch in. First write creates the table. */
-  def merge(updates: DataFrame): Unit = latest match {
-    case None => commit(None, updates, (0 until buckets).toSet)
-    case Some(m) =>
-      val touched =
-        if (spec.groupField.isDefined) m.all else bucketsOf(m, updates)
-      commit(Some(m), MergeOps.merge(snapshot(m, touched), updates, spec),
-        touched)
-  }
+  /** K1/J1-J3 + K3: merge a batch in and delete `deletes`' ids (a
+    * single-column frame) as ONE version: the result is
+    * `deleteByIds(merge(snapshot(touched), updates), ids)`, so an id
+    * both upserted and deleted ends absent. `touched` is every bucket
+    * the batch's keys or the ids hash into, found by one probe job over
+    * their union. The first write creates the table from the batch less
+    * the ids.
+    */
+  def merge(updates: DataFrame, deletes: Option[DataFrame] = None): Unit =
+    latest match {
+      case None =>
+        val key = spec.keys.head
+        val rows = deletes.fold(updates) { ids =>
+          MergeOps.deleteByIds(updates, key,
+            ids.select(col(ids.columns.head).cast(updates.schema(key).dataType)))
+        }
+        commit(None, rows, (0 until buckets).toSet)
+      case Some(m) =>
+        val ids = deletes.map(idsOf(m, _))
+        val touched =
+          if (spec.groupField.isDefined ||
+            (ids.isDefined && spec.keys.length > 1)) m.all
+          else {
+            val keys = updates.select(spec.keys.map(k => keyCol(m, k, col(k))): _*)
+            bucketsOf(m, ids.fold(keys)(keys.union))
+          }
+        val merged = MergeOps.merge(snapshot(m, touched), updates, spec)
+        commit(Some(m),
+          ids.fold(merged)(MergeOps.deleteByIds(merged, spec.keys.head, _)),
+          touched)
+    }
 
-  /** K3: delete by id values (single-column DataFrame). Only the buckets
-    * the ids hash into are read and rewritten; a composite-key table
-    * rewrites every bucket.
+  /** K3: delete by id values (single-column DataFrame) on their own
+    * version. Only the buckets the ids hash into are read and
+    * rewritten; a composite-key table rewrites every bucket.
     */
   def deleteIds(ids: DataFrame): Unit = latest.foreach { m =>
-    val key = spec.keys.head
-    val keyed = ids.select(keyCol(m, key, col(ids.columns.head)))
+    val keyed = idsOf(m, ids)
     val touched = if (spec.keys.length > 1) m.all else bucketsOf(m, keyed)
-    commit(Some(m), MergeOps.deleteByIds(snapshot(m, touched), key, keyed),
-      touched)
+    commit(Some(m), MergeOps.deleteByIds(snapshot(m, touched), spec.keys.head,
+      keyed), touched)
   }
+
+  /** `ids`' one column as the table's first key, cast to its type. */
+  private def idsOf(m: Manifest, ids: DataFrame): DataFrame =
+    ids.select(keyCol(m, spec.keys.head, col(ids.columns.head)))
 
   /** K4: compaction — rewrite every bucket, one file each, into one new
     * version, which collapses the manifest's version spread.

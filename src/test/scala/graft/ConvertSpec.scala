@@ -31,6 +31,9 @@ class ConvertSpec extends SparkSpecBase {
       .read().orderBy("id").collect()
       .map(r => (r.getAs[String]("id"), r.getAs[String]("val")))
     assert(rows.toSeq === Seq(("a", "v2"), ("c", "v1")))
+    // one version per batch: batch 1's merge and its deletes commit once
+    assert(GraftTable(spark, s"$target/patient", MergeSpec(Seq("id")))
+      .currentVersion === Some(1))
   }
 
   test("replay equals direct merge for the same mutation stream") {
@@ -56,5 +59,8 @@ class ConvertSpec extends SparkSpecBase {
       .orderBy("id").collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[String]("v")))
     assert(a.toSeq === b.toSeq)
+    assert(direct.currentVersion === Some(2))
+    assert(GraftTable(spark, s"$target/t", MergeSpec(Seq("id")))
+      .currentVersion === Some(1))
   }
 }

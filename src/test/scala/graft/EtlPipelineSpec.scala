@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.etl.EtlPipeline
 import graft.operators.MergeOps.MergeSpec
 import graft.sinks.{GraftTable, NdjsonSink}
@@ -412,5 +414,102 @@ class EtlPipelineSpec extends SparkSpecBase {
       assert(GraftTable(spark, s"$output/patient", MergeSpec(Seq("id")))
         .read().count() === 2L - bundles.size)
     }
+  }
+
+  private def patients(input: String, lines: String*): Unit =
+    Files.write(Paths.get(input, "Patient.ndjson"),
+      lines.mkString("\n").getBytes("UTF-8"))
+
+  private def deletedBundle(input: String, urls: String*): Unit = {
+    Files.createDirectories(Paths.get(input, "deleted"))
+    val entries = urls.map(u => s"""{"request":{"method":"DELETE","url":"$u"}}""")
+    Files.write(Paths.get(input, "deleted", "deleted.ndjson"),
+      s"""{"resourceType":"Bundle","type":"transaction","entry":[${entries.mkString(",")}]}"""
+        .getBytes("UTF-8"))
+  }
+
+  test("ETL pipeline: an export with deletes commits its resource table once") {
+    val output = tmp("once-out")
+    val phi = tmp("once-phi")
+    val base = tmp("once-in0")
+    patients(base,
+      """{"resourceType":"Patient","id":"p1","gender":"female"}""",
+      """{"resourceType":"Patient","id":"p2","gender":"male"}""",
+      """{"resourceType":"Patient","id":"p3","gender":"other"}""")
+    EtlPipeline.run(spark, base, output, phi, tasks = patientTask)
+    val table = GraftTable(spark, s"$output/patient", MergeSpec(Seq("id")))
+    val v = table.currentVersion.get
+    // p2 is both updated and deleted by the same export, p1 only deleted
+    val next = tmp("once-in1")
+    patients(next,
+      """{"resourceType":"Patient","id":"p2","gender":"unknown"}""",
+      """{"resourceType":"Patient","id":"p4","gender":"female"}""")
+    deletedBundle(next, "Patient/p1", "Patient/p2")
+    val r = EtlPipeline.run(spark, next, output, phi, tasks = patientTask)
+    assert(table.currentVersion === Some(v + 1))
+    assert(r.head.rows === 2L)
+    val codebook = graft.deid.Codebook.loadOrCreate(phi)
+    val expected = Seq("p3", "p4").toDF("id")
+      .select(codebook.fakeId(col("id"))).collect().map(_.getString(0)).toSet
+    assert(table.read().collect().map(_.getAs[String]("id")).toSet === expected)
+  }
+
+  test("ETL pipeline: a failing overlapped commit fails the run") {
+    val input = tmp("fail-in")
+    val output = tmp("fail-out")
+    val phi = tmp("fail-phi")
+    patients(input, """{"resourceType":"Patient","id":"p1","gender":"female"}""")
+    // a regular file where the codebook-mappings table should be
+    Files.write(Paths.get(phi, "codebook-mappings"), "x".getBytes("UTF-8"))
+    def tree(): Map[String, Long] = Seq(output, phi).flatMap { d =>
+      Files.walk(Paths.get(d)).iterator().asScala
+        .filter(Files.isRegularFile(_)).map(p => p.toString -> Files.size(p))
+    }.toMap
+    intercept[Exception](EtlPipeline.run(spark, input, output, phi,
+      tasks = patientTask))
+    val after = tree()
+    Thread.sleep(2000)
+    assert(tree() === after, "a commit landed after the run returned")
+    val completion = GraftTable(spark, s"$output/etl__completion",
+      MergeSpec(Seq("table_name", "group_name", "export_time")))
+    assert(!completion.exists ||
+      completion.read().filter(col("table_name") === "patient").isEmpty)
+  }
+
+  test("ETL pipeline: every job of a run carries the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val input = tmp("grp-in")
+    val output = tmp("grp-out")
+    val phi = tmp("grp-phi")
+    patients(input,
+      """{"resourceType":"Patient","id":"p1","gender":"female"}""",
+      """{"resourceType":"Patient","id":"p2","gender":"male","extension":[{"url":"http://example.com/unknown","valueString":"y"}]}""")
+    deletedBundle(input, "Patient/p1")
+    // a session conf is copied into the local properties of every job
+    // the session's queries run, whichever thread runs them, so it marks
+    // this run's jobs apart from concurrent suites' without relying on
+    // the local-property inheritance under test
+    val marker = "spark.graft.test.run"
+    val runId = java.util.UUID.randomUUID().toString
+    val session = spark.newSession()
+    session.conf.set(marker, runId)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty(marker) == runId)
+          .foreach(p => groups.add(String.valueOf(p.getProperty("spark.jobGroup.id"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(s"etl-$runId", "etl run")
+    try EtlPipeline.run(session, input, output, phi, tasks = patientTask)
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val seen = groups.asScala.toSeq
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == s"etl-$runId"), seen.distinct)
   }
 }

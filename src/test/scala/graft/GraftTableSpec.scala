@@ -98,4 +98,69 @@ class GraftTableSpec extends SparkSpecBase {
     assert(v2.filter(col("a") < 0).count() === 39)
     assert(t.rowCount === 40L)
   }
+
+  private def manifests(dir: String): Set[String] =
+    names(dir).filter(_.startsWith("manifest-v")).toSet
+
+  private def bucketDirs(dir: String, v: Int): Set[Int] =
+    names(s"$dir/v$v").filter(_.startsWith("__b=")).map(_.drop(4).toInt).toSet
+
+  /** The bucket of each of `ids` in a `n`-bucket table keyed on `id`. */
+  private def bucketOf(ids: Seq[String], n: Int): Map[String, Int] =
+    ids.toDF("id").select(col("id"), pmod(xxhash64(col("id")), lit(n)))
+      .collect().map(r => r.getString(0) -> r.getLong(1).toInt).toMap
+
+  test("merge with deletes on a 16-bucket table commits one version") {
+    val dir = Files.createTempDirectory("mergedel").toString
+    val t = GraftTable(spark, dir, spec, 16)
+    val ids = (1 to 100).map(i => s"id-$i")
+    t.merge(ids.map(i => (i, 0)).toDF("id", "v"))
+    val bucket = bucketOf(ids, 16)
+    // one id upserted, one upserted AND deleted in the same bucket, and
+    // one deleted in a bucket no upsert touches
+    val up = "id-1"
+    val both = ids.find(i => i != up && bucket(i) == bucket(up)).get
+    val far = ids.find(i => bucket(i) != bucket(up)).get
+    val before = manifests(dir)
+    t.merge(Seq((up, 1), (both, 1), ("id-new", 1)).toDF("id", "v"),
+      Some(Seq(both, far).toDF("id")))
+    assert(t.currentVersion === Some(1))
+    assert(manifests(dir) -- before === Set("manifest-v1.json"))
+    val rows = t.read().collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    assert(!rows.contains(both) && !rows.contains(far))
+    assert(rows(up) === 1 && rows("id-new") === 1)
+    assert(rows.size === 99)
+    assert(t.rowCount === 99L)
+    // only the buckets of the batch's keys and of the ids were rewritten
+    val touched = Set(bucket(up), bucket(far)) ++ bucketOf(Seq("id-new"), 16).values
+    assert(bucketDirs(dir, 1) === touched)
+  }
+
+  test("the first write to a new table honours the deleted ids") {
+    val dir = Files.createTempDirectory("firstdel").toString
+    val t = GraftTable(spark, dir, spec, 16)
+    t.merge(Seq(("a", 1), ("b", 2), ("c", 3)).toDF("id", "v"),
+      Some(Seq("b", "zz").toDF("id")))
+    assert(t.currentVersion === Some(0))
+    assert(manifests(dir) === Set("manifest-v0.json"))
+    assert(t.read().collect().map(_.getString(0)).toSet === Set("a", "c"))
+    assert(t.rowCount === 2L)
+  }
+
+  test("merge with deletes on a composite-key table rewrites every bucket") {
+    val dir = Files.createTempDirectory("compdel").toString
+    val comp = MergeSpec(Seq("id", "k"))
+    val t = GraftTable(spark, dir, comp, 16)
+    t.merge((1 to 200).map(i => (s"id-$i", i % 3, i)).toDF("id", "k", "v"))
+    assert(bucketDirs(dir, 0).size === 16)
+    t.merge(Seq(("id-1", 1, -1)).toDF("id", "k", "v"),
+      Some(Seq("id-2", "id-3").toDF("id")))
+    assert(t.currentVersion === Some(1))
+    assert(manifests(dir) === Set("manifest-v0.json", "manifest-v1.json"))
+    assert(bucketDirs(dir, 1).size === 16)
+    val rows = t.read()
+    assert(rows.filter(col("id").isin("id-2", "id-3")).count() === 0)
+    assert(rows.filter(col("id") === "id-1").select("v").head().getInt(0) === -1)
+    assert(t.rowCount === 198L)
+  }
 }
