@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is executed `SPARK_GRAFT_BENCH_RUNS`
   * times (default 2) and the fastest run is reported — first execution
@@ -67,18 +65,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus(32)
     // min-of-3 by default: the shared bench host shows 1.5× wall-clock
     // swings from external load; a third sample tightens the min
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // optional args = subset of query names (dev loop); default all.
@@ -113,9 +104,8 @@ object Bench {
       else if (sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1"))
         SparkEntry.queries
       else SparkEntry.queries.filterNot(kv => gateTwins.contains(kv._1))
-    val calThreads = cpus.toInt
     val (stealPre, totalPre) = cpuJiffies()
-    val calPre = loadCal(calThreads)
+    val calPre = loadCal(cpus)
     val avgPre = loadAvg()
     System.err.println(f"[bench] load cal pre=$calPre%.2fs loadavg=$avgPre%.1f")
     val failed = scala.collection.mutable.SortedSet.empty[String]
@@ -209,7 +199,7 @@ object Bench {
     // scale (100k patients / 200k observations, the r3 baseline shape:
     // 37.4s cold / 21.4s incremental) unless the full suite isn't
     // being run (dev subsets skip it) or SPARK_GRAFT_ETL_BENCH=0.
-    val calMid = loadCal(calThreads)
+    val calMid = loadCal(cpus)
     System.err.println(f"[bench] load cal mid=$calMid%.2fs")
     // min-of-2 per ETL component: r7's recorded incr_s was 4.2× its
     // idle-host value (ambient load during the single sample); a second
@@ -238,7 +228,7 @@ object Bench {
             ",\"etl\":\"failed\""
         }
       }
-    val calPost = loadCal(calThreads)
+    val calPost = loadCal(cpus)
     val avgPost = loadAvg()
     val (stealPost, totalPost) = cpuJiffies()
     val stealPct =

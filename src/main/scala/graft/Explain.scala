@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: prints the formatted physical plan of the named
   * registered queries (default sf0.001 so analysis is instant). Usage:
   * `sbt "runMain graft.Explain q101_bm25 [q38_dedup_corpus ...]"`.
@@ -11,12 +9,7 @@ object Explain {
     require(args.nonEmpty, "usage: Explain <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-explain", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

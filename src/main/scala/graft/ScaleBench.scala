@@ -47,16 +47,10 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,10,100")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.builder("graft-scale-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val all = Seq("lsh_dedup", "incr_fold", "ppjoin", "suffix_rank",
@@ -80,7 +74,7 @@ object ScaleBench {
       // family wall time otherwise includes the cached cold load; the
       // cold cost is reported via its own cold_ms metric)
       if (families.contains("etl_merge")) etlMergeFixture(spark, factor)
-      val cal0 = Bench.loadCal(cpus.toInt)
+      val cal0 = Bench.loadCal(cpus)
       System.err.println(f"[scale] ===== factor $factor cal=$cal0%.2fs =====")
       // min-of-2 against ambient-load noise where affordable; the
       // largest factor runs once (its absolute numbers are minutes —

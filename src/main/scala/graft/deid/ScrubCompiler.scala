@@ -28,6 +28,10 @@ import org.apache.spark.sql.types._
   * placeholder relation, and cached as bound Catalyst expressions; every
   * call then runs it over the input's rows directly (see [[scrub]]), so
   * a repeat batch pays no Catalyst analysis of the wide FHIR projection.
+  * Its generated classes compile once per JVM: each task generates the
+  * predicate and projection source again, and finds the compiled class
+  * in Spark's generated-class cache, which [[graft.GraftSession]] sizes
+  * to hold the engine's working set.
   *
   * Rejection semantics (P3): rows with unknown modifierExtensions (FHIR:
   * modifiers change meaning — scrubber.py:351-372) or no resourceType are
@@ -109,8 +113,9 @@ object ScrubCompiler {
 
   /** Scrub `df`'s rows of `resourceType`. The result is a leaf relation
     * over `df`'s rows: the planned chain runs per partition with
-    * generated predicates and projections, and Catalyst sees no scrub
-    * expression above it. The engine's file-order column is not input
+    * generated predicates and projections, fresh instances per partition
+    * (they are not thread-safe) of classes compiled once per JVM, and
+    * Catalyst sees no scrub expression above it. The engine's file-order column is not input
     * data: it passes the allow-list untouched, as the last column, for
     * the dedup after the scrub.
     */

@@ -86,6 +86,13 @@ object EtlPipeline {
     def rowsRejected: Long = rowsRead - rowsScrubbed
   }
 
+  /** The `n` an observation counted. Spark reports an empty metrics map
+    * when adaptive execution prunes the empty shuffle the observed rows
+    * feed, which happens exactly when there were no rows.
+    */
+  private def observedCount(obs: org.apache.spark.sql.Observation): Long =
+    obs.get.get("n").fold(0L)(_.asInstanceOf[Long])
+
   /** Run the pipeline: returns per-task summaries (A7-style). */
   def run(
       spark: SparkSession,
@@ -231,8 +238,8 @@ object EtlPipeline {
         }
         TaskResult(task.tableName, attempted = true,
           rows = table.rowCount, // manifest counts only — no table scan
-          rowsRead = readObs.get("n").asInstanceOf[Long],
-          rowsScrubbed = scrubObs.get("n").asInstanceOf[Long])
+          rowsRead = observedCount(readObs),
+          rowsScrubbed = observedCount(scrubObs))
       }
     }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Skew mitigation for joins whose hot keys overwhelm single tasks.
   *
-  * AQE's skew-join split (enabled in GraftSession) handles most cases at
+  * AQE's skew-join split (on by default in Spark) handles most cases at
   * runtime; explicit salting remains the tool when one build-side key is
   * so hot that even split shuffle blocks can't balance (e.g. a null-ish
   * default id owning 30% of a 100 TB table).

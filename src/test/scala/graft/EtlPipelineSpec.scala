@@ -394,6 +394,23 @@ class EtlPipelineSpec extends SparkSpecBase {
     assert(r2.rows === 2L)
   }
 
+  test("ETL pipeline: a file that parses to no rows loads an empty batch") {
+    val input = tmp("empty-in")
+    val output = tmp("empty-out")
+    val phi = tmp("empty-phi")
+    // detection types the file by its first line; the truncated record
+    // parses to no Encounter row, so the task's input is empty
+    Files.write(Paths.get(input, "Encounter.ndjson"),
+      """{"resourceType":"Encounter","id":"e1"""".getBytes("UTF-8"))
+    val r = EtlPipeline.run(spark, input, output, phi,
+      tasks = Seq(EtlPipeline.EtlTask("Encounter", "encounter"))).head
+    assert(r.attempted)
+    assert((r.rowsRead, r.rowsScrubbed, r.rows) === ((0L, 0L, 0L)))
+    val table = GraftTable(spark, s"$output/encounter", MergeSpec(Seq("id")))
+    assert(table.exists)
+    assert(table.read().count() === 0)
+  }
+
   Seq(
     "holds no bundle" -> Seq.empty[String],
     "holds only .jsonl bundles" -> Seq("deleted.jsonl")

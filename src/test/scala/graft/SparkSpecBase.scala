@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per JVM — tests assert
-  * semantics, not throughput).
+  * semantics, not throughput), built by [[GraftSession]] like every
+  * other entry point's.
   *
   * master local[16], shuffle.partitions 4: suites run in PARALLEL
   * (build.sbt ScalaTest -P4 — the serial suite took 31 min, past the
@@ -21,13 +22,8 @@ trait SparkSpecBase extends AnyFunSuite {
 
 object SparkSpecBase {
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[16]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.builder("graft-test", 16)
+      .config("spark.sql.shuffle.partitions", 4L)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
