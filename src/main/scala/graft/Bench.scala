@@ -1,14 +1,31 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import graft.etl.EtlPipeline
+import graft.sinks.GraftTable
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is executed `SPARK_GRAFT_BENCH_RUNS`
-  * times (default 2) and the fastest run is reported — first execution
+  * times (default 3) and the fastest run is reported — first execution
   * pays one-time JVM/codegen/scan-footer costs that a long-lived cluster
-  * amortizes away, which is the regime the baseline describes.
+  * amortizes away, which is the regime the baseline describes. A full
+  * run also times the ETL over a synthetic 300k-resource export (its
+  * `etl` block).
   */
 object Bench {
 
   @volatile private var blackhole: Long = 0L
+
+  /** `f`'s result and its wall seconds: every timed region of the bench
+    * is measured here.
+    */
+  private def timed[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = f
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
 
   /** Fixed-work load calibration: every core spins the same constant
     * iteration count and the WALL time is reported. On an idle host
@@ -23,19 +40,19 @@ object Bench {
     */
   def loadCal(threads: Int): Double = {
     val iters = 400000000L
-    val t0 = System.nanoTime()
-    val ts = (1 to threads).map { t =>
-      new Thread(() => {
-        var x = 0x9e3779b97f4a7c15L + t
-        var i = 0L
-        while (i < iters) {
-          x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1
-        }
-        blackhole ^= x
-      })
-    }
-    ts.foreach(_.start()); ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
+    timed {
+      val ts = (1 to threads).map { t =>
+        new Thread(() => {
+          var x = 0x9e3779b97f4a7c15L + t
+          var i = 0L
+          while (i < iters) {
+            x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1
+          }
+          blackhole ^= x
+        })
+      }
+      ts.foreach(_.start()); ts.foreach(_.join())
+    }._2
   }
 
   /** 1-minute system load average (−1 where the JVM can't read it) —
@@ -62,6 +79,73 @@ object Bench {
       // fields: user nice system idle iowait irq softirq steal ...
       (if (parts.length > 7) parts(7) else 0L, parts.sum)
     } catch { case _: Throwable => (0L, 0L) }
+
+  /** One ETL leg's seconds: a cold load, a 1% incremental re-export of
+    * the observations, and a 5-row batch (the hash-bucket fast path,
+    * which touches few of the 16 buckets; at production bucket counts
+    * nearly all batches look like this).
+    */
+  private[graft] final case class EtlTimes(rows: Long, coldS: Double,
+      incrS: Double, tinyS: Double)
+
+  /** Synthesizes a bulk-export NDJSON directory of `nPat` patients and
+    * `nObs` observations (deterministic contents) and times the full
+    * pipeline over it: read → widen → scrub → dedup → bucketed merge →
+    * completion. Everything it writes lives under one `etlbench-*`
+    * temp dir, deleted after the last load and outside every timed
+    * region.
+    */
+  private[graft] def etlOnce(spark: SparkSession, nPat: Int,
+      nObs: Int): EtlTimes = {
+    def patient(i: Int): String = {
+      val zip = f"${(i * 37) % 100000}%05d"
+      s"""{"resourceType":"Patient","id":"pat-$i","gender":"${if (i % 2 == 0) "female" else "male"}","birthDate":"19${50 + i % 50}-07-15","name":[{"family":"Fam$i","given":["G$i"]}],"address":[{"city":"City$i","state":"MA","postalCode":"$zip"}],"managingOrganization":{"reference":"Organization/org-${i % 100}"},"meta":{"lastUpdated":"2024-01-01T00:00:00Z"}}"""
+    }
+    def observation(i: Int): String =
+      s"""{"resourceType":"Observation","id":"obs-$i","status":"final","code":{"coding":[{"system":"http://loinc.org","code":"${1000 + i % 500}-1","display":"Test ${i % 500}"}],"text":"obs text $i"},"subject":{"reference":"Patient/pat-${i % nPat}"},"encounter":{"reference":"Encounter/enc-${i % (nPat / 2 + 1)}"},"effectiveDateTime":"2021-06-07T08:09:10Z","valueQuantity":{"value":${i % 300},"unit":"mg/dL"},"valueString":"free text $i"}"""
+
+    val root = Files.createTempDirectory("etlbench-")
+    def dir(name: String): String =
+      Files.createDirectories(root.resolve(name)).toString
+    def writeShards(in: String, base: String, n: Int,
+        mk: Int => String): Unit =
+      (0 until 8).foreach { s =>
+        val sb = new StringBuilder()
+        var i = s
+        while (i < n) { sb.append(mk(i)).append('\n'); i += 8 }
+        Files.write(Paths.get(in, f"$base.$s%03d.ndjson"),
+          sb.toString.getBytes("UTF-8"))
+      }
+    def writeBatch(in: String, ids: Seq[Int]): Unit =
+      Files.write(Paths.get(in, "Observation.000.ndjson"),
+        ids.map(observation).mkString("\n").getBytes("UTF-8"))
+
+    try {
+      val (out, phi) = (dir("out"), dir("phi"))
+      val tasks = EtlPipeline.DefaultTasks
+        .filter(t => Set("Patient", "Observation").contains(t.resourceType))
+      def load(in: String, ts: Seq[EtlPipeline.EtlTask], group: String,
+          exportTime: String) =
+        timed(EtlPipeline.run(spark, in, out, phi, tasks = ts,
+          groupName = group, exportTime = exportTime))
+
+      val in = dir("in")
+      writeShards(in, "Patient", nPat, patient)
+      writeShards(in, "Observation", nObs, observation)
+      val (results, coldS) = load(in, tasks, "bench", "2024-01-01T00:00:00Z")
+
+      val obsTask = tasks.filter(_.resourceType == "Observation")
+      // incremental: re-export 1% of observations as updates
+      val in2 = dir("in2")
+      writeBatch(in2, (0 until nObs / 100).map(_ * 100))
+      val incrS = load(in2, obsTask, "bench2", "2024-01-02T00:00:00Z")._2
+
+      val in3 = dir("in3")
+      writeBatch(in3, 0 until 5)
+      val tinyS = load(in3, obsTask, "bench3", "2024-01-03T00:00:00Z")._2
+      EtlTimes(results.map(_.rows).sum, coldS, incrS, tinyS)
+    } finally GraftTable.deleteRecursively(root)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -119,21 +203,21 @@ object Bench {
         // discipline transfers to shared-session callers)
         val preKeys = spark.sparkContext.getPersistentRDDs.keySet
         val times = (1 to math.max(1, runs)).map { _ =>
-          val t0 = System.nanoTime()
           // materialize the FULL output (queryExecution.toRdd), not
           // df.count(): under count() Catalyst prunes every unused
           // projection, so a map-only query's per-row work was never
           // measured at all — one interpreted-HOF query benched 0.2s
           // while costing 9 CPU-minutes when actually evaluated. This
           // measures what a consumer of the result pays.
-          try { fn(spark, sfDir).queryExecution.toRdd.count() }
-          catch {
-            // a failed query must not masquerade as a fast one: record it
-            case e: Throwable =>
-              failed += name
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          val (_, dt) = timed {
+            try { fn(spark, sfDir).queryExecution.toRdd.count() }
+            catch {
+              // a failed query must not masquerade as a fast one: record it
+              case e: Throwable =>
+                failed += name
+                System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            }
           }
-          val dt = (System.nanoTime() - t0) / 1e9
           System.err.println(f"[bench] $name%-22s $dt%8.2fs")
           dt
         }
@@ -212,11 +296,11 @@ object Bench {
           val etlRuns =
             sys.env.getOrElse("SPARK_GRAFT_ETL_RUNS", "2").toInt
           val ts = (1 to math.max(1, etlRuns)).map { _ =>
-            EtlBench.runOnce(spark,
+            etlOnce(spark,
               sys.env.getOrElse("SPARK_GRAFT_ETL_PATIENTS", "100000").toInt,
               sys.env.getOrElse("SPARK_GRAFT_ETL_OBS", "200000").toInt)
           }
-          val t = EtlBench.EtlTimings(ts.head.rows,
+          val t = EtlTimes(ts.head.rows,
             ts.map(_.coldS).min, ts.map(_.incrS).min, ts.map(_.tinyS).min)
           System.err.println(f"[bench] etl cold=${t.coldS}%.1fs " +
             f"incr=${t.incrS}%.1fs tiny=${t.tinyS}%.1fs rows=${t.rows} " +

@@ -17,6 +17,11 @@ import org.apache.spark.sql.SparkSession
   * pass used to compile again the classes an earlier one had evicted.
   * The cache size is a static conf read when the first session of the
   * JVM creates the cache, which is why every entry point builds here.
+  *
+  * Parquet TIMESTAMP(NANOS) columns read as nanosecond longs (Spark
+  * rejects the type otherwise); `Tables.events` normalizes them. It is
+  * set here once, so no loader changes the conf of a session it is
+  * handed.
   */
 object GraftSession {
 
@@ -46,11 +51,6 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores.toLong)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-
-  def get(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

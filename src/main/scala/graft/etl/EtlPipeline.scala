@@ -5,8 +5,9 @@ import graft.operators.MergeOps
 import graft.operators.MergeOps.MergeSpec
 import graft.sinks.GraftTable
 import graft.sources.NdjsonSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The end-to-end ETL flow (SURVEY §3.1): per resource task,
   * read NDJSON → scrub → dedup (last-wins) → merge into the output
@@ -340,9 +341,47 @@ object ErrorSink {
 }
 
 /** Completion-tracking tables (SURVEY §2.2 K9; completion/schema.py:12-75:
-  * all-string columns by design so NDJSON replay round-trips).
+  * all-string columns by design so NDJSON replay round-trips). Each
+  * table's name, merge spec and schema live here; [[Init]] and the
+  * writers below open the tables through it.
   */
 object Completion {
+
+  /** An insert-only completion table at `outputDir/name`, keyed on
+    * `keys`, with the all-string `columns`.
+    */
+  final case class Table(name: String, keys: Seq[String],
+      columns: Seq[String]) {
+    val schema: StructType =
+      StructType(columns.map(StructField(_, StringType)))
+
+    def open(spark: SparkSession, outputDir: String): GraftTable =
+      GraftTable(spark, s"$outputDir/$name",
+        MergeSpec(keys, updateExisting = false))
+
+    /** Create the table empty when absent; whether it did. */
+    def touch(spark: SparkSession, outputDir: String): Boolean = {
+      val table = open(spark, outputDir)
+      if (table.exists) false
+      else {
+        table.merge(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[Row], schema))
+        true
+      }
+    }
+  }
+
+  /** One row per (table, group, export) a run completed. */
+  val ByTable: Table = Table("etl__completion",
+    Seq("table_name", "group_name", "export_time"),
+    Seq("table_name", "group_name", "export_time", "etl_time"))
+
+  /** Encounter completion fan-out (J7): one row per encounter, insert-only
+    * so the first export time wins (etl/tasks/basic_tasks.py:36-68).
+    */
+  val ByEncounter: Table = Table("etl__completion_encounters",
+    Seq("encounter_id", "group_name"),
+    Seq("encounter_id", "group_name", "export_time"))
 
   def recordTable(
       spark: SparkSession,
@@ -353,29 +392,20 @@ object Completion {
   ): Unit = {
     import spark.implicits._
     val etlTime = java.time.Instant.now().toString
-    val row = Seq((tableName, groupName, exportTime, etlTime))
-      .toDF("table_name", "group_name", "export_time", "etl_time")
-    GraftTable(spark, s"$outputDir/etl__completion",
-      MergeSpec(Seq("table_name", "group_name", "export_time"),
-        updateExisting = false)).merge(row)
+    ByTable.open(spark, outputDir).merge(
+      Seq((tableName, groupName, exportTime, etlTime))
+        .toDF(ByTable.columns: _*))
   }
 
-  /** Encounter completion fan-out (J7): one row per encounter, insert-only
-    * so the first export time wins (etl/tasks/basic_tasks.py:36-68).
-    */
   def recordEncounters(
       spark: SparkSession,
       outputDir: String,
       encounterIds: DataFrame,
       groupName: String,
       exportTime: String
-  ): Unit = {
-    val rows = encounterIds
+  ): Unit =
+    ByEncounter.open(spark, outputDir).merge(encounterIds
       .select(col(encounterIds.columns.head).as("encounter_id"))
       .withColumn("group_name", lit(groupName))
-      .withColumn("export_time", lit(exportTime))
-    GraftTable(spark, s"$outputDir/etl__completion_encounters",
-      MergeSpec(Seq("encounter_id", "group_name"),
-        updateExisting = false)).merge(rows)
-  }
+      .withColumn("export_time", lit(exportTime)))
 }

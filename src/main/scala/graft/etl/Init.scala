@@ -3,10 +3,8 @@ package graft.etl
 import java.nio.file.{Files, Paths}
 
 import graft.deid.{Codebook, DefaultScrubPolicy, ScrubCompiler, ScrubPolicy}
-import graft.operators.MergeOps.MergeSpec
 import graft.sinks.GraftTable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The `init` subcommand (reference: etl/init/cli.py:46-75): pre-create
   * every default task table — plus both completion tables — as valid
@@ -68,33 +66,6 @@ object Init {
     }
   }
 
-  private def stringSchema(names: String*): StructType =
-    StructType(names.map(StructField(_, StringType)))
-
-  /** All-string completion schemas, matching [[Completion]]'s writers
-    * (completion/schema.py:41-75 keeps even timestamps as strings so
-    * NDJSON replay round-trips).
-    */
-  val CompletionSchema: StructType =
-    stringSchema("table_name", "group_name", "export_time", "etl_time")
-  val CompletionEncountersSchema: StructType =
-    stringSchema("encounter_id", "group_name", "export_time")
-
-  private def touchCustom(
-      spark: SparkSession,
-      path: String,
-      spec: MergeSpec,
-      schema: StructType
-  ): Boolean = {
-    val table = GraftTable(spark, path, spec)
-    if (table.exists) false
-    else {
-      table.merge(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema))
-      true
-    }
-  }
-
   /** Initialize `outputDir`: returns the table names actually created. */
   def run(
       spark: SparkSession,
@@ -107,18 +78,7 @@ object Init {
       .map(_.tableName)
     // the Encounter task's second output (basic_tasks.py:45-51) and the
     // general completion table (init/cli.py:45-46)
-    val enc =
-      if (touchCustom(spark, s"$outputDir/etl__completion_encounters",
-        MergeSpec(Seq("encounter_id", "group_name"),
-          updateExisting = false), CompletionEncountersSchema))
-        Seq("etl__completion_encounters")
-      else Nil
-    val comp =
-      if (touchCustom(spark, s"$outputDir/etl__completion",
-        MergeSpec(Seq("table_name", "group_name", "export_time"),
-          updateExisting = false), CompletionSchema))
-        Seq("etl__completion")
-      else Nil
-    created ++ enc ++ comp
+    created ++ Seq(Completion.ByEncounter, Completion.ByTable)
+      .filter(_.touch(spark, outputDir)).map(_.name)
   }
 }

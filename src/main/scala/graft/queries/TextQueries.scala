@@ -883,7 +883,7 @@ object TextQueries {
     * against the corpus (the q25 FNV pipeline's shape; two fewer
     * shuffles, and the payload is 8 short strings per row).
     */
-  private[graft] def bandedSigs(sigs: DataFrame,
+  private def bandedSigs(sigs: DataFrame,
       withSig: Boolean): DataFrame = {
     val bandArr = array((0 until 4).map { b =>
       concat_ws("|", col("sig")(2 * b), col("sig")(2 * b + 1))

@@ -214,7 +214,8 @@ final class GraftTable(
     val live = manifest(keep).dirs.values.toSet
     Files.list(Paths.get(path)).forEach { p =>
       val name = p.getFileName.toString
-      if (name.matches("v\\d+") && !live(name)) deleteRecursively(p)
+      if (name.matches("v\\d+") && !live(name))
+        GraftTable.deleteRecursively(p)
       if (name.startsWith("manifest-v") && name != s"manifest-v$keep.json")
         Files.deleteIfExists(p)
     }
@@ -303,15 +304,18 @@ final class GraftTable(
         d.getPath.getName.drop(4).toInt -> n
       }.toMap
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).forEach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
 }
 
 object GraftTable {
+  /** Delete a file, or a directory with everything under it. */
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
+    if (Files.isDirectory(p)) {
+      val children = Files.list(p)
+      try children.forEach(deleteRecursively) finally children.close()
+    }
+    Files.deleteIfExists(p)
+  }
+
   /** `buckets` sets the key-hash bucket count of a NEW table (see the
     * class doc); an existing table keeps the count its manifest records.
     */

@@ -63,7 +63,7 @@ object NdjsonSink {
         .filter(_.getFileName.toString.startsWith("part-"))
       parts.foreach(p => Files.copy(p, out))
     } finally out.close()
-    deleteRecursively(Paths.get(tmp))
+    GraftTable.deleteRecursively(Paths.get(tmp))
 
     val meta = mapper.createObjectNode()
     val g = meta.putArray("groups")
@@ -73,10 +73,5 @@ object NdjsonSink {
     Files.write(Paths.get(tableDir, s"$table.$indexStr.meta"),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(meta))
     target.toString
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) Files.list(p).forEach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 }

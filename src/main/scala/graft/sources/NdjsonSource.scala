@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
@@ -22,55 +23,50 @@ object NdjsonSource {
     name.endsWith(".ndjson") || name.endsWith(".jsonl") ||
       name.endsWith(".ndjson.gz") || name.endsWith(".jsonl.gz")
 
-  /** Per-resource file map: each file typed by its first row's
-    * resourceType (the reference's per-file detection,
-    * loaders/fhir/ndjson_loader.py:31-38) — driver-side planning (S2),
-    * cheap because it never reads past line 1. File lists come back
-    * name-sorted (export append order).
+  /** Per-resource file map: each file [[listResourceFiles]] finds, typed
+    * by its first row's resourceType (the reference's per-file
+    * detection, loaders/fhir/ndjson_loader.py:31-38) — driver-side
+    * planning (S2), cheap because it never reads past line 1. File lists
+    * come back name-sorted (export append order).
     */
   def detectResourceFiles(
       spark: SparkSession, dir: String): Map[String, Seq[String]] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(path)) return Map.empty
-    val files = fs.listStatus(path).toSeq
-      .filter(s => s.isFile && isNdjsonName(s.getPath.getName))
-    files.flatMap { s =>
-      val in = fs.open(s.getPath)
+    val fs =
+      new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    listResourceFiles(spark, dir).flatMap { file =>
+      val in = fs.open(new Path(file))
       try {
         // .gz exports decompress transparently for detection (the
         // reference tolerates gzipped NDJSON, common.py:228; Spark's
         // JSON scan decompresses by extension on its own)
         val stream: java.io.InputStream =
-          if (s.getPath.getName.endsWith(".gz"))
-            new java.util.zip.GZIPInputStream(in)
+          if (file.endsWith(".gz")) new java.util.zip.GZIPInputStream(in)
           else in
         val reader = new java.io.BufferedReader(
           new java.io.InputStreamReader(stream, "UTF-8"))
         Option(reader.readLine()).flatMap { line =>
           "\"resourceType\"\\s*:\\s*\"([A-Za-z]+)\"".r
-            .findFirstMatchIn(line).map(_.group(1) -> s.getPath.toString)
+            .findFirstMatchIn(line).map(_.group(1) -> file)
         }
       } finally in.close()
-    }.groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).sorted }
+    }.groupMap(_._1)(_._2)
   }
 
   /** Detect which resource types exist in a directory. */
   def detectResources(spark: SparkSession, dir: String): Set[String] =
     detectResourceFiles(spark, dir).keySet
 
-  /** List the NDJSON-bearing files of a dir (both .ndjson and .jsonl,
-    * matching what [[detectResources]] accepts), sorted by name — the
-    * export append order for bulk exports, which number their files
-    * sequentially. Driver-side planning metadata.
+  /** List the NDJSON-bearing files of a dir, sorted by name — the export
+    * append order for bulk exports, which number their files
+    * sequentially. Driver-side planning metadata. The dir is listed
+    * through its own filesystem, so an export read in place on another
+    * scheme (s3a://…) lists like a local one.
     */
   def listResourceFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(path)) return Nil
-    fs.listStatus(path).toSeq
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) Nil
+    else fs.listStatus(path).toSeq
       .filter(s => s.isFile && isNdjsonName(s.getPath.getName))
       .map(_.getPath.toString)
       .sorted
@@ -87,8 +83,7 @@ object NdjsonSource {
       dir: String,
       resourceType: String,
       schema: Option[StructType] = None,
-      widen: Boolean = false,
-      widenSamplingRatio: Double = 1.0
+      widen: Boolean = false
   ): DataFrame = {
     // only the files DETECTED as this resource type (per-file first-line
     // typing, like the reference): a 20-task run scans each file once
@@ -96,8 +91,7 @@ object NdjsonSource {
     // pass below sees only this type's data
     val files = detectResourceFiles(spark, dir)
       .getOrElse(resourceType, Nil)
-    readResourceFiles(spark, files, resourceType, schema, widen,
-      widenSamplingRatio)
+    readResourceFiles(spark, files, resourceType, schema, widen)
   }
 
   /** Same as [[readResource]] with a pre-detected file list — callers
@@ -109,20 +103,16 @@ object NdjsonSource {
       files: Seq[String],
       resourceType: String,
       schema: Option[StructType] = None,
-      widen: Boolean = false,
-      widenSamplingRatio: Double = 1.0
+      widen: Boolean = false
   ): DataFrame = {
     // "wide schema, widened by observed rows" (SURVEY §1.2, the
     // reference's cfs.pyarrow_schema_from_rows): the catalog schema is
     // authoritative on types, but fields the export nests DEEPER than
     // the catalog still load — the scrub policy then decides their
-    // fate. Widening pays one inference pass; at large scale sample it
-    // down with `widenSamplingRatio`.
+    // fate. Widening pays one inference pass over every row.
     val effective: Option[StructType] =
       if (widen && schema.isDefined && files.nonEmpty) {
-        val observed = spark.read
-          .option("samplingRatio", widenSamplingRatio.toString)
-          .json(files: _*).schema
+        val observed = spark.read.json(files: _*).schema
         Some(graft.fhir.SchemaWidening.widen(schema.get, observed))
       } else schema
     val reader = spark.read

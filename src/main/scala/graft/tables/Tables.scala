@@ -22,16 +22,16 @@ object Tables {
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   /** `events.ts` normalization. The harness has shipped this column two
     * ways across data generations: parquet TIMESTAMP(NANOS) (which Spark's
-    * reader rejects outright, [PARQUET_TYPE_ILLEGAL], so we read it as a
-    * nanos long via the legacy conf) and plain TIMESTAMP(MICROS) (read as
-    * TIMESTAMP_NTZ). Downstream operators and every oracle assume one
-    * contract: `ts` is a session-UTC TimestampType at microsecond
-    * precision — equal to DuckDB's `date_trunc('microseconds', ts)`.
+    * reader rejects outright, [PARQUET_TYPE_ILLEGAL], so `GraftSession`
+    * sets the legacy conf that reads it as a nanos long) and plain
+    * TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ). Downstream operators and
+    * every oracle assume one contract: `ts` is a session-UTC
+    * TimestampType at microsecond precision — equal to DuckDB's
+    * `date_trunc('microseconds', ts)`.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     df.schema("ts").dataType match {
       case LongType => // legacy nanos-as-long generation

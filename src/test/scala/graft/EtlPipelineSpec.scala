@@ -163,8 +163,12 @@ class EtlPipelineSpec extends SparkSpecBase {
     }
     val comp = GraftTable(spark, s"$output/etl__completion",
       MergeSpec(Seq("table_name", "group_name", "export_time"))).read()
-    assert(comp.schema === graft.etl.Init.CompletionSchema)
+    assert(comp.schema === graft.etl.Completion.ByTable.schema)
     assert(comp.count() === 0)
+    val enc = GraftTable(spark, s"$output/etl__completion_encounters",
+      MergeSpec(Seq("encounter_id", "group_name"))).read()
+    assert(enc.schema === graft.etl.Completion.ByEncounter.schema)
+    assert(enc.count() === 0)
     // idempotent: second init creates nothing, tables untouched
     assert(graft.etl.Init.run(spark, output).isEmpty)
 

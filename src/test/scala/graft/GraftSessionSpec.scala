@@ -19,6 +19,9 @@ class GraftSessionSpec extends SparkSpecBase {
       assert(spark.conf.get(c.key) === "true", c.key)
     }
     assert(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key) === "UTC")
+    // parquet TIMESTAMP(NANOS) reads as a long from the session's start,
+    // not only once a loader has set it
+    assert(spark.conf.get(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key) === "true")
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
       GraftSession.CodegenCacheEntries.toString)
   }

@@ -172,6 +172,41 @@ class ScrubberSpec extends SparkSpecBase {
     assert(NdjsonSource.readDeletedIds(spark, delDir).count() === 0L)
   }
 
+  test("ndjson source: an export dir on a non-default filesystem") {
+    // the dir is named by another scheme than the default FS's file:///,
+    // the way an export read in place on s3a:// is
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = s"fs.${OtherSchemeFileSystem.Scheme}.impl"
+    conf.set(impl, classOf[OtherSchemeFileSystem].getName)
+    try {
+      val local = java.nio.file.Files.createTempDirectory("scheme")
+      java.nio.file.Files.write(local.resolve("Patient.ndjson"),
+        patients.mkString("\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(local.resolve("Observation.ndjson"),
+        """{"resourceType":"Observation","id":"obsX","status":"final"}"""
+          .getBytes("UTF-8"))
+      java.nio.file.Files.write(
+        java.nio.file.Files.createDirectory(local.resolve("deleted"))
+          .resolve("deleted.ndjson"),
+        """{"resourceType":"Bundle","type":"transaction","entry":[{"request":{"method":"DELETE","url":"Patient/p9"}}]}"""
+          .getBytes("UTF-8"))
+      val dir = s"${OtherSchemeFileSystem.Scheme}://$local"
+      def names(files: Seq[String]): Seq[String] = {
+        assert(files.forall(_.startsWith(OtherSchemeFileSystem.Scheme + ":")))
+        files.map(f => f.substring(f.lastIndexOf('/') + 1))
+      }
+      assert(names(NdjsonSource.listResourceFiles(spark, dir)) ===
+        Seq("Observation.ndjson", "Patient.ndjson"))
+      val detected = NdjsonSource.detectResourceFiles(spark, dir)
+      assert(detected.keySet === Set("Patient", "Observation"))
+      assert(names(detected("Patient")) === Seq("Patient.ndjson"))
+      assert(NdjsonSource.readResource(spark, dir, "Patient").count() === 3)
+      assert(NdjsonSource.readDeletedIds(spark, s"$dir/deleted").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq ===
+        Seq(("Patient", "p9")))
+    } finally conf.unset(impl)
+  }
+
   test("check-system guard strips Epic custom codes and marks the coding") {
     val rows = Seq(
       // non-numeric code in the Epic extension-point OID → code+display
@@ -496,4 +531,16 @@ class ScrubberSpec extends SparkSpecBase {
     assert(year(la) === "1999")
     assert(year(spark) === "2000")
   }
+}
+
+/** The local filesystem under a scheme of its own, so a test can name a
+  * dir that the default filesystem (file:///) refuses as a wrong FS.
+  */
+class OtherSchemeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${OtherSchemeFileSystem.Scheme}:///")
+}
+
+object OtherSchemeFileSystem {
+  val Scheme = "graftother"
 }
