@@ -1,10 +1,11 @@
 package graft.deid
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.SecureRandom
 import java.util.UUID
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import graft.functions.HmacSha256Hex
 import org.apache.spark.sql.{Column, DataFrame}
@@ -85,6 +86,9 @@ object Codebook {
 
   /** Load codebook.json from `dir`, creating (and persisting) a fresh
     * 32-byte salt + id when absent — mirroring the reference's lifecycle.
+    * A version-0 file has no salt: the one drawn for it is written back
+    * into the file, beside its other sections, so every later load
+    * hashes ids to the same pseudonyms.
     */
   def loadOrCreate(dir: String): Codebook = {
     val path = Paths.get(dir, "codebook.json")
@@ -122,31 +126,42 @@ object Codebook {
       }
       // version 0 carried no salt; generate one like the migration does
       val salt = Option(node.get("id_salt")).map(_.asText()).getOrElse {
-        val bytes = new Array[Byte](32)
-        new SecureRandom().nextBytes(bytes)
-        bytes.map("%02x".format(_)).mkString
+        val drawn = newSalt()
+        node.asInstanceOf[ObjectNode].put("id_salt", drawn)
+        write(path, node)
+        drawn
       }
       Codebook(
         Option(node.get("codebook_id")).map(_.asText()).getOrElse(""),
         salt,
         legacy.toMap)
     } else {
-      val bytes = new Array[Byte](32)
-      new SecureRandom().nextBytes(bytes)
-      val cb = Codebook(UUID.randomUUID().toString,
-        bytes.map("%02x".format(_)).mkString)
-      save(path, cb)
+      val cb = Codebook(UUID.randomUUID().toString, newSalt())
+      val root = mapper.createObjectNode()
+      root.put("version", 1)
+      root.put("codebook_id", cb.codebookId)
+      root.put("id_salt", cb.saltHex)
+      Files.createDirectories(path.getParent)
+      write(path, root)
       cb
     }
   }
 
-  private def save(path: Path, cb: Codebook): Unit = {
-    Files.createDirectories(path.getParent)
-    val root = mapper.createObjectNode()
-    root.put("version", 1)
-    root.put("codebook_id", cb.codebookId)
-    root.put("id_salt", cb.saltHex)
-    Files.write(path, mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(root))
+  private def newSalt(): String = {
+    val bytes = new Array[Byte](32)
+    new SecureRandom().nextBytes(bytes)
+    bytes.map("%02x".format(_)).mkString
+  }
+
+  /** Replace `path` with `node` through a temp file and a rename, so a
+    * crash mid-write never leaves a truncated codebook (its legacy maps
+    * are the only copy of those pseudonyms).
+    */
+  private def write(path: Path, node: JsonNode): Unit = {
+    val tmp = path.resolveSibling(s"${path.getFileName}.tmp")
+    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter()
+      .writeValueAsBytes(node))
+    Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING,
+      StandardCopyOption.ATOMIC_MOVE)
   }
 }

@@ -27,7 +27,7 @@ object Convert {
     if (!Files.exists(dir)) return Nil
     val pattern = s"""\\Q$table\\E\\.(\\d+)\\.ndjson""".r
     val batches = scala.collection.mutable.ArrayBuffer[BatchFile]()
-    Files.list(dir).forEach { p =>
+    GraftTable.listDir(dir).foreach { p =>
       p.getFileName.toString match {
         case pattern(i) =>
           val metaPath = Paths.get(tableDir, s"$table.$i.meta")
@@ -81,7 +81,7 @@ object Convert {
     val src = Paths.get(sourceDir)
     if (!Files.exists(src)) return Map.empty
     val tables = scala.collection.mutable.Map[String, Long]()
-    Files.list(src).forEach { p =>
+    GraftTable.listDir(src).foreach { p =>
       if (Files.isDirectory(p)) {
         val table = p.getFileName.toString
         if (listBatches(p.toString, table).nonEmpty)

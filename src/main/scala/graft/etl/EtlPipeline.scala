@@ -105,8 +105,7 @@ object EtlPipeline {
       groupName: String = "",
       exportTime: String = "",
       nlpMode: Boolean = false,
-      philterEnabled: Boolean = false,
-      buckets: Int = ResourceTableBuckets
+      philterEnabled: Boolean = false
   ): Seq[TaskResult] = {
     val codebook = Codebook.loadOrCreate(phiDir)
     // ONE detection pass (first line of each file) feeds resource
@@ -122,11 +121,13 @@ object EtlPipeline {
     ))
 
     // deleted-ids bundles (S5 → K3), read once and hashed to fake ids:
-    // each task folds its type's ids into its own table merge
+    // each task folds its type's ids into its own table merge. One
+    // listing: a batch with no bundles runs no job for its deletes
+    val deletedFiles =
+      NdjsonSource.listResourceFiles(spark, s"$inputDir/deleted")
     val deletedIds: Map[String, Seq[String]] =
-      if (NdjsonSource.listResourceFiles(spark, s"$inputDir/deleted").isEmpty)
-        Map.empty
-      else NdjsonSource.readDeletedIds(spark, s"$inputDir/deleted")
+      if (deletedFiles.isEmpty) Map.empty
+      else NdjsonSource.readDeletedIds(spark, deletedFiles)
         .filter(col("resource_type").isin(tasks.map(_.resourceType): _*))
         .select(col("resource_type"), codebook.fakeId(col("id")))
         .collect().toSeq.groupMap(_.getString(0))(_.getString(1))
@@ -137,7 +138,7 @@ object EtlPipeline {
         ids.toDF("id")
       }
       val table = GraftTable(spark, s"$outputDir/${task.tableName}",
-        task.mergeSpec, buckets)
+        task.mergeSpec, ResourceTableBuckets)
       if (!available.contains(task.resourceType)) {
         // touch-empty-tables (etl/tasks/base.py:222-227): a selected task
         // with no input still leaves a valid empty wide-schema table so
@@ -313,8 +314,7 @@ object JobConfig {
     val base = java.nio.file.Paths.get(outputDir, "JobConfig")
     if (!java.nio.file.Files.exists(base)) None
     else {
-      val dirs = java.nio.file.Files.list(base).toArray
-        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      val dirs = GraftTable.listDir(base).map(_.getFileName.toString)
       dirs.sorted(Ordering.String.reverse).headOption
         .map(d => base.resolve(d).toString)
     }

@@ -8,12 +8,14 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Executor-side float-vector kernels called from generated code (the
-  * static-forwarder pattern [[GraftCrypto]] uses). Reading elements
-  * straight off `ArrayData` skips the Seq[Float] wrapper a Scala UDF
-  * deserializes per call; the fold is the same left-to-right double
-  * accumulation as every other cosine kernel in this engine, so the
-  * value is bit-identical to the UDF's and the DuckDB oracle's.
+/** The one cosine fold of this engine: the [[FloatVecCosine]]
+  * expression and every kernel in [[graft.operators.Similarity]] call
+  * these (generated code reaches them through static forwarders, the
+  * pattern [[GraftCrypto]] uses). Sums run left to right in double, so
+  * every score is bit-identical to the DuckDB oracle's
+  * `list_cosine_similarity`. Kernels that score one vector against many
+  * take its [[norm]] once and call [[dot]] and the three-argument
+  * [[cosine]] per pair.
   */
 object VectorKernels {
   /** True if any element slot is null — callers return SQL NULL then,
@@ -30,28 +32,37 @@ object VectorKernels {
     false
   }
 
-  def cosine(x: ArrayData, y: ArrayData): Double = {
-    val n = x.numElements()
-    // fail fast on ragged vectors (same discipline as kmeansAssign /
-    // pqEncode / rerankExact): silent min-length truncation would score
-    // wrong-but-plausible where the oracle's list_cosine_similarity
-    // errors loudly
-    require(n == y.numElements(),
-      s"cosine: dimension mismatch ${n} vs ${y.numElements()}")
+  /** `Σ a_i·b_i`. Ragged vectors fail fast: silent min-length
+    * truncation would score wrong-but-plausible where the oracle's
+    * `list_cosine_similarity` errors loudly.
+    */
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    require(a.length == b.length,
+      s"cosine: dimension mismatch ${a.length} vs ${b.length}")
     var d = 0.0
-    var na = 0.0
-    var nb = 0.0
     var i = 0
-    while (i < n) {
-      val xv = x.getFloat(i).toDouble
-      val yv = y.getFloat(i).toDouble
-      d += xv * yv
-      na += xv * xv
-      nb += yv * yv
-      i += 1
-    }
-    val norm = math.sqrt(na) * math.sqrt(nb)
-    if (norm == 0.0) 0.0 else d / norm
+    while (i < a.length) { d += a(i).toDouble * b(i).toDouble; i += 1 }
+    d
+  }
+
+  /** L2 norm `sqrt(Σ a_i²)`. */
+  def norm(a: Array[Float]): Double = {
+    var n = 0.0
+    var i = 0
+    while (i < a.length) { n += a(i).toDouble * a(i).toDouble; i += 1 }
+    math.sqrt(n)
+  }
+
+  /** Cosine from a dot product and both norms; 0 when a norm is 0. */
+  def cosine(dot: Double, normA: Double, normB: Double): Double = {
+    val denom = normA * normB
+    if (denom == 0.0) 0.0 else dot / denom
+  }
+
+  def cosine(x: ArrayData, y: ArrayData): Double = {
+    val a = x.toFloatArray()
+    val b = y.toFloatArray()
+    cosine(dot(a, b), norm(a), norm(b))
   }
 }
 

@@ -135,11 +135,10 @@ object ModelRunner {
         val promptDir = s"$spoolDir/prompts"
         misses.write.option("maxRecordsPerFile", maxLines)
           .mode("overwrite").json(promptDir)
-        val files = java.nio.file.Files.list(
-          java.nio.file.Paths.get(promptDir)).toArray
-          .map(_.asInstanceOf[java.nio.file.Path])
+        val files = graft.sinks.GraftTable
+          .listDir(java.nio.file.Paths.get(promptDir))
           .filter(_.getFileName.toString.endsWith(".json"))
-          .map(_.toString).sorted.toSeq
+          .map(_.toString).sorted
         // sidecar rewritten after EVERY submit, so a crash mid-way
         // resumes the already-submitted jobs instead of double-paying
         // for them; prompts never submitted stay cache-misses and

@@ -136,33 +136,6 @@ object NearDedup {
   def shingleHashes(text: Column, shingleSize: Int): Column =
     shingleHashesUdf(text, lit(shingleSize))
 
-  /** MinHash signature of a text column as array<bigint>, built from
-    * FNV-hashed word-`shingleSize`-gram shingles. Array form for
-    * API/testing; the candidate generator uses the faster
-    * explode-and-aggregate path below.
-    */
-  def minHashSignature(
-      text: Column,
-      numHashes: Int = 64,
-      shingleSize: Int = 3,
-      seed: Long = 42L
-  ): Column = {
-    val hashes = shingleHashes(text, shingleSize)
-    val coeffs = coefficients(numHashes, seed)
-    array(coeffs.map { case (a, b) =>
-      array_min(
-        transform(
-          hashes,
-          x =>
-            // (a*x + b) mod p with x masked to 31 bits: max product is
-            // (2^31-2)*(2^31-1) < 2^62 — overflow-free under ANSI mode
-            pmod(lit(a) * (x.bitwiseAND(lit(MersennePrime))) + lit(b),
-              lit(MersennePrime))
-        )
-      )
-    }: _*)
-  }
-
   /** Candidate near-dup pairs via LSH banding over the MinHash signature.
     *
     * Input: df with an `idCol` and `textCol`. Output: (id_a, id_b,

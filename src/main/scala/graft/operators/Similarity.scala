@@ -1,12 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import graft.functions.VectorKernels
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`array<float>`):
-  * brute-force cosine top-k as the exact baseline, and a random-hyperplane
-  * LSH-bucketed variant as the scale path (SURVEY §7.5).
+  * brute-force cosine top-k as the exact baseline, and hyperplane-LSH,
+  * IVF, PQ and IVF-PQ variants as the scale paths (SURVEY §7.5).
+  *
+  * Every top-k kernel has one shape: each partition keeps a bounded
+  * heap of candidates per query ([[TopK]]), and one window ranks the
+  * union of the partitions' heaps ([[rankTopK]]). Both order by the one
+  * tie-break, score desc then neighbor id asc ([[WorstFirst]] is its
+  * eviction order). Every exact score is the cosine fold in
+  * [[VectorKernels]], the one the [[cosine]] expression evaluates, so
+  * exact results are bit-identical to the DuckDB oracle's.
   */
 object Similarity {
 
@@ -17,82 +28,157 @@ object Similarity {
     */
   val CosinePairsMaxRows: Long = 100000L
 
-  /** Vector kernels. Implemented as compact JVM loops behind UDFs rather
-    * than `aggregate`/`zip_with` trees: ArrayAggregate is CodegenFallback
-    * (interpreted — measured ~34µs per 64-dim cosine at sf0.1), while the
-    * primitive-array loop runs ~100× faster with the SAME left-to-right
-    * fold order, so results stay bit-identical to the DuckDB oracle.
+  /** Vector UDFs are compact JVM loops rather than `aggregate`/`zip_with`
+    * trees: ArrayAggregate is CodegenFallback (interpreted — measured
+    * ~34µs per 64-dim cosine at sf0.1), while the primitive-array loop
+    * runs ~100× faster with the SAME left-to-right fold order.
     */
   private def floats(a: scala.collection.Seq[Float]): Array[Float] = a match {
     case w: scala.collection.mutable.ArraySeq.ofFloat => w.array
     case other => other.toArray
   }
 
-  private val dotUdf = udf { (a: scala.collection.Seq[Float], b: scala.collection.Seq[Float]) =>
-    val xa = floats(a); val xb = floats(b)
-    var s = 0.0
-    var i = 0
-    val n = math.min(xa.length, xb.length)
-    while (i < n) { s += xa(i).toDouble * xb(i).toDouble; i += 1 }
-    s
-  }
-
-  private val cosineUdf = udf { (a: scala.collection.Seq[Float], b: scala.collection.Seq[Float]) =>
-    val xa = floats(a); val xb = floats(b)
-    var d = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    // fail fast on ragged vectors, mirroring VectorKernels.cosine
-    require(xa.length == xb.length,
-      s"cosine: dimension mismatch ${xa.length} vs ${xb.length}")
-    val n = xa.length
-    while (i < n) {
-      val x = xa(i).toDouble
-      val y = xb(i).toDouble
-      d += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    val norm = math.sqrt(na) * math.sqrt(nb)
-    if (norm == 0.0) 0.0 else d / norm
-  }
-
-  /** Generic dot (mixed element types, e.g. float vectors × double
-    * hyperplanes in [[lshBucket]]): expression fold, interpreted but only
-    * evaluated `planes` times per row. Hot pairwise paths use the UDF.
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x
-    )
-
-  /** Fast float-vector dot for pairwise scoring. */
-  def dotF(a: Column, b: Column): Column = dotUdf(a, b)
-
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0),
-      (acc, x) => acc + x.cast("double") * x.cast("double")))
-
   /** Cosine as a NATIVE codegen'd Catalyst expression
     * ([[graft.functions.FloatVecCosine]]) — stays inside whole-stage
-    * codegen where the UDF form would fence it; same fold order, so
-    * values are bit-identical to [[cosineUdf]] and the SQL oracle.
+    * codegen where a UDF would fence it.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.FloatVecCosine(a, b)
 
-  /** The Scala-UDF form of [[cosine]], kept for the A/B in PERF.md. */
-  def cosineViaUdf(a: Column, b: Column): Column = cosineUdf(a, b)
+  // ---- the shared top-k kernel -------------------------------------------
+
+  /** A collected vector with its L2 norm: (id, vector, norm). */
+  private type Normed = (Long, Array[Float], Double)
+
+  /** `(id cast to long, vector)` rows: the typed form every kernel reads.
+    * Ids must be numeric (string-keyed corpora carry a surrogate long,
+    * standard practice for vector indexes).
+    */
+  private def vectors(df: DataFrame, idCol: String,
+      vecCol: String): Dataset[(Long, Array[Float])] = {
+    import df.sparkSession.implicits._
+    df.select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
+  }
+
+  /** The small side of a kernel (queries, centroids), collected to the
+    * driver with each vector's norm.
+    */
+  private def collectNormed(df: DataFrame, idCol: String,
+      vecCol: String): Array[Normed] =
+    vectors(df, idCol, vecCol).collect().map { case (id, v) =>
+      require(v != null, s"row $id has a null vector")
+      (id, v, VectorKernels.norm(v))
+    }
+
+  /** The tie-break of every top-k here, as the order a bounded heap
+    * evicts in: the lower score first and, on equal scores, the LARGER
+    * id first, so eviction keeps the smaller id. [[rankTopK]]'s window
+    * ranks by its reverse.
+    */
+  private val WorstFirst: Ordering[(Double, Long)] =
+    Ordering.fromLessThan { (a, b) =>
+      a._1 < b._1 || (a._1 == b._1 && a._2 > b._2)
+    }
+
+  /** One partition's candidates: per query index a bounded heap of the
+    * `k` best (score, neighbor id) by [[WorstFirst]], created on the
+    * query's first offer.
+    */
+  private final class TopK(qids: Array[Long], k: Int) {
+    private val heaps =
+      new Array[mutable.PriorityQueue[(Double, Long)]](qids.length)
+
+    def offer(qi: Int, score: Double, id: Long): Unit = {
+      var h = heaps(qi)
+      if (h == null) {
+        h = mutable.PriorityQueue.empty[(Double, Long)](WorstFirst.reverse)
+        heaps(qi) = h
+      }
+      if (h.size < k) h.enqueue((score, id))
+      else if (WorstFirst.gt((score, id), h.head)) {
+        h.dequeue(); h.enqueue((score, id))
+      }
+    }
+
+    /** (query id, neighbor id, score) of every kept candidate. */
+    def rows: Iterator[(Long, Long, Double)] =
+      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+        if (h == null) Iterator.empty
+        else h.iterator.map { case (score, id) => (qids(qi), id, score) }
+      }
+  }
+
+  /** The final ranking of every top-k: per query, `rank` 1..k by cosine
+    * desc, then neighbor id asc. The window partitions by query id only,
+    * so the shuffle key count equals |queries|.
+    *
+    * Output: (query id, rank, neighbor id, cosine).
+    */
+  private def rankTopK(candidates: DataFrame, k: Int): DataFrame = {
+    val w = Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id").asc)
+    candidates
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "neighbor_id", "cosine")
+  }
+
+  /** The exact top-k pass behind [[bruteForceTopK]],
+    * [[ivfTopKWithCentroids]] and [[annTopK]]: ONE streaming pass over
+    * the corpus, zero shuffled candidates. Each row is scored against
+    * the query indices `probe` names for it (every query, or the ones
+    * probing its list or bucket), never against itself, into
+    * per-(partition, query) bounded heaps. The shuffle into the final
+    * ranking therefore carries partitions×|queries|×k rows instead of
+    * |corpus|×|queries| — the difference between 320k and 4M rows at
+    * sf0.1, and between feasible and not at 100 TB.
+    */
+  private def exactTopK(
+      corpus: Dataset[(Long, Array[Float])],
+      queries: Array[Normed],
+      k: Int
+  )(probe: Array[Float] => Array[Int]): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(queries)
+    val candidates = corpus
+      .mapPartitions { rows =>
+        val qs = bc.value
+        val top = new TopK(qs.map(_._1), k)
+        rows.foreach { case (cid, cv) =>
+          val cNorm = VectorKernels.norm(cv)
+          val qis = probe(cv)
+          var i = 0
+          while (i < qis.length) {
+            val (qid, qv, qNorm) = qs(qis(i))
+            if (qid != cid)
+              top.offer(qis(i), VectorKernels.cosine(
+                VectorKernels.dot(cv, qv), cNorm, qNorm), cid)
+            i += 1
+          }
+        }
+        top.rows
+      }
+      .toDF("query_id", "neighbor_id", "cosine")
+    rankTopK(candidates, k)
+  }
+
+  /** key → the indices of the queries probing it, from each query's
+    * probe keys (lists or buckets).
+    */
+  private def byProbe[K](probes: Array[Array[K]]): Map[K, Array[Int]] =
+    probes.zipWithIndex
+      .flatMap { case (keys, qi) => keys.map(_ -> qi) }
+      .groupBy(_._1)
+      .map { case (key, xs) => key -> xs.map(_._2) }
 
   /** Exact top-k neighbors of every query vector against the corpus.
     *
     * Queries are broadcast (the small side by contract); the corpus
-    * streams through one partitioned pass — cost |corpus| × |queries|
-    * FLOPs but never a shuffled cross product of the corpus with itself.
-    * Ranking window partitions by query id only, so the shuffle key count
-    * equals |queries|.
+    * streams through [[exactTopK]]'s one partitioned pass — cost
+    * |corpus| × |queries| FLOPs but never a shuffled cross product of
+    * the corpus with itself. A query is never its own neighbor.
     *
     * Output: (query id, rank 1..k, neighbor id, cosine) with a
     * deterministic (cosine desc, neighbor asc) tie-break.
@@ -104,85 +190,11 @@ object Similarity {
       queries: DataFrame,
       queryId: String,
       queryVec: String,
-      k: Int,
-      excludeSelf: Boolean = true
+      k: Int
   ): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-
-    // queries are the small side by contract: collected once, normalized,
-    // and broadcast as primitive arrays
-    val qData: Array[(Long, Array[Float], Double)] = queries
-      .select(col(queryId).cast("long"), col(queryVec))
-      .as[(Long, Array[Float])]
-      .collect()
-      .map { case (id, v) =>
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        (id, v, math.sqrt(n))
-      }
-    val bc = spark.sparkContext.broadcast(qData)
-
-    // one streaming pass over the corpus; per (partition, query) a
-    // bounded heap keeps only k candidates, so the shuffle into the
-    // final ranking carries partitions×|queries|×k rows instead of
-    // |corpus|×|queries| — the difference between 320k and 4M rows at
-    // sf0.1, and between feasible and not at 100 TB.
-    val partials = corpus
-      .select(col(corpusId).cast("long"), col(corpusVec))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val qs = bc.value
-        // worst-first ordering: smaller cosine first; ties prefer LARGER
-        // neighbor id first so eviction keeps the smaller id
-        implicit val worstFirst: Ordering[(Double, Long)] =
-          Ordering.fromLessThan { (a, b) =>
-            a._1 < b._1 || (a._1 == b._1 && a._2 > b._2)
-          }
-        val heaps = Array.fill(qs.length)(
-          scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-            worstFirst.reverse))
-        rows.foreach { case (cid, cv) =>
-          var cn = 0.0
-          var i = 0
-          while (i < cv.length) {
-            cn += cv(i).toDouble * cv(i).toDouble; i += 1
-          }
-          val cNorm = math.sqrt(cn)
-          var qi = 0
-          while (qi < qs.length) {
-            val (qid, qv, qNorm) = qs(qi)
-            if (!(excludeSelf && qid == cid)) {
-              var d = 0.0
-              var j = 0
-              val n = math.min(cv.length, qv.length)
-              while (j < n) { d += cv(j).toDouble * qv(j).toDouble; j += 1 }
-              val denom = cNorm * qNorm
-              val cos = if (denom == 0.0) 0.0 else d / denom
-              val h = heaps(qi)
-              if (h.size < k) h.enqueue((cos, cid))
-              else if (worstFirst.gt((cos, cid), h.head)) {
-                h.dequeue(); h.enqueue((cos, cid))
-              }
-            }
-            qi += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          val qid = qs(qi)._1
-          h.iterator.map { case (cos, cid) => (qid, cid, cos) }
-        }
-      }
-      .toDF("query_id", "neighbor_id", "cosine")
-
-    val w = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    partials
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+    val qs = collectNormed(queries, queryId, queryVec)
+    val all = qs.indices.toArray
+    exactTopK(vectors(corpus, corpusId, corpusVec), qs, k)(_ => all)
   }
 
   /** All (a < b) pairs with cosine ≥ tau — the exact embedding-near-dup
@@ -209,37 +221,16 @@ object Similarity {
       s"cosinePairsAbove collects the corpus to the driver and got " +
         s"$n rows (cap $maxRows): use semanticDedup (cluster-scoped " +
         s"pairs) or annTopK (bucketed) for corpora beyond broadcast size")
-    val all: Array[(Long, Array[Float], Double)] = df
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .collect()
-      .map { case (id, v) =>
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        (id, v, math.sqrt(n))
-      }
-    val bc = spark.sparkContext.broadcast(all)
-    df.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
+    val bc = spark.sparkContext.broadcast(collectNormed(df, idCol, vecCol))
+    vectors(df, idCol, vecCol)
       .mapPartitions { rows =>
         val others = bc.value
         rows.flatMap { case (ida, va) =>
-          var na = 0.0
-          var i = 0
-          while (i < va.length) {
-            na += va(i).toDouble * va(i).toDouble; i += 1
-          }
-          val aNorm = math.sqrt(na)
-          others.iterator.filter(_._1 > ida).flatMap {
-            case (idb, vb, bNorm) =>
-              var d = 0.0
-              var j = 0
-              val n = math.min(va.length, vb.length)
-              while (j < n) { d += va(j).toDouble * vb(j).toDouble; j += 1 }
-              val denom = aNorm * bNorm
-              val cos = if (denom == 0.0) 0.0 else d / denom
-              if (cos >= tau) Some((ida, idb)) else None
+          val aNorm = VectorKernels.norm(va)
+          others.iterator.collect {
+            case (idb, vb, bNorm) if idb > ida && VectorKernels.cosine(
+                VectorKernels.dot(va, vb), aNorm, bNorm) >= tau =>
+              (ida, idb)
           }
         }
       }
@@ -252,9 +243,7 @@ object Similarity {
     * is bounded per cluster — the whole point of clustering before
     * deduplicating — so the plan is one shuffle of each side on the
     * cluster key into an equi-join (AQE splits skewed clusters), with
-    * the native codegen'd [[cosine]] expression as the pair filter —
-    * the same left-to-right double fold as [[bruteForceTopK]], so
-    * scores match a SQL `list_cosine_similarity` oracle bit-for-bit.
+    * the native codegen'd [[cosine]] expression as the pair filter.
     */
   def semanticDedup(
       df: DataFrame,
@@ -288,9 +277,6 @@ object Similarity {
     * shape that holds at any corpus size. Ties (equal cosine) keep the
     * lowest centroid id, so the assignment is deterministic and matches
     * a `ROW_NUMBER() OVER (ORDER BY cos DESC, centroid_id ASC)` oracle.
-    *
-    * The cosine kernel uses the same left-to-right fold as
-    * [[bruteForceTopK]], so scores are bit-identical to that baseline.
     */
   def kmeansAssign(
       df: DataFrame,
@@ -302,48 +288,25 @@ object Similarity {
   ): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val cData: Array[(Long, Array[Float], Double)] = centroids
-      .select(col(centroidId).cast("long"), col(centroidVec))
-      .as[(Long, Array[Float])]
-      .collect()
+    val cData = collectNormed(centroids, centroidId, centroidVec)
       .sortBy(_._1)
-      .map { case (id, v) =>
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        (id, v, math.sqrt(n))
-      }
     require(cData.nonEmpty, "kmeansAssign needs at least one centroid")
     val dim = cData(0)._2.length
     require(cData.forall(_._2.length == dim),
       s"centroid vectors disagree on dimension (expected $dim)")
     val bc = spark.sparkContext.broadcast(cData)
-    df.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
+    vectors(df, idCol, vecCol)
       .mapPartitions { rows =>
         val cs = bc.value
         rows.map { case (id, v) =>
-          var vn = 0.0
-          var i = 0
-          while (i < v.length) { vn += v(i).toDouble * v(i).toDouble; i += 1 }
-          val vNorm = math.sqrt(vn)
-          // mismatched dims would silently truncate the dot product to
-          // a wrong-but-plausible cosine; fail fast like the oracle's
-          // list_cosine_similarity does
-          require(v.length == cs(0)._2.length,
-            s"row $id vector has dimension ${v.length}, " +
-              s"centroids have ${cs(0)._2.length}")
+          val vNorm = VectorKernels.norm(v)
           var best = cs(0)._1
           var bestCos = Double.NegativeInfinity
           var ci = 0
           while (ci < cs.length) {
             val (cid, cv, cNorm) = cs(ci)
-            var d = 0.0
-            var j = 0
-            val n = v.length
-            while (j < n) { d += v(j).toDouble * cv(j).toDouble; j += 1 }
-            val denom = vNorm * cNorm
-            val cos = if (denom == 0.0) 0.0 else d / denom
+            val cos =
+              VectorKernels.cosine(VectorKernels.dot(v, cv), vNorm, cNorm)
             // strict > keeps the first (lowest-id) centroid on ties
             if (cos > bestCos) { bestCos = cos; best = cid }
             ci += 1
@@ -361,12 +324,11 @@ object Similarity {
     * from the `nprobe` lists whose centroids are nearest to it.
     *
     * Scale shape: training is ONE bounded-sample collect + driver-side
-    * Lloyd ([[trainCoarse]]) — O(1) in corpus size; search is the
-    * same ONE streaming corpus pass + per-(partition, query) bounded
-    * heaps as the other kernels — zero shuffled candidates. Centroid
-    * seeds are chosen by a deterministic md5 order; an approximate
-    * operator: rows-only gate + recall assertion in SimilaritySpec,
-    * like q31.
+    * Lloyd ([[trainCoarse]]) — O(1) in corpus size; search is
+    * [[exactTopK]]'s one streaming corpus pass — zero shuffled
+    * candidates. Centroid seeds are chosen by a deterministic md5
+    * order; an approximate operator: rows-only gate + recall assertion
+    * in SimilaritySpec, like q31.
     */
   def ivfTopK(
       corpus: DataFrame,
@@ -392,7 +354,8 @@ object Similarity {
     * point gate, where a deterministic quantizer (the nlist lowest-id
     * corpus vectors) makes the whole approximate result — assignment,
     * probe choice, per-list ranking — recomputable by the DuckDB
-    * oracle, so the shipped search pass itself is hash-checked.
+    * oracle, so the shipped search pass itself is hash-checked. Corpus
+    * rows with a null vector belong to no list and are skipped.
     */
   def ivfTopKWithCentroids(
       corpus: DataFrame,
@@ -405,111 +368,81 @@ object Similarity {
       centroids: Array[Array[Double]],
       nprobe: Int
   ): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-
-    val ds = corpus
-      .select(col(corpusId).cast("long"), col(corpusVec))
-      .as[(Long, Array[Float])]
-
-    // per query: the nprobe nearest centroid ids
-    val hs = centroids
-    val qData: Array[(Long, Array[Float], Double, Array[Int])] = queries
-      .select(col(queryId).cast("long"), col(queryVec))
-      .as[(Long, Array[Float])]
-      .collect()
-      .map { case (id, v) =>
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        val probes = hs.indices
-          .sortBy(ci => (dist2(v, hs(ci)), ci))
-          .take(nprobe).toArray
-        (id, v, math.sqrt(n), probes)
-      }
-    val byList: Map[Int, Array[Int]] = qData.zipWithIndex
-      .flatMap { case ((_, _, _, ps), qi) => ps.map(_ -> qi) }
-      .groupBy(_._1)
-      .map { case (c, xs) => c -> xs.map(_._2) }
-    val bcQ = spark.sparkContext.broadcast(qData)
-    val bcIdx = spark.sparkContext.broadcast(byList)
-    val bcC = spark.sparkContext.broadcast(centroids)
-
-    val partials = ds
-      .mapPartitions { rows =>
-        val qs = bcQ.value
-        val idx = bcIdx.value
-        val cs = bcC.value
-        implicit val worstFirst: Ordering[(Double, Long)] =
-          Ordering.fromLessThan { (a, b) =>
-            a._1 < b._1 || (a._1 == b._1 && a._2 > b._2)
-          }
-        val heaps = scala.collection.mutable.HashMap
-          .empty[Int, scala.collection.mutable.PriorityQueue[(Double, Long)]]
-        rows.foreach { case (cid, cv) =>
-          if (cv != null) {
-          var cn = 0.0
-          var i = 0
-          while (i < cv.length) {
-            cn += cv(i).toDouble * cv(i).toDouble; i += 1
-          }
-          val cNorm = math.sqrt(cn)
-          idx.getOrElse(nearest(cv, cs), Array.empty[Int]).foreach { qi =>
-            val (qid, qv, qNorm, _) = qs(qi)
-            if (qid != cid) {
-              var d = 0.0
-              var j = 0
-              val n = math.min(cv.length, qv.length)
-              while (j < n) { d += cv(j).toDouble * qv(j).toDouble; j += 1 }
-              val denom = cNorm * qNorm
-              val cos = if (denom == 0.0) 0.0 else d / denom
-              val h = heaps.getOrElseUpdate(qi,
-                scala.collection.mutable.PriorityQueue
-                  .empty[(Double, Long)](worstFirst.reverse))
-              if (h.size < k) h.enqueue((cos, cid))
-              else if (worstFirst.gt((cos, cid), h.head)) {
-                h.dequeue(); h.enqueue((cos, cid))
-              }
-            }
-          }
-          }
-        }
-        heaps.iterator.flatMap { case (qi, h) =>
-          val qid = bcQ.value(qi)._1
-          h.iterator.map { case (cos, cid) => (qid, cid, cos) }
-        }
-      }
-      .toDF("query_id", "neighbor_id", "cosine")
-    val w = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    partials
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+    val qs = collectNormed(queries, queryId, queryVec)
+    val byList =
+      byProbe(qs.map { case (_, v, _) => nearestLists(v, centroids, nprobe) })
+    exactTopK(vectors(corpus.filter(col(corpusVec).isNotNull), corpusId,
+      corpusVec), qs, k) { cv =>
+      byList.getOrElse(nearest(cv, 0, centroids), Array.emptyIntArray)
+    }
   }
 
-  // ---- shared coarse-centroid kernels (IVF, IVF-PQ) ----------------------
+  // ---- shared centroid kernels (IVF, PQ, IVF-PQ) -------------------------
 
-  private def dist2(v: Array[Float], c: Array[Double]): Double = {
+  /** Squared L2 distance from `c` to the `c.length` elements of `v` that
+    * start at `off` (the whole vector, or one PQ subspace).
+    */
+  private def dist2(v: Array[Float], off: Int, c: Array[Double]): Double = {
     var s = 0.0
     var i = 0
-    val n = math.min(v.length, c.length)
-    while (i < n) { val d = v(i).toDouble - c(i); s += d * d; i += 1 }
+    val n = math.min(v.length - off, c.length)
+    while (i < n) { val d = v(off + i).toDouble - c(i); s += d * d; i += 1 }
     s
   }
 
-  private def nearest(v: Array[Float], cs: Array[Array[Double]]): Int = {
+  /** Index of the centroid nearest to `v` from `off` ([[dist2]]); strict
+    * `<` keeps the lowest index on ties, so training and encoding can
+    * never assign differently.
+    */
+  private def nearest(v: Array[Float], off: Int,
+      cs: Array[Array[Double]]): Int = {
     var best = 0
     var bestD = Double.MaxValue
     var ci = 0
     while (ci < cs.length) {
-      val d = dist2(v, cs(ci))
+      val d = dist2(v, off, cs(ci))
       if (d < bestD) { bestD = d; best = ci }
       ci += 1
     }
     best
   }
+
+  /** The `nprobe` lists whose centroids are nearest to a query. */
+  private def nearestLists(v: Array[Float], cs: Array[Array[Double]],
+      nprobe: Int): Array[Int] =
+    cs.indices.sortBy(ci => (dist2(v, 0, cs(ci)), ci)).take(nprobe).toArray
+
+  /** `Σ v(off + j)·c(j)`: a float vector (or one subspace of it) against
+    * a double centroid or hyperplane.
+    */
+  private def dotAt(v: Array[Float], off: Int, c: Array[Double]): Double = {
+    var d = 0.0
+    var j = 0
+    val n = math.min(v.length - off, c.length)
+    while (j < n) { d += v(off + j).toDouble * c(j); j += 1 }
+    d
+  }
+
+  private def sumSq(c: Array[Double]): Double = {
+    var n = 0.0
+    var j = 0
+    while (j < c.length) { n += c(j) * c(j); j += 1 }
+    n
+  }
+
+  /** `v − c`, rounded back to float: the vector an IVF-PQ code encodes. */
+  private def residual(v: Array[Float], c: Array[Double]): Array[Float] = {
+    val r = new Array[Float](v.length)
+    var i = 0
+    while (i < v.length) { r(i) = (v(i).toDouble - c(i)).toFloat; i += 1 }
+    r
+  }
+
+  private def requireDim(what: String, id: Long, v: Array[Float],
+      dim: Int): Unit =
+    require(v != null && v.length == dim,
+      s"$what $id vector has dimension " +
+        s"${if (v == null) "null" else v.length}, expected $dim")
 
   /** Rows a k-means trainer reads, tops out here regardless of corpus
     * size — the faiss discipline: codebooks are trained on a bounded
@@ -529,38 +462,34 @@ object Similarity {
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      dim: Int,
-      maxRows: Int = MaxTrainSample
+      dim: Int
   ): Array[Array[Float]] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val sample = corpus
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+    import corpus.sparkSession.implicits._
+    val sample = vectors(corpus, idCol, vecCol).toDF("id", "v")
       .filter(col("v").isNotNull)
       .orderBy(md5(col("id").cast("string")), col("id"))
-      .limit(maxRows)
+      .limit(MaxTrainSample)
       .as[(Long, Array[Float])]
       .collect()
-    sample.foreach { case (id, v) =>
-      require(v.length == dim,
-        s"row $id vector has dimension ${v.length}, expected $dim")
-    }
+    sample.foreach { case (id, v) => requireDim("row", id, v, dim) }
     sample.map(_._2)
   }
 
-  /** Driver-side Lloyd over a training sample: seeds are the first `k`
-    * sample rows (md5-order prefix, matching the historical seed
-    * pick), `iters` assignment/average passes in memory.
+  /** Driver-side Lloyd over the `dim` sample columns that start at `off`
+    * (the whole vector, or one PQ subspace): seeds are the first `k`
+    * sample rows (md5-order prefix, matching the historical seed pick),
+    * then `iters` assignment/average passes in memory.
     */
   private def lloydInMemory(
       sample: Array[Array[Float]],
+      off: Int,
       dim: Int,
       k: Int,
       iters: Int
   ): Array[Array[Double]] = {
     require(sample.nonEmpty, "k-means training needs at least one row")
     val centroids: Array[Array[Double]] =
-      sample.take(k).map(_.map(_.toDouble))
+      sample.take(k).map(v => Array.tabulate(dim)(i => v(off + i).toDouble))
     var it = 0
     while (it < iters) {
       val sums = Array.fill(centroids.length)(new Array[Double](dim))
@@ -568,10 +497,10 @@ object Similarity {
       var r = 0
       while (r < sample.length) {
         val v = sample(r)
-        val ci = nearest(v, centroids)
+        val ci = nearest(v, off, centroids)
         val s = sums(ci)
         var i = 0
-        while (i < dim) { s(i) += v(i).toDouble; i += 1 }
+        while (i < dim) { s(i) += v(off + i).toDouble; i += 1 }
         counts(ci) += 1
         r += 1
       }
@@ -605,21 +534,8 @@ object Similarity {
       nlist: Int,
       iters: Int
   ): Array[Array[Double]] =
-    lloydInMemory(trainSample(corpus, idCol, vecCol, dim), dim, nlist,
+    lloydInMemory(trainSample(corpus, idCol, vecCol, dim), 0, dim, nlist,
       iters)
-
-  /** |cb(s)(c)|² per (subspace, centroid) — shared by the ADC scorers
-    * of [[pqTopK]] and [[ivfPqTopK]] so the table math can never drift
-    * between the two PQ paths.
-    */
-  private def codebookNorm2(
-      cb: Array[Array[Array[Double]]]): Array[Array[Double]] =
-    cb.map(_.map { c =>
-      var n = 0.0
-      var j = 0
-      while (j < c.length) { n += c(j) * c(j); j += 1 }
-      n
-    })
 
   /** Per-query ADC lookup table `lut(s)(c) = q_sub(s) · cb(s)(c)` —
     * shared by [[pqTopK]] and [[ivfPqTopK]].
@@ -628,35 +544,18 @@ object Similarity {
       v: Array[Float],
       cb: Array[Array[Array[Double]]]): Array[Array[Double]] =
     Array.tabulate(cb.length, cb(0).length) { (s, c) =>
-      val subDim = cb(s)(c).length
-      var d = 0.0
-      var j = 0
-      while (j < subDim) { d += v(s * subDim + j).toDouble * cb(s)(c)(j); j += 1 }
-      d
+      dotAt(v, s * cb(s)(c).length, cb(s)(c))
     }
 
-  /** Nearest sub-centroid of subspace `s` for vector `v` — shared by
-    * training and encoding so assignment (incl. the lowest-index
-    * tie-break of strict `<`) can never desynchronize between them.
+  /** ADC dot product of a query with a PQ-coded row: `from` plus one
+    * lookup-table entry per subspace.
     */
-  private def subNearest(v: Array[Float], s: Int,
-      cb: Array[Array[Array[Double]]]): Int = {
-    val subDim = cb(s)(0).length
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < cb(s).length) {
-      var d = 0.0
-      var j = 0
-      while (j < subDim) {
-        val x = v(s * subDim + j).toDouble - cb(s)(c)(j)
-        d += x * x
-        j += 1
-      }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
+  private def adcDot(from: Double, lut: Array[Array[Double]],
+      codes: Array[Int]): Double = {
+    var d = from
+    var s = 0
+    while (s < codes.length) { d += lut(s)(codes(s)); s += 1 }
+    d
   }
 
   /** Product-quantization codebooks: `m` subspaces × `ksub` centroids ×
@@ -677,11 +576,10 @@ object Similarity {
     pqTrainOnSample(trainSample(corpus, idCol, vecCol, dim), dim, m,
       ksub, iters)
 
-  /** Driver-side PQ training over an already-collected sample: per
-    * subspace, seeds are the sub-vectors of the first `ksub` sample
-    * rows, then `iters` Lloyd passes in memory. Shared by [[pqTrain]]
-    * and [[ivfPqTopK]] (which trains on driver-computed residuals of
-    * the same coarse-training sample — zero extra Spark jobs).
+  /** Driver-side PQ training over an already-collected sample: one
+    * [[lloydInMemory]] per subspace. Shared by [[pqTrain]] and
+    * [[ivfPqTopK]] (which trains on driver-computed residuals of the
+    * same coarse-training sample — zero extra Spark jobs).
     */
   private def pqTrainOnSample(
       sample: Array[Array[Float]],
@@ -694,49 +592,14 @@ object Similarity {
     require(sample.length >= ksub, s"need at least $ksub training rows")
     val subDim = dim / m
     // codebooks(s)(c) = centroid c of subspace s
-    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m, ksub) {
-      (s, c) =>
-        Array.tabulate(subDim)(j => sample(c)(s * subDim + j).toDouble)
-    }
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(m, ksub)(new Array[Double](subDim))
-      val counts = Array.fill(m, ksub)(0L)
-      var r = 0
-      while (r < sample.length) {
-        val v = sample(r)
-        var s = 0
-        while (s < m) {
-          val c = subNearest(v, s, codebooks)
-          val acc = sums(s)(c)
-          var j = 0
-          while (j < subDim) {
-            acc(j) += v(s * subDim + j).toDouble; j += 1
-          }
-          counts(s)(c) += 1
-          s += 1
-        }
-        r += 1
-      }
-      var s = 0
-      while (s < m) {
-        var c = 0
-        while (c < ksub) {
-          if (counts(s)(c) > 0) {
-            val acc = sums(s)(c)
-            val cent = new Array[Double](subDim)
-            var j = 0
-            while (j < subDim) { cent(j) = acc(j) / counts(s)(c); j += 1 }
-            codebooks(s)(c) = cent
-          }
-          c += 1
-        }
-        s += 1
-      }
-      it += 1
-    }
-    codebooks
+    Array.tabulate(m)(s =>
+      lloydInMemory(sample, s * subDim, subDim, ksub, iters))
   }
+
+  /** The `m` codes of a vector: its nearest centroid per subspace. */
+  private def encode(v: Array[Float], cb: Array[Array[Array[Double]]]
+      ): Array[Int] =
+    Array.tabulate(cb.length)(s => nearest(v, s * cb(s)(0).length, cb(s)))
 
   /** PQ-encode a corpus: every vector becomes `m` small centroid codes
     * (m bytes at ksub ≤ 256) — a 32× memory cut for 64-dim floats at
@@ -750,13 +613,9 @@ object Similarity {
   ): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val m = codebooks.length
-    val subDim = codebooks(0)(0).length
-    val dim = m * subDim
+    val dim = codebooks.length * codebooks(0)(0).length
     val bc = spark.sparkContext.broadcast(codebooks)
-    corpus
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
+    vectors(corpus, idCol, vecCol)
       .mapPartitions { rows =>
         val cb = bc.value
         rows.collect {
@@ -764,15 +623,8 @@ object Similarity {
           // wrong dimensions fail fast — silent truncation would
           // produce wrong-but-plausible codes
           case (id, v) if v != null =>
-            require(v.length == dim,
-              s"row $id vector has dimension ${v.length}, expected $dim")
-            val codes = new Array[Int](m)
-            var s = 0
-            while (s < m) {
-              codes(s) = subNearest(v, s, cb)
-              s += 1
-            }
-            (id, codes)
+            requireDim("row", id, v, dim)
+            (id, encode(v, cb))
         }
       }
       .toDF(idCol, "codes")
@@ -807,46 +659,25 @@ object Similarity {
   ): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val subDim = dim / m
-    val shortK = k * rerank
     val codebooks = pqTrain(corpus, corpusId, corpusVec, dim, m, ksub, iters)
     val codes = pqEncode(corpus, corpusId, corpusVec, codebooks)
       .as[(Long, Array[Int])]
 
     // per-query ADC tables: dot(s)(c) = q_sub·centroid, plus centroid
     // norm² per (s, c) for the denominator estimate
-    val norm2 = codebookNorm2(codebooks)
-    // ONE driver collect builds both the ADC tables and the re-rank
-    // vector map (norms shared too)
-    val qRaw: Array[(Long, Array[Float], Double)] = queries
-      .select(col(queryId).cast("long"), col(queryVec))
-      .as[(Long, Array[Float])]
-      .collect()
-      .map { case (id, v) =>
-        require(v != null && v.length == dim,
-          s"query $id vector has dimension " +
-            s"${if (v == null) "null" else v.length}, expected $dim")
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        (id, v, math.sqrt(n))
-      }
+    val norm2 = codebooks.map(_.map(sumSq))
+    val qRaw = collectNormed(queries, queryId, queryVec)
+    qRaw.foreach { case (id, v, _) => requireDim("query", id, v, dim) }
     val qData: Array[(Long, Array[Array[Double]], Double)] =
       qRaw.map { case (id, v, norm) => (id, queryLut(v, codebooks), norm) }
     val bcQ = spark.sparkContext.broadcast(qData)
     val bcN = spark.sparkContext.broadcast(norm2)
 
-    val partials = codes
+    val shortlist = codes
       .mapPartitions { rows =>
         val qs = bcQ.value
         val n2 = bcN.value
-        implicit val worstFirst: Ordering[(Double, Long)] =
-          Ordering.fromLessThan { (a, b) =>
-            a._1 < b._1 || (a._1 == b._1 && a._2 > b._2)
-          }
-        val heaps = Array.fill(qs.length)(
-          scala.collection.mutable.PriorityQueue
-            .empty[(Double, Long)](worstFirst.reverse))
+        val top = new TopK(qs.map(_._1), k * rerank)
         rows.foreach { case (cid, cs) =>
           // reconstructed norm is query-independent: compute once
           var vn = 0.0
@@ -856,79 +687,42 @@ object Similarity {
           var qi = 0
           while (qi < qs.length) {
             val (qid, lut, qNorm) = qs(qi)
-            if (qid != cid) {
-              var d = 0.0
-              var t = 0
-              while (t < m) { d += lut(t)(cs(t)); t += 1 }
-              val denom = vNorm * qNorm
-              val score = if (denom == 0.0) 0.0 else d / denom
-              val h = heaps(qi)
-              if (h.size < shortK) h.enqueue((score, cid))
-              else if (worstFirst.gt((score, cid), h.head)) {
-                h.dequeue(); h.enqueue((score, cid))
-              }
-            }
+            if (qid != cid)
+              top.offer(qi,
+                VectorKernels.cosine(adcDot(0.0, lut, cs), vNorm, qNorm), cid)
             qi += 1
           }
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.iterator.map { case (score, cid) => (qs(qi)._1, cid) }
-        }
+        top.rows.map { case (qid, cid, _) => (qid, cid) }
       }
       .toDF("query_id", "neighbor_id")
-    // ADC shortlist (≤ partitions×shortK rows per query), then exact
-    // re-rank: only shortlisted ids read their float vectors again
-    rerankExact(partials.dropDuplicates("query_id", "neighbor_id"),
-      corpus, corpusId, corpusVec, qRaw, k)
+    rerankExact(shortlist, corpus, corpusId, corpusVec, qRaw, k)
   }
 
   /** Exact cosine re-ranking of an ANN shortlist (query_id,
     * neighbor_id): join back to the corpus vectors (only shortlisted
-    * ids read floats again), score against the broadcast query
-    * vectors, keep top-k per query. Shared by [[pqTopK]] and
-    * [[ivfPqTopK]].
+    * ids read floats again), score them against the query vectors with
+    * the [[cosine]] expression, keep top-k per query. Shared by
+    * [[pqTopK]] and [[ivfPqTopK]].
     */
   private def rerankExact(
       shortlist: DataFrame,
       corpus: DataFrame,
       corpusId: String,
       corpusVec: String,
-      qRaw: Array[(Long, Array[Float], Double)],
+      qRaw: Array[Normed],
       k: Int
   ): DataFrame = {
-    val spark = corpus.sparkSession
-    val qVecs: Map[Long, (Array[Float], Double)] =
-      qRaw.map { case (id, v, norm) => id -> (v, norm) }.toMap
-    val bcV = spark.sparkContext.broadcast(qVecs)
-    val exactCos = udf { (qid: Long, v: scala.collection.Seq[Float]) =>
-      val (qv, qNorm) = bcV.value(qid)
-      // corpus dims were validated at encode time; no silent truncation
-      require(v.length == qv.length,
-        s"re-rank vector has dimension ${v.length}, expected ${qv.length}")
-      var d = 0.0
-      var vn = 0.0
-      var i = 0
-      while (i < qv.length) {
-        val x = v(i).toDouble
-        d += x * qv(i).toDouble
-        vn += x * x
-        i += 1
-      }
-      val denom = math.sqrt(vn) * qNorm
-      if (denom == 0.0) 0.0 else d / denom
-    }
-    val reranked = shortlist
+    import corpus.sparkSession.implicits._
+    val qVecs = qRaw.toSeq.map { case (id, v, _) => (id, v) }
+      .toDF("query_id", "__qv")
+    rankTopK(shortlist
+      .dropDuplicates("query_id", "neighbor_id")
       .join(corpus.select(col(corpusId).cast("long").as("neighbor_id"),
         col(corpusVec).as("__v")), Seq("neighbor_id"))
+      .join(broadcast(qVecs), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        exactCos(col("query_id"), col("__v")).as("cosine"))
-    val w = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    reranked
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+        cosine(col("__v"), col("__qv")).as("cosine")), k)
   }
 
   /** IVF-PQ top-k — the standard billion-scale composition of the two
@@ -964,46 +758,30 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val subDim = dim / m
-    val shortK = k * rerank
 
     // ONE bounded-sample collect trains BOTH halves of the index:
     // coarse centroids from the sample, then residual PQ codebooks
     // from the sample's own residuals (computed driver-side) — the
     // faiss training discipline, zero full-corpus training passes.
     val sample = trainSample(corpus, corpusId, corpusVec, dim)
-    val coarse = lloydInMemory(sample, dim, nlist, iters)
-    val resSample: Array[Array[Float]] = sample.map { v =>
-      val c = coarse(nearest(v, coarse))
-      val r = new Array[Float](dim)
-      var i = 0
-      while (i < dim) { r(i) = (v(i).toDouble - c(i)).toFloat; i += 1 }
-      r
-    }
-    val pq = pqTrainOnSample(resSample, dim, m, ksub, iters)
+    val coarse = lloydInMemory(sample, 0, dim, nlist, iters)
+    val pq = pqTrainOnSample(
+      sample.map(v => residual(v, coarse(nearest(v, 0, coarse)))),
+      dim, m, ksub, iters)
     val bcCoarse = spark.sparkContext.broadcast(coarse)
     val bcPq = spark.sparkContext.broadcast(pq)
 
     // (id, list, codes) in ONE fused corpus pass: coarse-assign,
     // residual, and residual-encode per row, nothing materialized
-    val codes = corpus
-      .select(col(corpusId).cast("long"), col(corpusVec))
-      .as[(Long, Array[Float])]
+    val codes = vectors(corpus, corpusId, corpusVec)
       .mapPartitions { rows =>
         val csr = bcCoarse.value
         val cb = bcPq.value
         rows.collect {
           case (id, v) if v != null =>
-            require(v.length == dim,
-              s"row $id vector has dimension ${v.length}, expected $dim")
-            val li = nearest(v, csr)
-            val c = csr(li)
-            val r = new Array[Float](dim)
-            var i = 0
-            while (i < dim) { r(i) = (v(i).toDouble - c(i)).toFloat; i += 1 }
-            val codesArr = new Array[Int](m)
-            var s = 0
-            while (s < m) { codesArr(s) = subNearest(r, s, cb); s += 1 }
-            (id, li, codesArr)
+            requireDim("row", id, v, dim)
+            val li = nearest(v, 0, csr)
+            (id, li, encode(residual(v, csr(li)), cb))
         }
       }
 
@@ -1013,7 +791,7 @@ object Similarity {
     //   cNorm2(l)       = |c_list(l)|²
     // sized by coarse.length, NOT nlist — trainCoarse returns fewer
     // centroids than requested on small corpora
-    val n2 = codebookNorm2(pq)
+    val n2 = pq.map(_.map(sumSq))
     val cross: Array[Array[Array[Double]]] =
       Array.tabulate(coarse.length, m, ksub) { (l, s, c) =>
         var d = 0.0
@@ -1021,64 +799,32 @@ object Similarity {
         while (j < subDim) { d += coarse(l)(s * subDim + j) * pq(s)(c)(j); j += 1 }
         d
       }
-    val cNorm2: Array[Double] = coarse.map { c =>
-      var n = 0.0
-      var i = 0
-      while (i < c.length) { n += c(i) * c(i); i += 1 }
-      n
-    }
+    val cNorm2: Array[Double] = coarse.map(sumSq)
 
-    // per query: norm, nprobe lists, q·c_list per probed list, and the
+    // per query: norm, nprobe lists, q·c_list per list, and the
     // residual LUT q_sub·cb(s)(c) — ONE collect builds everything
-    val qRaw: Array[(Long, Array[Float], Double)] = queries
-      .select(col(queryId).cast("long"), col(queryVec))
-      .as[(Long, Array[Float])]
-      .collect()
-      .map { case (id, v) =>
-        require(v != null && v.length == dim,
-          s"query $id vector has dimension " +
-            s"${if (v == null) "null" else v.length}, expected $dim")
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        (id, v, math.sqrt(n))
+    val qRaw = collectNormed(queries, queryId, queryVec)
+    qRaw.foreach { case (id, v, _) => requireDim("query", id, v, dim) }
+    val qData: Array[(Long, Double, Array[Double], Array[Array[Double]])] =
+      qRaw.map { case (id, v, norm) =>
+        (id, norm, coarse.map(dotAt(v, 0, _)), queryLut(v, pq))
       }
-    val qProbe: Array[(Long, Double, Array[Int], Array[Double],
-      Array[Array[Double]])] = qRaw.map { case (id, v, norm) =>
-      val probes = coarse.indices
-        .sortBy(l => (dist2(v, coarse(l)), l))
-        .take(nprobe).toArray
-      val qc = coarse.map { c =>
-        var d = 0.0
-        var i = 0
-        while (i < c.length) { d += v(i).toDouble * c(i); i += 1 }
-        d
-      }
-      (id, norm, probes, qc, queryLut(v, pq))
-    }
-    val byList: Map[Int, Array[Int]] = qProbe.zipWithIndex
-      .flatMap { case ((_, _, ps, _, _), qi) => ps.map(_ -> qi) }
-      .groupBy(_._1)
-      .map { case (l, xs) => l -> xs.map(_._2) }
-    val bcQ = spark.sparkContext.broadcast(qProbe)
+    val byList = byProbe(qRaw.map { case (_, v, _) =>
+      nearestLists(v, coarse, nprobe) })
+    val bcQ = spark.sparkContext.broadcast(qData)
     val bcIdx = spark.sparkContext.broadcast(byList)
     val bcN2 = spark.sparkContext.broadcast(n2)
     val bcCross = spark.sparkContext.broadcast(cross)
     val bcCN = spark.sparkContext.broadcast(cNorm2)
 
-    val partials = codes
+    val shortlist = codes
       .mapPartitions { rows =>
         val qs = bcQ.value
         val idx = bcIdx.value
         val nn2 = bcN2.value
         val cx = bcCross.value
         val cn = bcCN.value
-        implicit val worstFirst: Ordering[(Double, Long)] =
-          Ordering.fromLessThan { (a, b) =>
-            a._1 < b._1 || (a._1 == b._1 && a._2 > b._2)
-          }
-        val heaps = scala.collection.mutable.HashMap
-          .empty[Int, scala.collection.mutable.PriorityQueue[(Double, Long)]]
+        val top = new TopK(qs.map(_._1), k * rerank)
         rows.foreach { case (cid, li, cs) =>
           val qis = idx.getOrElse(li, null)
           if (qis != null) {
@@ -1091,32 +837,17 @@ object Similarity {
             }
             val vNorm = math.sqrt(math.max(vn, 0.0))
             qis.foreach { qi =>
-              val (qid, qNorm, _, qc, lut) = qs(qi)
-              if (qid != cid) {
-                var d = qc(li)
-                var t = 0
-                while (t < m) { d += lut(t)(cs(t)); t += 1 }
-                val denom = vNorm * qNorm
-                val score = if (denom == 0.0) 0.0 else d / denom
-                val h = heaps.getOrElseUpdate(qi,
-                  scala.collection.mutable.PriorityQueue
-                    .empty[(Double, Long)](worstFirst.reverse))
-                if (h.size < shortK) h.enqueue((score, cid))
-                else if (worstFirst.gt((score, cid), h.head)) {
-                  h.dequeue(); h.enqueue((score, cid))
-                }
-              }
+              val (qid, qNorm, qc, lut) = qs(qi)
+              if (qid != cid)
+                top.offer(qi, VectorKernels.cosine(
+                  adcDot(qc(li), lut, cs), vNorm, qNorm), cid)
             }
           }
         }
-        heaps.iterator.flatMap { case (qi, h) =>
-          h.iterator.map { case (_, cid) => (bcQ.value(qi)._1, cid) }
-        }
+        top.rows.map { case (qid, cid, _) => (qid, cid) }
       }
       .toDF("query_id", "neighbor_id")
-
-    rerankExact(partials.dropDuplicates("query_id", "neighbor_id"),
-      corpus, corpusId, corpusVec, qRaw, k)
+    rerankExact(shortlist, corpus, corpusId, corpusVec, qRaw, k)
   }
 
   /** Symmetric int8 quantization of a float vector — the standard 4×
@@ -1161,9 +892,21 @@ object Similarity {
     }
 
   /** Deterministic random hyperplanes for LSH bucketing. */
-  private def hyperplanes(dim: Int, planes: Int, seed: Long): Seq[Seq[Double]] = {
+  private def hyperplanes(dim: Int, planes: Int,
+      seed: Long): Array[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
-    Seq.fill(planes)(Seq.fill(dim)(rnd.nextGaussian()))
+    Array.fill(planes)(Array.fill(dim)(rnd.nextGaussian()))
+  }
+
+  /** Bucket id from the hyperplane dots: bit p = sign(v · h_p). */
+  private def bucketOf(dots: Array[Double]): Long = {
+    var bucket = 0L
+    var p = 0
+    while (p < dots.length) {
+      if (dots(p) >= 0) bucket |= (1L << p)
+      p += 1
+    }
+    bucket
   }
 
   /** Sign-random-projection bucket id (0 .. 2^planes-1) for a vector:
@@ -1180,22 +923,10 @@ object Similarity {
     */
   def lshBucket(vec: Column, dim: Int, planes: Int = 8,
       seed: Long = 42L): Column = {
-    val hs: Array[Array[Double]] =
-      hyperplanes(dim, planes, seed).map(_.toArray).toArray
+    val hs = hyperplanes(dim, planes, seed)
     val f = udf { (a: scala.collection.Seq[Float]) =>
       val xa = floats(a)
-      var bucket = 0L
-      var p = 0
-      while (p < hs.length) {
-        val h = hs(p)
-        var d = 0.0
-        var i = 0
-        val n = math.min(xa.length, h.length)
-        while (i < n) { d += xa(i).toDouble * h(i); i += 1 }
-        if (d >= 0) bucket |= (1L << p)
-        p += 1
-      }
-      bucket
+      bucketOf(hs.map(dotAt(xa, 0, _)))
     }
     f(vec)
   }
@@ -1205,10 +936,6 @@ object Similarity {
     * the cost of `planes` extra probe rows per QUERY, not per corpus row),
     * ranked by exact cosine within the probed buckets. Recall < 1 by
     * construction (asserted against the exact baseline in SimilaritySpec).
-    *
-    * Id contract: like [[bruteForceTopK]], ids are cast to long for the
-    * primitive kernel — numeric ids only (string-keyed corpora should
-    * carry a surrogate long, standard practice for vector indexes).
     */
   def annTopK(
       corpus: DataFrame,
@@ -1223,54 +950,22 @@ object Similarity {
       seed: Long = 42L,
       multiProbe: Boolean = true
   ): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-
     // queries are the broadcastable side by contract (same as the
     // brute-force path): collect, normalize, hash, and index by every
     // bucket they probe (own bucket + hamming-1 neighbors)
-    val hs: Array[Array[Double]] =
-      hyperplanes(dim, planes, seed).map(_.toArray).toArray
-    def planeDots(v: Array[Float]): Array[Double] =
-      hs.map { h =>
-        var d = 0.0
-        var i = 0
-        val n = math.min(v.length, h.length)
-        while (i < n) { d += v(i).toDouble * h(i); i += 1 }
-        d
-      }
-    def bucketFromDots(dots: Array[Double]): Long = {
-      var bucket = 0L
-      var p = 0
-      while (p < dots.length) {
-        if (dots(p) >= 0) bucket |= (1L << p)
-        p += 1
-      }
-      bucket
-    }
-    def bucketOf(v: Array[Float]): Long = bucketFromDots(planeDots(v))
-    val qData: Array[(Long, Array[Float], Double, Long)] = queries
-      .select(col(queryId).cast("long"), col(queryVec))
-      .as[(Long, Array[Float])]
-      .collect()
-      .map { case (id, v) =>
-        var n = 0.0
-        var i = 0
-        while (i < v.length) { n += v(i).toDouble * v(i).toDouble; i += 1 }
-        (id, v, math.sqrt(n), bucketOf(v))
-      }
+    val hs = hyperplanes(dim, planes, seed)
+    val qs = collectNormed(queries, queryId, queryVec)
     // Query-directed multi-probe (Lv et al., VLDB 2007): beyond the own
     // bucket and every single-plane flip, also probe pair-flips of the
     // LEAST-CONFIDENT planes (smallest |dot| — the boundaries this query
     // sits closest to, where its true neighbors most likely fell on the
     // other side). All probe cost is per QUERY (more buckets in the
     // broadcast index); the corpus-side pass still hashes each row once.
-    val qDots: Array[Array[Double]] = qData.map(q => planeDots(q._2))
-    def probeMasksFor(qi: Int): Array[Long] =
+    def probeMasks(dots: Array[Double]): Array[Long] =
       if (!multiProbe) Array(0L)
       else {
         val singles = Array.tabulate(planes)(i => 1L << i)
-        val closest = qDots(qi).zipWithIndex
+        val closest = dots.zipWithIndex
           .sortBy { case (d, i) => (math.abs(d), i) }
           .take(math.min(4, planes))
           .map(_._2)
@@ -1280,74 +975,18 @@ object Similarity {
         } yield (1L << closest(a)) | (1L << closest(b))
         (0L +: singles) ++ pairs.toArray
       }
-    // bucket → dense query index list; ~2^planes entries, each query in
-    // `probes` lists — tiny next to the corpus. Distinct masks per query
-    // keep the one-meeting-per-pair guarantee (no dedup stage needed).
-    val byBucket: Map[Long, Array[Int]] = qData.zipWithIndex
-      .flatMap { case ((_, _, _, b0), qi) =>
-        probeMasksFor(qi).map(m => (b0 ^ m) -> qi)
-      }
-      .groupBy(_._1)
-      .map { case (b, xs) => b -> xs.map(_._2) }
-    val bcQ = spark.sparkContext.broadcast(qData)
-    val bcIdx = spark.sparkContext.broadcast(byBucket)
-
-    // ONE streaming pass over the corpus, zero shuffled candidates: per
-    // row, hash to its (single) bucket, score only the queries probing
-    // that bucket with a primitive dot, feed per-(partition, query)
-    // bounded heaps — the brute-force kernel restricted by the index.
-    // A (query, neighbor) pair can only meet once (one bucket per row,
-    // distinct probe masks), so no dedup stage is needed.
-    val partials = corpus
-      .select(col(corpusId).cast("long"), col(corpusVec))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val qs = bcQ.value
-        val idx = bcIdx.value
-        implicit val worstFirst: Ordering[(Double, Long)] =
-          Ordering.fromLessThan { (a, b) =>
-            a._1 < b._1 || (a._1 == b._1 && a._2 > b._2)
-          }
-        val heaps = scala.collection.mutable.HashMap
-          .empty[Int, scala.collection.mutable.PriorityQueue[(Double, Long)]]
-        rows.foreach { case (cid, cv) =>
-          var cn = 0.0
-          var i = 0
-          while (i < cv.length) {
-            cn += cv(i).toDouble * cv(i).toDouble; i += 1
-          }
-          val cNorm = math.sqrt(cn)
-          idx.getOrElse(bucketOf(cv), Array.empty[Int]).foreach { qi =>
-            val (qid, qv, qNorm, _) = qs(qi)
-            if (qid != cid) {
-              var d = 0.0
-              var j = 0
-              val n = math.min(cv.length, qv.length)
-              while (j < n) { d += cv(j).toDouble * qv(j).toDouble; j += 1 }
-              val denom = cNorm * qNorm
-              val cos = if (denom == 0.0) 0.0 else d / denom
-              val h = heaps.getOrElseUpdate(qi,
-                scala.collection.mutable.PriorityQueue
-                  .empty[(Double, Long)](worstFirst.reverse))
-              if (h.size < k) h.enqueue((cos, cid))
-              else if (worstFirst.gt((cos, cid), h.head)) {
-                h.dequeue(); h.enqueue((cos, cid))
-              }
-            }
-          }
-        }
-        heaps.iterator.flatMap { case (qi, h) =>
-          val qid = bcQ.value(qi)._1
-          h.iterator.map { case (cos, cid) => (qid, cid, cos) }
-        }
-      }
-      .toDF("query_id", "neighbor_id", "cosine")
-    val w = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    partials
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+    // bucket → query indices; ~2^planes entries, each query in `probes`
+    // lists — tiny next to the corpus. Distinct masks per query keep a
+    // (query, neighbor) pair meeting once (one bucket per row), so no
+    // dedup stage is needed.
+    val byBucket = byProbe(qs.map { case (_, v, _) =>
+      val dots = hs.map(dotAt(v, 0, _))
+      val b0 = bucketOf(dots)
+      probeMasks(dots).map(b0 ^ _)
+    })
+    exactTopK(vectors(corpus, corpusId, corpusVec), qs, k) { cv =>
+      byBucket.getOrElse(bucketOf(hs.map(dotAt(cv, 0, _))),
+        Array.emptyIntArray)
+    }
   }
 }

@@ -758,13 +758,6 @@ object TextQueries {
       |  CAST(least(128, n_tok - chunk_idx * 112) AS BIGINT) AS chunk_tokens
       |FROM c""".stripMargin
 
-  /** Shared md5-60-bit shingle hash: `conv` of the first 15 hex chars is
-    * a positive long on any engine (DuckDB: `('0x'||substr)::BIGINT`),
-    * giving hash-identical fingerprint/simhash oracles.
-    */
-  private def md5_60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** q29 — winnowing document fingerprint (MOSS-style min-sampling over
     * positional 3-gram hashes, window 4): the oracle-exact twin of q28's
     * rolling-hash `fingerprint`. Sorted distinct window-minima joined to

@@ -212,7 +212,7 @@ final class GraftTable(
     */
   def vacuum(): Unit = currentVersion.foreach { keep =>
     val live = manifest(keep).dirs.values.toSet
-    Files.list(Paths.get(path)).forEach { p =>
+    GraftTable.listDir(Paths.get(path)).foreach { p =>
       val name = p.getFileName.toString
       if (name.matches("v\\d+") && !live(name))
         GraftTable.deleteRecursively(p)
@@ -307,12 +307,17 @@ final class GraftTable(
 }
 
 object GraftTable {
+  /** The entries of directory `p`. `Files.list` holds a directory
+    * handle open until its stream is closed; this closes it.
+    */
+  private[graft] def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val entries = Files.list(p)
+    try entries.iterator().asScala.toVector finally entries.close()
+  }
+
   /** Delete a file, or a directory with everything under it. */
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val children = Files.list(p)
-      try children.forEach(deleteRecursively) finally children.close()
-    }
+    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
 

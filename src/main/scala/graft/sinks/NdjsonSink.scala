@@ -25,7 +25,7 @@ object NdjsonSink {
     if (!Files.exists(dir)) return 0
     val pattern = s"""\\Q$table\\E\\.(\\d+)\\.ndjson""".r
     var max = -1
-    Files.list(dir).forEach { p =>
+    GraftTable.listDir(dir).foreach { p =>
       p.getFileName.toString match {
         case pattern(i) => max = math.max(max, i.toInt)
         case _ =>
@@ -58,8 +58,7 @@ object NdjsonSink {
     val target = Paths.get(tableDir, s"$table.$indexStr.ndjson")
     val out = Files.newOutputStream(target)
     try {
-      val parts = Files.list(Paths.get(tmp)).sorted().toArray
-        .map(_.asInstanceOf[java.nio.file.Path])
+      val parts = GraftTable.listDir(Paths.get(tmp)).sorted
         .filter(_.getFileName.toString.startsWith("part-"))
       parts.foreach(p => Files.copy(p, out))
     } finally out.close()

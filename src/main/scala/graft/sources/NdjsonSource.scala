@@ -173,8 +173,11 @@ object NdjsonSource {
     * inferred one: a bundle with no entries would infer no `entry`
     * struct and fail the run.
     */
-  def readDeletedIds(spark: SparkSession, dir: String): DataFrame = {
-    val files = listResourceFiles(spark, dir)
+  def readDeletedIds(spark: SparkSession, dir: String): DataFrame =
+    readDeletedIds(spark, listResourceFiles(spark, dir))
+
+  /** [[readDeletedIds]] over bundle files already listed. */
+  def readDeletedIds(spark: SparkSession, files: Seq[String]): DataFrame = {
     val bundles =
       if (files.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row],

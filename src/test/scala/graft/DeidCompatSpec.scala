@@ -61,7 +61,10 @@ class DeidCompatSpec extends SparkSpecBase {
     // test_version0 asserts (tests/deid/test_deid_codebook.py:173-191)
     val dir = "/root/reference/tests/data/codebook0"
     assume(Files.exists(Paths.get(dir)))
-    val cb = Codebook.loadOrCreate(dir)
+    // loaded from a copy: a version-0 load writes its drawn salt back
+    val copy = Files.createTempDirectory("codebook0")
+    Files.copy(Paths.get(dir, "codebook.json"), copy.resolve("codebook.json"))
+    val cb = Codebook.loadOrCreate(copy.toString)
     def fake(rt: String, id: String): String = {
       import org.apache.spark.sql.functions._
       val df = spark.range(1).select(lit(id).as("id"))

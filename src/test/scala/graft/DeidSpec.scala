@@ -105,4 +105,25 @@ class DeidSpec extends SparkSpecBase {
     assert(created.codebookId === reloaded.codebookId)
     assert(created.salt.length === 32)
   }
+
+  test("a version-0 codebook keeps the salt drawn for it") {
+    // version 0 has no id_salt, only the "mrn" legacy section: the salt
+    // drawn on first load must be persisted, or every run pseudonymizes
+    // non-legacy ids differently and a re-run duplicates rows
+    val dir = java.nio.file.Files.createTempDirectory("cb0")
+    java.nio.file.Files.write(dir.resolve("codebook.json"),
+      """{"version": 0, "mrn": {"p1": {"deid": "fake-p1",
+        |  "encounter": {"e1": {"deid": "fake-e1"}}}}}"""
+        .stripMargin.getBytes("UTF-8"))
+    val first = Codebook.loadOrCreate(dir.toString)
+    val second = Codebook.loadOrCreate(dir.toString)
+    assert(first.saltHex === second.saltHex)
+    assert(first.salt.length === 32)
+    def fake(cb: Codebook, rt: String, id: String): String =
+      spark.range(1).select(cb.fakeIdFor(rt, lit(id))).head().getString(0)
+    assert(fake(first, "Patient", "p1") === "fake-p1")
+    assert(fake(second, "Patient", "p1") === "fake-p1")
+    assert(fake(second, "Encounter", "e1") === "fake-e1")
+    assert(fake(first, "Condition", "c1") === fake(second, "Condition", "c1"))
+  }
 }

@@ -61,11 +61,20 @@ class SimilaritySpec extends SparkSpecBase {
     assert(viaExpr.getMessage.contains("dimension mismatch") ||
       Option(viaExpr.getCause).exists(
         _.getMessage.contains("dimension mismatch")))
-    val viaUdf = intercept[Exception] {
-      ragged.select(Similarity.cosineViaUdf(col("a"), col("b"))).collect()
+  }
+
+  test("bruteForceTopK fails fast on a ragged corpus vector") {
+    // the same fold as the cosine expression, so the same rule: a short
+    // vector must not score over a truncated prefix
+    val corpus = Seq((1L, Seq(1.0f, 0.0f, 0.0f)), (2L, Seq(1.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val q = Seq((100L, Seq(1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
+    val ex = intercept[Exception] {
+      Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, "vec_id",
+        "embedding", k = 2).collect()
     }
-    assert(viaUdf.getMessage.contains("dimension mismatch") ||
-      Option(viaUdf.getCause).exists(
+    assert(ex.getMessage.contains("dimension mismatch") ||
+      Option(ex.getCause).exists(
         _.getMessage.contains("dimension mismatch")))
   }
 
