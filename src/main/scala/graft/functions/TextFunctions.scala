@@ -6,10 +6,15 @@ import org.apache.spark.sql.functions._
 /** Text-analysis column functions for large-scale document pipelines:
   * tokenization, quality stats, fingerprinting, language ID.
   *
-  * All of these are pure `Column` expression trees built from Spark
-  * builtins + higher-order array functions, so they stay inside
-  * whole-stage codegen — no UDF in the hot path except [[langIdUdf]]
-  * (profile table lookup) which is applied once per document.
+  * Two forms live here. The `Column` functions ([[tokens]],
+  * [[wordNgrams]], the quality ratios) are expression trees of Spark
+  * builtins. The `...Udf` values are per-row JVM kernels, one pass per
+  * document, for the shingle and hash work whose expression form
+  * evaluates interpreted: the md5 gram, minhash and simhash kernels,
+  * the rolling fingerprint, the repetition stats, NFC, deflate and
+  * language ID. Every kernel tokenizes through [[tokensLocal]], the
+  * twin of [[tokens]], and builds word n-grams through [[gramsOf]],
+  * the twin of [[wordNgrams]] (PropertySpec pins both pairs).
   */
 object TextFunctions {
 
@@ -21,8 +26,9 @@ object TextFunctions {
       .otherwise(split(trim(text), "\\s+"))
 
   /** Plain-function twin of [[tokens]] for per-row kernels — MUST stay
-    * semantically identical. Two traps make the obvious
-    * `text.trim.split("\\s+")` WRONG:
+    * semantically identical, and every JVM kernel tokenizes through it.
+    * Two traps make the obvious Java `trim` followed by `split("\\s+")`
+    * WRONG:
     *  - SQL `trim` (Spark and DuckDB) strips only ' ' (U+0020), while
     *    Java `String.trim` strips every char ≤ U+0020 — so "\tfoo"
     *    must keep its tab and tokenize as ["", "foo"];
@@ -126,10 +132,8 @@ object TextFunctions {
       val th = new Array[Long](toks.length)
       var k = 0
       while (k < toks.length) {
-        val d = md.digest(
-          toks(k).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        th(k) = ((d(0) & 0xffL) << 20) | ((d(1) & 0xffL) << 12) |
-          ((d(2) & 0xffL) << 4) | ((d(3) & 0xf0L) >> 4)
+        th(k) = md5Bits(md.digest(
+          toks(k).getBytes(java.nio.charset.StandardCharsets.UTF_8)), 28)
         k += 1
       }
       val nw = math.max(th.length - 4, 1)
@@ -204,13 +208,7 @@ object TextFunctions {
     * [[wordNgrams]] (docs shorter than n yield one whole-text shingle).
     */
   val repetitionStatsUdf = udf { (text: String) =>
-    val t = if (text == null) "" else text.trim
-    val toks = if (t.isEmpty) Array.empty[String] else t.split("\\s+")
-
-    def grams(n: Int): Array[String] = {
-      val count = math.max(toks.length - (n - 1), 1)
-      Array.tabulate(count)(i => toks.slice(i, i + n).mkString(" "))
-    }
+    val toks = tokensLocal(text)
     def maxFreq(xs: Array[String]): Long = {
       val m = new java.util.HashMap[String, Long](xs.length * 2)
       var best = 0L
@@ -222,8 +220,8 @@ object TextFunctions {
       }
       best
     }
-    val bi = grams(2)
-    val tri = grams(3)
+    val bi = gramsOf(toks, 2)
+    val tri = gramsOf(toks, 3)
     val triSet = new java.util.HashSet[String](tri.length * 2)
     tri.foreach(triSet.add)
     (toks.length.toLong, maxFreq(toks), bi.length.toLong, maxFreq(bi),
@@ -232,18 +230,31 @@ object TextFunctions {
 
   // --- md5 shingle-hash kernels ------------------------------------------
 
-  /** Word 3-grams exactly as [[wordNgrams]] / the DuckDB oracles build
-    * them (`max(|toks|-2, 1)` shingles; empty text → one empty shingle),
-    * as a JVM array for the kernel paths below.
+  /** Positional word n-grams of a token array, exactly as [[wordNgrams]]
+    * and the DuckDB oracles build them: `max(|toks| − (n−1), 1)`
+    * windows joined by a space, so a document shorter than n yields one
+    * whole-text gram and no tokens yield one empty gram. THE one gram
+    * builder of the JVM kernels.
     */
-  private[graft] def posGrams(text: String, n: Int): Array[String] = {
-    val t = if (text == null) "" else text.trim
-    val toks = if (t.isEmpty) Array.empty[String] else t.split("\\s+")
+  private[graft] def gramsOf(toks: Array[String], n: Int): Array[String] = {
     val count = math.max(toks.length - (n - 1), 1)
     Array.tabulate(count)(i => toks.slice(i, i + n).mkString(" "))
   }
 
-  private def grams3(text: String): Array[String] = posGrams(text, 3)
+  /** [[gramsOf]] over the [[tokensLocal]] tokens of `text`. */
+  private[graft] def posGrams(text: String, n: Int): Array[String] =
+    gramsOf(tokensLocal(text), n)
+
+  /** The first `bits` (≤ 64) bits of an md5 digest as a long, big-endian:
+    * 60 is DuckDB's `('0x' || substr(md5(x), 1, 15))::BIGINT`, 28 its
+    * 7-hex-char form, and 64 the full first 8 bytes.
+    */
+  private[graft] def md5Bits(d: Array[Byte], bits: Int): Long = {
+    var hv = 0L
+    var bi = 0
+    while (bi < 8) { hv = (hv << 8) | (d(bi) & 0xffL); bi += 1 }
+    hv >>> (64 - bits)
+  }
 
   /** Positional word n-grams as one primitive kernel pass — the
     * explode-side twin of [[wordNgrams]] (whose higher-order transform
@@ -273,11 +284,8 @@ object TextFunctions {
       val md = java.security.MessageDigest.getInstance("MD5")
       if (text == null) null
       else posGrams(text, n).map { g =>
-        val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var hv = 0L
-        var bi = 0
-        while (bi < 7) { hv = (hv << 8) | (d(bi) & 0xffL); bi += 1 }
-        (hv << 4) | ((d(7) & 0xf0L) >> 4)
+        md5Bits(md.digest(
+          g.getBytes(java.nio.charset.StandardCharsets.UTF_8)), 60)
       }
     }
 
@@ -301,31 +309,20 @@ object TextFunctions {
         val seen = new java.util.HashSet[Long](gs.length * 2)
         val out = Array.newBuilder[Long]
         gs.foreach { g =>
-          val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var hv = 0L
-          var bi = 0
-          while (bi < 8) { hv = (hv << 8) | (d(bi) & 0xffL); bi += 1 }
+          val hv = md5Bits(md.digest(
+            g.getBytes(java.nio.charset.StandardCharsets.UTF_8)), 64)
           if (seen.add(hv)) out += hv
         }
         out.result()
       }
     }
 
-  /** Distinct word n-grams, first-occurrence order, same shingle
-    * convention as [[wordNgrams]] — the JVM form for kernel operators
-    * (e.g. [[graft.operators.Decontaminate]]).
+  /** Distinct word n-grams in first-occurrence order ([[posGrams]]
+    * deduplicated) — the JVM form for kernel operators (e.g.
+    * [[graft.operators.Decontaminate]]).
     */
-  private[graft] def distinctGramsJvm(text: String, n: Int): Array[String] = {
-    val t = if (text == null) "" else text.trim
-    val toks = if (t.isEmpty) Array.empty[String] else t.split("\\s+")
-    val count = math.max(toks.length - (n - 1), 1)
-    val seen = new java.util.LinkedHashSet[String]()
-    var i = 0
-    while (i < count) { seen.add(toks.slice(i, i + n).mkString(" ")); i += 1 }
-    val out = new Array[String](seen.size)
-    seen.toArray(out)
-    out
-  }
+  private[graft] def distinctGramsJvm(text: String, n: Int): Array[String] =
+    posGrams(text, n).distinct
 
   private val hexDigits = "0123456789abcdef".toCharArray
 
@@ -339,9 +336,6 @@ object TextFunctions {
     }
     new String(out)
   }
-
-  private def md5Hex(md: java.security.MessageDigest, s: String): String =
-    digestHex(md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
   /** 8-seed md5 minhash signature — the q24 family (`min md5("s:"+gram)`)
     * as one primitive pass per document instead of 8 interpreted
@@ -358,7 +352,7 @@ object TextFunctions {
       val md = java.security.MessageDigest.getInstance("MD5")
       val prefixes = Array.tabulate(8)(s =>
         (s.toString + ":").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val gs = grams3(text)
+      val gs = posGrams(text, 3)
       val seen = new java.util.HashSet[String]()
       val mins = Array.fill[Array[Byte]](8)(null)
       var i = 0
@@ -383,26 +377,20 @@ object TextFunctions {
   /** 60-bit md5 SimHash (bit-majority over distinct 3-gram shingle
     * hashes, hash = first 15 hex chars of md5 as a long) — one primitive
     * pass per document; the oracle computes the identical family in SQL.
-    * The 60-bit value comes straight from the digest bytes (7 full bytes
-    * + the high nibble of the 8th), no hex round-trip.
+    * The 60-bit value comes straight from the digest bytes
+    * ([[md5Bits]]), no hex round-trip.
     */
   val md5SimHash60Udf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (text: String) =>
       val md = java.security.MessageDigest.getInstance("MD5")
       val seen = new java.util.HashSet[String]()
       val counts = new Array[Int](60)
-      val gs = grams3(text)
+      val gs = posGrams(text, 3)
       var i = 0
       while (i < gs.length) {
         if (seen.add(gs(i))) {
-          val d = md.digest(
-            gs(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          // first 15 hex chars big-endian = bytes 0..6 plus high nibble
-          // of byte 7 — identical to parseLong(hex.substring(0,15), 16)
-          var hv = 0L
-          var bi = 0
-          while (bi < 7) { hv = (hv << 8) | (d(bi) & 0xffL); bi += 1 }
-          hv = (hv << 4) | ((d(7) & 0xf0L) >> 4)
+          val hv = md5Bits(md.digest(
+            gs(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)), 60)
           var b = 0
           while (b < 60) {
             counts(b) += (if (((hv >> b) & 1L) == 1L) 1 else -1)

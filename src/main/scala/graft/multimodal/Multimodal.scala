@@ -544,13 +544,8 @@ object Multimodal {
       rows.map { r =>
         val fp = (if (r.kind == "audio") tryAudioSamples(r.bytes) else None)
           .map { case (samples, rate) => spectralBits(samples, rate) }
-          .getOrElse {
-            val d = md.digest(r.bytes)
-            var hv = 0L
-            var i = 0
-            while (i < 8) { hv = (hv << 8) | (d(i) & 0xffL); i += 1 }
-            hv
-          }
+          .getOrElse(
+            graft.functions.TextFunctions.md5Bits(md.digest(r.bytes), 64))
         (r.media_id, fp)
       }
     }.toDF("media_id", "fingerprint")

@@ -245,10 +245,4 @@ object NoteOps {
       seed: String): DataFrame =
     df.orderBy(md5(concat(lit(seed + ":"), col(idCol).cast("string"))))
       .limit(n)
-
-  /** E4: dedup notes by (resourceType, id) — first wins
-    * (sample/cli.py:163-171).
-    */
-  def dedupByRef(df: DataFrame, typeCol: String, idCol: String): DataFrame =
-    df.dropDuplicates(typeCol, idCol)
 }

@@ -37,11 +37,13 @@ object DupSpans {
       idCol: String,
       textCol: Column,
       n: Int): DataFrame = {
-    // posGrams convention: docs shorter than n yield one whole-text gram
-    // at pos 0; empty text yields one "" gram whose window is filtered
-    // out below by `pos < n_tokens` (n_tokens = 0).
-    val nTokens = when(textCol.isNull || length(trim(textCol)) === 0, lit(0L))
-      .otherwise(size(split(trim(textCol), "\\s+")).cast("long"))
+    // One tokenizer on both sides: n_tokens counts the `tokens`
+    // expression, and md5Grams60Udf builds its grams from tokensLocal,
+    // the expression's JVM twin. Docs shorter than n yield one
+    // whole-text gram at pos 0; empty text yields one "" gram whose
+    // window is filtered out below by `pos < n_tokens` (n_tokens = 0).
+    val nTokens = when(textCol.isNull, lit(0L))
+      .otherwise(TextFunctions.tokenCount(textCol))
       .as("n_tokens")
     val base = docs.select(col(idCol), nTokens, textCol.as("text"))
 

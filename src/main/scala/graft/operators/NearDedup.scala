@@ -44,11 +44,12 @@ object NearDedup {
     * xxhash64) is NOT codegen'd — higher-order functions evaluate
     * interpreted, and it dominated sf0.1 wall time; one UDF per doc is
     * ~10× cheaper and the hash choice is internal to the near-dup
-    * operators (estimates only, never compared across engines).
+    * operators (estimates only, never compared across engines). Tokens
+    * are [[TextFunctions.tokensLocal]]'s, minus empty ones (the q25/q26
+    * oracles filter them the same way).
     */
   private def shingleHashArray(text: String, n: Int): Array[Long] = {
-    if (text == null) return Array.empty[Long]
-    val toks = text.trim.split("\\s+").filter(_.nonEmpty)
+    val toks = TextFunctions.tokensLocal(text).filter(_.nonEmpty)
     if (toks.isEmpty) return Array.empty[Long]
     val count = math.max(toks.length - n + 1, 1)
     val out = new Array[Long](count)
@@ -248,28 +249,38 @@ object NearDedup {
       .otherwise(inter.cast("double") / union.cast("double"))
   }
 
-  /** LSH band table of a corpus in the md5-minhash-8 family (4 bands ×
-    * 2 rows): (id, band, bv) — the searchable index form of the q36
-    * banding, and the base [[applyBandChanges]] maintains under
+  /** THE md5-minhash-8 LSH band table (4 bands × 2 rows): each row of
+    * a signature frame `sigs` (idCol, `sig` from
+    * [[TextFunctions.md5MinHash8Udf]]) becomes 4 rows (idCol, [sig,]
+    * band, bv) with `bv = sig[2·band] || '|' || sig[2·band + 1]`.
+    * `keepSig` carries the signature along as join payload. Every
+    * md5-banded consumer builds its bands here: the q36/q38 family,
+    * [[CrossDedup]], the streaming cross-dedup and q116's
+    * [[applyBandChanges]].
+    */
+  private[graft] def md5Bands(sigs: DataFrame, idCol: String,
+      keepSig: Boolean = false): DataFrame = {
+    val bandArr = array((0 until 4).map { b =>
+      concat_ws("|", col("sig")(2 * b), col("sig")(2 * b + 1))
+    }: _*)
+    val keep = col(idCol) +: (if (keepSig) Seq(col("sig")) else Nil)
+    sigs.select(keep :+ posexplode(bandArr).as(Seq("band", "bv")): _*)
+      .withColumn("band", col("band").cast("long"))
+  }
+
+  /** The [[md5Bands]] table of a corpus — the searchable index form of
+    * the q36 banding, and the base [[applyBandChanges]] maintains under
     * merges.
     */
   def md5BandTable(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    // stage the signature as its own projection so the 8 element
-    // accesses below index ONE evaluated array — inlining the UDF call
-    // per access would run the whole minhash kernel up to 8× per doc
-    // wherever common-subexpression elimination doesn't apply
+      textCol: String): DataFrame =
+    // the signature is its own projection, so the 8 element accesses
+    // in md5Bands index ONE evaluated array — inlining the UDF call per
+    // access would run the whole minhash kernel up to 8× per doc
     // (CollapseProject keeps the split: the alias is referenced more
     // than once and a UDF is not a cheap expression)
-    val sigs = docs.select(col(idCol),
-      TextFunctions.md5MinHash8Udf(col(textCol)).as("__sig"))
-    val bandArr = array((0 until 4).map { b =>
-      concat_ws("|", col("__sig")(2 * b), col("__sig")(2 * b + 1))
-    }: _*)
-    sigs.select(col(idCol),
-      posexplode(bandArr).as(Seq("band", "bv")))
-      .select(col(idCol), col("band").cast("long").as("band"), col("bv"))
-  }
+    md5Bands(docs.select(col(idCol),
+      TextFunctions.md5MinHash8Udf(col(textCol)).as("sig")), idCol)
 
   /** Incremental LSH index maintenance — the near-dup analog of
     * [[IndexStats.applyChanges]]: consume a merge's change feed and
@@ -324,22 +335,10 @@ object NearDedup {
   val prefixJaccardUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (text: String, frac: Double, n: Int) =>
       val toks = TextFunctions.tokensLocal(text)
-      def grams(ts: Array[String]): java.util.LinkedHashSet[String] = {
-        val count = math.max(ts.length - (n - 1), 1)
-        val out = new java.util.LinkedHashSet[String]()
-        var i = 0
-        while (i < count) {
-          out.add(ts.slice(i, i + n).mkString(" "))
-          i += 1
-        }
-        out
-      }
-      val full = grams(toks)
+      val full = TextFunctions.gramsOf(toks, n).toSet
       val pLen = math.max(math.floor(toks.length * frac).toInt, 1)
-      val pref = grams(toks.take(pLen))
-      var inter = 0
-      val it = pref.iterator()
-      while (it.hasNext) { if (full.contains(it.next())) inter += 1 }
+      val pref = TextFunctions.gramsOf(toks.take(pLen), n).toSet
+      val inter = pref.count(full.contains)
       val union = full.size + pref.size - inter
       if (union == 0) 0.0 else inter.toDouble / union
     }

@@ -36,35 +36,16 @@ object QualityClassifier {
 
   private def md5 = java.security.MessageDigest.getInstance("MD5")
 
-  /** First 15 hex chars of the digest as a long — identical to
-    * `('0x' || substr(md5(s), 1, 15))::BIGINT`.
-    */
-  private def hex60(d: Array[Byte]): Long = {
-    var hv = 0L
-    var bi = 0
-    while (bi < 7) { hv = (hv << 8) | (d(bi) & 0xffL); bi += 1 }
-    (hv << 4) | ((d(7) & 0xf0L) >> 4)
-  }
-
-  /** First 8 hex chars of the digest as a long — identical to
-    * `('0x' || substr(md5(s), 1, 8))::BIGINT`.
-    */
-  private def hex32(d: Array[Byte]): Long = {
-    var hv = 0L
-    var bi = 0
-    while (bi < 4) { hv = (hv << 8) | (d(bi) & 0xffL); bi += 1 }
-    hv
-  }
-
   /** The deterministic weight vector (exposed for the spec and the
-    * oracle-generation doc): weight(b) = hex32(md5("w:" + b)) % 21 − 10.
+    * oracle-generation doc): weight(b) = the first 32 bits of
+    * md5("w:" + b), mod 21, minus 10.
     */
   private[graft] lazy val weights: Array[Long] = {
     val m = md5
     Array.tabulate(Dim) { b =>
       m.reset()
       val d = m.digest(("w:" + b).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      hex32(d) % 21L - 10L
+      TextFunctions.md5Bits(d, 32) % 21L - 10L
     }
   }
 
@@ -80,7 +61,7 @@ object QualityClassifier {
         m.reset()
         val d = m.digest(
           toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        score += w((hex60(d) % Dim).toInt)
+        score += w((TextFunctions.md5Bits(d, 60) % Dim).toInt)
         i += 1
       }
       (toks.length.toLong, score)

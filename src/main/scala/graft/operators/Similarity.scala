@@ -373,7 +373,7 @@ object Similarity {
       byProbe(qs.map { case (_, v, _) => nearestLists(v, centroids, nprobe) })
     exactTopK(vectors(corpus.filter(col(corpusVec).isNotNull), corpusId,
       corpusVec), qs, k) { cv =>
-      byList.getOrElse(nearest(cv, 0, centroids), Array.emptyIntArray)
+      byList.getOrElse(nearestWhole(cv, centroids), Array.emptyIntArray)
     }
   }
 
@@ -409,8 +409,10 @@ object Similarity {
 
   /** The `nprobe` lists whose centroids are nearest to a query. */
   private def nearestLists(v: Array[Float], cs: Array[Array[Double]],
-      nprobe: Int): Array[Int] =
+      nprobe: Int): Array[Int] = {
+    cs.foreach(requireWhole(v, _))
     cs.indices.sortBy(ci => (dist2(v, 0, cs(ci)), ci)).take(nprobe).toArray
+  }
 
   /** `Σ v(off + j)·c(j)`: a float vector (or one subspace of it) against
     * a double centroid or hyperplane.
@@ -421,6 +423,28 @@ object Similarity {
     val n = math.min(v.length - off, c.length)
     while (j < n) { d += v(off + j).toDouble * c(j); j += 1 }
     d
+  }
+
+  /** The cosine fold's ragged-vector rule for a WHOLE vector against a
+    * centroid or hyperplane. [[dist2]] and [[dotAt]] read only the
+    * overlap (they also serve PQ's subspaces), so every whole-vector
+    * assignment and hash checks here: a short row fails even when no
+    * query would go on to score it.
+    */
+  private def requireWhole(v: Array[Float], c: Array[Double]): Unit =
+    require(v.length == c.length,
+      s"dimension mismatch ${v.length} vs ${c.length}")
+
+  /** [[nearest]] over the whole of `v`. */
+  private def nearestWhole(v: Array[Float], cs: Array[Array[Double]]): Int = {
+    cs.foreach(requireWhole(v, _))
+    nearest(v, 0, cs)
+  }
+
+  /** [[dotAt]] over the whole of `v`. */
+  private def dotWhole(v: Array[Float], c: Array[Double]): Double = {
+    requireWhole(v, c)
+    dotAt(v, 0, c)
   }
 
   private def sumSq(c: Array[Double]): Double = {
@@ -766,7 +790,7 @@ object Similarity {
     val sample = trainSample(corpus, corpusId, corpusVec, dim)
     val coarse = lloydInMemory(sample, 0, dim, nlist, iters)
     val pq = pqTrainOnSample(
-      sample.map(v => residual(v, coarse(nearest(v, 0, coarse)))),
+      sample.map(v => residual(v, coarse(nearestWhole(v, coarse)))),
       dim, m, ksub, iters)
     val bcCoarse = spark.sparkContext.broadcast(coarse)
     val bcPq = spark.sparkContext.broadcast(pq)
@@ -780,7 +804,7 @@ object Similarity {
         rows.collect {
           case (id, v) if v != null =>
             requireDim("row", id, v, dim)
-            val li = nearest(v, 0, csr)
+            val li = nearestWhole(v, csr)
             (id, li, encode(residual(v, csr(li)), cb))
         }
       }
@@ -807,7 +831,7 @@ object Similarity {
     qRaw.foreach { case (id, v, _) => requireDim("query", id, v, dim) }
     val qData: Array[(Long, Double, Array[Double], Array[Array[Double]])] =
       qRaw.map { case (id, v, norm) =>
-        (id, norm, coarse.map(dotAt(v, 0, _)), queryLut(v, pq))
+        (id, norm, coarse.map(dotWhole(v, _)), queryLut(v, pq))
       }
     val byList = byProbe(qRaw.map { case (_, v, _) =>
       nearestLists(v, coarse, nprobe) })
@@ -926,7 +950,7 @@ object Similarity {
     val hs = hyperplanes(dim, planes, seed)
     val f = udf { (a: scala.collection.Seq[Float]) =>
       val xa = floats(a)
-      bucketOf(hs.map(dotAt(xa, 0, _)))
+      bucketOf(hs.map(dotWhole(xa, _)))
     }
     f(vec)
   }
@@ -980,12 +1004,12 @@ object Similarity {
     // (query, neighbor) pair meeting once (one bucket per row), so no
     // dedup stage is needed.
     val byBucket = byProbe(qs.map { case (_, v, _) =>
-      val dots = hs.map(dotAt(v, 0, _))
+      val dots = hs.map(dotWhole(v, _))
       val b0 = bucketOf(dots)
       probeMasks(dots).map(b0 ^ _)
     })
     exactTopK(vectors(corpus, corpusId, corpusVec), qs, k) { cv =>
-      byBucket.getOrElse(bucketOf(hs.map(dotAt(cv, 0, _))),
+      byBucket.getOrElse(bucketOf(hs.map(dotWhole(cv, _))),
         Array.emptyIntArray)
     }
   }

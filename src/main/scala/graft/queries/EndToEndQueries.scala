@@ -7,6 +7,8 @@ import graft.functions.TextFunctions.{normalizeText, tokenCount, tokens}
 import graft.operators.{Decontaminate, GraphOps, Packing, QualityRules,
   Sampling}
 import graft.tables.Tables
+import TextQueries.{componentsCtesSql, gramsSql, idCopiesSql, md5CandCtesSql,
+  tokensSql}
 
 /** q195 — the END-TO-END curation pipeline as ONE registered query: the
   * composition a real pretraining run executes, chaining seven stages
@@ -159,11 +161,9 @@ object EndToEndQueries {
     val stopCases = Stop.map(w =>
       s"(CASE WHEN regexp_matches(text, '\\b$w\\b') THEN 1 ELSE 0 END)")
       .mkString("\n      |    + ")
-    s"""WITH RECURSIVE input AS (
-      |  SELECT doc_id, source, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id, source, text || ' qq' AS text
-      |  FROM documents WHERE doc_id % 7 = 0),
+    val input = idCopiesSql("documents", "source, text", 7,
+      copyCols = Some("source, text || ' qq' AS text"))
+    s"""WITH RECURSIVE input AS ($input),
       |norm AS (
       |  SELECT doc_id, source,
       |    trim(regexp_replace(lower(regexp_replace(nfc_normalize(text),
@@ -172,8 +172,7 @@ object EndToEndQueries {
       |  FROM input),
       |qm AS (
       |  SELECT doc_id, source, text,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-      |      AS n_words,
+      |    CAST(len(${tokensSql("text")}) AS BIGINT) AS n_words,
       |    CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT)
       |      AS word_chars,
       |    CAST(length(text) - length(replace(text, '#', ''))
@@ -199,44 +198,21 @@ object EndToEndQueries {
       |    AND n_stop >= 2),
       |ex AS (SELECT MIN(doc_id) AS doc_id FROM qk GROUP BY md5(text)),
       |exd AS (SELECT qk.* FROM qk JOIN ex USING (doc_id)),
-      |${TextQueries.md5SigCtesSql("exd")},
-      |bands AS (
-      |  SELECT doc_id, r.i AS band,
-      |    sig[2*r.i+1] || '|' || sig[2*r.i+2] AS bv
-      |  FROM sigs CROSS JOIN range(0, 4) r(i)),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM bands a JOIN bands b
-      |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
-      |edges AS (
-      |  SELECT id_a AS src, id_b AS dst FROM cand
-      |  UNION
-      |  SELECT id_b AS src, id_a AS dst FROM cand),
-      |reach AS (
-      |  SELECT doc_id AS id, doc_id AS comp FROM exd
-      |  UNION
-      |  SELECT e.dst AS id, r.comp
-      |  FROM reach r JOIN edges e ON e.src = r.id
-      |  WHERE r.comp < e.dst),
-      |comps AS (SELECT id, MIN(comp) AS comp FROM reach GROUP BY id),
-      |ndk AS (SELECT MIN(id) AS doc_id FROM comps GROUP BY comp),
+      |${md5CandCtesSql("exd")},
+      |${componentsCtesSql("cand", "exd")},
+      |ndk AS (SELECT MIN(id) AS doc_id FROM comps GROUP BY component),
       |nd AS (SELECT exd.* FROM exd JOIN ndk USING (doc_id)),
       |bench AS (
       |  SELECT tk[1:CAST(greatest(floor(len(tk) * 0.6), 1) AS INT)] AS p
-      |  FROM (SELECT string_split_regex(trim(text), '\\s+') AS tk
+      |  FROM (SELECT ${tokensSql("text")} AS tk
       |        FROM norm WHERE doc_id % 97 = 0 AND doc_id < 1000000)),
       |bgrams AS (
       |  SELECT DISTINCT g FROM (
-      |    SELECT unnest(list_transform(range(1, greatest(len(p) - 4, 1) + 1),
-      |      i -> array_to_string(p[i:i+4], ' '))) AS g
-      |    FROM bench)),
+      |    SELECT unnest(${gramsSql("p", 5)}) AS g FROM bench)),
       |cgrams AS (
       |  SELECT DISTINCT doc_id, g FROM (
-      |    SELECT doc_id,
-      |      unnest(list_transform(range(1, greatest(len(tk) - 4, 1) + 1),
-      |        i -> array_to_string(tk[i:i+4], ' '))) AS g
-      |    FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-      |          FROM nd))),
+      |    SELECT doc_id, unnest(${gramsSql("tk", 5)}) AS g
+      |    FROM (SELECT doc_id, ${tokensSql("text")} AS tk FROM nd))),
       |dirty AS (SELECT DISTINCT doc_id FROM cgrams JOIN bgrams USING (g)),
       |clean AS (
       |  SELECT doc_id, source, n_words AS n_toks FROM nd

@@ -49,11 +49,7 @@ object PipelineQueries {
        |input AS (
        |  SELECT doc_id, text FROM refc
        |  UNION ALL SELECT doc_id, text FROM inc),
-       |${TextQueries.md5SigCtesSql("input")},
-       |bands AS (
-       |  SELECT doc_id, r.i AS band,
-       |    sig[2*r.i+1] || '|' || sig[2*r.i+2] AS bv
-       |  FROM sigs CROSS JOIN range(0, 4) r(i)),
+       |${TextQueries.md5BandCtesSql("input")},
        |near AS (
        |  SELECT bi.doc_id, CAST(COUNT(DISTINCT br.doc_id) AS BIGINT) AS n_near
        |  FROM bands bi

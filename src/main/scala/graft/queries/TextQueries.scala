@@ -13,6 +13,115 @@ import org.apache.spark.sql.functions._
   */
 object TextQueries {
 
+  // ---- DuckDB oracle fragments of the near-dup family --------------------
+  // Each text-dedup building block is written once, as SQL over a named
+  // input relation, and the oracle statements are built from them: the
+  // tokenizer, the gram builder, docs ∪ copies, the md5-minhash
+  // signature, its band table and candidate pairs, and the recursive-CTE
+  // connected components. A fix to one rule lands in every oracle.
+
+  /** DuckDB twin of [[tokens]] over the text expression `text`. */
+  private[queries] def tokensSql(text: String): String =
+    s"string_split_regex(trim($text), '\\s+')"
+
+  /** DuckDB twin of [[graft.functions.TextFunctions.gramsOf]]: the
+    * positional word `n`-grams of the token list `t`.
+    */
+  private[queries] def gramsSql(t: String, n: Int): String =
+    s"list_transform(range(1, greatest(len($t) - ${n - 1}, 1) + 1), " +
+      s"i -> array_to_string($t[i:i+${n - 1}], ' '))"
+
+  /** `from` ∪ a copy of its every `mod`-th row at doc_id + 1,000,000:
+    * the SQL twin of [[Tables.withIdCopies]]. `cols` are the non-id
+    * columns; `copyCols`, when given, replaces them in the copy.
+    */
+  private[queries] def idCopiesSql(from: String, cols: String, mod: Int,
+      copyCols: Option[String] = None): String =
+    s"""SELECT doc_id, $cols FROM $from
+       |  UNION ALL
+       |  SELECT doc_id + 1000000 AS doc_id, ${copyCols.getOrElse(cols)}
+       |  FROM $from WHERE doc_id % $mod = 0""".stripMargin
+
+  /** The non-id columns of `documents`, in table order. */
+  private val DocCols = "text, lang, source, n_chars"
+
+  /** `toks(doc_id, t)` and `g(doc_id, grams)`: the tokens and the
+    * distinct word 3-gram set of each row of `from`.
+    */
+  private[queries] def gramSetCtesSql(from: String): String =
+    s"""toks AS (SELECT doc_id, ${tokensSql("text")} AS t FROM $from),
+       |g AS (
+       |  SELECT doc_id, list_distinct(${gramsSql("t", 3)}) AS grams
+       |  FROM toks)""".stripMargin
+
+  /** [[gramSetCtesSql]] + `sigs(doc_id, sig)`: THE md5-minhash signature
+    * convention, seed s's minimum of `md5('s:' || gram)` over the gram
+    * set ([[md5MinHash8Udf]]).
+    */
+  private[queries] def md5SigCtesSql(from: String): String = {
+    val mins = (0 until 8).map { s =>
+      s"list_min(list_transform(grams, x -> md5('$s:' || x)))"
+    }.mkString(",\n    ")
+    s"""${gramSetCtesSql(from)},
+       |sigs AS (
+       |  SELECT doc_id, [
+       |    $mins
+       |  ] AS sig
+       |  FROM g)""".stripMargin
+  }
+
+  /** [[md5SigCtesSql]] + `bands(doc_id, band, bv)`: the
+    * [[NearDedup.md5Bands]] table, 4 bands × 2 rows.
+    */
+  private[queries] def md5BandCtesSql(from: String): String =
+    s"""${md5SigCtesSql(from)},
+       |bands AS (
+       |  SELECT doc_id, r.i AS band,
+       |    sig[2*r.i+1] || '|' || sig[2*r.i+2] AS bv
+       |  FROM sigs CROSS JOIN range(0, 4) r(i))""".stripMargin
+
+  /** [[md5BandCtesSql]] + `cand(id_a, id_b)`: the distinct pairs that
+    * share a band, id_a < id_b.
+    */
+  private[queries] def md5CandCtesSql(from: String): String =
+    s"""${md5BandCtesSql(from)},
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** `edges`, `reach` and `comps(id, component)`: the connected
+    * components of the pairs `pairs(id_a, id_b)` over the nodes
+    * `nodes(doc_id)` by recursive-CTE closure, each labelled by its
+    * lowest id. The statement must open with `WITH RECURSIVE`.
+    */
+  private[queries] def componentsCtesSql(pairs: String,
+      nodes: String): String =
+    s"""edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM $pairs
+       |  UNION
+       |  SELECT id_b AS src, id_a AS dst FROM $pairs),
+       |reach AS (
+       |  SELECT doc_id AS id, doc_id AS comp FROM $nodes
+       |  UNION
+       |  SELECT e.dst AS id, r.comp
+       |  FROM reach r JOIN edges e ON e.src = r.id
+       |  WHERE r.comp < e.dst),
+       |comps AS (
+       |  SELECT id, MIN(comp) AS component FROM reach GROUP BY id)""".stripMargin
+
+  /** The docs ∪ copies corpus of the near-dup queries: every 7th doc
+    * again at +1,000,000, in a single scan ([[Tables.withIdCopies]]; a
+    * union form read the text column once per branch, ~0.5s tax per
+    * consumer at sf0.1). [[idCopiesSql]] is its oracle twin.
+    */
+  // NOT spread here: consumers that run heavy kernels spread at the
+  // kernel site (md5Sigs, qSetSimJoin) — a blanket repartition would
+  // also ride the NON-kernel uses (e.g. q87's quality side) and add a
+  // visible exchange to plans whose budget is one
+  private def corpusWithCopies(spark: SparkSession, dir: String): DataFrame =
+    Tables.withIdCopies(Tables.documents(spark, dir), "doc_id", 7, 1000000L)
+
   /** q20 — corpus stats per language: doc counts, token totals, length
     * averages. Tokenization = whitespace split of trimmed text on both
     * engines.
@@ -78,11 +187,7 @@ object TextQueries {
   }
 
   val qExactDedupSql: String =
-    """WITH input AS (
-      |  SELECT * FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-      |  FROM documents WHERE doc_id % 5 = 0)
+    s"""WITH input AS (${idCopiesSql("documents", DocCols, 5)})
       |SELECT md5(text) AS h, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
       |FROM input GROUP BY md5(text)""".stripMargin
 
@@ -137,20 +242,9 @@ object TextQueries {
   }
 
   val qMinHashSigSql: String = {
-    val mins = (0 until 8).map { s =>
-      s"  list_min(list_transform(grams, x -> md5('$s:' || x))) AS mh_$s"
-    }.mkString(",\n")
-    s"""WITH toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-       |  FROM documents),
-       |g AS (
-       |  SELECT doc_id,
-       |    list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-       |      i -> array_to_string(t[i:i+2], ' '))) AS grams
-       |  FROM toks)
-       |SELECT doc_id,
-       |$mins
-       |FROM g""".stripMargin
+    val mhs = (0 until 8).map(s => s"sig[${s + 1}] AS mh_$s").mkString(", ")
+    s"""WITH ${md5SigCtesSql("documents")}
+       |SELECT doc_id, $mhs FROM sigs""".stripMargin
   }
 
   /** q25 — MinHash+LSH near-dup candidate pairs (no SQL oracle: LSH
@@ -158,16 +252,11 @@ object TextQueries {
     * NearDedupSpec's exact-Jaccard cross-check). Input is seeded with
     * exact copies so recall is observable.
     */
-  def qMinHashPairs(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val copies = docs
-      .filter(col("doc_id") % 7 === 0)
-      .withColumn("doc_id", col("doc_id") + lit(1000000L))
+  def qMinHashPairs(spark: SparkSession, dir: String): DataFrame =
     NearDedup
-      .minHashCandidates(docs.unionByName(copies), "doc_id", "text")
+      .minHashCandidates(corpusWithCopies(spark, dir), "doc_id", "text")
       .filter(col("jaccard_est") >= 0.5)
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** Shared DuckDB CTE prefix for the FNV-shingle oracles (q25/q26):
     * docs ∪ every-7th-doc re-keyed copies, non-empty whitespace tokens,
@@ -179,20 +268,13 @@ object TextQueries {
     * codepoint 0x79 at every SF).
     */
   private val fnvShingleCtes: String =
-    """WITH all_docs AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-      |  WHERE doc_id % 7 = 0),
+    s"""WITH all_docs AS (${idCopiesSql("documents", "text", 7)}),
       |toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')
-      |      AS t
+      |  SELECT doc_id, list_filter(${tokensSql("text")}, x -> x <> '') AS t
       |  FROM all_docs),
       |shing AS (
-      |  SELECT doc_id, array_to_string(t[i:i+2], ' ') || ' ' AS s
-      |  FROM (SELECT doc_id, t,
-      |          unnest(range(1, greatest(len(t) - 2, 1) + 1)) AS i
+      |  SELECT doc_id, g || ' ' AS s
+      |  FROM (SELECT doc_id, unnest(${gramsSql("t", 3)}) AS g
       |        FROM toks WHERE len(t) > 0)),
       |fnv AS (
       |  SELECT doc_id,
@@ -248,16 +330,11 @@ object TextQueries {
   }
 
   /** q26 — SimHash near-dup candidates with hamming distance. */
-  def qSimHashPairs(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val copies = docs
-      .filter(col("doc_id") % 7 === 0)
-      .withColumn("doc_id", col("doc_id") + lit(1000000L))
+  def qSimHashPairs(spark: SparkSession, dir: String): DataFrame =
     NearDedup
-      .simHashCandidates(docs.unionByName(copies), "doc_id", "text",
+      .simHashCandidates(corpusWithCopies(spark, dir), "doc_id", "text",
         maxHamming = 3)
       .orderBy(col("id_a"), col("id_b"))
-  }
 
   /** q26's oracle: same FNV shingles, then the SimHash bit votes (±1
     * per bit over the shingle MULTISET), Charikar 4×16-bit block
@@ -323,19 +400,15 @@ object TextQueries {
     )
 
   val qNgramJaccardSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      |  FROM documents),
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
       |pairs AS (
       |  SELECT doc_id, t,
       |    t[1:CAST(greatest(floor(len(t) * 0.6), 1) AS INT)] AS p
       |  FROM toks),
       |grams AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-      |      i -> array_to_string(t[i:i+2], ' '))) AS ga,
-      |    list_distinct(list_transform(range(1, greatest(len(p) - 2, 1) + 1),
-      |      i -> array_to_string(p[i:i+2], ' '))) AS gb
+      |  SELECT doc_id, list_distinct(${gramsSql("t", 3)}) AS ga,
+      |    list_distinct(${gramsSql("p", 3)}) AS gb
       |  FROM pairs)
       |SELECT doc_id,
       |  CASE WHEN len(list_distinct(list_concat(ga, gb))) = 0 THEN 0.0
@@ -466,15 +539,10 @@ object TextQueries {
       )
 
   val qRepetitionSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      |  FROM documents),
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
       |arr AS (
-      |  SELECT doc_id, t,
-      |    list_transform(range(1, greatest(len(t) - 1, 1) + 1),
-      |      i -> array_to_string(t[i:i+1], ' ')) AS b,
-      |    list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-      |      i -> array_to_string(t[i:i+2], ' ')) AS r
+      |  SELECT doc_id, t, ${gramsSql("t", 2)} AS b, ${gramsSql("t", 3)} AS r
       |  FROM toks),
       |counts AS (
       |  SELECT doc_id, len(t) AS n_tok, len(b) AS n_bi, len(r) AS n_tri,
@@ -566,25 +634,18 @@ object TextQueries {
   }
 
   val qContaminationSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      |  FROM documents),
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
       |bench AS (
       |  SELECT doc_id AS bench_id,
       |    t[1:CAST(greatest(floor(len(t) * 0.6), 1) AS INT)] AS p
       |  FROM toks WHERE doc_id % 97 = 0),
       |bgrams AS (
       |  SELECT DISTINCT bench_id, g FROM (
-      |    SELECT bench_id,
-      |      unnest(list_transform(range(1, greatest(len(p) - 4, 1) + 1),
-      |        i -> array_to_string(p[i:i+4], ' '))) AS g
-      |    FROM bench)),
+      |    SELECT bench_id, unnest(${gramsSql("p", 5)}) AS g FROM bench)),
       |cgrams AS (
       |  SELECT DISTINCT doc_id, g FROM (
-      |    SELECT doc_id,
-      |      unnest(list_transform(range(1, greatest(len(t) - 4, 1) + 1),
-      |        i -> array_to_string(t[i:i+4], ' '))) AS g
-      |    FROM toks))
+      |    SELECT doc_id, unnest(${gramsSql("t", 5)}) AS g FROM toks))
       |SELECT doc_id, COUNT(DISTINCT c.g) AS n_shared_grams,
       |  COUNT(DISTINCT bench_id) AS n_bench_hit
       |FROM cgrams c JOIN bgrams b ON c.g = b.g
@@ -619,16 +680,12 @@ object TextQueries {
   }
 
   val qCorpusPrepareSql: String =
-    """WITH corpus AS (
-      |  SELECT * FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-      |  FROM documents WHERE doc_id % 5 = 0),
+    s"""WITH corpus AS (${idCopiesSql("documents", DocCols, 5)}),
       |keep AS (
       |  SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
       |m AS (
       |  SELECT c.doc_id, lang, text,
-      |    string_split_regex(trim(text), '\s+') AS t
+      |    ${tokensSql("text")} AS t
       |  FROM corpus c JOIN keep k ON c.doc_id = k.doc_id),
       |f AS (
       |  SELECT doc_id, lang, len(t) AS n_tok FROM m
@@ -784,14 +841,9 @@ object TextQueries {
   }
 
   val qWinnowFpSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id,
-      |    list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-      |      i -> array_to_string(t[i:i+2], ' ')) AS grams
-      |  FROM toks),
+    s"""WITH toks AS (
+      |  SELECT doc_id, ${tokensSql("text")} AS t FROM documents),
+      |g AS (SELECT doc_id, ${gramsSql("t", 3)} AS grams FROM toks),
       |h AS (
       |  SELECT doc_id,
       |    list_transform(grams, x ->
@@ -818,14 +870,7 @@ object TextQueries {
       .select(col("doc_id"), md5SimHash60Udf(col("text")).as("simhash"))
 
   val qSimHashMd5Sql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-      |      i -> array_to_string(t[i:i+2], ' '))) AS grams
-      |  FROM toks),
+    s"""WITH ${gramSetCtesSql("documents")},
       |h AS (
       |  SELECT doc_id, ('0x' || substr(md5(gram), 1, 15))::BIGINT AS hv
       |  FROM (SELECT doc_id, unnest(grams) AS gram FROM g)),
@@ -838,23 +883,6 @@ object TextQueries {
       |  CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << i) ELSE 0 END) AS BIGINT)
       |    AS simhash
       |FROM bits GROUP BY doc_id""".stripMargin
-
-  /** q36 — LSH banded candidate pairs over the q24 md5 minhash family
-    * (4 bands × 2 rows), oracle-exact end to end: the full
-    * signature → band → self-join → agreement pipeline that q25 runs
-    * with its fast FNV kernel. Only band-equal signatures meet in the
-    * join (cost ∝ Σ bucket², never O(n²)).
-    */
-  /** The docs∪copies corpus q36/q38 near-dup over — single-scan
-    * ([[Tables.withIdCopies]]; a union form read the text column once
-    * per branch, ~0.5s tax per consumer at sf0.1).
-    */
-  // NOT spread here: consumers that run heavy kernels spread at the
-  // kernel site (md5Sigs, qSetSimJoin) — a blanket repartition would
-  // also ride the NON-kernel uses (e.g. q87's quality side) and add a
-  // visible exchange to plans whose budget is one
-  private def corpusWithCopies(spark: SparkSession, dir: String): DataFrame =
-    Tables.withIdCopies(Tables.documents(spark, dir), "doc_id", 7, 1000000L)
 
   /** md5-minhash signatures (doc_id, sig array<string>), materialized
     * once: q36/q38 reference this frame on both band-join sides and
@@ -870,28 +898,13 @@ object TextQueries {
       .select(col("doc_id"), md5MinHash8Udf(col("text")).as("sig"))
       .localCheckpoint(true)
 
-  /** LSH banding (4 bands × 2 rows) of an md5Sigs frame. `withSig`
-    * carries the whole signature as join payload — the agreement column
-    * then comes straight off the matched rows instead of two join-backs
-    * against the corpus (the q25 FNV pipeline's shape; two fewer
-    * shuffles, and the payload is 8 short strings per row).
-    */
-  private def bandedSigs(sigs: DataFrame,
-      withSig: Boolean): DataFrame = {
-    val bandArr = array((0 until 4).map { b =>
-      concat_ws("|", col("sig")(2 * b), col("sig")(2 * b + 1))
-    }: _*)
-    val cols = col("doc_id") +: (if (withSig) Seq(col("sig")) else Nil)
-    sigs.select(cols :+ posexplode(bandArr).as(Seq("band", "bv")): _*)
-  }
-
   /** Banding → distinct candidate pairs (ids only). Emits the full
     * per-bucket clique — required when individual pairs are verified
     * downstream (q36's agreement column, q68's containment). For
     * components-only consumers use [[bandStarEdges]].
     */
   private[graft] def bandCandidates(sigs: DataFrame): DataFrame = {
-    val bands = bandedSigs(sigs, withSig = false)
+    val bands = NearDedup.md5Bands(sigs, "doc_id")
     bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
@@ -919,7 +932,7 @@ object TextQueries {
   private[graft] def bandStarEdges(sigs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bv"))
-    bandedSigs(sigs, withSig = false)
+    NearDedup.md5Bands(sigs, "doc_id")
       .withColumn("__hub", min(col("doc_id")).over(w))
       .filter(col("doc_id") =!= col("__hub"))
       .select(col("__hub").as("id_a"), col("doc_id").as("id_b"))
@@ -938,9 +951,17 @@ object TextQueries {
       same.toDouble / 8.0
   }
 
+  /** q36 — LSH banded candidate pairs over the q24 md5 minhash family
+    * (4 bands × 2 rows), oracle-exact end to end: the full
+    * signature → band → self-join → agreement pipeline that q25 runs
+    * with its fast FNV kernel. Only band-equal signatures meet in the
+    * join (cost ∝ Σ bucket², never O(n²)).
+    */
   def qBandPairs(spark: SparkSession, dir: String): DataFrame = {
-    val bands = bandedSigs(md5Sigs(corpusWithCopies(spark, dir)),
-      withSig = true)
+    // the whole signature rides the band join as payload: the agreement
+    // column comes straight off the matched rows, not two join-backs
+    val bands = NearDedup.md5Bands(md5Sigs(corpusWithCopies(spark, dir)),
+      "doc_id", keepSig = true)
     bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
@@ -1010,20 +1031,9 @@ object TextQueries {
   }
 
   val qLshEvalSql: String =
-    s"""WITH input AS (
-       |  SELECT * FROM documents WHERE doc_id % 5 = 0
-       |  UNION ALL
-       |  SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-       |  FROM documents WHERE doc_id % 7 = 0 AND doc_id % 5 = 0),
-       |${md5SigCtesSql("input")},
-       |bands AS (
-       |  SELECT doc_id, r.i AS band,
-       |    sig[2*r.i+1] || '|' || sig[2*r.i+2] AS bv
-       |  FROM sigs CROSS JOIN range(0, 4) r(i)),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
+    s"""WITH base AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
+       |input AS (${idCopiesSql("base", DocCols, 7)}),
+       |${md5CandCtesSql("input")},
        |ge AS (SELECT doc_id, unnest(grams) AS gr FROM g),
        |sz AS (SELECT doc_id, len(grams) AS n FROM g),
        |inter AS (
@@ -1079,30 +1089,18 @@ object TextQueries {
   }
 
   val qDedupGroupsSql: String =
-    """WITH RECURSIVE base_edges AS (
-      |  SELECT a.doc_id AS src, b.doc_id AS dst
+    s"""WITH RECURSIVE base_edges AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
       |  FROM documents a JOIN documents b
       |    ON b.doc_id = a.doc_id + 1 AND a.lang = b.lang
       |   AND a.doc_id % 32 <> 31
       |  UNION ALL
-      |  SELECT doc_id AS src, doc_id + 1000000 AS dst
+      |  SELECT doc_id AS id_a, doc_id + 1000000 AS id_b
       |  FROM documents WHERE doc_id % 7 = 0),
-      |edges AS (
-      |  SELECT src, dst FROM base_edges
-      |  UNION
-      |  SELECT dst AS src, src AS dst FROM base_edges),
-      |nodes AS (
-      |  SELECT doc_id AS id FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS id FROM documents WHERE doc_id % 7 = 0),
-      |reach AS (
-      |  SELECT id, id AS comp FROM nodes
-      |  UNION
-      |  SELECT e.dst AS id, r.comp
-      |  FROM reach r JOIN edges e ON e.src = r.id
-      |  WHERE r.comp < e.dst)
-      |SELECT id AS doc_id, CAST(MIN(comp) AS BIGINT) AS component
-      |FROM reach GROUP BY id""".stripMargin
+      |nodes AS (${idCopiesSql("documents", "text", 7)}),
+      |${componentsCtesSql("base_edges", "nodes")}
+      |SELECT id AS doc_id, CAST(component AS BIGINT) AS component
+      |FROM comps""".stripMargin
 
   /** q38 — END-TO-END corpus dedup, oracle-exact: md5-minhash
     * signatures → star-reduced band edges ([[bandStarEdges]] — m−1
@@ -1127,49 +1125,10 @@ object TextQueries {
     * docs∪copies → distinct 3-grams → md5 minhash signatures → banded
     * candidate pairs → recursive-CTE connected components.
     */
-  private val dedupCtePrefix: String = {
-    val mins = (0 until 8).map { s =>
-      s"list_min(list_transform(grams, x -> md5('$s:' || x)))"
-    }.mkString(",\n      ")
-    s"""WITH RECURSIVE input AS (
-       |  SELECT * FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-       |  FROM documents WHERE doc_id % 7 = 0),
-       |toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-       |  FROM input),
-       |g AS (
-       |  SELECT doc_id,
-       |    list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-       |      i -> array_to_string(t[i:i+2], ' '))) AS grams
-       |  FROM toks),
-       |sigs AS (
-       |  SELECT doc_id, [
-       |      $mins
-       |    ] AS sig
-       |  FROM g),
-       |bands AS (
-       |  SELECT doc_id, r.i AS band,
-       |    sig[2*r.i+1] || '|' || sig[2*r.i+2] AS bv
-       |  FROM sigs CROSS JOIN range(0, 4) r(i)),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id),
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM cand
-       |  UNION
-       |  SELECT id_b AS src, id_a AS dst FROM cand),
-       |reach AS (
-       |  SELECT doc_id AS id, doc_id AS comp FROM input
-       |  UNION
-       |  SELECT e.dst AS id, r.comp
-       |  FROM reach r JOIN edges e ON e.src = r.id
-       |  WHERE r.comp < e.dst),
-       |comps AS (
-       |  SELECT id, MIN(comp) AS component FROM reach GROUP BY id)""".stripMargin
-  }
+  private val dedupCtePrefix: String =
+    s"""WITH RECURSIVE input AS (${idCopiesSql("documents", DocCols, 7)}),
+       |${md5CandCtesSql("input")},
+       |${componentsCtesSql("cand", "input")}""".stripMargin
 
   val qDedupCorpusSql: String =
     s"""$dedupCtePrefix
@@ -1204,7 +1163,7 @@ object TextQueries {
         spark, bandStarEdges(baseSigs), "id_a", "id_b",
         nodes = Some(docs.select(col("doc_id"))))
         .write.mode("overwrite").parquet(compsDir)
-      bandedSigs(baseSigs, withSig = false)
+      NearDedup.md5Bands(baseSigs, "doc_id")
         .write.mode("overwrite").parquet(bandsDir)
       new java.io.File(base, "_done").createNewFile()
     }
@@ -1230,7 +1189,7 @@ object TextQueries {
     // from their parquet artifact like a real nightly job would
     val (baseComps, baseBands) = incrBaseState(spark, dir)
     // today's batch: hash ITSELF only, then probe the band index
-    val newBands = bandedSigs(md5Sigs(newDocs), withSig = false)
+    val newBands = NearDedup.md5Bands(md5Sigs(newDocs), "doc_id")
     val newPairs = newBands.as("a")
       .join(baseBands.unionByName(newBands).as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
@@ -1284,52 +1243,9 @@ object TextQueries {
        |  CAST(n_chars AS BIGINT) AS keep_quality
        |FROM ranked WHERE rn = 1""".stripMargin
 
-  /** The md5-minhash signature CTE fragment (tokens → distinct 3-gram
-    * sets → 8-seed md5 minima) over the relation `from` — THE one SQL
-    * statement of the signature convention, shared by the q36, q111,
-    * and q116 oracles so a fix to the gram or signature rule lands in
-    * all of them.
-    */
-  private[queries] def md5SigCtesSql(from: String): String = {
-    val mins = (0 until 8).map { s =>
-      s"list_min(list_transform(grams, x -> md5('$s:' || x)))"
-    }.mkString(",\n      ")
-    s"""toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-       |  FROM $from),
-       |g AS (
-       |  SELECT doc_id,
-       |    list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-       |      i -> array_to_string(t[i:i+2], ' '))) AS grams
-       |  FROM toks),
-       |sigs AS (
-       |  SELECT doc_id, [
-       |      $mins
-       |    ] AS sig
-       |  FROM g)""".stripMargin
-  }
-
-  /** The q36/q111 oracle chain: docs∪copies → signatures → 4×2 bands →
-    * candidate pairs.
-    */
-  private val md5BandCtesSql: String =
-    s"""input AS (
-       |  SELECT * FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-       |  FROM documents WHERE doc_id % 7 = 0),
-       |${md5SigCtesSql("input")},
-       |bands AS (
-       |  SELECT doc_id, r.i AS band,
-       |    sig[2*r.i+1] || '|' || sig[2*r.i+2] AS bv
-       |  FROM sigs CROSS JOIN range(0, 4) r(i)),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)""".stripMargin
-
   val qBandPairsSql: String =
-    s"""WITH $md5BandCtesSql
+    s"""WITH input AS (${idCopiesSql("documents", DocCols, 7)}),
+       |${md5CandCtesSql("input")}
        |SELECT id_a, id_b,
        |  CAST(len(list_filter(range(1, 9), i -> sa.sig[i] = sb.sig[i]))
        |    AS DOUBLE) / 8.0 AS agreement
@@ -1373,7 +1289,8 @@ object TextQueries {
   }
 
   val qContainmentSql: String =
-    s"""WITH $md5BandCtesSql
+    s"""WITH input AS (${idCopiesSql("documents", DocCols, 7)}),
+       |${md5CandCtesSql("input")}
        |SELECT id_a, id_b,
        |  CASE WHEN len(ga.grams) = 0 THEN 0.0
        |    ELSE CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
@@ -1423,10 +1340,8 @@ object TextQueries {
        |    CASE WHEN u.doc_id IS NOT NULL THEN u.text ELSE d.text END
        |      AS text
        |  FROM docs d FULL OUTER JOIN u ON d.doc_id = u.doc_id),
-       |${md5SigCtesSql("merged")}
-       |SELECT doc_id, CAST(r.i AS BIGINT) AS band,
-       |  sig[2*r.i+1] || '|' || sig[2*r.i+2] AS bv
-       |FROM sigs CROSS JOIN range(0, 4) r(i)""".stripMargin
+       |${md5BandCtesSql("merged")}
+       |SELECT doc_id, CAST(band AS BIGINT) AS band, bv FROM bands""".stripMargin
 
   /** q148 — exact set-similarity self-join
     * ([[graft.operators.SetSimJoin.jaccardSelfJoin]]): every pair of
@@ -1450,19 +1365,8 @@ object TextQueries {
       .orderBy("id_a", "id_b")
 
   val qSetSimJoinSql: String =
-    """WITH input AS (
-      |  SELECT * FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-      |  FROM documents WHERE doc_id % 7 = 0),
-      |toks AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-      |  FROM input),
-      |g AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    range(1, greatest(len(t) - 2, 1) + 1),
-      |    i -> array_to_string(t[i:i+2], ' '))) AS grams
-      |  FROM toks),
+    s"""WITH input AS (${idCopiesSql("documents", DocCols, 7)}),
+      |${gramSetCtesSql("input")},
       |occ AS (SELECT doc_id, unnest(grams) AS tok FROM g),
       |dfr AS (SELECT tok, count(*) AS df FROM occ GROUP BY tok),
       |srt AS (

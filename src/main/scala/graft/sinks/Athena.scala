@@ -1,7 +1,6 @@
 package graft.sinks
 
 import graft.fhir.FhirSchemas
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Athena integration behind a narrow client trait (SURVEY §2.1 S9 /
@@ -85,10 +84,4 @@ object Athena {
           "pass allowLarge to use it anyway")
     client.unload(s"""SELECT * FROM "$table"""")
   }
-
-  /** Read an unloaded cohort result (CSV with header, Athena's output
-    * format) into a DataFrame for the semi-join (J4).
-    */
-  def readCohort(spark: SparkSession, location: String): DataFrame =
-    spark.read.option("header", "true").csv(location)
 }

@@ -1,8 +1,10 @@
 package graft
 
+import graft.functions.TextFunctions
 import graft.operators.{Annotation, BpeVocab, PortableHll}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => ScTest}
+import org.scalacheck.Prop.propBoolean
 
 /** Property-based checks (scalacheck) over randomized inputs for the
   * operators whose correctness argument is algebraic — each property
@@ -81,5 +83,41 @@ class PropertySpec extends SparkSpecBase {
       massOk && cOk
     }
     check(prop, 10)
+  }
+
+  test("text kernels equal their expression twins, edge whitespace included") {
+    // The JVM kernels and the DuckDB oracles must see one tokenizer and
+    // one gram builder. Tabs, newlines and blanks at a text's edges are
+    // where Java's trim and split part from SQL's. One draw of ~200
+    // texts, all evaluated in one DataFrame (one job), no shrinking.
+    val textGen = Gen.frequency(
+      1 -> Gen.const(""),
+      9 -> Gen.listOf(Gen.oneOf('a', 'b', 'c', ' ', '\t', '\n'))
+        .map(_.mkString))
+    val prop = Prop.forAllNoShrink(Gen.listOfN(200, textGen)) { drawn =>
+      val texts = "a b c d\n" +: drawn.toIndexedSeq
+      val t = col("text")
+      def grams(n: Int) = TextFunctions.wordNgrams(t, n)
+      val minhash = array((0 until 8).map { s =>
+        array_min(transform(array_distinct(grams(3)),
+          g => md5(concat(lit(s"$s:"), g))))
+      }: _*)
+      val rows = texts.zipWithIndex.toDF("text", "i")
+        .select(col("i"), TextFunctions.tokens(t), grams(2), grams(3),
+          grams(5), array_distinct(grams(3)),
+          TextFunctions.md5MinHash8Udf(t), minhash)
+        .collect()
+      val bad = rows.filterNot { r =>
+        val text = texts(r.getInt(0))
+        def at(k: Int) = r.getSeq[String](k)
+        at(1) == TextFunctions.tokensLocal(text).toSeq &&
+          Seq(2, 3, 5).zipWithIndex.forall { case (n, k) =>
+            at(2 + k) == TextFunctions.posGrams(text, n).toSeq } &&
+          at(5) == TextFunctions.distinctGramsJvm(text, 3).toSeq &&
+          at(6) == at(7)
+      }.map(r => texts(r.getInt(0)))
+      bad.isEmpty :| s"kernel/expression mismatch on ${bad.take(3)}"
+    }
+    check(prop, 1)
   }
 }

@@ -55,12 +55,9 @@ class SimilaritySpec extends SparkSpecBase {
     // the oracle's list_cosine_similarity errors loudly
     val ragged = Seq((Seq(1.0f, 0.0f, 3.0f), Seq(1.0f, 0.0f)))
       .toDF("a", "b")
-    val viaExpr = intercept[Exception] {
+    assertDimMismatch {
       ragged.select(Similarity.cosine(col("a"), col("b"))).collect()
     }
-    assert(viaExpr.getMessage.contains("dimension mismatch") ||
-      Option(viaExpr.getCause).exists(
-        _.getMessage.contains("dimension mismatch")))
   }
 
   test("bruteForceTopK fails fast on a ragged corpus vector") {
@@ -69,13 +66,60 @@ class SimilaritySpec extends SparkSpecBase {
     val corpus = Seq((1L, Seq(1.0f, 0.0f, 0.0f)), (2L, Seq(1.0f, 0.0f)))
       .toDF("vec_id", "embedding")
     val q = Seq((100L, Seq(1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val ex = intercept[Exception] {
+    assertDimMismatch {
       Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, "vec_id",
         "embedding", k = 2).collect()
     }
+  }
+
+  /** Runs `body` and asserts it failed on the ragged-vector rule. */
+  private def assertDimMismatch(body: => Unit): Unit = {
+    val ex = intercept[Exception](body)
     assert(ex.getMessage.contains("dimension mismatch") ||
       Option(ex.getCause).exists(
-        _.getMessage.contains("dimension mismatch")))
+        _.getMessage.contains("dimension mismatch")), ex.getMessage)
+  }
+
+  // Whole-vector list assignment and hyperplane hashing follow the same
+  // rule as the cosine fold: a short row is never assigned or hashed by
+  // its prefix, even when no query would go on to score it.
+  private lazy val raggedCorpus = Seq(
+    (1L, Seq(1.0f, 0.0f, 0.0f)),
+    (2L, Seq(0.9f, 0.1f, 0.0f)),
+    (3L, Seq(-1.0f, 0.0f))) // short, and far from the one query
+    .toDF("vec_id", "embedding")
+  private lazy val raggedQuery =
+    Seq((100L, Seq(1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
+
+  test("IVF fails fast on a short corpus row in a list no query probes") {
+    // by its prefix the short row is nearest to list 1; nprobe = 1
+    // probes list 0 only
+    val cents = Array(Array(1.0, 0.0, 0.0), Array(-1.0, 0.0, 0.0))
+    assertDimMismatch {
+      Similarity.ivfTopKWithCentroids(raggedCorpus, "vec_id", "embedding",
+        raggedQuery, "vec_id", "embedding", k = 2, centroids = cents,
+        nprobe = 1).collect()
+    }
+  }
+
+  test("annTopK fails fast on a short corpus row in a bucket no query probes") {
+    // the short row's prefix is the query negated, so every hyperplane
+    // sign flips: it lands in the complement of the one probed bucket
+    assertDimMismatch {
+      Similarity.annTopK(raggedCorpus, "vec_id", "embedding", raggedQuery,
+        "vec_id", "embedding", dim = 3, k = 2, planes = 4,
+        multiProbe = false).collect()
+    }
+  }
+
+  test("IVF fails fast on centroids of another dimension than the queries") {
+    val corpus = raggedCorpus.filter(col("vec_id") =!= 3L)
+    val cents = Array(Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 1.0, 0.0, 0.0))
+    assertDimMismatch {
+      Similarity.ivfTopKWithCentroids(corpus, "vec_id", "embedding",
+        raggedQuery, "vec_id", "embedding", k = 2, centroids = cents,
+        nprobe = 2).collect()
+    }
   }
 
   test("cosinePairsAbove enforces its small-frame contract") {
