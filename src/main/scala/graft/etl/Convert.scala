@@ -66,7 +66,7 @@ object Convert {
       target.merge(spark.read.json(batch.dataPath),
         Option.when(batch.deleted.nonEmpty)(batch.deleted.toDF("id")))
     }
-    if (target.exists) target.read().count() else 0L
+    if (target.exists) target.rowCount else 0L
   }
 
   /** Replay a whole output tree: every subdirectory containing

@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Clinical-note operators for the NLP flow (SURVEY §3.2): text
-  * extraction, cohort selection, content-addressed caching, span
-  * back-matching, note grouping, reservoir sampling.
+  * extraction, cohort selection, span back-matching, note grouping,
+  * reservoir sampling. The content-addressed result cache is
+  * [[ModelRunner.cached]].
   */
 object NoteOps {
 
@@ -84,32 +85,6 @@ object NoteOps {
     val idCol = finished.columns.head
     df.join(broadcast(finished.select(col(idCol).as(groupCol)).distinct()),
       Seq(groupCol), "left_anti")
-  }
-
-  /** J8/S10: content-addressed result cache. Returns (hits ∪ computed,
-    * newEntries): notes are checksummed, joined against the cache table,
-    * misses evaluated with `compute` (an expression — for external model
-    * calls swap in a mapPartitions client), and the fresh rows returned
-    * separately so the caller can merge them into the cache table.
-    */
-  def cachedResults(
-      notes: DataFrame,
-      textCol: String,
-      cache: DataFrame, // columns: checksum, result
-      compute: Column => Column
-  ): (DataFrame, DataFrame) = {
-    val withSum = notes.withColumn("checksum", sha2(col(textCol), 256))
-    val joined = withSum.join(cache, Seq("checksum"), "left_outer")
-    val resolved = joined.withColumn(
-      "result",
-      coalesce(col("result"), compute(col(textCol)))
-    )
-    val fresh = resolved
-      .filter(col("result").isNotNull)
-      .select("checksum", "result")
-      .dropDuplicates("checksum")
-      .join(cache.select("checksum"), Seq("checksum"), "left_anti")
-    (resolved, fresh)
   }
 
   /** F12: span back-matching — locate each extracted span in the

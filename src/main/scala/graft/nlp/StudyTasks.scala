@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
   * the Spark-native equivalent: the same file format parses into
   * [[StudyTask]] values whose response schema compiles to a `StructType`
   * (via [[JsonSchemaConverter]], our pydantic→pyarrow stand-in) and
-  * whose prompts assemble identically.
+  * whose prompts assemble identically, in one place
+  * ([[StudyTask.prompt]]) for row and batch mode alike. Both modes
+  * resolve through the one result cache, [[ModelRunner.cached]].
   *
   * Divergence, by design: `%JSON-SCHEMA%` substitutes the response
   * schema file's own JSON text (the reference substitutes pydantic's
@@ -51,6 +53,10 @@ object StudyTasks {
     /** User prompt for one clinical note (nlp_task.py:331-333). */
     def userPrompt(noteText: String): String =
       userPromptTemplate.replace("%CLINICAL-NOTE%", noteText)
+
+    /** The full prompt sent for one note, in row and batch mode alike. */
+    def prompt(noteText: String): String =
+      systemPrompt + "\n\n" + userPrompt(noteText)
 
     /** Content-addressed cache namespace (nlp_task.py:257). */
     def cacheNamespace: String = s"${tableName}_v$version"
@@ -138,16 +144,15 @@ object StudyTasks {
   }
 
   /** Run a study task over a notes frame, cache-first: the full prompt
-    * (system with schema inlined + user with the note inlined) is
-    * assembled executor-side per note, while the content-addressed
-    * cache stays keyed on the NOTE text (the reference checksums
-    * note_text, not the prompt — nlp_task.py:259); results parse
-    * against the task's response schema. Returns (annotated, fresh
-    * cache rows) like [[ModelRunner.annotate]], with `result` as a
-    * typed struct column. An answer that is not valid JSON parses to a
-    * NULL result (the reference pydantic-validates and routes failures
-    * to the error sink, K8) — callers route `result IS NULL` rows to
-    * their ErrorSink for the same semantics.
+    * ([[StudyTask.prompt]]) is assembled executor-side per note, while
+    * the content-addressed cache stays keyed on the NOTE text (the
+    * reference checksums note_text, not the prompt — nlp_task.py:259);
+    * results parse against the task's response schema. Returns
+    * (annotated, fresh cache rows) like [[ModelRunner.annotate]], with
+    * `result` as a typed struct column. An answer that is not valid
+    * JSON parses to a NULL result (the reference pydantic-validates and
+    * routes failures to the error sink, K8) — callers route `result IS
+    * NULL` rows to their ErrorSink for the same semantics.
     */
   def annotate(
       task: StudyTask,
@@ -162,8 +167,7 @@ object StudyTasks {
     val t = task // serializable case class captured by the wrapper
     val wrapped = new ModelRunner.ModelClient {
       def complete(noteTexts: Seq[String]): Seq[String] =
-        client.complete(
-          noteTexts.map(nt => t.systemPrompt + "\n\n" + t.userPrompt(nt)))
+        client.complete(noteTexts.map(t.prompt))
     }
     val (annotated, fresh) =
       ModelRunner.annotate(notes, idCol, textCol, cache, wrapped, batchSize)
@@ -200,9 +204,9 @@ object StudyTasks {
   /** Batch-mode variant (the reference's `--batch` flag, 0.5× provider
     * pricing): cache-miss prompts spool to capped JSONL files, jobs
     * submit with crash-safe resume, results land in the cache — see
-    * [[ModelRunner.annotateViaBatch]]. The spooled prompt is the full
-    * assembled (system + user) prompt; the cache key stays the note
-    * text, so batch and per-row modes share one cache.
+    * [[ModelRunner.annotateViaBatch]]. The spooled prompt is
+    * [[StudyTask.prompt]], the one row mode sends; the cache key stays
+    * the note text, so batch and per-row modes share one cache.
     */
   def annotateBatch(
       task: StudyTask,
@@ -217,11 +221,8 @@ object StudyTasks {
       maxPolls: Int = 10000
   ): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.functions._
-    val t = task
-    val promptUdf = udf { (note: String) =>
-      t.systemPrompt + "\n\n" + t.userPrompt(note)
-    }
-    val withPrompt = notes.withColumn("__prompt", promptUdf(col(textCol)))
+    val withPrompt =
+      notes.withColumn("__prompt", udf(task.prompt _).apply(col(textCol)))
     val (annotated, fresh) = ModelRunner.annotateViaBatch(
       withPrompt, idCol, textCol, cache, client, spoolDir,
       maxLines, pollIntervalMs, maxPolls, promptCol = Some("__prompt"))

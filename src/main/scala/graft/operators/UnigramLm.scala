@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,9 +67,10 @@ object UnigramLm {
   }
 
   /** Train the vocabulary. Returns (piece, count, logp, rank) — rank 1
-    * = most used in the final segmentation. `docs(textCol)` is
-    * whitespace-tokenized (the corpus word convention shared with
-    * [[BpeVocab]]).
+    * = most used in the final segmentation. `docs(textCol)` splits
+    * into words with [[TextFunctions.tokens]], the words [[encode]]
+    * segments with its twin `tokensLocal` (empty tokens dropped on
+    * both sides).
     */
   def train(
       docs: DataFrame,
@@ -85,7 +87,7 @@ object UnigramLm {
     // corpus → word dictionary, ONE aggregate; everything after runs
     // over the dictionary
     val words = docs
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
+      .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .as[(String, Long)]
@@ -182,11 +184,8 @@ object UnigramLm {
     val mpl = maxPieceLen
     val segUdf = udf { (text: String) =>
       if (text == null) null
-      else {
-        val t = text.trim
-        val ws = if (t.isEmpty) Array.empty[String] else t.split("\\s+")
-        ws.flatMap(w => viterbi(w, bc.value, mpl).getOrElse(List(w)))
-      }
+      else TextFunctions.tokensLocal(text).filter(_.nonEmpty)
+        .flatMap(w => viterbi(w, bc.value, mpl).getOrElse(List(w)))
     }
     // NO spread here (reverted in r11): the Viterbi kernel on these
     // short docs is cheaper than the exchange that parallelized it —

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{IncrementalAgg, IndexStats, MergeOps}
 import graft.sinks.GraftTable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -43,33 +43,29 @@ object IncrementalMerge {
       .drop("__file", "__seq")
   }
 
-  /** The drain skeleton every entry point shares: AvailableNow +
-    * checkpoint, per-batch last-wins dedup, then `fold` (side effects
-    * + merge ordering are the fold's contract — [[runWithAgg]] and
-    * [[runWithIndexStats]] read the change feed BEFORE merging).
-    * Returns the number of micro-batches applied.
+  /** The drain skeleton every streaming entry point shares: AvailableNow
+    * + checkpoint, `onBatch` per micro-batch (side effects and merge
+    * ordering are its contract — [[runMaintained]] reads the change
+    * feed BEFORE merging). Returns the number of micro-batches applied.
     */
-  private def drain(
-      stream: DataFrame,
-      spec: MergeOps.MergeSpec,
-      checkpointDir: String,
-      orderCol: Option[String]
-  )(fold: DataFrame => Unit): Long = {
+  private[streaming] def drain(stream: DataFrame, checkpointDir: String)(
+      onBatch: DataFrame => Unit): Long = {
     var batches = 0L
-    val q = stream.writeStream
+    stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        fold(dedupBatch(batch, spec, orderCol))
+        onBatch(batch)
         batches += 1
       }
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     batches
   }
 
   /** Drain all available input from `stream` into the table and stop
-    * (AvailableNow). Returns the number of micro-batches applied.
+    * (AvailableNow), last-wins dedup per micro-batch. Returns the
+    * number of micro-batches applied.
     */
   def run(
       stream: DataFrame,
@@ -78,17 +74,43 @@ object IncrementalMerge {
       checkpointDir: String,
       orderCol: Option[String] = None
   ): Long =
-    drain(stream, spec, checkpointDir, orderCol)(table.merge(_))
+    drain(stream, checkpointDir)(b => table.merge(dedupBatch(b, spec, orderCol)))
 
-  /** [[run]] plus streaming incremental view maintenance: before each
-    * micro-batch merges, its change feed against the CURRENT table
-    * contents ([[MergeOps.changeFeed]]) folds into a per-`groupCol`
-    * (count, sum of `valueCol`) aggregate ([[IncrementalAgg]]) — so
-    * per-batch aggregate work is O(changes), never a rescan of the
-    * table. Returns (micro-batches applied, maintained aggregate);
-    * the aggregate is seeded from the table's pre-stream contents and
+  /** [[run]] plus streaming view maintenance: the derived state is
+    * `seed` over the table's pre-stream contents, or over an empty
+    * frame with the stream's schema — never null, even if the stream
+    * delivers no micro-batches at all. Before each micro-batch merges,
+    * its change feed against the CURRENT table contents
+    * ([[MergeOps.changeFeed]]) `fold`s into the state, so per-batch
+    * work is O(changes), never a rescan of the table; the state is
     * localCheckpointed per batch to keep lineage flat across many
-    * micro-batches.
+    * micro-batches. Returns (micro-batches applied, final state).
+    */
+  private def runMaintained(
+      stream: DataFrame,
+      table: GraftTable,
+      spec: MergeOps.MergeSpec,
+      checkpointDir: String,
+      orderCol: Option[String]
+  )(seed: DataFrame => DataFrame,
+      fold: (DataFrame, DataFrame) => DataFrame): (Long, DataFrame) = {
+    var state =
+      if (table.exists) seed(table.read()).localCheckpoint(true)
+      else seed(stream.sparkSession.createDataFrame(
+        new java.util.ArrayList[Row](), stream.schema))
+    val batches = drain(stream, checkpointDir) { batch =>
+      val ordered = dedupBatch(batch, spec, orderCol)
+      val current = if (table.exists) table.read() else ordered.limit(0)
+      state = fold(state, MergeOps.changeFeed(current, ordered, spec))
+        .localCheckpoint(true)
+      table.merge(ordered)
+    }
+    (batches, state)
+  }
+
+  /** [[runMaintained]] over a per-`groupCol` (count, sum of
+    * `valueCol`) aggregate ([[IncrementalAgg]]) — the streaming form of
+    * q84. Returns (micro-batches applied, maintained aggregate).
     */
   def runWithAgg(
       stream: DataFrame,
@@ -98,36 +120,16 @@ object IncrementalMerge {
       groupCol: String,
       valueCol: String,
       orderCol: Option[String] = None
-  ): (Long, DataFrame) = {
-    // seed from the table's pre-stream contents, or a zero aggregate
-    // with the stream's schema — never null, even if the stream
-    // delivers no micro-batches at all
-    var agg: DataFrame =
-      if (table.exists)
-        IncrementalAgg.countSum(table.read(), groupCol, valueCol)
-          .localCheckpoint(true)
-      else IncrementalAgg.countSum(
-        stream.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          stream.schema), groupCol, valueCol)
-    val batches = drain(stream, spec, checkpointDir, orderCol) { ordered =>
-      val current = if (table.exists) table.read() else ordered.limit(0)
-      val changes = MergeOps.changeFeed(current, ordered, spec)
-      agg = IncrementalAgg
-        .applyChanges(agg, changes, groupCol, valueCol)
-        .localCheckpoint(true)
-      table.merge(ordered)
-    }
-    (batches, agg)
-  }
+  ): (Long, DataFrame) =
+    runMaintained(stream, table, spec, checkpointDir, orderCol)(
+      IncrementalAgg.countSum(_, groupCol, valueCol),
+      IncrementalAgg.applyChanges(_, _, groupCol, valueCol))
 
-  /** [[run]] plus streaming index-stats maintenance: the per-term
-    * document-frequency table ([[IndexStats]]) is kept current across
-    * micro-batches at O(changes per batch) cost — the streaming form
-    * of q105, i.e. a live BM25/retrieval index whose stats never need
-    * a corpus rescan while documents merge in. Seeded from the table's
-    * pre-stream contents; localCheckpointed per batch to keep lineage
-    * flat. Returns (micro-batches applied, maintained df table).
+  /** [[runMaintained]] over the per-term document-frequency table
+    * ([[IndexStats]]) — the streaming form of q105, i.e. a live
+    * BM25/retrieval index whose stats never need a corpus rescan while
+    * documents merge in. Returns (micro-batches applied, maintained df
+    * table).
     */
   def runWithIndexStats(
       stream: DataFrame,
@@ -137,23 +139,8 @@ object IncrementalMerge {
       textCol: String,
       tokenizeLocal: String => Array[String],
       orderCol: Option[String] = None
-  ): (Long, DataFrame) = {
-    var df: DataFrame =
-      if (table.exists)
-        IndexStats.termDf(table.read(), textCol, tokenizeLocal)
-          .localCheckpoint(true)
-      else IndexStats.termDf(
-        stream.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          stream.schema), textCol, tokenizeLocal)
-    val batches = drain(stream, spec, checkpointDir, orderCol) { ordered =>
-      val current = if (table.exists) table.read() else ordered.limit(0)
-      val changes = MergeOps.changeFeed(current, ordered, spec)
-      df = IndexStats
-        .applyChanges(df, changes, textCol, tokenizeLocal)
-        .localCheckpoint(true)
-      table.merge(ordered)
-    }
-    (batches, df)
-  }
+  ): (Long, DataFrame) =
+    runMaintained(stream, table, spec, checkpointDir, orderCol)(
+      IndexStats.termDf(_, textCol, tokenizeLocal),
+      IndexStats.applyChanges(_, _, textCol, tokenizeLocal))
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.{CrossDedup, NearDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming corpus admission control — the always-on form of the q135
   * cross-corpus dedup: an incoming document stream is flagged against
@@ -69,38 +68,31 @@ object StreamCrossDedup {
       onBatch: (DataFrame, DataFrame, DataFrame) => Unit): (Long, DataFrame, DataFrame) = {
     var refHashes = hashes0.localCheckpoint(true)
     var refBands = bands0.localCheckpoint(true)
-    var batches = 0L
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val docs = batch.select(col(idCol), col(textCol))
-          .localCheckpoint(true) // referenced by flags AND admission
-        val flags = CrossDedup
-          .flagAgainstArtifacts(refHashes, refBands, docs, idCol, textCol)
-          .localCheckpoint(true) // evaluated for the sink AND admission
-        val admitted = docs
-          .join(flags.filter(col("keep")).select(col(idCol)), Seq(idCol))
-          // intra-batch exact copies index once (first id wins)
-          .withColumn("__h", md5(col(textCol)))
-          .groupBy("__h")
-          .agg(min(col(idCol)).as(idCol), first(col(textCol)).as(textCol))
-          .localCheckpoint(true) // the DELTA is what materializes —
-        // appending it lazily keeps per-batch work O(batch), where
-        // re-checkpointing the whole artifact would copy
-        // O(corpus-so-far) every batch
-        refHashes = refHashes.unionByName(admitted.select(col("__h")))
-        refBands = refBands
-          .unionByName(NearDedup
-            .md5BandTable(admitted.select(col(idCol), col(textCol)),
-              idCol, textCol)
-            .withColumnRenamed(idCol, "__ref_id")
-            .localCheckpoint(true))
-        onBatch(flags, refHashes, refBands)
-        batches += 1
-      }
-      .start()
-    q.awaitTermination()
+    val batches = IncrementalMerge.drain(stream, checkpointDir) { batch =>
+      val docs = batch.select(col(idCol), col(textCol))
+        .localCheckpoint(true) // referenced by flags AND admission
+      val flags = CrossDedup
+        .flagAgainstArtifacts(refHashes, refBands, docs, idCol, textCol)
+        .localCheckpoint(true) // evaluated for the sink AND admission
+      val admitted = docs
+        .join(flags.filter(col("keep")).select(col(idCol)), Seq(idCol))
+        // intra-batch exact copies index once (first id wins)
+        .withColumn("__h", md5(col(textCol)))
+        .groupBy("__h")
+        .agg(min(col(idCol)).as(idCol), first(col(textCol)).as(textCol))
+        .localCheckpoint(true) // the DELTA is what materializes —
+      // appending it lazily keeps per-batch work O(batch), where
+      // re-checkpointing the whole artifact would copy
+      // O(corpus-so-far) every batch
+      refHashes = refHashes.unionByName(admitted.select(col("__h")))
+      refBands = refBands
+        .unionByName(NearDedup
+          .md5BandTable(admitted.select(col(idCol), col(textCol)),
+            idCol, textCol)
+          .withColumnRenamed(idCol, "__ref_id")
+          .localCheckpoint(true))
+      onBatch(flags, refHashes, refBands)
+    }
     (batches, refHashes, refBands)
   }
 }

@@ -1,23 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
 import graft.nlp.ModelRunner
 import org.apache.spark.sql.functions._
-
-/** Deterministic fake provider counting invocations via accumulators
-  * (top-level so the closure stays serializable).
-  */
-class FakeModelClient(
-    callCounter: org.apache.spark.util.LongAccumulator,
-    promptCounter: org.apache.spark.util.LongAccumulator
-) extends ModelRunner.ModelClient {
-  override def complete(prompts: Seq[String]): Seq[String] = {
-    callCounter.add(1)
-    promptCounter.add(prompts.length)
-    prompts.map(p => s"ANN:${p.toUpperCase}")
-  }
-}
 
 class ModelRunnerSpec extends SparkSpecBase {
   import spark.implicits._
@@ -140,5 +124,130 @@ class ModelRunnerSpec extends SparkSpecBase {
     annotated2.collect()
     assert(prompts2.value === 0)
     assert(fresh2.count() === 0)
+  }
+
+  private def checksumOf(text: String): String =
+    Seq(text).toDF("t").select(sha2(col("t"), 256)).head().getString(0)
+
+  test("annotate pays the model once per distinct miss, whichever output is consumed") {
+    val notes = Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
+      .toDF("note_id", "text")
+    val emptyCache = Seq.empty[(String, String)].toDF("checksum", "result")
+    for (freshFirst <- Seq(false, true)) {
+      val prompts = spark.sparkContext.longAccumulator("prompts")
+      val client =
+        new FakeModelClient(spark.sparkContext.longAccumulator, prompts)
+      val (annotated, fresh) = ModelRunner.annotate(
+        notes, "note_id", "text", emptyCache, client)
+      assert(prompts.value === 0) // no model call before an output is read
+      val (first, second) =
+        if (freshFirst) (fresh, annotated) else (annotated, fresh)
+      first.collect()
+      assert(prompts.value === 2) // 2 distinct misses, not 3 rows
+      second.collect()
+      assert(prompts.value === 2) // the second output reuses the answers
+      assert(annotated.collect().map(r => r.getLong(0) -> r.getString(2)).toMap ===
+        Map(1L -> "ANN:ALPHA", 2L -> "ANN:BETA", 3L -> "ANN:ALPHA"))
+      assert(fresh.count() === 2)
+      assert(prompts.value === 2)
+    }
+  }
+
+  test("annotate: a null answer is never fresh, a cached null is recomputed") {
+    val notes = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
+      .toDF("note_id", "text")
+    val cache = Seq((checksumOf("alpha"), null: String)).toDF("checksum", "result")
+    val prompts = spark.sparkContext.longAccumulator("prompts")
+    val client = new FakeModelClient(spark.sparkContext.longAccumulator,
+      prompts, p => if (p == "beta") null else s"ANN:$p")
+    val (annotated, fresh) =
+      ModelRunner.annotate(notes, "note_id", "text", cache, client)
+    assert(annotated.collect().map(r => r.getLong(0) -> r.getString(2)).toMap ===
+      Map(1L -> "ANN:alpha", 2L -> null, 3L -> "ANN:gamma"))
+    assert(fresh.collect().map(r => r.getString(0) -> r.getString(1)).toMap ===
+      Map(checksumOf("alpha") -> "ANN:alpha", checksumOf("gamma") -> "ANN:gamma"))
+    assert(prompts.value === 3)
+  }
+
+  test("batch mode: a null answer is never fresh, a cached null is recomputed") {
+    // fake provider answering every spooled prompt at once; "beta" fails
+    class NullBetaClient extends ModelRunner.BatchModelClient {
+      override def submit(promptFile: String): String = promptFile
+      override def poll(jobId: String): Option[String] = {
+        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+        val lines = scala.jdk.CollectionConverters.IteratorHasAsScala(
+          java.nio.file.Files.lines(java.nio.file.Paths.get(jobId))
+            .iterator()).asScala.map { l =>
+          val row = mapper.readTree(l)
+          val p = row.get("prompt").asText()
+          val out = mapper.createObjectNode()
+          out.put("checksum", row.get("checksum").asText())
+          out.put("result", if (p == "beta") null else s"ANS:$p")
+          out.toString
+        }.mkString("\n")
+        val out = jobId + ".results"
+        java.nio.file.Files.write(java.nio.file.Paths.get(out),
+          lines.getBytes("UTF-8"))
+        Some(out)
+      }
+    }
+    val spool = java.nio.file.Files.createTempDirectory("spool-null").toString
+    val notes = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
+      .toDF("note_id", "text")
+    val cache = Seq((checksumOf("alpha"), null: String)).toDF("checksum", "result")
+    val (annotated, fresh) = ModelRunner.annotateViaBatch(
+      notes, "note_id", "text", cache, new NullBetaClient, spool,
+      pollIntervalMs = 1L)
+    assert(annotated.collect().map(r => r.getLong(0) -> r.getString(2)).toMap ===
+      Map(1L -> "ANS:alpha", 2L -> null, 3L -> "ANS:gamma"))
+    assert(fresh.collect().map(r => r.getString(0) -> r.getString(1)).toMap ===
+      Map(checksumOf("alpha") -> "ANS:alpha", checksumOf("gamma") -> "ANS:gamma"))
+  }
+
+  test("cached: hits reused, misses computed and returned fresh") {
+    val notes = Seq((1L, "alpha"), (2L, "beta")).toDF("id", "text")
+    val alphaSum = Seq("alpha").toDF("t")
+      .select(sha2(col("t"), 256)).head().getString(0)
+    val cache = Seq((alphaSum, "CACHED")).toDF("checksum", "result")
+    val (resolved, fresh) = ModelRunner.cached(notes, "text", cache)(misses =>
+      misses.select(col("checksum"), upper(col("text")).as("result")))
+    val byId = resolved.select("id", "result").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(byId(1L) === "CACHED") // hit wins over compute
+    assert(byId(2L) === "BETA") // miss computed
+    val freshRows = fresh.collect()
+    assert(freshRows.length === 1)
+    assert(freshRows.head.getString(1) === "BETA")
+  }
+
+  test("cached embeddings: model runs only on distinct misses") {
+    import graft.functions.DeidFunctions.contentChecksum
+    val docs = Seq(
+      (1L, "alpha text"), (2L, "beta text"), (3L, "alpha text"), // dup content
+      (4L, "gamma text")
+    ).toDF("doc_id", "text")
+    // pre-seed the cache with alpha's embedding
+    val seeded = docs.filter($"doc_id" === 1L)
+      .select(contentChecksum($"text").as("checksum"),
+        array(lit(9.0f)).as("embedding"))
+    val modelCalls = spark.sparkContext.longAccumulator("modelCalls")
+    val (all, fresh) = ModelRunner.cached(docs, "text", seeded, "embedding") {
+      misses =>
+        misses.map { r =>
+          modelCalls.add(1)
+          (r.getAs[String]("checksum"),
+            Array(r.getAs[String]("text").length.toFloat))
+        }.toDF("checksum", "embedding")
+    }
+    val byId = all.collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        r.getAs[scala.collection.Seq[Float]]("embedding").head).toMap
+    // cached content (docs 1 AND 3 — same checksum) comes from the cache
+    assert(byId(1L) === 9.0f && byId(3L) === 9.0f)
+    assert(byId(2L) === "beta text".length.toFloat)
+    assert(byId(4L) === "gamma text".length.toFloat)
+    // fresh rows: beta + gamma only (alpha already cached)
+    assert(fresh.count() === 2)
+    assert(modelCalls.value === 2) // distinct misses, not 3 rows
   }
 }

@@ -47,22 +47,6 @@ class NoteOpsSpec extends SparkSpecBase {
       === Set(3L))
   }
 
-  test("cachedResults: hits reused, misses computed and returned fresh") {
-    val notes = Seq((1L, "alpha"), (2L, "beta")).toDF("id", "text")
-    val alphaSum = Seq("alpha").toDF("t")
-      .select(sha2(col("t"), 256)).head().getString(0)
-    val cache = Seq((alphaSum, "CACHED")).toDF("checksum", "result")
-    val (resolved, fresh) = NoteOps.cachedResults(
-      notes, "text", cache, c => upper(c))
-    val byId = resolved.select("id", "result").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(byId(1L) === "CACHED") // hit wins over compute
-    assert(byId(2L) === "BETA") // miss computed
-    val freshRows = fresh.collect()
-    assert(freshRows.length === 1)
-    assert(freshRows.head.getString(1) === "BETA")
-  }
-
   test("matchSpans finds fuzzy case-insensitive offsets") {
     val df = Seq(
       ("The patient reports severe   headache today.",

@@ -5,38 +5,6 @@ import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpecBase {
 
-  test("embedding cache: model runs only on distinct misses") {
-    import spark.implicits._
-    import graft.operators.EmbeddingCache
-    val docs = Seq(
-      (1L, "alpha text"), (2L, "beta text"), (3L, "alpha text"), // dup content
-      (4L, "gamma text")
-    ).toDF("doc_id", "text")
-    // pre-seed the cache with alpha's embedding
-    val seeded = docs.filter($"doc_id" === 1L)
-      .select(EmbeddingCache.checksum($"text").as("checksum"),
-        org.apache.spark.sql.functions.array(
-          org.apache.spark.sql.functions.lit(9.0f)).as("embedding"))
-    val modelCalls = spark.sparkContext.longAccumulator("modelCalls")
-    val (all, fresh) = EmbeddingCache.resolve(docs, "doc_id", "text",
-      seeded, misses => {
-        misses.map { r =>
-          modelCalls.add(1)
-          (r.getAs[String]("checksum"),
-            Array(r.getAs[String]("text").length.toFloat))
-        }.toDF("checksum", "embedding")
-      })
-    val byId = all.collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        r.getAs[scala.collection.Seq[Float]]("embedding").head).toMap
-    // cached content (docs 1 AND 3 — same checksum) comes from the cache
-    assert(byId(1L) === 9.0f && byId(3L) === 9.0f)
-    assert(byId(2L) === "beta text".length.toFloat)
-    assert(byId(4L) === "gamma text".length.toFloat)
-    // fresh rows: beta + gamma only (alpha already cached)
-    assert(fresh.count() === 2)
-    assert(modelCalls.value === 2) // distinct misses, not 3 rows
-  }
   import spark.implicits._
 
   test("cosine: identical = 1, orthogonal = 0, opposite = -1") {

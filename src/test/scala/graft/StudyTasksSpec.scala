@@ -120,7 +120,8 @@ class StudyTasksSpec extends SparkSpecBase {
     val task = sampleTask
     val notes = Seq(
       (1L, "Patient is 42 years old."),
-      (2L, "No age documented.")
+      (2L, "No age documented."),
+      (3L, "Patient is 42 years old.")
     ).toDF("note_id", "text")
     val emptyCache = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -128,14 +129,14 @@ class StudyTasksSpec extends SparkSpecBase {
         StructField("result", StringType))))
     // fake model: proves the full prompt (system with inlined schema +
     // user with inlined note) reaches the client, answers with JSON
-    // conforming to the response schema
-    val client = new ModelRunner.ModelClient {
-      def complete(prompts: Seq[String]): Seq[String] = prompts.map { p =>
+    // conforming to the response schema, and counts the prompts
+    val prompts = spark.sparkContext.longAccumulator("prompts")
+    val client = new FakeModelClient(spark.sparkContext.longAccumulator,
+      prompts, { p =>
         assert(p.contains("AgeMention")) // schema inlined via system
         val age = if (p.contains("42")) "42" else "null"
         s"""{"has_mention": ${age != "null"}, "spans": [], "age": $age}"""
-      }
-    }
+      })
     val (annotated, fresh) = StudyTasks.annotate(
       task, notes, "note_id", "text", emptyCache, client)
     val byId = annotated
@@ -144,7 +145,10 @@ class StudyTasksSpec extends SparkSpecBase {
       .toMap
     assert(byId(1L) === ((Some(42), true)))
     assert(byId(2L) === ((None, false)))
-    assert(fresh.count() === 2) // both notes were cache misses
+    assert(byId(3L) === ((Some(42), true)))
+    assert(prompts.value === 2) // one prompt per distinct note text
+    assert(fresh.count() === 2) // the distinct notes were cache misses
+    assert(prompts.value === 2) // fresh reuses the paid answers
   }
 
   test("annotateDocuments quarantines unprocessable notes (K8 parity)") {

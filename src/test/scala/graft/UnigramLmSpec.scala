@@ -85,12 +85,16 @@ class UnigramLmSpec extends SparkSpecBase {
     // every letter of the corpus keeps a vocab entry
     val pieces = vocab.select("piece").collect().map(_.getString(0)).toSet
     "bandsk".foreach(ch => assert(pieces.contains(ch.toString), s"$ch"))
-    val enc = UnigramLm.encode(corpus, "doc_id", "text", vocab,
+    // doc 4's edge control char is part of its first word, as the
+    // trainer's `tokens` sees it, not whitespace to trim
+    val docs = corpus.union(Seq((4L, "\u0001ab ab")).toDF("doc_id", "text"))
+    val enc = UnigramLm.encode(docs, "doc_id", "text", vocab,
         maxPieceLen = 4)
       .withColumn("joined", concat_ws("", col("pieces")))
       .collect()
+    assert(enc.length === 4)
     enc.foreach { r =>
-      val orig = corpus.filter(col("doc_id") === r.getLong(0))
+      val orig = docs.filter(col("doc_id") === r.getLong(0))
         .head().getString(1).replaceAll("\\s+", "")
       assert(r.getAs[String]("joined") === orig)
     }
