@@ -82,8 +82,9 @@ object Bench {
 
   /** One ETL leg's seconds: a cold load, a 1% incremental re-export of
     * the observations, and a 5-row batch (the hash-bucket fast path,
-    * which touches few of the 16 buckets; at production bucket counts
-    * nearly all batches look like this).
+    * which touches few of the buckets the cold load sized the table
+    * with, about one per `Sizing.RowsPerBucket` rows; at production
+    * bucket counts nearly all batches look like this).
     */
   private[graft] final case class EtlTimes(rows: Long, coldS: Double,
       incrS: Double, tinyS: Double)

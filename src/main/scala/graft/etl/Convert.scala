@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.operators.MergeOps.MergeSpec
+import graft.operators.Sizing
 import graft.sinks.GraftTable
 import org.apache.spark.sql.SparkSession
 
@@ -57,12 +58,15 @@ object Convert {
       spec: MergeSpec
   ): Long = {
     import spark.implicits._
-    // same bucket count the ETL writes (an existing table keeps the
-    // count its manifest records)
+    val batches = listBatches(sourceTableDir, table)
+    // sized by the ETL's rule from the first batch it replays (one count
+    // of that batch): a new or still empty target takes that count, and
+    // a target with rows keeps its manifest's
     val target = GraftTable(spark, s"$targetDir/$table", spec,
-      EtlPipeline.ResourceTableBuckets)
+      Sizing.tableBuckets(batches.headOption.fold(0L)(b =>
+        spark.read.json(b.dataPath).count())))
     // one version per batch: its rows and its sidecar's deleted ids
-    listBatches(sourceTableDir, table).foreach { batch =>
+    batches.foreach { batch =>
       target.merge(spark.read.json(batch.dataPath),
         Option.when(batch.deleted.nonEmpty)(batch.deleted.toDF("id")))
     }

@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.deid.{Codebook, DefaultScrubPolicy, ScrubCompiler, ScrubPolicy}
-import graft.operators.MergeOps
+import graft.operators.{MergeOps, Sizing}
 import graft.operators.MergeOps.MergeSpec
 import graft.sinks.GraftTable
 import graft.sources.NdjsonSource
@@ -70,9 +70,12 @@ object EtlPipeline {
     EtlTask("Specimen", "specimen")
   )
 
-  /** Key-hash bucket count for resource tables. Local/test scale; on a
-    * production deployment size so each bucket lands near the target
-    * file size (e.g. 100 TB / 1 GB ≈ 10⁵ buckets).
+  /** The fixed bucket count resource tables had before `run` sized a
+    * new table from its rows (`Sizing.tableBuckets`). Kept only for the
+    * benchmark harness (`perfbench/`), which passes it to
+    * `MergeTable.open` on tables that hold rows, so their manifests'
+    * counts win and the value never takes effect. No program code
+    * reads it.
     */
   val ResourceTableBuckets = 16
 
@@ -137,15 +140,15 @@ object EtlPipeline {
         import spark.implicits._
         ids.toDF("id")
       }
-      val table = GraftTable(spark, s"$outputDir/${task.tableName}",
-        task.mergeSpec, ResourceTableBuckets)
+      val tablePath = s"$outputDir/${task.tableName}"
       if (!available.contains(task.resourceType)) {
         // touch-empty-tables (etl/tasks/base.py:222-227): a selected task
         // with no input still leaves a valid empty wide-schema table so
         // downstream SQL never breaks on a missing table; its deleted ids
         // still apply to rows earlier runs wrote
         if (!Init.touchTable(spark, outputDir, task, policy))
-          deletes.foreach(table.deleteIds)
+          deletes.foreach(
+            GraftTable(spark, tablePath, task.mergeSpec).deleteIds)
         TaskResult(task.tableName, attempted = false, rows = 0)
       } else {
         // parsed ONCE, read three times (census, scrub→merge, and the
@@ -206,7 +209,7 @@ object EtlPipeline {
                 "id", task.resourceType))
           })
         ).flatten
-        val deduped = try Overlap.joinAfter(sideCommits) {
+        val (deduped, table) = try Overlap.joinAfter(sideCommits) {
           // nlpMode keeps note text (mask-note leaves), mirroring the
           // reference's prepare_pipeline(nlp=True) (etl/pipeline.py:213-215)
           val scrubbed = ScrubCompiler.scrub(raw, task.resourceType, codebook,
@@ -225,9 +228,13 @@ object EtlPipeline {
             .localCheckpoint(true)
           // bucketed incremental layout: re-runs merge only the key-hash
           // buckets their rows and deleted ids touch instead of rewriting
-          // the table
-          table.merge(kept, deletes)
-          kept
+          // the table. A new (or still empty) table is sized from the
+          // scrubbed count, which the checkpoint above has observed; a
+          // table with rows keeps its manifest's count
+          val t = GraftTable(spark, tablePath, task.mergeSpec,
+            Sizing.tableBuckets(observedCount(scrubObs)))
+          t.merge(kept, deletes)
+          (kept, t)
         } finally raw.unpersist()
 
         // J7: Encounter rows fan out into the per-encounter completion

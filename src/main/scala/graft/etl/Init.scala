@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.{Files, Paths}
 
 import graft.deid.{Codebook, DefaultScrubPolicy, ScrubCompiler, ScrubPolicy}
+import graft.operators.Sizing
 import graft.sinks.GraftTable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -48,8 +49,10 @@ object Init {
   }
 
   /** Create `tableName` as a valid empty table when absent (no-op when
-    * present). Uses the bucket count of the ETL merge path, which a
-    * later real run then inherits from the manifest.
+    * present), with the count the ETL's sizing rule gives no rows: one
+    * bucket. The table's first data commit re-sizes it from its own rows
+    * (see `GraftTable.merge`), so a bulk load into it is not held to one
+    * bucket.
     */
   def touchTable(
       spark: SparkSession,
@@ -58,7 +61,7 @@ object Init {
       policy: ScrubPolicy = DefaultScrubPolicy.policy
   ): Boolean = {
     val table = GraftTable(spark, s"$outputDir/${task.tableName}",
-      task.mergeSpec, buckets = EtlPipeline.ResourceTableBuckets)
+      task.mergeSpec, buckets = Sizing.tableBuckets(0L))
     if (table.exists) false
     else {
       table.merge(emptyTaskFrame(spark, task.resourceType, policy))

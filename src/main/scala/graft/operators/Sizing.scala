@@ -1,6 +1,7 @@
 package graft.operators
 
-/** Data-derived shuffle sizing for iterative operators.
+/** Data-derived sizing: shuffle partitions for iterative operators and
+  * key-hash buckets for a new ETL table.
   *
   * An iterative loop (connected components, prefix doubling, Bellman-
   * Ford) issues many shuffles whose frames are a few longs per input
@@ -21,10 +22,30 @@ package graft.operators
   */
 private[graft] object Sizing {
 
+  /** The cap on every count this object derives. */
+  private val MaxParts = 65536L
+
   /** Partition count for ~1M-row (≈50 MB with payload) loop frames,
-    * floor 1, capped at 65k (a loop that really needs more partitions
-    * is mis-designed upstream).
+    * floor 1, capped at [[MaxParts]] (a loop that really needs more
+    * partitions is mis-designed upstream).
     */
   def loopPartitions(nRows: Long): Int =
-    math.max(1L, math.min(nRows / 1000000L + 1L, 65536L)).toInt
+    math.max(1L, math.min(nRows / 1000000L + 1L, MaxParts)).toInt
+
+  /** Rows per GraftTable bucket. A merge rewrites each bucket it touches
+    * as one file, so a bucket's fixed cost (a write task, a file, a
+    * footer read) must buy a real share of rows: a 21-row batch into a
+    * 2,000-row table at 16 buckets wrote 13–15 files of about 50 KB each.
+    * A larger bucket makes a tiny batch rewrite more rows it never
+    * touched: in Bench's ETL leg a 5-row batch into 200k rows took
+    * longer at 32k and 50k rows per bucket than at 16k (PERF.md).
+    */
+  val RowsPerBucket: Long = 16384L
+
+  /** Bucket count of a new table of `rows` rows: rows over
+    * [[RowsPerBucket]], rounded up, floor 1, capped like
+    * [[loopPartitions]].
+    */
+  def tableBuckets(rows: Long): Int =
+    math.max(1L, math.min((rows - 1) / RowsPerBucket + 1, MaxParts)).toInt
 }

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-import graft.operators.MergeOps
+import graft.operators.{MergeOps, Sizing}
 import graft.operators.MergeOps.MergeSpec
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,7 +22,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Rows live in key-hash buckets (`__b = pmod(xxhash64(keys), buckets)`).
   * A version `N` is its data under `v{N}/__b=K/` plus ONE file,
   * `manifest-v{N}.json`, holding:
-  *  - `buckets`: the bucket count, fixed when the table is created;
+  *  - `buckets`: the bucket count. The first commit that writes rows
+  *    fixes it (an empty table takes the count its first data commit
+  *    is opened with), and only [[optimize]] changes it later;
   *  - `keys`: the merge keys the buckets hash;
   *  - `dirs`: bucket → the version dir that last rewrote it;
   *  - `counts`: bucket → row count (the role Delta's log stats play, so
@@ -48,7 +50,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `clusterBy(uniqueness_fields)`, deltalake.py:105). Bucket id is a pure
   * function of the merge key, so matching target/update rows always
   * share a bucket and per-bucket merging is exactly global merging.
-  * Tables opened without a bucket count get one bucket. Group-replace
+  * Tables opened without a bucket count get one bucket; the ETL sizes a
+  * new resource table from its rows (`Sizing.tableBuckets`), so a small
+  * table is one bucket and a merge into it one file. Group-replace
   * merges (`groupField` set) and composite-key deletes rewrite every
   * bucket: group membership and a single id column are orthogonal to
   * the key hash, so they may touch any bucket.
@@ -71,6 +75,7 @@ final class GraftTable(
       schema: StructType
   ) {
     def all: Set[Int] = (0 until buckets).toSet
+    def rows: Long = counts.values.sum
   }
 
   private def latestFile = Paths.get(path, "_latest")
@@ -150,7 +155,7 @@ final class GraftTable(
   }
 
   /** Exact current row count from the manifest — no file is opened. */
-  def rowCount: Long = current.counts.values.sum
+  def rowCount: Long = current.rows
 
   /** K1/J1-J3 + K3: merge a batch in and delete `deletes`' ids (a
     * single-column frame) as ONE version: the result is
@@ -158,7 +163,8 @@ final class GraftTable(
     * both upserted and deleted ends absent. `touched` is every bucket
     * the batch's keys or the ids hash into, found by one probe job over
     * their union. The first write creates the table from the batch less
-    * the ids.
+    * the ids. A table that holds no rows yet (as `Init` leaves it)
+    * commits with this table's bucket count, not its manifest's.
     */
   def merge(updates: DataFrame, deletes: Option[DataFrame] = None): Unit =
     latest match {
@@ -168,11 +174,12 @@ final class GraftTable(
           MergeOps.deleteByIds(updates, key,
             ids.select(col(ids.columns.head).cast(updates.schema(key).dataType)))
         }
-        commit(None, rows, (0 until buckets).toSet)
+        commit(None, rows, buckets, (0 until buckets).toSet)
       case Some(m) =>
         val ids = deletes.map(idsOf(m, _))
+        val empty = m.rows == 0L
         val touched =
-          if (spec.groupField.isDefined ||
+          if (empty || spec.groupField.isDefined ||
             (ids.isDefined && spec.keys.length > 1)) m.all
           else {
             val keys = updates.select(spec.keys.map(k => keyCol(m, k, col(k))): _*)
@@ -181,7 +188,7 @@ final class GraftTable(
         val merged = MergeOps.merge(snapshot(m, touched), updates, spec)
         commit(Some(m),
           ids.fold(merged)(MergeOps.deleteByIds(merged, spec.keys.head, _)),
-          touched)
+          if (empty) buckets else m.buckets, touched)
     }
 
   /** K3: delete by id values (single-column DataFrame) on their own
@@ -192,7 +199,7 @@ final class GraftTable(
     val keyed = idsOf(m, ids)
     val touched = if (spec.keys.length > 1) m.all else bucketsOf(m, keyed)
     commit(Some(m), MergeOps.deleteByIds(snapshot(m, touched), spec.keys.head,
-      keyed), touched)
+      keyed), m.buckets, touched)
   }
 
   /** `ids`' one column as the table's first key, cast to its type. */
@@ -200,11 +207,16 @@ final class GraftTable(
     ids.select(keyCol(m, spec.keys.head, col(ids.columns.head)))
 
   /** K4: compaction — rewrite every bucket, one file each, into one new
-    * version, which collapses the manifest's version spread.
+    * version, which collapses the manifest's version spread. The bucket
+    * count is derived again from the manifest's row count
+    * (`Sizing.tableBuckets`): since every bucket is rewritten anyway,
+    * this is where a table that started small grows, and where one
+    * created with more buckets than its rows need shrinks.
     */
   def optimize(): Unit = latest.foreach { m =>
+    val n = Sizing.tableBuckets(m.rows)
     val all = snapshot(m, m.all)
-    commit(Some(m), if (m.buckets == 1) all.repartition(1) else all, m.all)
+    commit(Some(m), if (n == 1) all.repartition(1) else all, n, m.all)
   }
 
   /** K4: drop version directories and manifests the latest version does
@@ -243,22 +255,25 @@ final class GraftTable(
         .map(_.getInt(0)).toSet
     }
 
-  /** Commit the next version: `df` holds the new rows of the `rewritten`
-    * buckets, every other bucket of `prev` is carried forward. On a
-    * multi-bucket table the co-locating repartition writes one file per
-    * bucket, and sizing it by `rewritten` keeps an incremental merge from
-    * launching a write task per bucket of the TABLE. A one-bucket table
-    * skips it: its every commit rewrites the whole table, so each write
-    * task keeps its own file in `__b=0` and the write stays parallel.
+  /** Commit the next version of an `n`-bucket table: `df` holds the new
+    * rows of the `rewritten` buckets, every other bucket of `prev` is
+    * carried forward. A commit that changes the count must rewrite every
+    * bucket of `prev`. On a multi-bucket table the co-locating
+    * repartition writes one file per bucket, and sizing it by the
+    * buckets written keeps an incremental merge from launching a write
+    * task per bucket of the TABLE. A one-bucket table skips it: its
+    * every commit rewrites the whole table, so each write task keeps its
+    * own file in `__b=0` and the write stays parallel.
     */
-  private def commit(prev: Option[Manifest], df: DataFrame,
+  private def commit(prev: Option[Manifest], df: DataFrame, n: Int,
       rewritten: Set[Int]): Unit = {
-    val n = prev.fold(buckets)(_.buckets)
+    val resized = prev.exists(_.buckets != n)
     val next = currentVersion.map(_ + 1).getOrElse(0)
     val dir = s"$path/v$next"
     val bucketed = df.withColumn("__b", bucketCol(n))
     (if (n == 1) bucketed
-     else bucketed.repartition(math.max(1, rewritten.size), col("__b")))
+     else bucketed.repartition(
+       if (resized) n else math.max(1, rewritten.size), col("__b")))
       .write.mode("overwrite").partitionBy("__b").parquet(dir)
     val carried = prev.toSeq.flatMap(m => (m.dirs.keySet -- rewritten)
       .toSeq.map(b => (b, m.dirs(b), m.counts(b))))
@@ -321,8 +336,9 @@ object GraftTable {
     Files.deleteIfExists(p)
   }
 
-  /** `buckets` sets the key-hash bucket count of a NEW table (see the
-    * class doc); an existing table keeps the count its manifest records.
+  /** `buckets` sets the key-hash bucket count of a new table, or of one
+    * that holds no rows yet (see the class doc); a table with rows keeps
+    * the count its manifest records.
     */
   def apply(spark: SparkSession, path: String, spec: MergeSpec,
       buckets: Int = 1): GraftTable =

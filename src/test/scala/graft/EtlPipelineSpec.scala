@@ -475,6 +475,78 @@ class EtlPipelineSpec extends SparkSpecBase {
     assert(table.read().collect().map(_.getAs[String]("id")).toSet === expected)
   }
 
+  test("ETL pipeline: a new resource table is sized from its scrubbed rows") {
+    val input = tmp("size-in")
+    val output = tmp("size-out")
+    val phi = tmp("size-phi")
+    patients(input, (1 to 5).map(i =>
+      s"""{"resourceType":"Patient","id":"p$i","gender":"female"}"""): _*)
+    val r = EtlPipeline.run(spark, input, output, phi, tasks = patientTask).head
+    assert(r.rowsScrubbed === 5L)
+    assert(GraftTableSpec.manifestBuckets(s"$output/patient") ===
+      graft.operators.Sizing.tableBuckets(r.rowsScrubbed))
+  }
+
+  test("ETL pipeline: updates and deletes into an existing 16-bucket table") {
+    val output = tmp("b16-out")
+    val phi = tmp("b16-phi")
+    val base = tmp("b16-in0")
+    val staging = tmp("b16-staging")
+    val ids = (1 to 40).map(i => s"p$i")
+    patients(base, ids.map(id =>
+      s"""{"resourceType":"Patient","id":"$id","gender":"female","meta":{"lastUpdated":"2024-01-01T00:00:00Z"}}"""): _*)
+    // the base rows, loaded into a 16-bucket table as a table made
+    // before new tables were sized from their rows would hold them
+    EtlPipeline.run(spark, base, staging, phi, tasks = patientTask)
+    val spec = patientTask.head.mergeSpec
+    GraftTable(spark, s"$output/patient", spec, 16)
+      .merge(GraftTable(spark, s"$staging/patient", spec).read())
+    val table = GraftTable(spark, s"$output/patient", spec)
+    val v = table.currentVersion.get
+    assert(GraftTableSpec.manifestBuckets(s"$output/patient") === 16)
+
+    // p1 and p2 updated, p3 re-exported with an OLDER lastUpdated (the
+    // guard keeps the table's row), p41 inserted, p4 and p5 deleted
+    val next = tmp("b16-in1")
+    patients(next,
+      """{"resourceType":"Patient","id":"p1","gender":"male","meta":{"lastUpdated":"2024-02-01T00:00:00Z"}}""",
+      """{"resourceType":"Patient","id":"p2","gender":"other","meta":{"lastUpdated":"2024-02-01T00:00:00Z"}}""",
+      """{"resourceType":"Patient","id":"p3","gender":"male","meta":{"lastUpdated":"2023-01-01T00:00:00Z"}}""",
+      """{"resourceType":"Patient","id":"p41","gender":"male","meta":{"lastUpdated":"2024-02-01T00:00:00Z"}}""")
+    deletedBundle(next, "Patient/p4", "Patient/p5")
+    val r = EtlPipeline.run(spark, next, output, phi, tasks = patientTask)
+    assert(table.currentVersion === Some(v + 1))
+    assert(GraftTableSpec.manifestBuckets(s"$output/patient") === 16)
+    assert(r.head.rows === 39L)
+
+    val codebook = graft.deid.Codebook.loadOrCreate(phi)
+    val live = ids.filterNot(Set("p4", "p5")) :+ "p41"
+    val gender = live.map(id => id -> (id match {
+      case "p1" | "p41" => "male"
+      case "p2" => "other"
+      case _ => "female"
+    })).toMap
+    val fake = live.toDF("id").select(col("id"), codebook.fakeId(col("id")))
+      .collect().map(r => r.getString(1) -> r.getString(0)).toMap
+    val got = table.read().select("id", "gender").collect()
+      .map(r => fake.getOrElse(r.getString(0), r.getString(0)) -> r.getString(1))
+      .toMap
+    assert(got === gender)
+    // the merge probed its buckets: only the ones its keys and deleted
+    // ids hash into were rewritten (a bucket the deletes emptied writes
+    // no file)
+    def bucketsOf(real: String*): Set[String] = real.toDF("id")
+      .select(pmod(xxhash64(codebook.fakeId(col("id"))), lit(16)))
+      .collect().map(r => s"__b=${r.getLong(0)}").toSet
+    val rewritten = Files.list(Paths.get(output, "patient", s"v${v + 1}"))
+      .iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("__b=")).toSet
+    val touched = bucketsOf("p1", "p2", "p3", "p41", "p4", "p5")
+    assert(bucketsOf("p1", "p2", "p3", "p41").subsetOf(rewritten))
+    assert(rewritten.subsetOf(touched))
+    assert(touched.size < 16)
+  }
+
   test("ETL pipeline: a failing overlapped commit fails the run") {
     val input = tmp("fail-in")
     val output = tmp("fail-out")

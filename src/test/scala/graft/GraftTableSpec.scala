@@ -163,4 +163,56 @@ class GraftTableSpec extends SparkSpecBase {
     assert(rows.filter(col("id") === "id-1").select("v").head().getInt(0) === -1)
     assert(t.rowCount === 198L)
   }
+
+  private def rowsOf(t: GraftTable): Map[String, Int] =
+    t.read().collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+
+  test("an empty table takes its bucket count from its first data commit") {
+    val dir = Files.createTempDirectory("emptyfirst").toString
+    GraftTable(spark, dir, spec, 1).merge(Seq.empty[(String, Int)].toDF("id", "v"))
+    assert(GraftTableSpec.manifestBuckets(dir) === 1)
+    val t = GraftTable(spark, dir, spec, buckets = 4)
+    val rows = (1 to 40).map(i => s"id-$i" -> i)
+    t.merge(rows.toDF("id", "v"))
+    assert(GraftTableSpec.manifestBuckets(dir) === 4)
+    assert(bucketDirs(dir, 1) === bucketOf(rows.map(_._1), 4).values.toSet)
+    assert(rowsOf(t) === rows.toMap)
+    assert(t.rowCount === 40L)
+    // once it holds rows, the manifest's count wins over the caller's
+    GraftTable(spark, dir, spec, 16).merge(Seq(("id-1", -1)).toDF("id", "v"))
+    assert(GraftTableSpec.manifestBuckets(dir) === 4)
+    assert(bucketDirs(dir, 2) === bucketOf(Seq("id-1"), 4).values.toSet)
+    assert(rowsOf(t) === rows.toMap + ("id-1" -> -1))
+  }
+
+  test("optimize re-derives the bucket count from the row count") {
+    val dir = Files.createTempDirectory("optsize").toString
+    val t = GraftTable(spark, dir, spec, 16)
+    val rows = (1 to 20).map(i => s"id-$i" -> i)
+    t.merge(rows.toDF("id", "v"))
+    assert(GraftTableSpec.manifestBuckets(dir) === 16)
+    assert(bucketDirs(dir, 0).size > 1)
+    t.optimize()
+    assert(t.currentVersion === Some(1))
+    assert(GraftTableSpec.manifestBuckets(dir) === 1)
+    assert(bucketDirs(dir, 1) === Set(0))
+    assert(rowsOf(t) === rows.toMap)
+    assert(t.rowCount === 20L)
+    // the next merge rewrites that one bucket
+    t.merge(Seq(("id-1", -1), ("id-99", 99)).toDF("id", "v"))
+    assert(GraftTableSpec.manifestBuckets(dir) === 1)
+    assert(bucketDirs(dir, 2) === Set(0))
+    assert(rowsOf(t) === rows.toMap ++ Map("id-1" -> -1, "id-99" -> 99))
+    assert(t.rowCount === 21L)
+  }
+}
+
+object GraftTableSpec {
+  /** The bucket count the latest manifest of the table at `dir` records. */
+  def manifestBuckets(dir: String): Int = {
+    val v = new String(Files.readAllBytes(Paths.get(dir, "_latest")), "UTF-8").trim
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readAllBytes(Paths.get(dir, s"manifest-v$v.json")))
+      .get("buckets").asInt()
+  }
 }
