@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.util.concurrent.{ExecutionException, FutureTask}
+
+import scala.util.{Failure, Success, Try}
+
 import graft.deid.{Codebook, DefaultScrubPolicy, ScrubCompiler, ScrubPolicy}
 import graft.operators.{MergeOps, Sizing}
 import graft.operators.MergeOps.MergeSpec
@@ -13,9 +17,20 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * read NDJSON → scrub → dedup (last-wins) → merge into the output
   * table, with the export's deleted ids of that type → completion
   * bookkeeping — each stage one of the already-tested operators; this
-  * driver only sequences them. A task commits each table at most once,
-  * and runs its side-table commits beside the resource-table merge
-  * (see `run`). Tasks run one after another.
+  * driver only sequences them. Tasks run one after another.
+  *
+  * == Commit order ==
+  *
+  * A task commits each table at most once. Its side-table commits
+  * (census, codebook mappings) run on their own threads beside the
+  * resource-table merge, and so does the staging of its completion
+  * rows: their versions are written but not yet visible
+  * (`GraftTable.stage`). The completion rows are published only once the
+  * resource merge and every side commit have succeeded, so a completion
+  * row never names data that is not committed, a failed task publishes
+  * none, and a run that fails keeps the completion rows of the tasks
+  * before it. A staged version that is never published stays invisible
+  * until the next commit of its table overwrites it.
   */
 object EtlPipeline {
 
@@ -183,15 +198,12 @@ object EtlPipeline {
         // would run the input aggregation twice
         val censusRows = census.collect()
 
-        // Commit order. The task's data commits come first: the census
-        // merge and the Patient/Encounter codebook-mappings merge need
-        // only `raw` and the census rows, so they run on their own
-        // threads while this one scrubs, dedups and merges the resource
-        // table (its batch and its deleted ids in one version). The
-        // completion rows commit only once every data commit of the
-        // task has succeeded; the two completion tables overlap each
-        // other. No two threads ever commit the same table: tasks stay
-        // serial.
+        // Commit order (see the object doc): the census and
+        // Patient/Encounter codebook-mappings merges need only `raw` and
+        // the census rows, so they run on their own threads while this
+        // one scrubs, dedups and merges the resource table (its batch and
+        // its deleted ids in one version). No two threads ever commit the
+        // same table: tasks stay serial.
         val sideCommits = Seq(
           Option.when(censusRows.nonEmpty)(Overlap.fork {
             GraftTable(spark, s"$outputDir/etl__extension_census",
@@ -209,7 +221,7 @@ object EtlPipeline {
                 "id", task.resourceType))
           })
         ).flatten
-        val (deduped, table) = try Overlap.joinAfter(sideCommits) {
+        val (rows, completions) = try Overlap.joinAfter(sideCommits) {
           // nlpMode keeps note text (mask-note leaves), mirroring the
           // reference's prepare_pipeline(nlp=True) (etl/pipeline.py:213-215)
           val scrubbed = ScrubCompiler.scrub(raw, task.resourceType, codebook,
@@ -222,31 +234,36 @@ object EtlPipeline {
             Seq(col(NdjsonSource.FileSeq), col("__seq"))
           ).drop(NdjsonSource.FileSeq, "__seq")
             // materialized ONCE before the merge: the bucketed merge and
-            // the completion fan-out run several actions over `deduped`,
+            // the completion fan-out run several actions over `kept`,
             // and each would otherwise execute the scrub and the dedup
             // shuffle again. This checkpoint is their one execution.
             .localCheckpoint(true)
+          // the completion rows, staged beside the resource merge; J7:
+          // Encounter rows fan out into the per-encounter completion
+          // table as well (etl/tasks/basic_tasks.py:36-68)
+          val staged = Seq(
+            Option.when(task.resourceType == "Encounter")(Overlap.fork(
+              Completion.stageEncounters(spark, outputDir, kept.select("id"),
+                groupName, exportTime))),
+            Some(Overlap.fork(Completion.stageTable(spark, outputDir,
+              task.tableName, groupName, exportTime)))
+          ).flatten
           // bucketed incremental layout: re-runs merge only the key-hash
           // buckets their rows and deleted ids touch instead of rewriting
           // the table. A new (or still empty) table is sized from the
           // scrubbed count, which the checkpoint above has observed; a
           // table with rows keeps its manifest's count
-          val t = GraftTable(spark, tablePath, task.mergeSpec,
-            Sizing.tableBuckets(observedCount(scrubObs)))
-          t.merge(kept, deletes)
-          (kept, t)
+          val rows = Overlap.joinAfter(staged) {
+            GraftTable(spark, tablePath, task.mergeSpec,
+              Sizing.tableBuckets(observedCount(scrubObs)))
+              .stage(kept, deletes).publish()
+          }
+          (rows, staged.map(_.join().get))
         } finally raw.unpersist()
-
-        // J7: Encounter rows fan out into the per-encounter completion
-        // table as well (etl/tasks/basic_tasks.py:36-68)
-        Overlap.joinAfter(Option.when(task.resourceType == "Encounter")(
-          Overlap.fork(Completion.recordEncounters(spark, outputDir,
-            deduped.select("id"), groupName, exportTime))).toSeq) {
-          Completion.recordTable(spark, outputDir, task.tableName,
-            groupName, exportTime)
-        }
-        TaskResult(task.tableName, attempted = true,
-          rows = table.rowCount, // manifest counts only — no table scan
+        // every data commit of the task succeeded: its completion rows
+        // become visible, the per-table row last
+        completions.foreach(_.publish())
+        TaskResult(task.tableName, attempted = true, rows = rows,
           rowsRead = observedCount(readObs),
           rowsScrubbed = observedCount(scrubObs))
       }
@@ -268,31 +285,32 @@ private[etl] object Overlap {
     * session: its jobs are cancelled by the caller's `cancelJobGroup`
     * and attributed like the caller's own.
     */
-  final class Forked private[Overlap] (f: => Unit) {
-    @volatile private var failure: Option[Throwable] = None
-    private val thread = new Thread(
-      () => try f catch { case e: Throwable => failure = Some(e) },
-      "graft-etl-commit")
+  final class Forked[T] private[Overlap] (f: => T) {
+    private val task = new FutureTask[T](() => f)
+    private val thread = new Thread(task, "graft-etl-commit")
     thread.setDaemon(true)
     thread.start()
 
-    def join(): Option[Throwable] = { thread.join(); failure }
+    /** Wait for `f`: its value, or what it threw. */
+    def join(): Try[T] =
+      try Success(task.get())
+      catch { case e: ExecutionException => Failure(e.getCause) }
   }
 
-  def fork(f: => Unit): Forked = new Forked(f)
+  def fork[T](f: => T): Forked[T] = new Forked(f)
 
   /** `body` on the calling thread, then a wait for every `started`
     * fork, whatever `body` did: it returns only once all of them have
     * finished, and throws the first failure (the body's first; the
     * others ride along as suppressed).
     */
-  def joinAfter[T](started: Seq[Forked])(body: => T): T = {
-    val result = try Right(body) catch { case e: Throwable => Left(e) }
-    result.swap.toOption.toList ++ started.flatMap(_.join()) match {
-      case first :: rest =>
+  def joinAfter[T](started: Seq[Forked[_]])(body: => T): T = {
+    val result = try Success(body) catch { case e: Throwable => Failure(e) }
+    (result +: started.map(_.join())).flatMap(_.failed.toOption) match {
+      case first +: rest =>
         rest.foreach(first.addSuppressed)
         throw first
-      case Nil => result.toOption.get
+      case _ => result.get
     }
   }
 }
@@ -390,20 +408,42 @@ object Completion {
     Seq("encounter_id", "group_name"),
     Seq("encounter_id", "group_name", "export_time"))
 
+  /** Commit `tableName`'s completion row for (`groupName`,
+    * `exportTime`): [[stageTable]], then publish. Its `etl_time` is the
+    * time of staging. Kept for the benchmark harness (`perfbench/`);
+    * `EtlPipeline.run` stages and publishes apart.
+    */
   def recordTable(
       spark: SparkSession,
       outputDir: String,
       tableName: String,
       groupName: String,
       exportTime: String
-  ): Unit = {
+  ): Unit =
+    stageTable(spark, outputDir, tableName, groupName, exportTime).publish()
+
+  /** `tableName`'s completion row, staged and not yet visible. Its
+    * `etl_time` is stamped now, at staging: `EtlPipeline.run` stages it
+    * beside the task's resource merge, so it can precede the publish of
+    * the task's data by up to one merge.
+    */
+  def stageTable(
+      spark: SparkSession,
+      outputDir: String,
+      tableName: String,
+      groupName: String,
+      exportTime: String
+  ): GraftTable.Staged = {
     import spark.implicits._
     val etlTime = java.time.Instant.now().toString
-    ByTable.open(spark, outputDir).merge(
+    ByTable.open(spark, outputDir).stage(
       Seq((tableName, groupName, exportTime, etlTime))
         .toDF(ByTable.columns: _*))
   }
 
+  /** Commit one completion row per encounter id: [[stageEncounters]],
+    * then publish. Kept for the benchmark harness, like [[recordTable]].
+    */
   def recordEncounters(
       spark: SparkSession,
       outputDir: String,
@@ -411,7 +451,20 @@ object Completion {
       groupName: String,
       exportTime: String
   ): Unit =
-    ByEncounter.open(spark, outputDir).merge(encounterIds
+    stageEncounters(spark, outputDir, encounterIds, groupName, exportTime)
+      .publish()
+
+  /** One completion row per encounter id (`encounterIds`' one column),
+    * staged and not yet visible.
+    */
+  def stageEncounters(
+      spark: SparkSession,
+      outputDir: String,
+      encounterIds: DataFrame,
+      groupName: String,
+      exportTime: String
+  ): GraftTable.Staged =
+    ByEncounter.open(spark, outputDir).stage(encounterIds
       .select(col(encounterIds.columns.head).as("encounter_id"))
       .withColumn("group_name", lit(groupName))
       .withColumn("export_time", lit(exportTime)))

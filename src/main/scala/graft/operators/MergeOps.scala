@@ -131,15 +131,13 @@ object MergeOps {
   /** K3: delete rows whose id appears in `ids` (single key column in
     * `ids`). Distributed anti-join — no driver-side id collection, so the
     * reference's 50k-chunk OOM guard (deltalake.py:143-152) is unneeded.
+    * The ids are broadcast as they are: an anti join gives the same rows
+    * with duplicate build keys, so de-duplicating them first would only
+    * add a shuffle job before the broadcast.
     */
-  def deleteByIds(df: DataFrame, key: String, ids: DataFrame): DataFrame = {
-    val idCol = ids.columns.head
-    df.join(
-      broadcast(ids.select(col(idCol).as(key)).distinct()),
-      Seq(key),
-      "left_anti"
-    )
-  }
+  def deleteByIds(df: DataFrame, key: String, ids: DataFrame): DataFrame =
+    df.join(broadcast(ids.select(col(ids.columns.head).as(key))), Seq(key),
+      "left_anti")
 
   /** The matched-update guard as a Column over the packed `__t`/`__u`
     * structs: update unless BOTH sides carry the timestamp and the update

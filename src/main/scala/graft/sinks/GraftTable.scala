@@ -32,12 +32,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - `schema`: the table schema, which also serves an empty table and
   *    types the key probes.
   *
-  * A commit writes the data, then the manifest, then atomically moves
-  * the `_latest` pointer to the new version; readers follow the pointer,
-  * so they never see a partial write and keep their version while a
-  * writer commits (the snapshot contract Delta's log gives). Files of a
-  * version the pointer never reached are ignored, and the next commit
-  * overwrites them.
+  * A commit is two steps. [[stage]] writes the version's data under
+  * `v{N}`, reads its footers and builds the manifest in memory;
+  * [[GraftTable.Staged.publish]] writes the manifest and atomically
+  * moves the `_latest` pointer to the new version. Readers follow the
+  * pointer, so they never see a partial write and keep their version
+  * while a writer commits (the snapshot contract Delta's log gives).
+  * Files of a version the pointer never reached (a staged version never
+  * published, or a crashed commit) are ignored; the next commit
+  * overwrites them and [[vacuum]] removes them. Publish first checks
+  * that the table is still at the version the stage was built on, and
+  * throws if another commit moved it: it never replaces a committed
+  * version. The check is not a lock, so two writers must not commit one
+  * table at the same time.
   *
   * Every mutation is ONE commit: a merge that also deletes ids (an ETL
   * task's batch with its export's deleted ids, a replayed batch with
@@ -68,6 +75,7 @@ final class GraftTable(
   private val mapper = new ObjectMapper()
 
   private case class Manifest(
+      version: Int,
       buckets: Int,
       keys: Seq[String],
       dirs: Map[Int, String],
@@ -99,7 +107,7 @@ final class GraftTable(
         s"GraftTable $path version $v: manifest has no '$name' field"))
     def byBucket[A](name: String)(f: JsonNode => A): Map[Int, A] =
       field(name).fields().asScala.map(e => e.getKey.toInt -> f(e.getValue)).toMap
-    Manifest(field("buckets").asInt(),
+    Manifest(v, field("buckets").asInt(),
       field("keys").elements().asScala.map(_.asText()).toSeq,
       byBucket("dirs")(_.asText()),
       byBucket("counts")(_.asLong()),
@@ -158,15 +166,22 @@ final class GraftTable(
   def rowCount: Long = current.rows
 
   /** K1/J1-J3 + K3: merge a batch in and delete `deletes`' ids (a
-    * single-column frame) as ONE version: the result is
-    * `deleteByIds(merge(snapshot(touched), updates), ids)`, so an id
-    * both upserted and deleted ends absent. `touched` is every bucket
-    * the batch's keys or the ids hash into, found by one probe job over
-    * their union. The first write creates the table from the batch less
-    * the ids. A table that holds no rows yet (as `Init` leaves it)
-    * commits with this table's bucket count, not its manifest's.
+    * single-column frame) as ONE version: [[stage]], then publish.
     */
   def merge(updates: DataFrame, deletes: Option[DataFrame] = None): Unit =
+    stage(updates, deletes).publish()
+
+  /** The version [[merge]] commits, staged and not yet visible: the
+    * result is `deleteByIds(merge(snapshot(touched), updates), ids)`, so
+    * an id both upserted and deleted ends absent. `touched` is every
+    * bucket the batch's keys or the ids hash into, found by one probe
+    * job over their union. The first write creates the table from the
+    * batch less the ids. A table that holds no rows yet (as `Init`
+    * leaves it) commits with this table's bucket count, not its
+    * manifest's.
+    */
+  def stage(updates: DataFrame, deletes: Option[DataFrame] = None)
+      : GraftTable.Staged =
     latest match {
       case None =>
         val key = spec.keys.head
@@ -174,7 +189,7 @@ final class GraftTable(
           MergeOps.deleteByIds(updates, key,
             ids.select(col(ids.columns.head).cast(updates.schema(key).dataType)))
         }
-        commit(None, rows, buckets, (0 until buckets).toSet)
+        stageVersion(None, rows, buckets, (0 until buckets).toSet)
       case Some(m) =>
         val ids = deletes.map(idsOf(m, _))
         val empty = m.rows == 0L
@@ -186,7 +201,7 @@ final class GraftTable(
             bucketsOf(m, ids.fold(keys)(keys.union))
           }
         val merged = MergeOps.merge(snapshot(m, touched), updates, spec)
-        commit(Some(m),
+        stageVersion(Some(m),
           ids.fold(merged)(MergeOps.deleteByIds(merged, spec.keys.head, _)),
           if (empty) buckets else m.buckets, touched)
     }
@@ -198,8 +213,8 @@ final class GraftTable(
   def deleteIds(ids: DataFrame): Unit = latest.foreach { m =>
     val keyed = idsOf(m, ids)
     val touched = if (spec.keys.length > 1) m.all else bucketsOf(m, keyed)
-    commit(Some(m), MergeOps.deleteByIds(snapshot(m, touched), spec.keys.head,
-      keyed), m.buckets, touched)
+    stageVersion(Some(m), MergeOps.deleteByIds(snapshot(m, touched),
+      spec.keys.head, keyed), m.buckets, touched).publish()
   }
 
   /** `ids`' one column as the table's first key, cast to its type. */
@@ -216,7 +231,8 @@ final class GraftTable(
   def optimize(): Unit = latest.foreach { m =>
     val n = Sizing.tableBuckets(m.rows)
     val all = snapshot(m, m.all)
-    commit(Some(m), if (n == 1) all.repartition(1) else all, n, m.all)
+    stageVersion(Some(m), if (n == 1) all.repartition(1) else all, n, m.all)
+      .publish()
   }
 
   /** K4: drop version directories and manifests the latest version does
@@ -255,20 +271,20 @@ final class GraftTable(
         .map(_.getInt(0)).toSet
     }
 
-  /** Commit the next version of an `n`-bucket table: `df` holds the new
+  /** Stage the next version of an `n`-bucket table: `df` holds the new
     * rows of the `rewritten` buckets, every other bucket of `prev` is
-    * carried forward. A commit that changes the count must rewrite every
-    * bucket of `prev`. On a multi-bucket table the co-locating
+    * carried forward. A version that changes the count must rewrite
+    * every bucket of `prev`. On a multi-bucket table the co-locating
     * repartition writes one file per bucket, and sizing it by the
     * buckets written keeps an incremental merge from launching a write
     * task per bucket of the TABLE. A one-bucket table skips it: its
     * every commit rewrites the whole table, so each write task keeps its
     * own file in `__b=0` and the write stays parallel.
     */
-  private def commit(prev: Option[Manifest], df: DataFrame, n: Int,
-      rewritten: Set[Int]): Unit = {
+  private def stageVersion(prev: Option[Manifest], df: DataFrame, n: Int,
+      rewritten: Set[Int]): GraftTable.Staged = {
     val resized = prev.exists(_.buckets != n)
-    val next = currentVersion.map(_ + 1).getOrElse(0)
+    val next = prev.fold(0)(_.version + 1)
     val dir = s"$path/v$next"
     val bucketed = df.withColumn("__b", bucketCol(n))
     (if (n == 1) bucketed
@@ -285,14 +301,29 @@ final class GraftTable(
     spec.keys.foreach(keys.add)
     val dirs = node.putObject("dirs")
     val counts = node.putObject("counts")
-    (carried ++ written).sortBy(_._1).foreach { case (b, d, c) =>
+    val all = (carried ++ written).sortBy(_._1)
+    all.foreach { case (b, d, c) =>
       dirs.put(b.toString, d)
       counts.put(b.toString, c)
     }
     node.set[JsonNode]("schema", mapper.readTree(df.schema.json))
-    Files.write(manifestFile(next), mapper.writeValueAsBytes(node))
+    new GraftTable.Staged(this, prev.map(_.version), next,
+      mapper.writeValueAsBytes(node), all.map(_._3).sum)
+  }
+
+  /** Make staged version `v` the latest, if the table is still at
+    * `base`, the version it was staged on.
+    */
+  private def publish(base: Option[Int], v: Int, manifestJson: Array[Byte])
+      : Unit = {
+    val now = currentVersion
+    if (now != base)
+      throw new IllegalStateException(s"GraftTable $path moved to version " +
+        s"${now.getOrElse("none")} while version $v was staged on " +
+        s"${base.getOrElse("none")}; not published")
+    Files.write(manifestFile(v), manifestJson)
     val tmp = Paths.get(path, "_latest.tmp")
-    Files.write(tmp, next.toString.getBytes("UTF-8"))
+    Files.write(tmp, v.toString.getBytes("UTF-8"))
     Files.move(tmp, latestFile, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
@@ -322,6 +353,23 @@ final class GraftTable(
 }
 
 object GraftTable {
+  /** A version of `table` written under `v{version}` with its manifest
+    * built, on top of version `base` (`None`: the table's first). It is
+    * invisible to every reader until [[publish]].
+    */
+  final class Staged private[GraftTable] (table: GraftTable,
+      base: Option[Int], version: Int, manifestJson: Array[Byte],
+      rows: Long) {
+    /** Write the manifest and move `_latest` to this version; the row
+      * count its manifest records. Throws, and changes nothing, when
+      * another commit has moved the table off `base`.
+      */
+    def publish(): Long = {
+      table.publish(base, version, manifestJson)
+      rows
+    }
+  }
+
   /** The entries of directory `p`. `Files.list` holds a directory
     * handle open until its stream is closed; this closes it.
     */

@@ -569,6 +569,35 @@ class EtlPipelineSpec extends SparkSpecBase {
       completion.read().filter(col("table_name") === "patient").isEmpty)
   }
 
+  test("ETL pipeline: a failed task publishes no completion row") {
+    val input = tmp("cfail-in")
+    val output = tmp("cfail-out")
+    val phi = tmp("cfail-phi")
+    patients(input, """{"resourceType":"Patient","id":"p1","gender":"female"}""")
+    Files.write(Paths.get(input, "Encounter.ndjson"),
+      """{"resourceType":"Encounter","id":"e1","status":"finished"}"""
+        .getBytes("UTF-8"))
+    // a regular file where the encounter table should be: the Encounter
+    // task's resource merge fails while its completion rows are staged
+    Files.write(Paths.get(output, "encounter"), "x".getBytes("UTF-8"))
+    def tree(): Map[String, Long] =
+      Files.walk(Paths.get(output)).iterator().asScala
+        .filter(Files.isRegularFile(_)).map(p => p.toString -> Files.size(p))
+        .toMap
+    intercept[Exception](EtlPipeline.run(spark, input, output, phi,
+      tasks = Seq(EtlPipeline.EtlTask("Patient", "patient"),
+        EtlPipeline.EtlTask("Encounter", "encounter"))))
+    val after = tree()
+    Thread.sleep(2000)
+    assert(tree() === after, "a commit landed after the run returned")
+    // the finished task keeps its row; the failed one published none
+    val completion = graft.etl.Completion.ByTable.open(spark, output)
+    assert(completion.read().select("table_name").collect()
+      .map(_.getString(0)).toSeq === Seq("patient"))
+    val encounters = graft.etl.Completion.ByEncounter.open(spark, output)
+    assert(!encounters.exists || encounters.read().isEmpty)
+  }
+
   test("ETL pipeline: every job of a run carries the caller's job group") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val input = tmp("grp-in")

@@ -54,6 +54,54 @@ class GraftTableSpec extends SparkSpecBase {
     }
   }
 
+  test("a staged merge stays invisible until published; vacuum drops it") {
+    val dir = Files.createTempDirectory("staged").toString
+    val t = GraftTable(spark, dir, spec, 4)
+    val rows = (1 to 40).map(i => s"id-$i" -> i)
+    t.merge(rows.toDF("id", "v"))
+    t.stage(Seq(("id-1", -1), ("id-99", 99)).toDF("id", "v"))
+    assert(Files.isDirectory(Paths.get(dir, "v1")))
+    assert(t.currentVersion === Some(0))
+    assert(rowsOf(t) === rows.toMap)
+    assert(GraftTable(spark, dir, spec).rowCount === 40L)
+    assert(manifests(dir) === Set("manifest-v0.json"))
+    // vacuum removes the unpublished version
+    t.vacuum()
+    assert(!Files.exists(Paths.get(dir, "v1")))
+    assert(rowsOf(t) === rows.toMap)
+
+    // the next merge commits over a staged version's debris: its own
+    // buckets only, not the staged ones it does not touch
+    t.stage((1 to 40).map(i => (s"id-$i", -i)).toDF("id", "v"))
+    assert(bucketDirs(dir, 1).size > 1)
+    t.merge(Seq(("id-2", -2)).toDF("id", "v"))
+    assert(t.currentVersion === Some(1))
+    assert(bucketDirs(dir, 1) === bucketOf(Seq("id-2"), 4).values.toSet)
+    assert(rowsOf(t) === rows.toMap + ("id-2" -> -2))
+    assert(t.rowCount === 40L)
+  }
+
+  test("publish returns the row count and refuses a table another commit moved") {
+    val dir = Files.createTempDirectory("moved").toString
+    val t = GraftTable(spark, dir, spec)
+    assert(t.stage(Seq(("a", 1), ("b", 2)).toDF("id", "v")).publish() === 2L)
+    val stale = t.stage(Seq(("c", 3)).toDF("id", "v"))
+    // another commit lands on the same base version first
+    t.merge(Seq(("a", 10), ("d", 4)).toDF("id", "v"))
+    val e = intercept[IllegalStateException](stale.publish())
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("not published"),
+      e.getMessage)
+    assert(t.currentVersion === Some(1))
+    assert(rowsOf(t) === Map("a" -> 10, "b" -> 2, "d" -> 4))
+    assert(t.rowCount === 3L)
+    // a published version cannot be published again
+    val once = t.stage(Seq(("e", 5)).toDF("id", "v"))
+    assert(once.publish() === 4L)
+    intercept[IllegalStateException](once.publish())
+    assert(t.currentVersion === Some(2))
+    assert(rowsOf(t) === Map("a" -> 10, "b" -> 2, "d" -> 4, "e" -> 5))
+  }
+
   test("a table in an older manifest format fails loudly") {
     val dir = Files.createTempDirectory("oldfmt").toString
     Files.write(Paths.get(dir, "_latest"), "3".getBytes("UTF-8"))

@@ -266,6 +266,31 @@ class MergeOpsSpec extends SparkSpecBase {
     assert(out.toSeq === Seq(1L, 3L))
   }
 
+  test("deleteByIds: duplicate ids delete the same rows, broadcast unshuffled") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = (1L to 6L).map(i => (i, s"v$i")).toDF("id", "v")
+    def kept(ids: Seq[Long]) = {
+      val out = MergeOps.deleteByIds(df, "id", ids.toDF("x"))
+      (out.collect().map(_.getLong(0)).sorted.toSeq, out)
+    }
+    val (once, _) = kept(Seq(2L, 5L))
+    val (dup, plan) = kept(Seq(5L, 2L, 5L, 2L, 2L))
+    assert(once === Seq(1L, 3L, 4L, 6L))
+    assert(dup === once)
+    // the driver-local ids go straight into the broadcast: no
+    // de-duplicating shuffle job runs before it
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }).flatMap(nodes)
+    val executed = plan.queryExecution.executedPlan
+    assert(!nodes(executed).exists(_.isInstanceOf[ShuffleExchangeExec]),
+      executed.toString)
+  }
+
   test("changeFeed emits all four change classes of a group merge") {
     val target = Seq(
       (1L, "g1", 10.0), // matched → pre/post
