@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.etl.EtlPipeline
-import graft.sinks.GraftTable
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
@@ -145,7 +144,7 @@ object Bench {
       writeBatch(in3, 0 until 5)
       val tinyS = load(in3, obsTask, "bench3", "2024-01-03T00:00:00Z")._2
       EtlTimes(results.map(_.rows).sum, coldS, incrS, tinyS)
-    } finally GraftTable.deleteRecursively(root)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,5 @@
 package graft.deid
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.SecureRandom
 import java.util.UUID
 
@@ -8,6 +7,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 import graft.functions.HmacSha256Hex
+import graft.sinks.Store
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -88,12 +89,14 @@ object Codebook {
     * 32-byte salt + id when absent — mirroring the reference's lifecycle.
     * A version-0 file has no salt: the one drawn for it is written back
     * into the file, beside its other sections, so every later load
-    * hashes ids to the same pseudonyms.
+    * hashes ids to the same pseudonyms. The file goes through `dir`'s
+    * `Store`: its Hadoop filesystem under the active session's conf.
     */
   def loadOrCreate(dir: String): Codebook = {
-    val path = Paths.get(dir, "codebook.json")
-    if (Files.exists(path)) {
-      val node = mapper.readTree(Files.readAllBytes(path))
+    val store = Store(dir)
+    val path = store("codebook.json")
+    if (store.fs.exists(path)) {
+      val node = mapper.readTree(store.read(path))
       val legacy = scala.collection.mutable.Map[String, Map[String, String]]()
       // version-0 codebooks nest everything under "mrn":
       // {patient: {deid, encounter: {enc: {deid, …}}}} — migrate those
@@ -128,7 +131,7 @@ object Codebook {
       val salt = Option(node.get("id_salt")).map(_.asText()).getOrElse {
         val drawn = newSalt()
         node.asInstanceOf[ObjectNode].put("id_salt", drawn)
-        write(path, node)
+        write(store, path, node)
         drawn
       }
       Codebook(
@@ -141,8 +144,7 @@ object Codebook {
       root.put("version", 1)
       root.put("codebook_id", cb.codebookId)
       root.put("id_salt", cb.saltHex)
-      Files.createDirectories(path.getParent)
-      write(path, root)
+      write(store, path, root)
       cb
     }
   }
@@ -153,15 +155,12 @@ object Codebook {
     bytes.map("%02x".format(_)).mkString
   }
 
-  /** Replace `path` with `node` through a temp file and a rename, so a
-    * crash mid-write never leaves a truncated codebook (its legacy maps
-    * are the only copy of those pseudonyms).
+  /** Replace `path` with `node` through a temp file and a rename
+    * ([[Store.put]]), so a crash mid-write never leaves a truncated
+    * codebook (its legacy maps are the only copy of those pseudonyms)
+    * on the stores `GraftTable`'s doc names.
     */
-  private def write(path: Path, node: JsonNode): Unit = {
-    val tmp = path.resolveSibling(s"${path.getFileName}.tmp")
-    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter()
+  private def write(store: Store, path: Path, node: JsonNode): Unit =
+    store.put(path, mapper.writerWithDefaultPrettyPrinter()
       .writeValueAsBytes(node))
-    Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
 }

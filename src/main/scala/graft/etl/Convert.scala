@@ -1,12 +1,12 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.operators.MergeOps.MergeSpec
 import graft.operators.Sizing
-import graft.sinks.GraftTable
+import graft.sinks.{GraftTable, Store}
 import org.apache.spark.sql.SparkSession
 
 /** `convert`: replay a batched-NDJSON output tree into merge tables
@@ -24,29 +24,16 @@ object Convert {
 
   /** Discover a table dir's batches in replay order. */
   def listBatches(tableDir: String, table: String): Seq[BatchFile] = {
-    val dir = Paths.get(tableDir)
-    if (!Files.exists(dir)) return Nil
+    val store = Store(tableDir)
+    val names = store.list().map(_.getPath.getName).toSet
     val pattern = s"""\\Q$table\\E\\.(\\d+)\\.ndjson""".r
-    val batches = scala.collection.mutable.ArrayBuffer[BatchFile]()
-    GraftTable.listDir(dir).foreach { p =>
-      p.getFileName.toString match {
-        case pattern(i) =>
-          val metaPath = Paths.get(tableDir, s"$table.$i.meta")
-          val (groups, deleted) =
-            if (Files.exists(metaPath)) {
-              val node = mapper.readTree(Files.readAllBytes(metaPath))
-              def arr(k: String): Seq[String] = {
-                val a = node.get(k)
-                if (a == null) Nil
-                else (0 until a.size()).map(a.get(_).asText())
-              }
-              (arr("groups"), arr("deleted"))
-            } else (Nil, Nil)
-          batches += BatchFile(i.toInt, p.toString, groups, deleted)
-        case _ =>
-      }
-    }
-    batches.sortBy(_.index).toSeq
+    names.toSeq.collect { case name @ pattern(i) =>
+      val meta = Option.when(names(s"$table.$i.meta"))(
+        mapper.readTree(store.read(store(s"$table.$i.meta"))))
+      def arr(k: String): Seq[String] = meta.flatMap(m => Option(m.get(k)))
+        .fold(Seq.empty[String])(_.elements().asScala.map(_.asText()).toSeq)
+      BatchFile(i.toInt, store(name).toString, arr("groups"), arr("deleted"))
+    }.sortBy(_.index)
   }
 
   /** Replay one table into a GraftTable at `targetDir/table`. */
@@ -82,17 +69,11 @@ object Convert {
       targetDir: String,
       specFor: String => MergeSpec = _ => MergeSpec(Seq("id"))
   ): Map[String, Long] = {
-    val src = Paths.get(sourceDir)
-    if (!Files.exists(src)) return Map.empty
-    val tables = scala.collection.mutable.Map[String, Long]()
-    GraftTable.listDir(src).foreach { p =>
-      if (Files.isDirectory(p)) {
-        val table = p.getFileName.toString
-        if (listBatches(p.toString, table).nonEmpty)
-          tables += table -> convertTable(spark, p.toString, table,
-            targetDir, specFor(table))
-      }
-    }
-    tables.toMap
+    val src = Store(sourceDir, spark)
+    src.list().filter(_.isDirectory).map(_.getPath.getName).flatMap { table =>
+      val dir = src(table).toString
+      Option.when(listBatches(dir, table).nonEmpty)(
+        table -> convertTable(spark, dir, table, targetDir, specFor(table)))
+    }.toMap
   }
 }

@@ -7,7 +7,7 @@ import scala.util.{Failure, Success, Try}
 import graft.deid.{Codebook, DefaultScrubPolicy, ScrubCompiler, ScrubPolicy}
 import graft.operators.{MergeOps, Sizing}
 import graft.operators.MergeOps.MergeSpec
-import graft.sinks.GraftTable
+import graft.sinks.{GraftTable, Store}
 import graft.sources.NdjsonSource
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -151,9 +151,11 @@ object EtlPipeline {
         .collect().toSeq.groupMap(_.getString(0))(_.getString(1))
 
     val results = tasks.map { task =>
+      // one partition: a local relation runs a task per row (up to the
+      // core count) in every job over it, such as the deletes' broadcast
       val deletes = deletedIds.get(task.resourceType).map { ids =>
         import spark.implicits._
-        ids.toDF("id")
+        ids.toDF("id").coalesce(1)
       }
       val tablePath = s"$outputDir/${task.tableName}"
       if (!available.contains(task.resourceType)) {
@@ -316,7 +318,8 @@ private[etl] object Overlap {
 }
 
 /** K10: frozen run configuration under OUTPUT/JobConfig/{timestamp}/
-  * (etl/config.py:71-133) — run provenance for later `convert`s.
+  * (etl/config.py:71-133) — run provenance for later `convert`s,
+  * written through the output dir's Hadoop filesystem.
   */
 object JobConfig {
   def write(outputDir: String, entries: Map[String, String]): String = {
@@ -324,25 +327,21 @@ object JobConfig {
       .ofPattern("yyyy-MM-dd__HH.mm.ss")
       .withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now())
-    val dir = java.nio.file.Paths.get(outputDir, "JobConfig", ts)
-    java.nio.file.Files.createDirectories(dir)
+    val store = Store(outputDir)
+    val dir = store(s"JobConfig/$ts")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     entries.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
-    java.nio.file.Files.write(dir.resolve("job_config.json"),
+    store.put(new org.apache.hadoop.fs.Path(dir, "job_config.json"),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
     dir.toString
   }
 
-  /** O5: most recent JobConfig dir (reverse-sorted timestamps). */
+  /** O5: most recent JobConfig dir (the highest timestamp). */
   def latest(outputDir: String): Option[String] = {
-    val base = java.nio.file.Paths.get(outputDir, "JobConfig")
-    if (!java.nio.file.Files.exists(base)) None
-    else {
-      val dirs = GraftTable.listDir(base).map(_.getFileName.toString)
-      dirs.sorted(Ordering.String.reverse).headOption
-        .map(d => base.resolve(d).toString)
-    }
+    val store = Store(outputDir)
+    store.list(store("JobConfig")).map(_.getPath.getName).maxOption
+      .map(d => store(s"JobConfig/$d").toString)
   }
 }
 
@@ -385,15 +384,9 @@ object Completion {
         MergeSpec(keys, updateExisting = false))
 
     /** Create the table empty when absent; whether it did. */
-    def touch(spark: SparkSession, outputDir: String): Boolean = {
-      val table = open(spark, outputDir)
-      if (table.exists) false
-      else {
-        table.merge(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], schema))
-        true
-      }
-    }
+    def touch(spark: SparkSession, outputDir: String): Boolean =
+      open(spark, outputDir).touch(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
   }
 
   /** One row per (table, group, export) a run completed. */

@@ -1,10 +1,8 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
-
 import graft.deid.{Codebook, DefaultScrubPolicy, ScrubCompiler, ScrubPolicy}
 import graft.operators.Sizing
-import graft.sinks.GraftTable
+import graft.sinks.{GraftTable, Store}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The `init` subcommand (reference: etl/init/cli.py:46-75): pre-create
@@ -59,15 +57,10 @@ object Init {
       outputDir: String,
       task: EtlPipeline.EtlTask,
       policy: ScrubPolicy = DefaultScrubPolicy.policy
-  ): Boolean = {
-    val table = GraftTable(spark, s"$outputDir/${task.tableName}",
-      task.mergeSpec, buckets = Sizing.tableBuckets(0L))
-    if (table.exists) false
-    else {
-      table.merge(emptyTaskFrame(spark, task.resourceType, policy))
-      true
-    }
-  }
+  ): Boolean =
+    GraftTable(spark, s"$outputDir/${task.tableName}", task.mergeSpec,
+      buckets = Sizing.tableBuckets(0L))
+      .touch(emptyTaskFrame(spark, task.resourceType, policy))
 
   /** Initialize `outputDir`: returns the table names actually created. */
   def run(
@@ -76,7 +69,7 @@ object Init {
       tasks: Seq[EtlPipeline.EtlTask] = EtlPipeline.DefaultTasks,
       policy: ScrubPolicy = DefaultScrubPolicy.policy
   ): Seq[String] = {
-    Files.createDirectories(Paths.get(outputDir, "JobConfig"))
+    Store(s"$outputDir/JobConfig", spark).mkdirs()
     val created = tasks.filter(touchTable(spark, outputDir, _, policy))
       .map(_.tableName)
     // the Encounter task's second output (basic_tasks.py:45-51) and the

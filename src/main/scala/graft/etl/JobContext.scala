@@ -1,8 +1,10 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+
+import graft.sinks.Store
 
 /** K10: persistent between-run state in the PHI/build dir
   * (`context.json`, reference: etl/context.py:10-75) — the
@@ -13,6 +15,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * Reference keys preserved verbatim (`last_successful_datetime` /
   * `_input_dir` / `_output_dir`); `last_successful_tables` adds the
   * per-task row summary, which the reference logs but does not persist.
+  * [[save]] replaces the file whole through the PHI dir's `Store`.
   */
 final case class JobContext(
     lastSuccessfulDatetime: Option[String] = None,
@@ -35,29 +38,28 @@ final case class JobContext(
         case (t, n) => tables.put(t, n)
       }
     }
-    Files.createDirectories(Paths.get(phiDir))
+    val store = Store(phiDir)
     // pretty-print like the reference (context.py:68-70): it isn't large
-    Files.write(JobContext.path(phiDir),
+    store.put(store(JobContext.File),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
   }
 }
 
 object JobContext {
-  private def path(phiDir: String) = Paths.get(phiDir, "context.json")
+  private val File = "context.json"
 
   /** Missing/empty file → empty context (context.py:34 `default={}`). */
   def load(phiDir: String): JobContext = {
-    val p = path(phiDir)
-    if (!Files.exists(p)) JobContext()
+    val store = Store(phiDir)
+    val p = store(File)
+    if (!store.fs.exists(p)) JobContext()
     else {
-      val node = new ObjectMapper().readTree(Files.readAllBytes(p))
+      val node = new ObjectMapper().readTree(store.read(p))
       def str(k: String): Option[String] =
         Option(node.get(k)).map(_.asText()).filter(_.nonEmpty)
-      val tables = Option(node.get("last_successful_tables")).map { t =>
-        val out = scala.collection.mutable.Map[String, Long]()
-        t.fields().forEachRemaining(e => out(e.getKey) = e.getValue.asLong())
-        out.toMap
-      }.getOrElse(Map.empty[String, Long])
+      val tables = Option(node.get("last_successful_tables"))
+        .fold(Map.empty[String, Long])(_.fields().asScala
+          .map(e => e.getKey -> e.getValue.asLong()).toMap)
       JobContext(str("last_successful_datetime"),
         str("last_successful_input_dir"),
         str("last_successful_output_dir"), tables)

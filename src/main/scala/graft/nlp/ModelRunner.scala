@@ -150,10 +150,8 @@ object ModelRunner {
               col(promptCol.getOrElse(textCol)).as("prompt"))
             .write.option("maxRecordsPerFile", maxLines)
             .mode("overwrite").json(promptDir)
-          val files = graft.sinks.GraftTable
-            .listDir(java.nio.file.Paths.get(promptDir))
-            .filter(_.getFileName.toString.endsWith(".json"))
-            .map(_.toString).sorted
+          val files = new java.io.File(promptDir).listFiles().toSeq
+            .map(_.getPath).filter(_.endsWith(".json")).sorted
           // sidecar rewritten after EVERY submit, so a crash mid-way
           // resumes the already-submitted jobs instead of double-paying
           // for them; prompts never submitted stay cache-misses and

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.io.FileNotFoundException
 
 import scala.jdk.CollectionConverters._
 
@@ -8,6 +8,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.operators.{MergeOps, Sizing}
 import graft.operators.MergeOps.MergeSpec
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -34,17 +35,24 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * A commit is two steps. [[stage]] writes the version's data under
   * `v{N}`, reads its footers and builds the manifest in memory;
-  * [[GraftTable.Staged.publish]] writes the manifest and atomically
-  * moves the `_latest` pointer to the new version. Readers follow the
-  * pointer, so they never see a partial write and keep their version
-  * while a writer commits (the snapshot contract Delta's log gives).
-  * Files of a version the pointer never reached (a staged version never
-  * published, or a crashed commit) are ignored; the next commit
-  * overwrites them and [[vacuum]] removes them. Publish first checks
-  * that the table is still at the version the stage was built on, and
-  * throws if another commit moved it: it never replaces a committed
-  * version. The check is not a lock, so two writers must not commit one
-  * table at the same time.
+  * [[GraftTable.Staged.publish]] claims the version: it writes the
+  * manifest to `v{N}/_manifest.json` and renames it to
+  * `manifest-v{N}.json`. That rename is the one commit point, as the
+  * put-if-absent log file is Delta Lake's (Armbrust et al., VLDB 2020):
+  * the latest version is the highest manifest, so readers never see a
+  * partial write and keep their version while a writer commits. An
+  * unclaimed version (a stage never published, a crashed commit) leaves
+  * its files only inside its `v{N}`: the next commit overwrites them and
+  * [[vacuum]] removes them. Publish throws, and never replaces a
+  * committed version, unless the highest manifest is still the stage's
+  * base and its own name is free. The check is not a lock, so two
+  * writers must not commit one table at the same time.
+  *
+  * Files go through the table path's Hadoop filesystem ([[Store]]). The
+  * stores the tests cover are `file:` and schemes derived from Hadoop's
+  * raw local filesystem; no other is claimed safe, as the claim needs an
+  * atomic rename and a check of the name just before it. An older
+  * table's pointer file is ignored: it reads by its highest manifest.
   *
   * Every mutation is ONE commit: a merge that also deletes ids (an ETL
   * task's batch with its export's deleted ids, a replayed batch with
@@ -86,22 +94,21 @@ final class GraftTable(
     def rows: Long = counts.values.sum
   }
 
-  private def latestFile = Paths.get(path, "_latest")
-  private def manifestFile(v: Int) = Paths.get(path, s"manifest-v$v.json")
+  private lazy val store = Store(path, spark)
 
-  def currentVersion: Option[Int] =
-    if (Files.exists(latestFile))
-      Some(new String(Files.readAllBytes(latestFile), "UTF-8").trim.toInt)
-    else None
+  private def manifestFile(v: Int) = store(s"manifest-v$v.json")
+
+  /** The highest claimed manifest's version. */
+  def currentVersion: Option[Int] = store.list().map(_.getPath.getName)
+    .collect { case GraftTable.ManifestName(v) => v.toInt }.maxOption
 
   def exists: Boolean = currentVersion.isDefined
 
   private def manifest(v: Int): Manifest = {
-    val p = manifestFile(v)
-    if (!Files.exists(p))
+    val node = try mapper.readTree(store.read(manifestFile(v)))
+    catch { case _: FileNotFoundException =>
       throw new IllegalArgumentException(
-        s"version $v of GraftTable $path is gone (vacuumed?)")
-    val node = mapper.readTree(Files.readAllBytes(p))
+        s"version $v of GraftTable $path is gone (vacuumed?)") }
     def field(name: String): JsonNode = Option(node.get(name)).getOrElse(
       throw new IllegalStateException(
         s"GraftTable $path version $v: manifest has no '$name' field"))
@@ -161,6 +168,11 @@ final class GraftTable(
       .distinct()
     snapshot(m, bucketsOf(m, probe)).join(broadcast(probe), spec.keys, "left_semi")
   }
+
+  /** Commit `empty` as the first version of a table that has none;
+    * whether it did.
+    */
+  def touch(empty: => DataFrame): Boolean = !exists && { merge(empty); true }
 
   /** Exact current row count from the manifest — no file is opened. */
   def rowCount: Long = current.rows
@@ -235,18 +247,13 @@ final class GraftTable(
       .publish()
   }
 
-  /** K4: drop version directories and manifests the latest version does
-    * not reference.
+  /** K4: drop everything under the table's path but the latest
+    * manifest and the version directories it references.
     */
   def vacuum(): Unit = currentVersion.foreach { keep =>
-    val live = manifest(keep).dirs.values.toSet
-    GraftTable.listDir(Paths.get(path)).foreach { p =>
-      val name = p.getFileName.toString
-      if (name.matches("v\\d+") && !live(name))
-        GraftTable.deleteRecursively(p)
-      if (name.startsWith("manifest-v") && name != s"manifest-v$keep.json")
-        Files.deleteIfExists(p)
-    }
+    val live = manifest(keep).dirs.values.toSet + manifestFile(keep).getName
+    store.list().map(_.getPath).filterNot(p => live(p.getName))
+      .foreach(store.delete)
   }
 
   private def bucketCol(n: Int) =
@@ -293,7 +300,7 @@ final class GraftTable(
       .write.mode("overwrite").partitionBy("__b").parquet(dir)
     val carried = prev.toSeq.flatMap(m => (m.dirs.keySet -- rewritten)
       .toSeq.map(b => (b, m.dirs(b), m.counts(b))))
-    val written = footerRecordCounts(dir).toSeq
+    val written = footerRecordCounts(store(s"v$next")).toSeq
       .map { case (b, c) => (b, s"v$next", c) }
     val node = mapper.createObjectNode()
     node.put("buckets", n)
@@ -311,45 +318,37 @@ final class GraftTable(
       mapper.writeValueAsBytes(node), all.map(_._3).sum)
   }
 
-  /** Make staged version `v` the latest, if the table is still at
-    * `base`, the version it was staged on.
+  /** Claim staged version `v`: make its manifest the highest, if the
+    * table is still at `base`, the version it was staged on.
     */
   private def publish(base: Option[Int], v: Int, manifestJson: Array[Byte])
       : Unit = {
     val now = currentVersion
-    if (now != base)
+    val claimed = manifestFile(v)
+    if (now != base || store.fs.exists(claimed))
       throw new IllegalStateException(s"GraftTable $path moved to version " +
         s"${now.getOrElse("none")} while version $v was staged on " +
         s"${base.getOrElse("none")}; not published")
-    Files.write(manifestFile(v), manifestJson)
-    val tmp = Paths.get(path, "_latest.tmp")
-    Files.write(tmp, v.toString.getBytes("UTF-8"))
-    Files.move(tmp, latestFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    store.put(claimed, manifestJson, Some(store(s"v$v/_manifest.json")))
   }
 
   /** Footer record counts per bucket of ONE version dir — IO ∝ the
     * buckets that version wrote, never the whole table.
     */
-  private def footerRecordCounts(versionDir: String): Map[Int, Long] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val base = new org.apache.hadoop.fs.Path(versionDir)
-    val fs = base.getFileSystem(conf)
-    if (!fs.exists(base)) Map.empty
-    else fs.listStatus(base).toSeq
+  private def footerRecordCounts(versionDir: Path): Map[Int, Long] =
+    store.list(versionDir)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("__b="))
       .map { d =>
-        val files = fs.listStatus(d.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
+        val files = store.list(d.getPath)
+          .filter(_.getPath.getName.endsWith(".parquet")).toArray
         val n = java.util.Arrays.stream(files).parallel().mapToLong { st =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf)
+            .fromStatus(st, store.conf)
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try r.getRecordCount finally r.close()
         }.sum()
         d.getPath.getName.drop(4).toInt -> n
       }.toMap
-  }
 }
 
 object GraftTable {
@@ -360,9 +359,9 @@ object GraftTable {
   final class Staged private[GraftTable] (table: GraftTable,
       base: Option[Int], version: Int, manifestJson: Array[Byte],
       rows: Long) {
-    /** Write the manifest and move `_latest` to this version; the row
-      * count its manifest records. Throws, and changes nothing, when
-      * another commit has moved the table off `base`.
+    /** Claim this version's manifest; the row count it records.
+      * Throws, and changes nothing, when another commit has moved the
+      * table off `base`.
       */
     def publish(): Long = {
       table.publish(base, version, manifestJson)
@@ -370,19 +369,7 @@ object GraftTable {
     }
   }
 
-  /** The entries of directory `p`. `Files.list` holds a directory
-    * handle open until its stream is closed; this closes it.
-    */
-  private[graft] def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val entries = Files.list(p)
-    try entries.iterator().asScala.toVector finally entries.close()
-  }
-
-  /** Delete a file, or a directory with everything under it. */
-  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
+  private val ManifestName = """manifest-v(\d+)\.json""".r
 
   /** `buckets` sets the key-hash bucket count of a new table, or of one
     * that holds no rows yet (see the class doc); a table with rows keeps

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths}
-
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.DataFrame
@@ -20,18 +18,10 @@ object NdjsonSink {
   /** Next free batch index, resuming after existing files (O4 —
     * formats/batched_files.py:75-80).
     */
-  def nextIndex(tableDir: String, table: String): Int = {
-    val dir = Paths.get(tableDir)
-    if (!Files.exists(dir)) return 0
+  private def nextIndex(store: Store, table: String): Int = {
     val pattern = s"""\\Q$table\\E\\.(\\d+)\\.ndjson""".r
-    var max = -1
-    GraftTable.listDir(dir).foreach { p =>
-      p.getFileName.toString match {
-        case pattern(i) => max = math.max(max, i.toInt)
-        case _ =>
-      }
-    }
-    max + 1
+    store.list().map(_.getPath.getName)
+      .collect { case pattern(i) => i.toInt }.maxOption.fold(0)(_ + 1)
   }
 
   /** Write one batch. Spark's JSON writer drops null fields by default
@@ -47,29 +37,31 @@ object NdjsonSink {
       groups: Seq[String] = Nil,
       deleted: Seq[String] = Nil
   ): String = {
-    val idx = nextIndex(tableDir, table)
-    val indexStr = f"$idx%03d"
-    val tmp = s"$tableDir/.tmp-$table-$indexStr"
+    val store = Store(tableDir, df.sparkSession)
+    val indexStr = f"${nextIndex(store, table)}%03d"
+    val tmp = store(s".tmp-$table-$indexStr")
     df.write.mode("overwrite")
       .option("ignoreNullFields", "true")
-      .json(tmp)
+      .json(tmp.toString)
 
-    Files.createDirectories(Paths.get(tableDir))
-    val target = Paths.get(tableDir, s"$table.$indexStr.ndjson")
-    val out = Files.newOutputStream(target)
+    val target = store(s"$table.$indexStr.ndjson")
+    val out = store.fs.create(target, true)
     try {
-      val parts = GraftTable.listDir(Paths.get(tmp)).sorted
-        .filter(_.getFileName.toString.startsWith("part-"))
-      parts.foreach(p => Files.copy(p, out))
+      val parts = store.list(tmp).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      parts.foreach { p =>
+        val in = store.fs.open(p)
+        try in.transferTo(out) finally in.close()
+      }
     } finally out.close()
-    GraftTable.deleteRecursively(Paths.get(tmp))
+    store.delete(tmp)
 
     val meta = mapper.createObjectNode()
     val g = meta.putArray("groups")
     groups.foreach(g.add)
     val d = meta.putArray("deleted")
     deleted.foreach(d.add)
-    Files.write(Paths.get(tableDir, s"$table.$indexStr.meta"),
+    store.put(store(s"$table.$indexStr.meta"),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(meta))
     target.toString
   }

@@ -407,9 +407,9 @@ object I2b2Source {
   def loadToNdjson(spark: SparkSession, i2b2Dir: String,
       outDir: String,
       displayCodes: Map[String, Map[String, String]]): Set[String] = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    def has(name: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(i2b2Dir, name))
+    graft.sinks.Store(outDir, spark).mkdirs()
+    val in = graft.sinks.Store(i2b2Dir, spark)
+    def has(name: String): Boolean = in.fs.exists(in(name))
     def stage(df: DataFrame, fileBase: String): Unit =
       graft.sinks.NdjsonSink.writeBatch(df, outDir, fileBase)
     val sources: Seq[(String, String, (SparkSession, String) => DataFrame)] =

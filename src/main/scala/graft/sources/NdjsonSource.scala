@@ -31,8 +31,7 @@ object NdjsonSource {
     */
   def detectResourceFiles(
       spark: SparkSession, dir: String): Map[String, Seq[String]] = {
-    val fs =
-      new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.sinks.Store(dir, spark).fs
     listResourceFiles(spark, dir).flatMap { file =>
       val in = fs.open(new Path(file))
       try {
@@ -62,15 +61,10 @@ object NdjsonSource {
     * through its own filesystem, so an export read in place on another
     * scheme (s3a://…) lists like a local one.
     */
-  def listResourceFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Nil
-    else fs.listStatus(path).toSeq
+  def listResourceFiles(spark: SparkSession, dir: String): Seq[String] =
+    graft.sinks.Store(dir, spark).list()
       .filter(s => s.isFile && isNdjsonName(s.getPath.getName))
-      .map(_.getPath.toString)
-      .sorted
-  }
+      .map(_.getPath.toString).sorted
 
   /** Read every row of one resource type from a bulk-export dir.
     * With an explicit schema the JSON scan prunes to exactly the

@@ -598,6 +598,80 @@ class EtlPipelineSpec extends SparkSpecBase {
     assert(!encounters.exists || encounters.read().isEmpty)
   }
 
+  test("ETL pipeline: input, output and PHI dirs on a non-default filesystem") {
+    // every dir is named by another scheme than the default FS's
+    // file:///, the way an output on s3a:// is
+    val conf = spark.sparkContext.hadoopConfiguration
+    val scheme = OtherSchemeFileSystem.Scheme
+    val impl = s"fs.$scheme.impl"
+    conf.set(impl, classOf[OtherSchemeFileSystem].getName)
+    try {
+      val local = Files.createTempDirectory("scheme-etl")
+      def on(name: String): String = s"$scheme://$local/$name"
+      def localOf(path: String): java.nio.file.Path =
+        Paths.get(new java.net.URI(path).getPath)
+      val in = Files.createDirectory(local.resolve("in")).toString
+      patients(in,
+        """{"resourceType":"Patient","id":"p1","gender":"female"}""",
+        """{"resourceType":"Patient","id":"p2","gender":"male"}""")
+      Files.write(Paths.get(in, "Encounter.ndjson"), Seq(
+        """{"resourceType":"Encounter","id":"e1","status":"finished","subject":{"reference":"Patient/p1"}}""",
+        """{"resourceType":"Encounter","id":"e2","status":"finished","subject":{"reference":"Patient/p2"}}""",
+        """{"resourceType":"Encounter","id":"e3","status":"finished","subject":{"reference":"Patient/p2"}}"""
+      ).mkString("\n").getBytes("UTF-8"))
+      val (out, phi) = (on("out"), on("phi"))
+      val tasks = Seq(EtlPipeline.EtlTask("Patient", "patient"),
+        EtlPipeline.EtlTask("Encounter", "encounter"))
+      def load() = EtlPipeline.run(spark, on("in"), out, phi, tasks = tasks,
+        groupName = "g1", exportTime = "2024-01-01T00:00:00Z")
+      val tables = Seq(s"$out/patient", s"$out/encounter",
+        s"$out/etl__completion", s"$out/etl__completion_encounters",
+        s"$phi/codebook-mappings")
+      def rows(): Map[String, Set[String]] = tables.map(t =>
+        t -> GraftTable(spark, t, MergeSpec(Seq("id"))).read().toJSON
+          .collect().toSet).toMap
+
+      assert(load().map(r => r.table -> r.rows).toMap ===
+        Map("patient" -> 2L, "encounter" -> 3L))
+      val first = rows()
+      // every table, and every side file, is where the scheme points
+      tables.foreach(t => assert(
+        Files.exists(localOf(t).resolve("manifest-v0.json")), t))
+      assert(first(s"$out/patient").size === 2)
+      assert(first(s"$out/encounter").size === 3)
+      assert(first(s"$out/etl__completion_encounters").size === 3)
+      assert(graft.etl.Completion.ByTable.open(spark, out).read()
+        .select("table_name").collect().map(_.getString(0)).toSet ===
+        Set("patient", "encounter"))
+      assert(Files.exists(local.resolve("phi/codebook.json")))
+      assert(Files.exists(local.resolve("phi/context.json")))
+      assert(graft.etl.JobContext.load(phi).lastSuccessfulTables ===
+        Map("patient" -> 2L, "encounter" -> 3L))
+      val config = graft.etl.JobConfig.latest(out).get
+      assert(config.startsWith(s"$scheme:"), config)
+      assert(Files.exists(localOf(config).resolve("job_config.json")))
+
+      // the same export again: the same codebook, so the same rows
+      load()
+      assert(rows() === first)
+
+      // an NDJSON tree written on the scheme replays from it
+      val ndjson = on("ndjson")
+      val f0 = NdjsonSink.writeBatch(
+        Seq(("a", 1), ("b", 2), ("c", 3)).toDF("id", "v"), s"$ndjson/t", "t")
+      assert(f0.startsWith(s"$scheme:") && Files.exists(localOf(f0)), f0)
+      NdjsonSink.writeBatch(Seq(("b", 20)).toDF("id", "v"), s"$ndjson/t", "t",
+        deleted = Seq("a"))
+      assert(graft.etl.Convert.convertTree(spark, ndjson, on("converted")) ===
+        Map("t" -> 2L))
+      assert(GraftTable(spark, on("converted/t"), MergeSpec(Seq("id"))).read()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap ===
+        Map("b" -> 20L, "c" -> 3L))
+    } finally conf.unset(impl)
+    // no dir named by the scheme under the working directory
+    assert(!Files.exists(Paths.get(s"$scheme:")))
+  }
+
   test("ETL pipeline: every job of a run carries the caller's job group") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val input = tmp("grp-in")

@@ -2,12 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.MergeOps.MergeSpec
 import graft.sinks.GraftTable
 import org.apache.spark.sql.functions._
 
-/** GraftTable's on-disk commit contract: one manifest per version, made
-  * visible only by the `_latest` pointer.
+/** GraftTable's on-disk commit contract: one manifest per version, and
+  * the latest version is the highest manifest claimed.
   */
 class GraftTableSpec extends SparkSpecBase {
   import spark.implicits._
@@ -26,11 +28,11 @@ class GraftTableSpec extends SparkSpecBase {
       t.merge(Seq(("id-1", -1), ("id-200", 200)).toDF("id", "v"))
       val n = t.currentVersion.get
       // a commit of n+1 that died after writing part of its data and its
-      // manifest, before the pointer moved
+      // manifest, before the manifest was claimed
       val partial = Paths.get(dir, s"v${n + 1}", "__b=0", "part-00000.parquet")
       Files.createDirectories(partial.getParent)
       Files.write(partial, "PAR1 torn".getBytes("UTF-8"))
-      Files.write(Paths.get(dir, s"manifest-v${n + 1}.json"),
+      Files.write(Paths.get(dir, s"v${n + 1}", "_manifest.json"),
         s"""{"buckets":$buckets,"keys":["id"],"dirs":{"0":"v${n + 1}"},"counts":{"0":7}}"""
           .getBytes("UTF-8"))
 
@@ -42,13 +44,14 @@ class GraftTableSpec extends SparkSpecBase {
       t.merge(Seq(("id-2", -2)).toDF("id", "v"))
       assert(t.currentVersion === Some(n + 1))
       assert(!Files.exists(partial))
+      assert(!Files.exists(Paths.get(dir, s"v${n + 1}", "_manifest.json")))
       assert(t.rowCount === 101L)
       val v = t.read().filter(col("id").isin("id-1", "id-2", "id-200"))
         .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
       assert(v === Map("id-1" -> -1, "id-2" -> -2, "id-200" -> 200))
       // each committed version is one manifest plus its data dir
       assert(names(dir).toSet === (0 to n + 1).flatMap(i =>
-        Seq(s"v$i", s"manifest-v$i.json")).toSet + "_latest")
+        Seq(s"v$i", s"manifest-v$i.json")).toSet)
       assert(names(s"$dir/v${n + 1}").filter(_.startsWith("__b="))
         .forall(b => b.drop(4).toInt < buckets))
     }
@@ -100,6 +103,50 @@ class GraftTableSpec extends SparkSpecBase {
     intercept[IllegalStateException](once.publish())
     assert(t.currentVersion === Some(2))
     assert(rowsOf(t) === Map("a" -> 10, "b" -> 2, "d" -> 4, "e" -> 5))
+  }
+
+  test("a stray pointer file naming an older version is ignored") {
+    val dir = Files.createTempDirectory("pointer").toString
+    val t = GraftTable(spark, dir, spec)
+    t.merge(Seq(("a", 1)).toDF("id", "v"))
+    t.merge(Seq(("a", 2), ("b", 3)).toDF("id", "v"))
+    // the pointer a table written before manifests were the commit point
+    // carries, left behind naming version 0
+    Files.write(Paths.get(dir, "_latest"), "0".getBytes("UTF-8"))
+    val reader = GraftTable(spark, dir, spec)
+    assert(reader.currentVersion === Some(1))
+    assert(rowsOf(reader) === Map("a" -> 2, "b" -> 3))
+    assert(reader.rowCount === 2L)
+    t.merge(Seq(("c", 4)).toDF("id", "v"))
+    assert(t.currentVersion === Some(2))
+    assert(rowsOf(reader) === Map("a" -> 2, "b" -> 3, "c" -> 4))
+  }
+
+  test("vacuum leaves the highest manifest and the dirs it references") {
+    val dir = Files.createTempDirectory("vacuum").toString
+    val t = GraftTable(spark, dir, spec, 4)
+    val rows = (1 to 40).map(i => s"id-$i" -> i)
+    t.merge(rows.toDF("id", "v"))
+    t.merge(Seq(("id-1", -1)).toDF("id", "v"))
+    t.merge(Seq(("id-2", -2)).toDF("id", "v"))
+    // debris: a stray pointer and its temp file, a crashed claim's
+    // manifest inside an unclaimed version, and a never-published stage
+    Files.write(Paths.get(dir, "_latest"), "1".getBytes("UTF-8"))
+    Files.write(Paths.get(dir, "_latest.tmp"), "2".getBytes("UTF-8"))
+    t.stage(Seq(("id-3", -3)).toDF("id", "v"))
+    Files.write(Paths.get(dir, "v3", "_manifest.json"), "{".getBytes("UTF-8"))
+    t.vacuum()
+    val dirs = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readAllBytes(Paths.get(dir, "manifest-v2.json")))
+      .get("dirs").elements().asScala.map(_.asText()).toSet
+    assert(dirs("v0") && dirs("v2"))
+    assert(names(dir).toSet === dirs + "manifest-v2.json")
+    // no temp file anywhere under the table
+    val all = Files.walk(Paths.get(dir)).toArray.map(_.asInstanceOf[Path]
+      .getFileName.toString)
+    assert(!all.exists(n => n.contains("tmp") || n.contains("_manifest")), all.toSeq)
+    assert(rowsOf(t) === rows.toMap ++ Map("id-1" -> -1, "id-2" -> -2))
+    assert(t.rowCount === 40L)
   }
 
   test("a table in an older manifest format fails loudly") {
@@ -256,9 +303,14 @@ class GraftTableSpec extends SparkSpecBase {
 }
 
 object GraftTableSpec {
-  /** The bucket count the latest manifest of the table at `dir` records. */
+  /** The bucket count the latest (highest) manifest of the table at
+    * `dir` records.
+    */
   def manifestBuckets(dir: String): Int = {
-    val v = new String(Files.readAllBytes(Paths.get(dir, "_latest")), "UTF-8").trim
+    val listing = Files.list(Paths.get(dir))
+    val v = try listing.toArray.map(_.asInstanceOf[Path].getFileName.toString)
+      .collect { case s"manifest-v$n.json" => n.toInt }.max
+    finally listing.close()
     new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(Files.readAllBytes(Paths.get(dir, s"manifest-v$v.json")))
       .get("buckets").asInt()
